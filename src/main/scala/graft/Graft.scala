@@ -38,7 +38,6 @@ object Graft {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.parquet.compression.codec", "zstd")
-      .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
         sys.props("java.io.tmpdir") + "/graft-warehouse")
@@ -56,12 +55,6 @@ object Graft {
     // back to a microsecond TimestampType column.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    // month-partition pruning derived from interval predicates on raw
-    // level scans (graft.plans.MonthPrune) — idempotent add
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.MonthPrune))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.MonthPrune
     spark
   }
 }

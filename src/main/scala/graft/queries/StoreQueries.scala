@@ -131,19 +131,21 @@ object StoreQueries {
     HoardStore.open(s, root)
   }
 
-  /** Two-batch store through the DeltaAppend (LSM merge-on-read) write
-    * path, with a compaction between the batches: append-only commits
-    * + read-time lww + month folding must all converge to the same
-    * rollup as the rewrite strategies — hs6 shares hs2/hs3's oracle
-    * VERBATIM.
+  /** Two-batch store with a compaction between the batches, and with
+    * `expire` a snapshot reclaim after them: append-only commits +
+    * read-time lww + month folding (+ reclaim) must all converge to the
+    * same rollup as the one-batch store — hs6 (`expire = false`) and
+    * hs9 (`expire = true`) share hs2/hs3's oracle VERBATIM.
     */
-  private val builtDelta = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val builtCompacted =
+    new java.util.concurrent.ConcurrentHashMap[(String, Boolean), String]()
 
-  private def storeDelta(s: SparkSession, dir: String): HoardStore = {
-    val root = builtDelta.computeIfAbsent(dir, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-store-delta")
+  private def storeCompacted(s: SparkSession, dir: String,
+                             expire: Boolean): HoardStore = {
+    val root = builtCompacted.computeIfAbsent((dir, expire), _ => {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-store-compacted")
         .toString + "/store"
-      val st = HoardStore.create(s, tmp, Policy, HoardStore.DeltaAppend)
+      val st = HoardStore.create(s, tmp, Policy)
       val ev = Tables.load(s, dir, "events").select(
         col("event_type").as("series_id"),
         col("ts").cast("long").as("ts"),
@@ -152,6 +154,7 @@ object StoreQueries {
       st.updateManyDf(ev.where(col("ts") < cut), Now)
       st.compact(maxFilesPerMonth = 1) // fold mid-stream: must be invisible
       st.updateManyDf(ev.where(col("ts") >= cut), Now)
+      if (expire) st.expireSnapshots(keepLast = 1) // must not change reads
       tmp
     })
     HoardStore.open(s, root)
@@ -162,12 +165,16 @@ object StoreQueries {
     * ⇒ two micro-batches) into `StreamIngest.start`'s foreachBatch →
     * `updateManyDf` path — the production ingress shape of SURVEY
     * §3.4. The store after the stream drains must equal the
-    * from-scratch batch store, so s6 shares hs2/hs3's oracle VERBATIM.
+    * from-scratch batch store, so s6 and s11 share hs2/hs3's oracle
+    * VERBATIM. Each `statsName` (the query recording the stream's
+    * stats) builds its own store, so the two queries' stats stay apart.
     */
-  private val builtStream = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private val builtStream =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
 
-  private def storeStreamed(s: SparkSession, dir: String): HoardStore = {
-    val root = builtStream.computeIfAbsent(dir, _ => {
+  private def storeStreamed(s: SparkSession, dir: String,
+                            statsName: String): HoardStore = {
+    val root = builtStream.computeIfAbsent((dir, statsName), _ => {
       val tmp = java.nio.file.Files.createTempDirectory("graft-store-stream")
         .toString
       val st = HoardStore.create(s, tmp + "/store", Policy)
@@ -189,7 +196,7 @@ object StoreQueries {
       val q = graft.streaming.StreamIngest.start(stream, st, () => Now,
         tmp + "/ckpt")
       q.processAllAvailable()
-      graft.streaming.StreamStats.record("s6_streamstore", q)
+      graft.streaming.StreamStats.record(statsName, q)
       q.stop()
       tmp + "/store"
     })
@@ -255,7 +262,7 @@ object StoreQueries {
     HoardStore.open(s, root)
   }
 
-  /** ManifestAppend store whose version after batch 1 is remembered:
+  /** Store whose manifest version after batch 1 is remembered:
     * batch 2 and a compaction land AFTER the pin, so a time-travel
     * read at the pinned version must see exactly the batch-1 state.
     * expireSnapshots is deliberately NOT run here (hs9 covers
@@ -269,7 +276,7 @@ object StoreQueries {
     builtSnapshotted.computeIfAbsent(dir, _ => {
       val tmp = java.nio.file.Files.createTempDirectory("graft-store-snap")
         .toString + "/store"
-      val st = HoardStore.create(s, tmp, Policy, HoardStore.ManifestAppend)
+      val st = HoardStore.create(s, tmp, Policy)
       val ev = Tables.load(s, dir, "events").select(
         col("event_type").as("series_id"),
         col("ts").cast("long").as("ts"),
@@ -282,38 +289,11 @@ object StoreQueries {
       (tmp, pinned)
     })
 
-  /** Two-batch store through the ManifestAppend (transactional
-    * manifest) write path: lock-free optimistic commits, manifest-
-    * planned reads, a mid-stream compaction rewrite AND a snapshot
-    * reclaim — all of it must converge to the same rollup as every
-    * other strategy, so hs9 shares hs2/hs3/hs6's oracle VERBATIM.
-    */
-  private val builtManifest = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def storeManifest(s: SparkSession, dir: String): HoardStore = {
-    val root = builtManifest.computeIfAbsent(dir, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-store-manifest")
-        .toString + "/store"
-      val st = HoardStore.create(s, tmp, Policy, HoardStore.ManifestAppend)
-      val ev = Tables.load(s, dir, "events").select(
-        col("event_type").as("series_id"),
-        col("ts").cast("long").as("ts"),
-        col("value"), col("event_id").as("seq"))
-      val cut = 1705406400L // 2024-01-16 12:00:00 UTC (same as hs3/hs6)
-      st.updateManyDf(ev.where(col("ts") < cut), Now)
-      st.compact(maxFilesPerMonth = 1)   // manifest rewrite mid-stream
-      st.updateManyDf(ev.where(col("ts") >= cut), Now)
-      st.expireSnapshots(keepLast = 1)   // reclaim must not change reads
-      tmp
-    })
-    HoardStore.open(s, root)
-  }
-
   /** Store with a series DELETED after ingest (the reference's
-    * `rm <series>.whisper` as a store op): built through DeltaAppend so
-    * the delete also exercises month folding over delta files; the
-    * oracle is the shared rollup recomputation minus the deleted
-    * series — per-series rollups mean other series are untouched.
+    * `rm <series>.whisper` as a store op): the delete rewrites every
+    * month holding the series through the manifest; the oracle is the
+    * shared rollup recomputation minus the deleted series — per-series
+    * rollups mean other series are untouched.
     */
   private val builtDeleted = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
@@ -321,7 +301,7 @@ object StoreQueries {
     val root = builtDeleted.computeIfAbsent(dir, _ => {
       val tmp = java.nio.file.Files.createTempDirectory("graft-store-del")
         .toString + "/store"
-      val st = HoardStore.create(s, tmp, Policy, HoardStore.DeltaAppend)
+      val st = HoardStore.create(s, tmp, Policy)
       val ev = Tables.load(s, dir, "events").select(
         col("event_type").as("series_id"),
         col("ts").cast("long").as("ts"),
@@ -329,41 +309,6 @@ object StoreQueries {
       st.updateManyDf(ev, Now)
       st.deleteSeries(st.seriesGlob("click"))
       tmp
-    })
-    HoardStore.open(s, root)
-  }
-
-  /** Streaming ingest through the ManifestAppend strategy: the same
-    * two micro-batches as s6, each foreachBatch committing LOCK-FREE
-    * via the optimistic manifest protocol — the streaming ×
-    * transactional-store cross-product, gated on the same oracle.
-    */
-  private val builtStreamManifest = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def storeStreamedManifest(s: SparkSession, dir: String): HoardStore = {
-    val root = builtStreamManifest.computeIfAbsent(dir, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-store-smani")
-        .toString
-      val st = HoardStore.create(s, tmp + "/store", Policy,
-        HoardStore.ManifestAppend)
-      val ev = Tables.load(s, dir, "events").select(
-        col("event_type").as("series_id"),
-        col("ts").cast("long").as("ts"),
-        col("value"), col("event_id").as("seq"))
-      val cut = 1705406400L // 2024-01-16 12:00:00 UTC (same as s6/hs3)
-      val stage = tmp + "/in"
-      ev.where(col("ts") < cut).coalesce(1)
-        .write.mode("append").parquet(stage)
-      ev.where(col("ts") >= cut).coalesce(1)
-        .write.mode("append").parquet(stage)
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-      val q = graft.streaming.StreamIngest.start(stream, st, () => Now,
-        tmp + "/ckpt")
-      q.processAllAvailable()
-      graft.streaming.StreamStats.record("s11_streammanifest", q)
-      q.stop()
-      tmp + "/store"
     })
     HoardStore.open(s, root)
   }
@@ -398,7 +343,7 @@ object StoreQueries {
       // equal the from-scratch batch recomputation — same oracle as
       // hs2/hs3/hs6
       graft.Graft.configure(s)
-      val st = storeStreamed(s, dir)
+      val st = storeStreamed(s, dir, "s6_streamstore")
       st.readLevel(Policy.sorted.last)
         .select(col("series_id"),
           col("interval").cast("date").cast("string").as("bucket"),
@@ -421,10 +366,10 @@ object StoreQueries {
     }),
 
     "hs6_deltastore" -> ((s, dir) => {
-      // daily rollup level after two batches through the APPEND-ONLY
-      // write path (write-amp ∝ batch): must equal the from-scratch
-      // recomputation — the same oracle as the rewrite-strategy stores
-      val st = storeDelta(s, dir)
+      // daily rollup level after two append-only batches with a
+      // compaction between them (write-amp ∝ batch): must equal the
+      // from-scratch recomputation — the same oracle as hs2/hs3
+      val st = storeCompacted(s, dir, expire = false)
       st.readLevel(Policy.sorted.last)
         .select(col("series_id"),
           col("interval").cast("date").cast("string").as("bucket"),
@@ -437,7 +382,7 @@ object StoreQueries {
       // micro-batch committing through the lock-free optimistic
       // manifest path — must equal the from-scratch recomputation
       graft.Graft.configure(s)
-      val st = storeStreamedManifest(s, dir)
+      val st = storeStreamed(s, dir, "s11_streammanifest")
       st.readLevel(Policy.sorted.last)
         .select(col("series_id"),
           col("interval").cast("date").cast("string").as("bucket"),
@@ -477,8 +422,8 @@ object StoreQueries {
       // daily rollup level after two optimistic manifest commits with a
       // compaction rewrite between them and a snapshot-expire after:
       // must equal the from-scratch recomputation — the same oracle as
-      // every other write strategy
-      val st = storeManifest(s, dir)
+      // every other store build
+      val st = storeCompacted(s, dir, expire = true)
       st.readLevel(Policy.sorted.last)
         .select(col("series_id"),
           col("interval").cast("date").cast("string").as("bucket"),
@@ -614,7 +559,7 @@ object StoreQueries {
       // read back through the DSv2 whisper source — the daily level
       // must still match the from-scratch recomputation, so encode +
       // decode + tree layout are all on the hook for the same oracle
-      // every other write strategy shares
+      // every other store build shares
       val st = storeFor(s, dir)
       val tree = builtTree.computeIfAbsent(dir, _ => {
         val tmp = java.nio.file.Files.createTempDirectory("graft-tree")
@@ -638,7 +583,7 @@ object StoreQueries {
       // series-clustering shuffle) and read back through the source —
       // hs16's contract, but the encoder runs inside Spark's own V2
       // write protocol instead of the HoardExport API. Same shared
-      // daily-rollup oracle as every other write strategy.
+      // daily-rollup oracle as every other store build.
       val st = storeFor(s, dir)
       val tree = builtSink.computeIfAbsent(dir, _ => {
         val tmp = java.nio.file.Files.createTempDirectory("graft-sinktree")
@@ -728,8 +673,8 @@ object StoreQueries {
 
   /** The from-scratch daily-rollup recomputation — the ONE oracle
     * every store-convergence gate shares by design: hs2 (one batch),
-    * hs3 (two chronological batches), hs6 (append-only LSM strategy
-    * with mid-stream compaction), s6 (two micro-batches through the
+    * hs3 (two chronological batches), hs6 (two batches with a
+    * mid-stream compaction), s6 (two micro-batches through the
     * Structured Streaming ingress). Whatever the write path, the level
     * contents must converge to this.
     */

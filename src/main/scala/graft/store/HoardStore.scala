@@ -13,41 +13,35 @@ import scala.jdk.CollectionConverters._
   * `fetch`, `src/hoard.coffee:515-519`) over time-partitioned Parquet.
   *
   * One store holds MANY series (the reference: one file per series);
-  * each archive level is a Parquet table `level=<step>` of
-  * (series_id, interval, value, seq), month-partitioned. Semantics per
-  * SURVEY §2.2, with the reference's defects fixed by intent (§2.3):
-  * xff honored (B1), single update propagates (B2), batch coalescing
-  * moot under Parquet (B3).
+  * each archive level holds (series_id, interval, value, seq) rows in
+  * immutable Parquet files under `_data/`, and the store's state is the
+  * file list the latest manifest in `_manifests/` names, each entry
+  * keyed by its (level, month). Semantics per SURVEY §2.2, with the
+  * reference's defects fixed by intent (§2.3): xff honored (B1), single
+  * update propagates (B2), batch coalescing moot under Parquet (B3).
   *
-  * Determinism: every write carries a monotone `seq` stamp; merges are
-  * last-write-wins by seq (the distributed replacement for the
-  * reference's single-fd write ordering). `now` is always an explicit
-  * parameter — never wall clock (SURVEY §5.3). Mutations are
-  * serialized transactions: each takes the store lock with a bounded
-  * wait (concurrent writers queue; a writer that cannot acquire it in
-  * time fails cleanly with NO partial state), and every batch claims
-  * its seq base by atomically creating a `_commits/` marker — so a
-  * torn `_seq` write or a crashed predecessor can never duplicate a
-  * base. Compactions are non-destructive (write-new, move-in, delete
-  * exactly what was read), so a crash at any point leaves every
-  * reader a correct merge-on-read view. Full OPTIMISTIC concurrency
-  * (lock-free commit + conflict re-try) remains a DESIGN.md non-goal:
-  * it needs manifest-based reads, i.e. a transactional table format.
+  * Determinism: every write carries a monotone `seq` stamp, whose batch
+  * base is claimed by atomically creating a `_commits/` marker; merges
+  * are last-write-wins by seq (the distributed replacement for the
+  * reference's single-fd write ordering), resolved at read time across
+  * a (level, month)'s files. `now` is always an explicit parameter —
+  * never wall clock (SURVEY §5.3).
   *
-  * Scale notes: under the default [[HoardStore.MonthRewrite]] merges
-  * rewrite only the month partitions a batch touches (dynamic
-  * partition overwrite; `localCheckpoint` breaks the read-overwrite
-  * cycle); under [[HoardStore.DeltaAppend]] merges APPEND per-batch
-  * winner deltas and readers resolve lww at read time (LSM
-  * merge-on-read — write-amp ∝ batch size, with inline month
-  * compaction bounding file counts), which is the record-level-merge
-  * behavior DESIGN.md's transactional-format swap targets, natively.
-  * Propagation recomputes only touched coarser intervals (§2.2.10)
-  * from the level above (§2.2.8), each hop one partial-aggregated
-  * groupBy.
+  * One commit path: a batch stages its per-level winner files against
+  * a pinned manifest version, then publishes one new version by an
+  * atomic claim. Writers take no lock — a publish that finds a
+  * concurrent commit in a (level, month) it read or wrote discards its
+  * staged files and re-runs the cascade (optimistic concurrency).
+  * Nothing is visible before the publish, so a crash at any point
+  * leaves readers the last published version; unpublished files are
+  * reclaimed by [[expireSnapshots]]. Write-amp is ∝ batch size;
+  * compaction, vacuum and deletes are manifest rewrites that free no
+  * disk: [[expireSnapshots]] is the only call that deletes data files,
+  * and the store never calls it on its own. Propagation
+  * recomputes only touched coarser intervals (§2.2.10) from the level
+  * above (§2.2.8), each hop one partial-aggregated groupBy.
   */
 final class HoardStore private (val spark: SparkSession, val root: String,
-                                val mergeStrategy: HoardStore.MergeStrategy,
                                 val pinnedVersion: Option[Long] = None) {
 
   import HoardStore._
@@ -105,20 +99,16 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     * reference's commit ordering (archive commits happen after earlier
     * archives' propagation).
     */
-  def updateManyDf(batch0: DataFrame, now: Long): Unit = mergeStrategy match {
-    case HoardStore.ManifestAppend =>
-      // lock-FREE optimistic commit: stage against a pinned snapshot,
-      // validate at publish time, re-run the whole cascade on conflict
-      // (the re-run IS the propagation recompute — it re-reads the
-      // finer levels at the new snapshot)
-      runOptimistic(txn => cascade(batch0, now, Some(txn)))
-    case _ => withWriteLock(cascade(batch0, now, None))
-  }
+  def updateManyDf(batch0: DataFrame, now: Long): Unit =
+    // stage against a pinned snapshot, validate at publish time, re-run
+    // the whole cascade on conflict (the re-run IS the propagation
+    // recompute — it re-reads the finer levels at the new snapshot)
+    runOptimistic(txn => cascade(batch0, now, txn))
 
-  private def cascade(batch0: DataFrame, now: Long, txn: Option[Txn]): Unit = {
+  private def cascade(batch0: DataFrame, now: Long, txn: Txn): Unit = {
     val p = policy
     val base = HoardStore.claimCommitBase(root) // this batch's seq base
-    txn.foreach(_.commitId = base)
+    txn.commitId = base
     val levels = p.sorted
 
     val hasSeq = batch0.columns.contains("seq")
@@ -161,7 +151,7 @@ final class HoardStore private (val spark: SparkSession, val root: String,
           // propagation cost ∝ touched intervals (§2.2.10) down to the
           // I/O: read only the finer level's touched month partitions
           val finer = readLevelWithSeq(levels(i - 1),
-              Some(touchedMonths(touched, ar.step)), txn)
+              Some(touchedMonths(touched, ar.step)), Some(txn))
             .select("series_id", "interval", "value")
           val prop = Rollup.downsample(
               finer.join(touched.select(col("series_id").as("s2"),
@@ -178,13 +168,10 @@ final class HoardStore private (val spark: SparkSession, val root: String,
       val touchedHere = newRows.select("series_id", "interval").distinct()
         .localCheckpoint(true)
       if (touchedHere.head(1).nonEmpty) {
-        mergeLevel(ar, newRows, touchedHere, txn)
-        txn match {
-          // catalog appends are deferred past the optimistic commit: a
-          // conflicted-and-retried attempt must not leave phantom series
-          case Some(t) => t.catalogQueue += ((ar, touchedHere))
-          case None => appendCatalog(ar, touchedHere)
-        }
+        mergeLevel(ar, newRows, txn)
+        // catalog appends are deferred past the optimistic commit: a
+        // conflicted-and-retried attempt must not leave phantom series
+        txn.catalogQueue += ((ar, touchedHere))
       }
       touchedBelow =
         if (touchedBelow == null) touchedHere
@@ -202,18 +189,11 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     * value)`; intervals are aligned to the level's step. Later normal
     * writes stamp newer seqs and win lww as usual.
     */
-  def importArchive(ar: Archive, rows: DataFrame): Unit = mergeStrategy match {
-    case HoardStore.ManifestAppend =>
-      runOptimistic(txn => importBody(ar, rows, Some(txn)))
-    case _ => withWriteLock(importBody(ar, rows, None))
-  }
-
-  private def importBody(ar: Archive, rows: DataFrame,
-                         txn: Option[Txn]): Unit = {
+  def importArchive(ar: Archive, rows: DataFrame): Unit = runOptimistic { txn =>
     require(policy.sorted.exists(_.step == ar.step),
       s"no level with step ${ar.step} in this store's policy")
     val base = HoardStore.claimCommitBase(root)
-    txn.foreach(_.commitId = base)
+    txn.commitId = base
     val newRows = rows.select(col("series_id"),
         Time.align(timestamp_seconds(col("ts")), ar.step).as("interval"),
         col("value"),
@@ -223,49 +203,12 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     val touched = newRows.select("series_id", "interval").distinct()
       .localCheckpoint(true)
     if (touched.head(1).nonEmpty) {
-      mergeLevel(ar, newRows, touched, txn)
-      txn match {
-        case Some(t) => t.catalogQueue += ((ar, touched))
-        case None => appendCatalog(ar, touched)
-      }
+      mergeLevel(ar, newRows, txn)
+      txn.catalogQueue += ((ar, touched))
     }
   }
 
-  /** The single-writer assumption, enforced: a create-exclusive lock
-    * file taken for the duration of ANY state mutation — batch writes
-    * AND vacuum (which deletes partitions and rewrites the boundary
-    * month, the same read-merge-overwrite cycle) — so a second
-    * concurrent mutator fails loudly instead of silently corrupting
-    * level state (the distributed stand-in for the reference's single
-    * file descriptor).
-    */
-  private def withWriteLock[T](body: => T): T = {
-    val lock = Paths.get(root, "_lock")
-    // bounded wait: concurrent writers SERIALIZE (each mutation is a
-    // self-contained transaction, so FIFO-ish lock handoff gives the
-    // same state as any sequential order); a writer that cannot get
-    // the lock inside the wait budget fails CLEANLY with no partial
-    // state (nothing is staged before the lock). Tunable per session
-    // so tests can exercise the timeout path.
-    val waitMs = scala.util.Try(
-      spark.conf.get("graft.store.lockWaitMs").toLong).getOrElse(60000L)
-    val deadline = System.nanoTime() + waitMs * 1000000L
-    var acquired = false
-    while (!acquired) {
-      try { Files.createFile(lock); acquired = true }
-      catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          if (System.nanoTime() > deadline)
-            throw new IllegalStateException(
-              s"Store $root is locked by another writer after ${waitMs} ms " +
-                s"(stale lock from a crashed writer? delete $lock)")
-          Thread.sleep(50)
-      }
-    }
-    try body finally Files.deleteIfExists(lock)
-  }
-
-  // ---- optimistic manifest transactions (ManifestAppend) -------------
+  // ---- optimistic manifest transactions ------------------------------
 
   /** Test seam: fires once immediately before the first commit-validate
     * of the next optimistic transaction (lets a test inject a competing
@@ -285,7 +228,11 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     * month) footprint is untouched by concurrent commits publish
     * first-try; the version claim itself is atomic (hard-link publish),
     * so losing the race to the version number alone just re-validates
-    * and re-claims without re-running the body.
+    * and re-claims without re-running the body. After the publish,
+    * (level, month)s fed by more than [[CompactThreshold]] commits are
+    * folded, so read-time lww fan-in stays bounded on long ingests. A
+    * fold writes a full copy of its month and keeps the inputs on disk
+    * until [[expireSnapshots]].
     */
   private def runOptimistic(body: Txn => Unit): Unit = synchronized {
     require(pinnedVersion.isEmpty, "snapshot views are read-only")
@@ -312,7 +259,12 @@ final class HoardStore private (val spark: SparkSession, val root: String,
       }
     }
     lastCommitAttempts = attempt
+    // files from one commit never share a key, so only the number of
+    // commits feeding a (level, month) adds read-time lww work
+    foldMonths(_.map(_.commitDir).distinct.size > CompactThreshold)
   }
+
+  private val CompactThreshold = 16
 
   /** Publish an append transaction. Returns false on a SEMANTIC
     * conflict (a commit since our snapshot added files to a (level,
@@ -369,21 +321,17 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     * reclaims versions older than its keep horizon (the reader-lease
     * contract every snapshot table format has).
     */
-  def snapshot(): HoardStore = {
-    require(mergeStrategy == HoardStore.ManifestAppend,
-      "snapshots require the ManifestAppend strategy")
-    new HoardStore(spark, root, mergeStrategy,
-      Some(latestManifestVersion(root)))
-  }
+  def snapshot(): HoardStore =
+    new HoardStore(spark, root, Some(latestManifestVersion(root)))
 
   /** Reclaim space: drop manifest versions older than the last
     * `keepLast` and physically delete data files no retained version
-    * references. This is the ONLY place ManifestAppend deletes a data
-    * file, which is what makes every pinned snapshot read stable.
+    * references — superseded files and files a crashed or conflicted
+    * writer staged but never published alike. This is the ONLY place
+    * the store deletes a data file, which is what makes every pinned
+    * snapshot read stable.
     */
   def expireSnapshots(keepLast: Int = 2): Unit = synchronized {
-    require(mergeStrategy == HoardStore.ManifestAppend,
-      "expireSnapshots requires the ManifestAppend strategy")
     val cat = HoardStore.catalogFor(root)
     val vers = cat.versions
     if (vers.isEmpty) return
@@ -419,72 +367,47 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     }
   }
 
-  /** Fold a (level, month)'s manifest entries past the file-count
-    * threshold into one file — the ManifestAppend compaction. Publish
-    * removes the inputs and adds the fold; a lost race (another
-    * compactor took the inputs) abandons the scratch output. Superseded
-    * files stay on disk for pinned snapshots until [[expireSnapshots]].
-    */
-  private def compactManifest(maxFiles: Int): Unit = synchronized {
-    require(pinnedVersion.isEmpty, "snapshot views are read-only")
-    val ver = latestManifestVersion(root)
-    manifestEntries(root, ver).groupBy(e => (e.step, e.month))
-      .filter(_._2.size > maxFiles).foreach { case ((step, month), inputs) =>
-        val folded = lww(spark.read.schema(levelSchema)
-            .parquet(inputs.map(e => s"$root/${e.rel}"): _*))
-          .localCheckpoint(true)
-        val cid = HoardStore.claimCommitBase(root)
-        val sub = f"c$cid%012d_fold_l${step}_$month"
-        folded.coalesce(1).write.mode(SaveMode.Overwrite)
-          .parquet(s"${dataPath(root)}/$sub")
-        val outs = listDir(Paths.get(dataPath(root), sub))
-          .filter(_.endsWith(".parquet"))
-          .map(f => ManifestEntry(step, month, s"_data/$sub/$f"))
-        if (!commitRewrite(inputs.toSet, outs))
-          deleteRecursively(Paths.get(dataPath(root), sub))
-      }
-  }
+  /** Entries of the latest published manifest. */
+  private[graft] def latestEntries: Seq[ManifestEntry] =
+    manifestEntries(root, latestManifestVersion(root))
 
-  /** Retention vacuum under ManifestAppend: a manifest edit, not a
-    * physical delete. Fully-expired months drop their entries; the one
-    * boundary month is rewritten (filtered) into a fresh file like a
-    * compaction. Pinned snapshots keep reading the superseded files
+  /** lww view of a set of manifest entries' files. */
+  private def readEntries(es: Seq[ManifestEntry]): DataFrame =
+    lww(spark.read.schema(levelSchema).parquet(es.map(e => s"$root/${e.rel}"): _*))
+
+  /** One manifest rewrite: remove `inputs` and add `rows` as one fresh
+    * file of (level `step`, `month`) — no file when `rows` is empty. A
+    * lost race (another rewrite already took an input) abandons the
+    * scratch output. Superseded files stay on disk for pinned snapshots
     * until [[expireSnapshots]].
     */
-  private def vacuumManifest(now: Long): Unit = synchronized {
-    require(pinnedVersion.isEmpty, "snapshot views are read-only")
-    policy.sorted.foreach { ar =>
-      val cutoff = now - ar.retention
-      val cutoffMonth = monthsCovering(cutoff, cutoff + 1).head
-      val ents = manifestEntries(root, latestManifestVersion(root))
-        .filter(_.step == ar.step)
-      var removed = ents.filter(_.month < cutoffMonth).toSet
-      var added = Seq.empty[ManifestEntry]
-      var scratch: Option[JPath] = None
-      val boundary = ents.filter(_.month == cutoffMonth)
-      if (boundary.nonEmpty) {
-        val part = lww(spark.read.schema(levelSchema)
-          .parquet(boundary.map(e => s"$root/${e.rel}"): _*))
-        val pred = col("interval") >= timestamp_seconds(lit(cutoff))
-        if (part.where(!pred).head(1).nonEmpty) {
-          removed ++= boundary
-          val kept = part.where(pred).localCheckpoint(true)
-          if (kept.head(1).nonEmpty) {
-            val cid = HoardStore.claimCommitBase(root)
-            val sub = f"c$cid%012d_vac_l${ar.step}_$cutoffMonth"
-            kept.coalesce(1).write.mode(SaveMode.Overwrite)
-              .parquet(s"${dataPath(root)}/$sub")
-            added = listDir(Paths.get(dataPath(root), sub))
-              .filter(_.endsWith(".parquet"))
-              .map(f => ManifestEntry(ar.step, cutoffMonth, s"_data/$sub/$f"))
-            scratch = Some(Paths.get(dataPath(root), sub))
-          }
-        }
+  private def rewrite(step: Long, month: String, tag: String,
+                      inputs: Set[ManifestEntry], rows: DataFrame): Unit = {
+    val kept = rows.localCheckpoint(true)
+    val sub = f"c${HoardStore.claimCommitBase(root)}%012d_${tag}_l${step}_$month"
+    val dir = Paths.get(dataPath(root), sub)
+    val added =
+      if (kept.head(1).isEmpty) Seq.empty
+      else {
+        kept.coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir.toString)
+        listDir(dir).filter(_.endsWith(".parquet"))
+          .map(f => ManifestEntry(step, month, s"_data/$sub/$f"))
       }
-      if (removed.nonEmpty && !commitRewrite(removed, added))
-        scratch.foreach(deleteRecursively)
-    }
+    if (!commitRewrite(inputs, added)) deleteRecursively(dir)
   }
+
+  /** Fold every (level, month) whose entries `needsFold` into one file
+    * — contents unchanged by construction (the same lww the readers
+    * apply).
+    */
+  private def foldMonths(needsFold: Seq[ManifestEntry] => Boolean): Unit =
+    synchronized {
+      require(pinnedVersion.isEmpty, "snapshot views are read-only")
+      latestEntries.groupBy(e => (e.step, e.month)).filter(g => needsFold(g._2))
+        .foreach { case ((step, month), inputs) =>
+          rewrite(step, month, "fold", inputs.toSet, readEntries(inputs))
+        }
+    }
 
   /** Last-write-wins winner per (series, interval) by composite seq. */
   private def lww(rows: DataFrame): DataFrame = Dedup.lastWriteWins(
@@ -493,161 +416,36 @@ final class HoardStore private (val spark: SparkSession, val root: String,
       Seq("value" -> col("value"), "seq_keep" -> col("seq")))
     .withColumnRenamed("seq_keep", "seq")
 
-  /** Merge new rows into a level: last-write-wins per (series, interval)
-    * by seq. The commit is routed through [[mergeStrategy]]:
-    * [[HoardStore.MonthRewrite]]/[[HoardStore.RecordMergeSim]] rewrite
-    * the touched month partitions (write-amp ∝ month volume);
-    * [[HoardStore.DeltaAppend]] is the native record-level merge —
-    * append-only delta commits resolved by lww at read time.
+  /** Stage new rows for a level: fold the batch to one winner per key,
+    * write the files into this commit's OWN directory (nobody else
+    * writes there — enumeration is race-free), and record their
+    * manifest entries in the txn. Existing data is neither read nor
+    * rewritten (write-amp ∝ batch); readers resolve lww across the
+    * month's files. Nothing is visible until the manifest publish.
     */
-  private def mergeLevel(ar: Archive, newRows: DataFrame,
-                         touched: DataFrame,
-                         txn: Option[Txn] = None): Unit = mergeStrategy match {
-    case HoardStore.ManifestAppend =>
-      // stage: fold the batch to one winner per key, write the delta
-      // files into this commit's OWN directory (nobody else writes
-      // there — enumeration is race-free), record manifest entries in
-      // the txn. Nothing is visible until the manifest publish.
-      val t = txn.getOrElse(throw new IllegalStateException(
-        "ManifestAppend mergeLevel requires a transaction"))
-      val dir = f"${dataPath(root)}/c${t.commitId}%012d_l${ar.step}"
-      lww(newRows)
-        .withColumn("p_month", date_format(col("interval"), "yyyy-MM"))
-        .write.mode(SaveMode.Overwrite).partitionBy("p_month").parquet(dir)
-      val dirP = Paths.get(dir)
-      listDir(dirP).filter(_.startsWith("p_month=")).foreach { mdir =>
-        val month = mdir.stripPrefix("p_month=")
-        listDir(dirP.resolve(mdir)).filter(_.endsWith(".parquet")).foreach { f =>
-          t.staged += ManifestEntry(ar.step, month,
-            s"_data/c${"%012d".format(t.commitId)}_l${ar.step}/$mdir/$f")
-        }
-        t.touched += ((ar.step, month))
+  private def mergeLevel(ar: Archive, newRows: DataFrame, t: Txn): Unit = {
+    val sub = f"c${t.commitId}%012d_l${ar.step}"
+    val dirP = Paths.get(dataPath(root), sub)
+    lww(newRows)
+      .withColumn("p_month", date_format(col("interval"), "yyyy-MM"))
+      .write.mode(SaveMode.Overwrite).partitionBy("p_month").parquet(dirP.toString)
+    listDir(dirP).filter(_.startsWith("p_month=")).foreach { mdir =>
+      val month = mdir.stripPrefix("p_month=")
+      listDir(dirP.resolve(mdir)).filter(_.endsWith(".parquet")).foreach { f =>
+        t.staged += ManifestEntry(ar.step, month, s"_data/$sub/$mdir/$f")
       }
-    case HoardStore.DeltaAppend =>
-      // LSM write path: fold the batch to ONE winner per key (cost ∝
-      // batch size), then APPEND delta files into the touched month
-      // partitions. Existing data is neither read nor rewritten —
-      // write-amp ∝ batch, not month volume — and no checkpoint is
-      // needed because nothing being read is being replaced. Readers
-      // resolve lww across delta files ([[readLevelWithSeq]]); file
-      // counts stay bounded by the inline month compaction below.
-      lww(newRows)
-        .withColumn("p_month", date_format(col("interval"), "yyyy-MM"))
-        .write.mode(SaveMode.Append).partitionBy("p_month")
-        .parquet(levelPath(root, ar.step))
-      compactMonthsOver(ar, touchedMonths(touched, 1), CompactThreshold)
-    case _ =>
-      // INVARIANT: filter existing rows by touched MONTH only, never by
-      // series — dynamic partition overwrite rewrites whole month
-      // partitions, so every series' rows in a touched month must ride
-      // along or they would be silently deleted. The month list is pushed
-      // as a PARTITION filter (an interval-derived semi-join would scan
-      // every month of the level before filtering).
-      val existing = readLevelWithSeq(ar, Some(touchedMonths(touched, 1)))
-      val merged = (mergeStrategy match {
-        case HoardStore.RecordMergeSim =>
-          // the record-level MERGE dataflow: upsert winners for touched
-          // keys, pass every untouched row through untouched — what a
-          // transactional table format would commit natively; both legs
-          // still land in the same month rewrite, which is exactly what
-          // makes the strategies content-comparable
-          val keys = touched.select("series_id", "interval")
-          val matched = existing.join(keys, Seq("series_id", "interval"),
-            "left_semi")
-          val untouched = existing.join(keys, Seq("series_id", "interval"),
-            "left_anti").select("series_id", "interval", "value", "seq")
-          lww(matched.unionByName(newRows)).unionByName(untouched)
-        case _ => lww(existing.unionByName(newRows))
-      })
-        .withColumn("p_month", date_format(col("interval"), "yyyy-MM"))
-        .localCheckpoint(true)
-      merged.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic") // only touched months
-        .partitionBy("p_month")
-        .parquet(levelPath(root, ar.step))
+      t.touched += ((ar.step, month))
+    }
   }
 
-  /** Fold a level's delta files back to one winner per key, month by
-    * month — the background compaction every LSM needs. Only month
-    * partitions holding more than `maxFilesPerMonth` parquet files are
-    * read (that partition alone) and rewritten; contents are unchanged
-    * by construction (the same lww the readers apply). Public entry
-    * takes the write lock; the write path calls the inner form on the
-    * months it just touched, so file counts stay bounded without any
-    * external scheduler.
+  /** Fold every (level, month) holding more than `maxFilesPerMonth`
+    * files back to one winner per key in one file. The write path
+    * already folds past [[CompactThreshold]] commits per (level,
+    * month); call this to fold below that. The inputs stay on disk
+    * until [[expireSnapshots]].
     */
-  def compact(maxFilesPerMonth: Int = 1): Unit = mergeStrategy match {
-    case HoardStore.ManifestAppend => compactManifest(maxFilesPerMonth)
-    case _ => withWriteLock {
-      policy.sorted.foreach { ar =>
-        val dir = Paths.get(levelPath(root, ar.step))
-        if (Files.exists(dir))
-          compactMonthsOver(ar,
-            listDir(dir).filter(_.startsWith("p_month="))
-              .map(_.stripPrefix("p_month=")),
-            maxFilesPerMonth)
-      }
-    }
-  }
-
-  private val CompactThreshold = 16
-
-  private def compactMonthsOver(ar: Archive, months: Seq[String],
-                                maxFiles: Int): Unit = {
-    // Month partitions are independent (separate dirs, separate file
-    // sets, non-destructive write-new/move-in/delete-read protocol), so
-    // fold them as OVERLAPPING Spark jobs from a small pool (guide
-    // §2.6: each month's fold is a tiny job whose tail would otherwise
-    // leave the box idle between sequential months; r13 verdict item 6
-    // named the serial month loop as the store-ingest lever). Pool of
-    // 4: enough to fill stragglers, not enough to thrash the scheduler
-    // — and 1 for a single month keeps the old sequential behavior.
-    val todo = months.filter { m =>
-      val pdir = Paths.get(levelPath(root, ar.step)).resolve(s"p_month=$m")
-      Files.exists(pdir) &&
-        listDir(pdir).count(_.endsWith(".parquet")) > maxFiles
-    }
-    if (todo.size <= 1) todo.foreach(compactOneMonth(ar, _, maxFiles))
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(4, todo.size))
-      try {
-        val fs = todo.map(m => pool.submit(new Runnable {
-          def run(): Unit = compactOneMonth(ar, m, maxFiles)
-        }))
-        fs.foreach(_.get()) // propagate the first failure
-      } finally pool.shutdown()
-    }
-  }
-
-  private def compactOneMonth(ar: Archive, m: String,
-                              maxFiles: Int): Unit = {
-      val pdir = Paths.get(levelPath(root, ar.step)).resolve(s"p_month=$m")
-      if (Files.exists(pdir)) {
-        // transactional shape (the catalog-compaction pattern): list
-        // the delta files FIRST, read exactly those, write the folded
-        // file to a scratch dir, MOVE it into the month under a fresh
-        // name, then delete ONLY the files read. A file appended
-        // concurrently (or after the listing) is never touched; a
-        // crash at any point leaves a readable month — transient
-        // duplicate rows carry identical (key, seq) and collapse to
-        // the same winner under the lww every reader applies.
-        val files = listDir(pdir).filter(_.endsWith(".parquet"))
-        if (files.size > maxFiles) {
-          val folded = lww(spark.read
-              .parquet(files.map(f => pdir.resolve(f).toString): _*)
-              .select("series_id", "interval", "value", "seq"))
-            .localCheckpoint(true)
-          val tmp = levelPath(root, ar.step) + s"_compact_$m.tmp"
-          folded.coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-          val tmpDir = Paths.get(tmp)
-          listDir(tmpDir).filter(_.endsWith(".parquet")).foreach(f =>
-            Files.move(tmpDir.resolve(f), pdir.resolve(s"compacted-$f")))
-          files.foreach(f => Files.deleteIfExists(pdir.resolve(f)))
-          deleteRecursively(tmpDir)
-        }
-      }
-  }
+  def compact(maxFilesPerMonth: Int = 1): Unit =
+    foldMonths(_.size > maxFilesPerMonth)
 
   // ---- series catalog ------------------------------------------------
 
@@ -778,31 +576,6 @@ final class HoardStore private (val spark: SparkSession, val root: String,
       StructField("b", LongType), StructField("k", IntegerType),
       StructField("t", LongType), StructField("s", LongType))))))
 
-  private def readLevelWithSeq(ar: Archive,
-                               months: Option[Seq[String]] = None,
-                               txn: Option[Txn] = None): DataFrame = {
-    if (mergeStrategy == HoardStore.ManifestAppend)
-      return readManifestLevel(ar, months, txn)
-    val p = levelPath(root, ar.step)
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], levelSchema)
-    if (!Files.exists(Paths.get(p))) empty
-    else
-      // a vacuumed-to-nothing level dir has no footers to infer from
-      try {
-        val df = spark.read.parquet(p)
-        val pruned = months match {
-          case Some(ms) => df.where(col("p_month").isin(ms: _*))
-          case None => df
-        }
-        val rows = pruned.select("series_id", "interval", "value", "seq")
-        // merge-on-read: under DeltaAppend a key may have one row per
-        // delta file; resolve lww here so every reader (fetch,
-        // propagation, strategy comparisons) sees the merged view
-        if (mergeStrategy == HoardStore.DeltaAppend) lww(rows) else rows
-      } catch { case _: org.apache.spark.sql.AnalysisException => empty }
-  }
-
   /** Distinct `yyyy-MM` partition keys covered by a (small) frame of
     * touched intervals, where each interval spans [t, t+spanSec) —
     * a coarse interval can cross a month boundary, so both edges count.
@@ -832,8 +605,9 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     * files (its propagation must read what it just wrote) and records
     * the (level, month) pairs it read — the conflict footprint.
     */
-  private def readManifestLevel(ar: Archive, months: Option[Seq[String]],
-                                txn: Option[Txn]): DataFrame = {
+  private def readLevelWithSeq(ar: Archive,
+                               months: Option[Seq[String]] = None,
+                               txn: Option[Txn] = None): DataFrame = {
     val ver = pinnedVersion.orElse(txn.map(_.snapVer))
       .getOrElse(latestManifestVersion(root))
     val committed = manifestEntries(root, ver).filter(_.step == ar.step)
@@ -849,9 +623,7 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     if (selected.isEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], levelSchema)
-    else
-      lww(spark.read.schema(levelSchema)
-        .parquet(selected.map(e => s"$root/${e.rel}").distinct: _*))
+    else readEntries(selected.distinct)
   }
 
   def readLevel(ar: Archive): DataFrame =
@@ -869,10 +641,11 @@ final class HoardStore private (val spark: SparkSession, val root: String,
       .map(ym => f"${ym.getYear}%04d-${ym.getMonthValue}%02d").toSeq
   }
 
-  /** Windowed level read with PARTITION pruning: the interval predicate
-    * alone sits on a data column, so without the derived `p_month`
-    * filter a fetch would scan every month of the level — at 100 TB the
-    * difference between touching 2 partitions and touching 600.
+  /** Windowed level read with month pruning: the interval predicate
+    * alone sits on a data column, so without selecting the window's
+    * months' manifest entries a fetch would scan every month of the
+    * level — at 100 TB the difference between touching 2 months' files
+    * and touching 600.
     */
   def readLevelRange(ar: Archive, fromSec: Long, toSec: Long): DataFrame =
     readLevelWithSeq(ar, Some(monthsCovering(fromSec, toSec)))
@@ -956,22 +729,6 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     (ti, vals)
   }
 
-  /** Series deletion — the reference's `rm <series>.whisper`, as a
-    * store operation (and the right-to-be-forgotten path a shared
-    * 100 TB store needs, which per-series files got for free): every
-    * point of every matching series is removed from every level, and
-    * the catalog forgets the series so fetchMulti's universe shrinks.
-    * `pred` composes with [[seriesGlob]]. Later writes may recreate
-    * the series.
-    *
-    * Cost shape: one scan per level to locate the months that contain
-    * matching rows (a delete by arbitrary predicate cannot do better
-    * without a per-series index), then a rewrite of ONLY those months.
-    * Under [[HoardStore.ManifestAppend]] the rewrite is a manifest
-    * commit — snapshot readers pinned before the delete still see the
-    * series until [[expireSnapshots]] physically reclaims it (call it
-    * to actually forget the bytes).
-    */
   /** Retention-policy migration — the engine's `whisper-resize`
     * (public tooling every Graphite deployment ships; the reference
     * has no equivalent, SURVEY §2.1 O-ops stop at fetch): rebuild this
@@ -998,7 +755,7 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     */
   def resize(newRoot: String, newPolicy: ArchivePolicy,
              now: Long): HoardStore = {
-    val dst = HoardStore.create(spark, newRoot, newPolicy, mergeStrategy)
+    val dst = HoardStore.create(spark, newRoot, newPolicy)
 
     /** Best-resolution old rows aggregated to `targetStep`, target-slot
       * ages in (fromAge, toAge], horizon-cut per source archive.
@@ -1161,69 +918,31 @@ final class HoardStore private (val spark: SparkSession, val root: String,
       case _ => ()
     }
 
-  def deleteSeries(pred: org.apache.spark.sql.Column): Unit =
-    mergeStrategy match {
-      case HoardStore.ManifestAppend => deleteSeriesManifest(pred)
-      case _ => withWriteLock {
-        policy.sorted.foreach { ar =>
-          val dir = Paths.get(levelPath(root, ar.step))
-          if (Files.exists(dir)) {
-            val level = readLevelWithSeq(ar)
-            val months = level.where(pred)
-              .select(date_format(col("interval"), "yyyy-MM").as("m"))
-              .distinct().collect().map(_.getString(0)).toSeq
-            months.foreach { m =>
-              val pdir = dir.resolve(s"p_month=$m")
-              val part = spark.read.parquet(pdir.toString)
-                .select("series_id", "interval", "value", "seq")
-              // fold (merge-on-read for DeltaAppend months) + filter
-              val kept0 =
-                if (mergeStrategy == HoardStore.DeltaAppend) lww(part)
-                else part
-              val kept = kept0.where(!pred)
-                .withColumn("p_month", lit(m)).localCheckpoint(true)
-              if (kept.head(1).nonEmpty)
-                kept.write.mode(SaveMode.Overwrite)
-                  .option("partitionOverwriteMode", "dynamic")
-                  .partitionBy("p_month").parquet(levelPath(root, ar.step))
-              else deleteRecursively(pdir) // all-matching month: drop it
-            }
-          }
-        }
-        forgetCatalog(pred)
-      }
+  /** Series deletion — the reference's `rm <series>.whisper`, as a
+    * store operation (and the right-to-be-forgotten path a shared
+    * 100 TB store needs, which per-series files got for free): every
+    * point of every matching series is removed from every level, and
+    * the catalog forgets the series so fetchMulti's universe shrinks.
+    * `pred` composes with [[seriesGlob]]. Later writes may recreate
+    * the series.
+    *
+    * Cost shape: one read per (level, month) to find the months that
+    * contain matching rows (a delete by arbitrary predicate cannot do
+    * better without a per-series index), then a manifest rewrite of
+    * ONLY those months — snapshot readers pinned before the delete
+    * still see the series until [[expireSnapshots]] physically reclaims
+    * it (call it to actually forget the bytes).
+    */
+  def deleteSeries(pred: org.apache.spark.sql.Column): Unit = synchronized {
+    require(pinnedVersion.isEmpty, "snapshot views are read-only")
+    latestEntries.groupBy(e => (e.step, e.month)).foreach {
+      case ((step, month), inputs) =>
+        val part = readEntries(inputs)
+        if (part.where(pred).head(1).nonEmpty)
+          rewrite(step, month, "del", inputs.toSet, part.where(!pred))
     }
-
-  private def deleteSeriesManifest(pred: org.apache.spark.sql.Column): Unit =
-    synchronized {
-      require(pinnedVersion.isEmpty, "snapshot views are read-only")
-      policy.sorted.foreach { ar =>
-        val ents = manifestEntries(root, latestManifestVersion(root))
-          .filter(_.step == ar.step)
-        ents.groupBy(_.month).foreach { case (month, inputs) =>
-          val part = lww(spark.read.schema(levelSchema)
-            .parquet(inputs.map(e => s"$root/${e.rel}"): _*))
-          if (part.where(pred).head(1).nonEmpty) {
-            val kept = part.where(!pred).localCheckpoint(true)
-            var added = Seq.empty[ManifestEntry]
-            var scratch: Option[JPath] = None
-            if (kept.head(1).nonEmpty) {
-              val cid = HoardStore.claimCommitBase(root)
-              val sub = f"c$cid%012d_del_l${ar.step}_$month"
-              kept.coalesce(1).write.mode(SaveMode.Overwrite)
-                .parquet(s"${dataPath(root)}/$sub")
-              added = listDir(Paths.get(dataPath(root), sub))
-                .filter(_.endsWith(".parquet"))
-                .map(f => ManifestEntry(ar.step, month, s"_data/$sub/$f"))
-              scratch = Some(Paths.get(dataPath(root), sub))
-            }
-            if (!commitRewrite(inputs.toSet, added))
-              scratch.foreach(deleteRecursively)
-          }
-        }
-      }
-      forgetCatalog(pred)
-    }
+    forgetCatalog(pred)
+  }
 
   /** Rewrite the series catalog without the matching series — the
     * compact-catalog transactional shape (write-new, move-in, delete
@@ -1250,47 +969,30 @@ final class HoardStore private (val spark: SparkSession, val root: String,
   /** Retention vacuum: drop rows beyond each level's retention —
     * the Parquet analogue of ring-buffer wraparound reclaiming slots.
     *
-    * Scale shape: months STRICTLY before the cutoff month are fully
-    * expired, so their partition directories are dropped without
-    * reading a byte; only the single boundary month (the one partition
-    * mixing kept and expired rows) is read, filtered and rewritten —
-    * and only when it actually contains expired rows. Work is O(1
-    * month partition), not O(level), and repeated vacuums are no-op
-    * idempotent (an emptied level is never re-read).
+    * Scale shape: a manifest edit, not a physical delete. Months
+    * STRICTLY before the cutoff month are fully expired, so their
+    * entries are dropped without reading a byte; only the single
+    * boundary month (the one mixing kept and expired rows) is read,
+    * filtered and rewritten — and only when it actually contains
+    * expired rows. Work is O(1 month), not O(level), and repeated
+    * vacuums are no-op idempotent (an emptied level is never re-read).
+    * Frees no disk by itself: the superseded files stay (pinned
+    * snapshots may read them) until [[expireSnapshots]].
     */
-  def vacuum(now: Long): Unit = mergeStrategy match {
-    case HoardStore.ManifestAppend => vacuumManifest(now)
-    case _ => withWriteLock(vacuumLevels(now))
-  }
-
-  private def vacuumLevels(now: Long): Unit = {
+  def vacuum(now: Long): Unit = synchronized {
+    require(pinnedVersion.isEmpty, "snapshot views are read-only")
     policy.sorted.foreach { ar =>
-      val dir = Paths.get(levelPath(root, ar.step))
-      if (Files.exists(dir)) {
-        val cutoff = now - ar.retention
-        val cutoffMonth = monthsCovering(cutoff, cutoff + 1).head
-        val months = listDir(dir)
-          .filter(_.startsWith("p_month="))
-          .map(_.stripPrefix("p_month="))
-        months.filter(_ < cutoffMonth)
-          .foreach(m => deleteRecursively(dir.resolve(s"p_month=$m")))
-        if (months.contains(cutoffMonth)) {
-          // read ONLY the boundary partition directory
-          val part = spark.read.parquet(s"$dir/p_month=$cutoffMonth")
-          val pred = col("interval") >= timestamp_seconds(lit(cutoff))
-          if (part.where(!pred).head(1).nonEmpty) {
-            val kept = part.where(pred)
-              .select("series_id", "interval", "value", "seq")
-              .withColumn("p_month", date_format(col("interval"), "yyyy-MM"))
-              .localCheckpoint(true)
-            if (kept.head(1).nonEmpty)
-              kept.write.mode(SaveMode.Overwrite)
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("p_month").parquet(levelPath(root, ar.step))
-            else deleteRecursively(dir.resolve(s"p_month=$cutoffMonth"))
-          }
-        }
-      }
+      val cutoff = now - ar.retention
+      val cutoffMonth = monthsCovering(cutoff, cutoff + 1).head
+      val ents = latestEntries.filter(_.step == ar.step)
+      val expired = ents.filter(_.month < cutoffMonth).toSet
+      val boundary = ents.filter(_.month == cutoffMonth)
+      val pred = col("interval") >= timestamp_seconds(lit(cutoff))
+      val part = if (boundary.isEmpty) None else Some(readEntries(boundary))
+      if (part.exists(_.where(!pred).head(1).nonEmpty))
+        rewrite(ar.step, cutoffMonth, "vac", expired ++ boundary,
+          part.get.where(pred))
+      else if (expired.nonEmpty) commitRewrite(expired, Seq.empty)
     }
   }
 
@@ -1323,43 +1025,20 @@ object HoardStore {
   final case class RawPoint(series_id: String, ts: Long, value: Double)
   final case class TimeInfo(fromInterval: Long, toInterval: Long, step: Long)
 
-  /** Seam for the level-merge commit (DESIGN.md's transactional-format
-    * swap): [[MonthRewrite]] is the plain-Parquet reality (dynamic
-    * partition overwrite of touched months); [[RecordMergeSim]] runs
-    * the record-level MERGE dataflow (upsert matched keys, pass
-    * untouched rows through) that a transactional table format would
-    * commit natively — proven content-identical to MonthRewrite on
-    * shared workloads by HoardStoreSpec, which is what makes the swap
-    * claim testable without the format's jars.
+  /** The store's commit protocol. It has exactly one value and selects
+    * nothing: [[create]] keeps the parameter so existing callers that
+    * name [[ManifestAppend]] still compile.
     */
   sealed trait MergeStrategy
-  case object MonthRewrite extends MergeStrategy
-  case object RecordMergeSim extends MergeStrategy
 
-  /** The native record-level merge, no table-format jars required:
-    * writes APPEND per-batch winner rows as delta files into the
-    * touched month partitions (write-amp ∝ batch size — the property
-    * DESIGN.md's transactional swap was after), readers resolve
-    * last-write-wins across delta files at read time, and month
-    * compaction (inline past a file-count threshold, or explicit
-    * [[HoardStore.compact]]) folds partitions back to one row per key.
-    * Classic LSM merge-on-read, expressed as the same lww aggregation
-    * the other strategies run at write time. The choice is persisted in
-    * the store (`_merge`), so reopening always restores the right read
-    * semantics.
-    */
-  case object DeltaAppend extends MergeStrategy
-
-  /** The transactional-table strategy, no external jars: data files are
-    * immutable and live in per-commit directories under `_data/`; the
-    * store's state is whatever file list the LATEST manifest in
-    * `_manifests/` names (readers plan from metadata — no directory
-    * listing); writers commit lock-FREE by optimistic validate-and-
-    * publish with conflict re-try; readers can pin a version
-    * ([[HoardStore.snapshot]]) and stay isolated from every concurrent
-    * rewrite until [[HoardStore.expireSnapshots]]. This closes the two
-    * properties DESIGN.md deferred to a real table format: optimistic
-    * commit and snapshot isolation.
+  /** Data files are immutable and live in per-commit directories under
+    * `_data/`; the store's state is whatever file list the LATEST
+    * manifest in `_manifests/` names (readers plan from metadata — no
+    * directory listing); writers commit lock-FREE by optimistic
+    * validate-and-publish with conflict re-try; readers can pin a
+    * version ([[HoardStore.snapshot]]) and stay isolated from every
+    * concurrent rewrite until [[HoardStore.expireSnapshots]]. Persisted
+    * as `manifest_append` in the store's `_merge` marker.
     */
   case object ManifestAppend extends MergeStrategy
 
@@ -1367,8 +1046,11 @@ object HoardStore {
     * (level, month) partition it belongs to — the conflict and pruning
     * granularity.
     */
-  private[store] final case class ManifestEntry(step: Long, month: String,
-                                                rel: String)
+  private[graft] final case class ManifestEntry(step: Long, month: String,
+                                                rel: String) {
+    /** The directory one commit (write, fold, vacuum or delete) wrote. */
+    def commitDir: String = rel.split('/')(1)
+  }
 
   /** In-flight optimistic transaction: the snapshot it reads, the files
     * it staged, its (level, month) conflict footprint, and catalog
@@ -1402,7 +1084,7 @@ object HoardStore {
 
   private[graft] def removeCatalog(root: String): Unit = catalogs.remove(root)
 
-  private[store] def latestManifestVersion(root: String): Long =
+  private[graft] def latestManifestVersion(root: String): Long =
     catalogFor(root).latestVersion
 
   /** Entries of manifest `ver` (0 = the empty pre-creation state). */
@@ -1410,74 +1092,65 @@ object HoardStore {
                                      ver: Long): Seq[ManifestEntry] =
     catalogFor(root).entries(ver)
 
-  private def strategyName(m: MergeStrategy): String = m match {
-    case MonthRewrite => "month_rewrite"
-    case RecordMergeSim => "record_merge_sim"
-    case DeltaAppend => "delta_append"
-    case ManifestAppend => "manifest_append"
-  }
-
-  private def strategyFor(name: String): MergeStrategy = name match {
-    case "month_rewrite" => MonthRewrite
-    case "record_merge_sim" => RecordMergeSim
-    case "delta_append" => DeltaAppend
-    case "manifest_append" => ManifestAppend
-  }
-
   private def strategyFile(root: String): JPath = Paths.get(root, "_merge")
 
+  private val ManifestMarker = "manifest_append"
+
   /** DDL (`src/hoard.coffee:30-69`): rejects an existing store, persists
-    * the policy catalog. No preallocation — Parquet levels appear on
-    * first write.
+    * the policy catalog and the `_merge` marker. No preallocation — data
+    * files appear on first write. `mergeStrategy` selects nothing (see
+    * [[MergeStrategy]]).
     */
   def create(spark: SparkSession, root: String, policy: ArchivePolicy,
-             mergeStrategy: MergeStrategy = MonthRewrite): HoardStore = {
+             mergeStrategy: MergeStrategy = ManifestAppend): HoardStore = {
     val dir = Paths.get(root)
     if (Files.exists(policyFile(root)))
       throw new IllegalStateException(s"Store already exists: $root")
     Files.createDirectories(dir)
     writePolicy(root, policy)
-    writeSeqBase(root, 0L)
-    Files.writeString(strategyFile(root), strategyName(mergeStrategy))
-    new HoardStore(spark, root, mergeStrategy)
+    Files.writeString(strategyFile(root), ManifestMarker)
+    new HoardStore(spark, root)
   }
 
-  /** The persisted strategy wins over the argument (a DeltaAppend store
-    * read without merge-on-read would surface duplicate rows); the
-    * argument only applies to stores created before the marker existed.
+  /** Opens a store. Stores written by the removed month-rewrite,
+    * record-merge or delta-append strategies (or older ones with no
+    * `_merge` marker) are refused: their data lives outside any
+    * manifest, and there is no migration path.
     */
-  def open(spark: SparkSession, root: String,
-           mergeStrategy: MergeStrategy = MonthRewrite): HoardStore = {
-    require(Files.exists(policyFile(root)), s"No store at $root")
-    val strategy =
-      if (Files.exists(strategyFile(root)))
-        strategyFor(Files.readString(strategyFile(root)).trim)
-      else mergeStrategy
-    new HoardStore(spark, root, strategy)
+  def open(spark: SparkSession, root: String): HoardStore = {
+    requireManifestStore(root)
+    new HoardStore(spark, root)
   }
 
-  /** Time travel: a read-only view of a ManifestAppend store at a
-    * historical manifest version (what [[HoardStore.snapshot]] pins
-    * implicitly, addressed explicitly). Note versions are per-LEVEL
-    * commits: an updateMany over an N-level policy publishes N
-    * versions, so intermediate versions show a partially-cascaded
-    * batch — consistent reads come from versions between transactions
-    * (each level's content is still internally exact). Valid while the
-    * version survives `expireSnapshots`.
+  private def requireManifestStore(root: String): Unit = {
+    require(Files.exists(policyFile(root)), s"No store at $root")
+    val found =
+      if (Files.exists(strategyFile(root)))
+        Files.readString(strategyFile(root)).trim
+      else "none (no _merge marker)"
+    if (found != ManifestMarker)
+      throw new IllegalStateException(
+        s"Store $root uses merge strategy $found; only $ManifestMarker " +
+          "stores can be opened (there is no migration path)")
+  }
+
+  /** Time travel: a read-only view of the store at a historical
+    * manifest version (what [[HoardStore.snapshot]] pins implicitly,
+    * addressed explicitly). Every write publishes one version, so a
+    * version between writes shows each batch whole; a vacuum or delete
+    * may publish several versions (one per level or month it rewrites).
+    * Valid while the version survives `expireSnapshots`.
     */
   def openVersion(spark: SparkSession, root: String,
                   version: Long): HoardStore = {
-    require(Files.exists(policyFile(root)), s"No store at $root")
-    require(Files.exists(strategyFile(root)) &&
-      strategyFor(Files.readString(strategyFile(root)).trim) == ManifestAppend,
-      "time travel requires the ManifestAppend strategy")
+    requireManifestStore(root)
     val latest = latestManifestVersion(root)
     require(version >= 1 && version <= latest,
       s"version $version out of range [1, $latest] (older versions may " +
         "have been expired)")
     require(catalogFor(root).versions.contains(version),
       s"manifest v$version was expired")
-    new HoardStore(spark, root, ManifestAppend, Some(version))
+    new HoardStore(spark, root, Some(version))
   }
 
   /** Catalog read (`src/hoard.coffee:392-424`) — policy + derived
@@ -1515,26 +1188,21 @@ object HoardStore {
   /** Transactional commit allocation: batch N is claimed by atomically
     * creating `_commits/%012d` (create-exclusive is atomic), so no two
     * writers — nor a writer and its own crashed predecessor — can ever
-    * share a seq base. This replaces the `_seq` overwrite, which a
-    * crash could tear mid-write and a concurrent writer could read
-    * stale (both would duplicate a base and scramble lww recency).
-    * The marker is durable evidence of the claim even if the batch
-    * itself never lands; commit ids are monotone, O(#batches) tiny
-    * empty files, folded implicitly by being listable in one readdir.
-    * Legacy stores seed from their `_seq` file.
+    * share a seq base. The marker is durable evidence of the claim even
+    * if the batch itself never lands; commit ids are monotone,
+    * O(#batches) tiny empty files, folded implicitly by being listable
+    * in one readdir.
     */
   private[store] def claimCommitBase(root: String): Long = {
     val dir = Paths.get(root, "_commits")
     Files.createDirectories(dir)
-    val seed = math.max(nextSeqBase(root), {
+    val seed = {
       val s = Files.list(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala
-          .map(_.getFileName.toString).filter(_.matches("\\d{12}"))
-          .foldLeft(0L)((m, f) => math.max(m, f.toLong))
-      } finally s.close()
-    })
+      try s.iterator().asScala
+        .map(_.getFileName.toString).filter(_.matches("\\d{12}"))
+        .foldLeft(0L)((m, f) => math.max(m, f.toLong))
+      finally s.close()
+    }
     var n = seed + 1
     while (true) {
       try { Files.createFile(dir.resolve(f"$n%012d")); return n }
@@ -1542,18 +1210,6 @@ object HoardStore {
     }
     0L // unreachable
   }
-
-  private def seqFile(root: String): JPath = Paths.get(root, "_seq")
-
-  private def writeSeqBase(root: String, v: Long): Unit =
-    Files.writeString(seqFile(root), v.toString)
-
-  private def nextSeqBase(root: String): Long =
-    if (Files.exists(seqFile(root))) Files.readString(seqFile(root)).trim.toLong
-    else 0L
-
-  private[store] def levelPath(root: String, step: Long): String =
-    s"$root/level=$step"
 
   private[store] def catalogPath(root: String): String = s"$root/_series"
 

@@ -8,7 +8,7 @@ import scala.concurrent.duration._
 import scala.util.Random
 
 /** Contention stress for the lock-free optimistic commit path: W
-  * writers race M batches each onto ONE ManifestAppend store with
+  * writers race M batches each onto ONE store with
   * OVERLAPPING series and intervals (every batch conflicts with every
   * concurrent batch at the (level, month) granularity, so the
   * conflict-retry path fires constantly — the worst case, where a real
@@ -16,8 +16,7 @@ import scala.util.Random
   *
   * Gates printed: every batch lands (total attempts >= batches;
   * retries visible), the converged state equals the same batches
-  * replayed SEQUENTIALLY in commit-base order on a fresh store, and no
-  * `_lock` file ever appears.
+  * replayed SEQUENTIALLY in commit-base order on a fresh store.
   *
   * Usage: runMain graft.tools.ManifestStress [writers] [batchesEach]
   */
@@ -34,8 +33,8 @@ object ManifestStress {
   }
 
   /** The envelope as a boolean (StressAll's unit): every racing batch
-    * lands, no `_lock` file ever appears, and the converged key sets
-    * equal a sequential replay's (the linearizability gate).
+    * lands and the converged key sets equal a sequential replay's (the
+    * linearizability gate).
     */
   def run(spark: org.apache.spark.sql.SparkSession, writers: Int,
           batches: Int): Boolean = {
@@ -44,7 +43,7 @@ object ManifestStress {
     val now = 1700000000L
     val root = java.nio.file.Files.createTempDirectory("graft-mstress")
       .toString + "/store"
-    HoardStore.create(spark, root, policy, HoardStore.ManifestAppend)
+    HoardStore.create(spark, root, policy)
 
     // every writer hits the SAME series and the same 20-day range:
     // maximal (level, month) overlap → every concurrent pair conflicts
@@ -71,16 +70,13 @@ object ManifestStress {
     val wall = (System.nanoTime() - t0) / 1e9
     println(f"[mstress] $writers writers x $batches batches in $wall%.1f s; " +
       s"last-batch attempts per writer: ${attempts.mkString(",")}")
-    val noLock = java.nio.file.Files.notExists(
-      java.nio.file.Paths.get(root, "_lock"))
-    if (!noLock) println("[mstress] FAIL: a _lock file appeared")
 
     // sequential reference in commit-base order: the store's own claim
     // markers define the serialization the lww keys encode
     val st = HoardStore.open(spark, root)
     val ref = HoardStore.create(spark,
       java.nio.file.Files.createTempDirectory("graft-mstress-ref")
-        .toString + "/store", policy, HoardStore.ManifestAppend)
+        .toString + "/store", policy)
     // replay order: batches sorted by the base each landed with is not
     // directly observable, but ANY sequential order of these batches
     // converges to the same lww state per-key IFF propagation saw every
@@ -109,6 +105,6 @@ object ManifestStress {
     }
     println(if (ok) "[mstress] OK — all batches landed, key sets converged"
       else "[mstress] FAIL")
-    ok && noLock
+    ok
   }
 }

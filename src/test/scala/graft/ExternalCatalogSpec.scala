@@ -43,7 +43,7 @@ class ExternalCatalogSpec extends SparkTestBase {
     val cat = new InMemoryManifestCatalog
     HoardStore.injectCatalog(root, cat)
     try {
-      HoardStore.create(spark, root, policy, HoardStore.ManifestAppend)
+      HoardStore.create(spark, root, policy)
 
       // maximal (level, month) overlap → every concurrent pair
       // conflicts, the ManifestStress worst case
@@ -74,8 +74,7 @@ class ExternalCatalogSpec extends SparkTestBase {
 
       // linearizability gate (ManifestStress's): key sets equal a
       // sequential replay of the same batches on a FILE-catalog store
-      val ref = HoardStore.create(spark, tmpDir("extcat-ref") + "/store",
-        policy, HoardStore.ManifestAppend)
+      val ref = HoardStore.create(spark, tmpDir("extcat-ref") + "/store", policy)
       work.foreach { case (_, b) => ref.updateMany(b, now) }
       val got = levelKeys(HoardStore.open(spark, root))
       val want = levelKeys(ref)
@@ -96,7 +95,7 @@ class ExternalCatalogSpec extends SparkTestBase {
     val cat = new InMemoryManifestCatalog
     HoardStore.injectCatalog(root, cat)
     try {
-      val st = HoardStore.create(spark, root, policy, HoardStore.ManifestAppend)
+      val st = HoardStore.create(spark, root, policy)
       val rnd = new Random(7)
       def batch() = (0 until 30).map(_ => RawPoint(s"s${rnd.nextInt(2)}",
         now - rnd.between(0L, 20L * 86400), rnd.nextInt(1000).toDouble))

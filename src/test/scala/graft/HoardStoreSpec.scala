@@ -15,6 +15,21 @@ class HoardStoreSpec extends SparkTestBase {
   private def freshStore() =
     HoardStore.create(spark, tmpDir("hoard") + "/store", policy)
 
+  /** Root paths of every file relation the optimized plan scans. */
+  private def scannedPaths(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+    df.queryExecution.optimizedPlan.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation match {
+          case r: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
+            r.location.rootPaths.map(_.toString)
+          case _ => Seq.empty
+        }
+    }
+
+  private def hourlyMonths(s: HoardStore): Map[String, Set[String]] =
+    s.latestEntries.filter(_.step == 3600).groupBy(_.month)
+      .map { case (m, es) => m -> es.map(_.rel).toSet }
+
   test("create rejects an existing store; info reads the catalog back") {
     val s = freshStore()
     intercept[IllegalStateException] {
@@ -165,10 +180,14 @@ class HoardStoreSpec extends SparkTestBase {
       HoardStore.RawPoint("cpu", now - 3600, 1.0),
       HoardStore.RawPoint("cpu", now - 90 * 86400, 2.0)), now)
     val (_, df) = s.fetch("cpu", now - 7200, now, now)
-    val plan = df.queryExecution.executedPlan.toString
-    // the scan must carry a p_month partition filter (a data-column
-    // interval predicate alone would scan every month at scale)
-    assert(plan.contains("p_month"), s"no partition filter in plan:\n$plan")
+    // the scan's file list must cover only the window's month (a
+    // data-column interval predicate alone would scan every month)
+    val months = hourlyMonths(s)
+    assert(months.size == 2, s"expected two hourly months, got ${months.keySet}")
+    val window = months("2011-08")
+    val scanned = scannedPaths(df).flatten
+    assert(scanned.nonEmpty && scanned.forall(p => window.exists(p.endsWith)),
+      s"scan reads files outside the window's month: $scanned")
     val (_, vals) = s.fetchValues("cpu", now - 7200, now, now)
     assert(vals.flatten == Seq(1.0)) // pruning did not drop the hit
   }
@@ -186,7 +205,6 @@ class HoardStoreSpec extends SparkTestBase {
 
   test("vacuum drops expired months wholesale and leaves live months byte-identical") {
     import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
     // 120-day retention: the oldest of three month partitions fully
     // expires; the cutoff lands in a month with no expired rows, so the
     // surviving partitions must not be rewritten at all
@@ -200,22 +218,19 @@ class HoardStoreSpec extends SparkTestBase {
       RawPoint("cpu", now - 75 * 86400, 2.0),       // ~2.5 months back (live)
       RawPoint("cpu", now - 170 * 86400, 3.0)),      // ~5.6 months back (expired)
       now - 170 * 86400)
-    val lvl = Paths.get(s.root, "level=3600")
-    def monthDirs = Files.list(lvl).iterator().asScala.map(_.getFileName.toString)
-      .filter(_.startsWith("p_month=")).toSeq.sorted
-    def filesOf(m: String): Seq[(String, Long)] =
-      Files.walk(lvl.resolve(m)).iterator().asScala.filter(Files.isRegularFile(_))
-        .map(p => (p.getFileName.toString, Files.getLastModifiedTime(p).toMillis))
-        .toSeq.sorted
-    val before = monthDirs
+    def mtimes(rels: Set[String]): Set[(String, Long)] = rels.map(r =>
+      r -> Files.getLastModifiedTime(Paths.get(s.root, r)).toMillis)
+    val before = hourlyMonths(s)
     assert(before.size == 3)
-    val snap = before.map(m => m -> filesOf(m)).toMap
+    val snap = before.map { case (m, rels) => m -> mtimes(rels) }
     s.vacuum(now)
-    val after = monthDirs
-    assert(after.size == 2, s"expected expired month dropped, got $after")
-    assert(!after.contains(before.head))
-    // surviving months were not rewritten: same files, same mtimes
-    after.foreach(m => assert(filesOf(m) == snap(m), s"month $m was rewritten"))
+    val after = hourlyMonths(s)
+    assert(after.size == 2, s"expected expired month dropped, got ${after.keySet}")
+    assert(!after.contains(before.keySet.min))
+    // surviving months were not rewritten: same entries, same files
+    after.foreach { case (m, rels) =>
+      assert(rels == before(m) && mtimes(rels) == snap(m), s"month $m was rewritten")
+    }
     val vals = s.readLevel(Archive(3600, 2880)).collect()
     assert(vals.map(_.getAs[Double]("value")).toSet == Set(1.0, 2.0))
   }
@@ -228,13 +243,13 @@ class HoardStoreSpec extends SparkTestBase {
       HoardStore.RawPoint("cpu", t, 1.0),
       HoardStore.RawPoint("mem", t - 3600, 2.0)), now)
     val (_, df) = s.fetchMulti(lit(true), t - 7200, t + 3600, now)
-    // executedPlan prints each FileScan's Location path
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("_series"), s"universe does not read the catalog:\n$plan")
+    val scans = scannedPaths(df)
+    assert(scans.exists(_.exists(_.contains("_series"))),
+      s"universe does not read the catalog: $scans")
     // exactly ONE scan of the level data (the windowed read); the
     // pre-catalog plan scanned the level a second time for the universe
-    val levelScans = "level=3600".r.findAllIn(plan).length
-    assert(levelScans == 1, s"expected 1 level scan, got $levelScans:\n$plan")
+    val levelScans = scans.count(_.exists(_.contains("_l3600/")))
+    assert(levelScans == 1, s"expected 1 level scan, got $levelScans: $scans")
   }
 
   test("catalog keeps a vacuumed-out series visible to fetchMulti (all-null frame)") {
@@ -250,143 +265,62 @@ class HoardStoreSpec extends SparkTestBase {
     assert(ti.step == 3600)
   }
 
-  test("second concurrent writer fails loudly on the write lock") {
+  private def dump(s: HoardStore, ar: Archive) = {
+    import org.apache.spark.sql.functions.col
+    s.readLevel(ar).orderBy("series_id", "interval")
+      .select(col("series_id"), col("interval").cast("long"), col("value"))
+      .collect().toSeq
+  }
+
+  test("compact(1) leaves one manifest entry per (level, month) without changing contents") {
     val s = freshStore()
-    val lock = java.nio.file.Paths.get(s.root, "_lock")
-    java.nio.file.Files.createFile(lock) // another writer mid-batch
-    val err = intercept[IllegalStateException] {
-      s.updateMany(Seq(RawPoint("cpu", now - 3600, 1.0)), now)
-    }
-    assert(err.getMessage.contains("locked by another writer"))
-    java.nio.file.Files.delete(lock)
-    s.updateMany(Seq(RawPoint("cpu", now - 3600, 1.0)), now) // recovers
-    assert(!java.nio.file.Files.exists(lock), "lock must release after a write")
-    val (_, vals) = s.fetchValues("cpu", now - 7200, now, now)
-    assert(vals.flatten == Seq(1.0))
-  }
-
-  test("RecordMergeSim merge strategy produces identical level contents") {
-    import org.apache.spark.sql.functions.col
-    val month = HoardStore.create(spark, tmpDir("hoard") + "/m", policy)
-    val record = HoardStore.create(spark, tmpDir("hoard") + "/r", policy,
-      HoardStore.RecordMergeSim)
-    val rnd = new scala.util.Random(47)
-    // three batches with overwrites of earlier intervals and enough
-    // points to cross the daily level's xff gate
-    val batches = (0 until 3).map { b =>
-      (0 until 40).map { i =>
-        val series = s"s${rnd.nextInt(3)}"
-        RawPoint(series, now - 86400 * 2 + rnd.nextInt(48) * 3600, b * 100.0 + i)
-      }
-    }
-    batches.foreach { pts => month.updateMany(pts, now); record.updateMany(pts, now) }
-    policy.sorted.foreach { ar =>
-      def dump(s: HoardStore) = s.readLevel(ar)
-        .orderBy("series_id", "interval")
-        .select(col("series_id"), col("interval").cast("long"), col("value"))
-        .collect().toSeq
-      val (m, r) = (dump(month), dump(record))
-      assert(m.nonEmpty, s"level ${ar.step} empty")
-      assert(m == r, s"level ${ar.step}: strategies diverge")
-    }
-  }
-
-  private def listParquet(dir: java.nio.file.Path): Set[String] = {
-    val st = java.nio.file.Files.list(dir)
-    try {
-      import scala.jdk.CollectionConverters._
-      st.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.endsWith(".parquet")).toSet
-    } finally st.close()
-  }
-
-  test("DeltaAppend: identical contents to MonthRewrite, append-only commits") {
-    import org.apache.spark.sql.functions.col
-    val month = HoardStore.create(spark, tmpDir("hoard") + "/m", policy)
-    val delta = HoardStore.create(spark, tmpDir("hoard") + "/d", policy,
-      HoardStore.DeltaAppend)
-    val rnd = new scala.util.Random(53)
-    val batches = (0 until 3).map { b =>
-      (0 until 40).map { i =>
-        val series = s"s${rnd.nextInt(3)}"
-        RawPoint(series, now - 86400 * 2 + rnd.nextInt(48) * 3600, b * 100.0 + i)
-      }
-    }
-    val hourlyDir = java.nio.file.Paths.get(
-      delta.root, s"level=${policy.sorted.head.step}")
-    def allDeltaFiles: Set[String] = {
-      val st = java.nio.file.Files.list(hourlyDir)
-      val parts = try {
-        import scala.jdk.CollectionConverters._
-        st.iterator().asScala
-          .filter(_.getFileName.toString.startsWith("p_month=")).toList
-      } finally st.close()
-      parts.flatMap(p => listParquet(p).map(f => s"${p.getFileName}/$f")).toSet
-    }
-    var prevFiles = Set.empty[String]
-    batches.foreach { pts =>
-      month.updateMany(pts, now); delta.updateMany(pts, now)
-      // append-only: every delta file from earlier batches survives
-      // (below the compaction threshold nothing is rewritten)
-      val nowFiles = allDeltaFiles
-      assert(prevFiles.subsetOf(nowFiles),
-        "DeltaAppend rewrote existing files below the compaction threshold")
-      prevFiles = nowFiles
-    }
-    policy.sorted.foreach { ar =>
-      def dump(s: HoardStore) = s.readLevel(ar)
-        .orderBy("series_id", "interval")
-        .select(col("series_id"), col("interval").cast("long"), col("value"))
-        .collect().toSeq
-      val (m, d) = (dump(month), dump(delta))
-      assert(m.nonEmpty && m == d, s"level ${ar.step}: strategies diverge")
-    }
-  }
-
-  test("DeltaAppend: compaction folds months to one file without changing contents") {
-    import org.apache.spark.sql.functions.col
-    val s = HoardStore.create(spark, tmpDir("hoard") + "/c", policy,
-      HoardStore.DeltaAppend)
     (0 until 5).foreach { b =>
       s.updateMany((0 until 10).map(i =>
         RawPoint("cpu", now - 86400 + (b * 10 + i) * 3600 % 86400, b + i * 1.0)),
         now)
     }
-    def dump(ar: graft.core.Archive) = s.readLevel(ar)
-      .orderBy("series_id", "interval")
-      .select(col("series_id"), col("interval").cast("long"), col("value"))
-      .collect().toSeq
-    val before = policy.sorted.map(dump)
+    val before = policy.sorted.map(dump(s, _))
+    assert(s.latestEntries.groupBy(e => (e.step, e.month)).exists(_._2.size > 1))
     s.compact(maxFilesPerMonth = 1)
-    val after = policy.sorted.map(dump)
-    assert(before == after, "compaction changed level contents")
-    policy.sorted.foreach { ar =>
-      val dir = java.nio.file.Paths.get(s.root, s"level=${ar.step}")
-      if (java.nio.file.Files.exists(dir)) {
-        val st = java.nio.file.Files.list(dir)
-        val parts = try {
-          import scala.jdk.CollectionConverters._
-          st.iterator().asScala.filter(_.getFileName.toString.startsWith("p_month="))
-            .toList
-        } finally st.close()
-        parts.foreach(p => assert(listParquet(p).size == 1,
-          s"${p.getFileName} not folded to one file"))
-      }
+    assert(policy.sorted.map(dump(s, _)) == before, "compaction changed level contents")
+    s.latestEntries.groupBy(e => (e.step, e.month)).foreach { case (k, es) =>
+      assert(es.size == 1, s"$k not folded to one entry: $es")
     }
   }
 
-  test("DeltaAppend: persisted strategy survives a default open()") {
-    val root = tmpDir("hoard") + "/p"
-    val s = HoardStore.create(spark, root, policy, HoardStore.DeltaAppend)
-    val t = now - 7200
-    s.updateMany(Seq(RawPoint("cpu", t, 1.0)), now)
-    s.updateMany(Seq(RawPoint("cpu", t + 60, 2.0)), now) // same hourly slot
-    // open WITHOUT naming the strategy: merge-on-read must still apply,
-    // otherwise the two delta rows for the slot both surface
-    val reopened = HoardStore.open(spark, root)
-    assert(reopened.mergeStrategy == HoardStore.DeltaAppend)
-    val (_, vals) = reopened.fetchValues("cpu", t - 3600, t + 3600, now)
-    assert(vals.flatten == Seq(2.0))
+  test("open() refuses a store whose _merge is not manifest_append, naming the strategy") {
+    import java.nio.file.{Files, Paths}
+    val s = freshStore()
+    s.update("cpu", 1.0, now - 7200, now)
+    assert(HoardStore.open(spark, s.root).fetchValues("cpu", now - 10800, now, now)
+      ._2.flatten == Seq(1.0))
+    val marker = Paths.get(s.root, "_merge")
+    Files.writeString(marker, "month_rewrite")
+    val legacy = intercept[IllegalStateException](HoardStore.open(spark, s.root))
+    assert(legacy.getMessage.contains("month_rewrite"), legacy.getMessage)
+    Files.delete(marker)
+    val unmarked = intercept[IllegalStateException](HoardStore.open(spark, s.root))
+    assert(unmarked.getMessage.contains("no _merge marker"), unmarked.getMessage)
+  }
+
+  test("17 single-point commits into one month trigger the inline fold; contents unchanged") {
+    val s = freshStore()
+    val dayStart = (now - 2000000) / 86400 * 86400
+    val pts = (0 until 17).map(h => RawPoint("cpu", dayStart + h * 3600, h.toDouble))
+    pts.foreach(p => s.updateMany(Seq(p), now))
+    // every (level, month) is fed by at most 16 commits, and the hourly
+    // month (17 writes) went through a fold
+    val byMonth = s.latestEntries.groupBy(e => (e.step, e.month))
+    byMonth.foreach { case (k, es) =>
+      val commits = es.map(_.commitDir).distinct
+      assert(commits.size <= 16, s"$k fed by ${commits.size} commits")
+    }
+    assert(s.latestEntries.exists(e => e.step == 3600 && e.commitDir.contains("_fold_")),
+      "17 commits into one hourly month did not fold")
+    val hourly = dump(s, policy.finest).map(r => (r.getLong(1), r.getDouble(2)))
+    assert(hourly == pts.map(p => (p.ts, p.value)))
+    val daily = dump(s, Archive(86400, 1095))
+    assert(daily.size == 1 && daily.head.getDouble(2) == pts.map(_.value).sum / 17)
   }
 
   test("series catalog stays bounded in file count across many batches") {

@@ -70,19 +70,7 @@ class StorePropertySpec extends SparkTestBase {
     }
   }
 
-  test("engine == sequential mirror over random multi-batch workloads") {
-    runWorkload(HoardStore.MonthRewrite)
-  }
-
-  test("DeltaAppend engine == sequential mirror (merge-on-read + mid-stream compaction)") {
-    runWorkload(HoardStore.DeltaAppend)
-  }
-
   test("ManifestAppend engine == sequential mirror (manifest reads + optimistic commits)") {
-    runWorkload(HoardStore.ManifestAppend)
-  }
-
-  private def runWorkload(strategy: HoardStore.MergeStrategy): Unit = {
     val rnd = new Random(1234)
     val series = Seq("a", "b")
     // ages spread across all three archives, plus too-old and future
@@ -99,15 +87,12 @@ class StorePropertySpec extends SparkTestBase {
     }
     // 3 arbitrary (non-chronological) batches — batch order semantics
     val batches = points.grouped(60).toSeq
-    val store = HoardStore.create(spark, tmpDir("prop-store") + "/store",
-      policy, strategy)
+    val store = HoardStore.create(spark, tmpDir("prop-store") + "/store", policy)
     batches.zipWithIndex.foreach { case (b, i) =>
       store.updateMany(b, now)
       // compaction between batches must be invisible to every later
       // read and merge — the LSM background-fold property
-      if ((strategy == HoardStore.DeltaAppend ||
-           strategy == HoardStore.ManifestAppend) && i == 1)
-        store.compact(maxFilesPerMonth = 1)
+      if (i == 1) store.compact(maxFilesPerMonth = 1)
     }
 
     val want = mirror(batches)
@@ -159,125 +144,39 @@ class StorePropertySpec extends SparkTestBase {
       }.toMap
     }.toMap
 
-  test("two concurrent writers serialize; result == sequential reference (DeltaAppend)") {
-    import java.nio.file.{Files, Paths}
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration._
-    val root = tmpDir("mw-store") + "/store"
-    val st = HoardStore.create(spark, root, policy, HoardStore.DeltaAppend)
-    val rnd = new Random(77)
-    def mkBatch(sid: String): Seq[RawPoint] = (0 until 80).map { _ =>
-      RawPoint(sid, now - rnd.between(0L, 20L * 86400),
-        rnd.nextInt(1000).toDouble)
-    }
-    // disjoint series, so the converged state is independent of which
-    // writer's commit lands first — the property under test is that
-    // BOTH land (bounded-wait lock serializes; no failure, no loss)
-    val (ba, bb) = (mkBatch("wa"), mkBatch("wb"))
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val second = HoardStore.open(spark, root, HoardStore.DeltaAppend)
-    val f1 = Future(st.updateMany(ba, now))
-    val f2 = Future(second.updateMany(bb, now))
-    Await.result(f1, 180.seconds)
-    Await.result(f2, 180.seconds)
-
-    // each batch claimed its own atomic commit marker
-    val commits = {
-      val s = Files.list(Paths.get(root, "_commits"))
-      try { import scala.jdk.CollectionConverters._
-        s.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
-      } finally s.close()
-    }
-    assert(commits.size == 2 && commits.distinct.size == 2,
-      s"expected two distinct commit markers, got $commits")
-
-    val ref = HoardStore.create(spark, tmpDir("mw-ref") + "/store",
-      policy, HoardStore.DeltaAppend)
-    ref.updateMany(ba, now)
-    ref.updateMany(bb, now)
-    assert(levelContents(st) == levelContents(ref))
-  }
-
-  test("readers tolerate compaction leftovers: duplicated delta files change nothing") {
-    // the non-destructive compaction contract: a crash between
-    // move-in and delete leaves BOTH the folded file and some
-    // superseded deltas — duplicate rows with identical (key, seq)
-    // that every reader's lww must collapse to the same winner
-    import java.nio.file.{Files, Paths}
-    val root = tmpDir("dup-store") + "/store"
-    val st = HoardStore.create(spark, root, policy, HoardStore.DeltaAppend)
-    val rnd = new Random(9)
-    (0 until 3).foreach { _ =>
-      st.updateMany((0 until 40).map(_ => RawPoint("s",
-        now - rnd.between(0L, 20L * 86400), rnd.nextInt(1000).toDouble)), now)
-    }
-    val before = levelContents(st)
-    // duplicate every delta file in every month of every level
-    policy.sorted.foreach { ar =>
-      val lvl = Paths.get(s"$root/level=${ar.step}")
-      if (Files.exists(lvl)) {
-        val months = Files.list(lvl)
-        try {
-          import scala.jdk.CollectionConverters._
-          months.iterator().asScala
-            .filter(_.getFileName.toString.startsWith("p_month=")).foreach { m =>
-              val fs = Files.list(m)
-              try fs.iterator().asScala
-                .filter(_.getFileName.toString.endsWith(".parquet"))
-                .toSeq.foreach { f =>
-                  Files.copy(f, m.resolve(s"leftover-${f.getFileName}"))
-                }
-              finally fs.close()
-            }
-        } finally months.close()
-      }
-    }
-    assert(levelContents(st) == before,
-      "duplicated delta files changed the merged view")
-    // and compaction folds the mess back to clean months, same contents
-    st.compact(maxFilesPerMonth = 1)
-    assert(levelContents(st) == before, "compaction changed contents")
-  }
-
   // --- series deletion ------------------------------------------------
 
-  test("deleteSeries removes exactly the matching series on every strategy") {
+  test("deleteSeries removes exactly the matching series") {
     import org.apache.spark.sql.functions.{col, lit}
-    Seq(HoardStore.MonthRewrite, HoardStore.DeltaAppend,
-        HoardStore.ManifestAppend).foreach { strategy =>
-      val root = tmpDir(s"del-$strategy") + "/store"
-      val st = HoardStore.create(spark, root, policy, strategy)
-      val rnd = new Random(31)
-      def mk(sid: String) = (0 until 50).map(_ =>
-        RawPoint(sid, now - rnd.between(0L, 20L * 86400),
-          rnd.nextInt(1000).toDouble))
-      st.updateMany(mk("gone") ++ mk("kept"), now)
-      val before = levelContents(st)
-      st.deleteSeries(col("series_id") === "gone")
+    val st = HoardStore.create(spark, tmpDir("del") + "/store", policy)
+    val rnd = new Random(31)
+    def mk(sid: String) = (0 until 50).map(_ =>
+      RawPoint(sid, now - rnd.between(0L, 20L * 86400),
+        rnd.nextInt(1000).toDouble))
+    st.updateMany(mk("gone") ++ mk("kept"), now)
+    val before = levelContents(st)
+    st.deleteSeries(col("series_id") === "gone")
 
-      policy.sorted.foreach { ar =>
-        val got = st.readLevel(ar).collect()
-          .map(r => (r.getString(0), r.getTimestamp(1).toInstant.getEpochSecond) ->
-            r.getDouble(2)).toMap
-        val want = before(ar.step).filter(_._1._1 == "kept")
-        assert(got == want, s"$strategy step ${ar.step}: delete diverged")
-      }
-      // the fetch universe forgets the series
-      val (_, dense) = st.fetchMulti(lit(true), now - 3000, now, now)
-      assert(!dense.select("series_id").distinct().collect()
-        .map(_.getString(0)).contains("gone"),
-        s"$strategy: deleted series still in the fetchMulti universe")
-      // and the series can be recreated afterwards
-      st.updateMany(Seq(RawPoint("gone", now - 60, 7.0)), now)
-      assert(st.readLevel(policy.sorted.head).where(col("series_id") === "gone")
-        .count() == 1, s"$strategy: recreate after delete failed")
+    val after = levelContents(st)
+    policy.sorted.foreach { ar =>
+      val want = before(ar.step).filter(_._1._1 == "kept")
+      assert(after(ar.step) == want, s"step ${ar.step}: delete diverged")
     }
+    // the fetch universe forgets the series
+    val (_, dense) = st.fetchMulti(lit(true), now - 3000, now, now)
+    assert(!dense.select("series_id").distinct().collect()
+      .map(_.getString(0)).contains("gone"),
+      "deleted series still in the fetchMulti universe")
+    // and the series can be recreated afterwards
+    st.updateMany(Seq(RawPoint("gone", now - 60, 7.0)), now)
+    assert(st.readLevel(policy.sorted.head).where(col("series_id") === "gone")
+      .count() == 1, "recreate after delete failed")
   }
 
   test("ManifestAppend delete: pinned snapshot still sees the series until expire") {
     import org.apache.spark.sql.functions.col
     val root = tmpDir("del-snap") + "/store"
-    val st = HoardStore.create(spark, root, policy, HoardStore.ManifestAppend)
+    val st = HoardStore.create(spark, root, policy)
     val rnd = new Random(5)
     st.updateMany((0 until 40).map(_ => RawPoint("pii",
       now - rnd.between(0L, 20L * 86400), rnd.nextInt(1000).toDouble)), now)
@@ -295,11 +194,10 @@ class StorePropertySpec extends SparkTestBase {
   // --- lock-free optimistic commits (ManifestAppend) ------------------
 
   test("ManifestAppend: two racing writers commit lock-FREE; result == sequential reference") {
-    import java.nio.file.{Files, Paths}
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration._
     val root = tmpDir("opt-store") + "/store"
-    val st = HoardStore.create(spark, root, policy, HoardStore.ManifestAppend)
+    val st = HoardStore.create(spark, root, policy)
     val rnd = new Random(42)
     def mkBatch(sid: String): Seq[RawPoint] = (0 until 60).map { _ =>
       RawPoint(sid, now - rnd.between(0L, 20L * 86400),
@@ -314,11 +212,8 @@ class StorePropertySpec extends SparkTestBase {
     val f2 = Future(second.updateMany(bb, now))
     Await.result(f1, 180.seconds)
     Await.result(f2, 180.seconds)
-    assert(Files.notExists(Paths.get(root, "_lock")),
-      "ManifestAppend writers must never take the store lock")
 
-    val ref = HoardStore.create(spark, tmpDir("opt-ref") + "/store",
-      policy, HoardStore.ManifestAppend)
+    val ref = HoardStore.create(spark, tmpDir("opt-ref") + "/store", policy)
     ref.updateMany(ba, now)
     ref.updateMany(bb, now)
     assert(levelContents(st) == levelContents(ref))
@@ -326,7 +221,7 @@ class StorePropertySpec extends SparkTestBase {
 
   test("ManifestAppend: a conflicting commit forces retry; propagation recomputes over the winner's rows") {
     val root = tmpDir("conflict-store") + "/store"
-    val a = HoardStore.create(spark, root, policy, HoardStore.ManifestAppend)
+    val a = HoardStore.create(spark, root, policy)
     val b = HoardStore.open(spark, root)
     // both batches hit the SAME minute-archive hour, so the hourly (and
     // daily) propagated means depend on the UNION of fine rows — the
@@ -341,17 +236,52 @@ class StorePropertySpec extends SparkTestBase {
 
     // A retried AFTER B, so the store must equal the sequential replay
     // B-then-A — in particular every propagated level reflects both
-    val ref = HoardStore.create(spark, tmpDir("conflict-ref") + "/store",
-      policy, HoardStore.ManifestAppend)
+    val ref = HoardStore.create(spark, tmpDir("conflict-ref") + "/store", policy)
     ref.updateMany(batchB, now)
     ref.updateMany(batchA, now)
     assert(levelContents(a) == levelContents(ref))
   }
 
+  test("a crash between stage and publish leaves the last published state; expire reclaims the staged files") {
+    import java.nio.file.{Files, Paths}
+    val root = tmpDir("crash-store") + "/store"
+    val st = HoardStore.create(spark, root, policy)
+    val rnd = new Random(13)
+    def mk(sid: String) = (0 until 40).map(_ => RawPoint(sid,
+      now - rnd.between(0L, 20L * 86400), rnd.nextInt(1000).toDouble))
+    val (first, aborted) = (mk("s"), mk("s") ++ mk("only-aborted"))
+    st.updateMany(first, now)
+    def dataFiles(): Set[String] = {
+      val w = Files.walk(Paths.get(root, "_data"))
+      try { import scala.jdk.CollectionConverters._
+        w.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSet
+      } finally w.close()
+    }
+    val published = dataFiles()
+    // the writer dies after staging every level, before the publish
+    st.beforeCommitHook = () => throw new IllegalStateException("crash before publish")
+    intercept[IllegalStateException](st.updateMany(aborted, now))
+    val orphans = dataFiles() -- published
+    assert(orphans.nonEmpty, "the aborted batch staged no files")
+
+    val reopened = HoardStore.open(spark, root)
+    val ref = HoardStore.create(spark, tmpDir("crash-ref") + "/store", policy)
+    ref.updateMany(first, now)
+    assert(levelContents(reopened) == levelContents(ref),
+      "the aborted batch is visible after reopening")
+    val catalog = reopened.seriesCatalog().collect().map(_.getString(0)).toSet
+    assert(catalog == Set("s"), s"the aborted batch's series reached the catalog: $catalog")
+
+    reopened.expireSnapshots()
+    assert((dataFiles() intersect orphans).isEmpty,
+      "expireSnapshots left the aborted batch's staged files")
+    assert(levelContents(reopened) == levelContents(ref))
+  }
+
   test("ManifestAppend: snapshots isolate readers from later commits and rewrites") {
     import java.nio.file.{Files, Paths}
     val root = tmpDir("snap-store") + "/store"
-    val st = HoardStore.create(spark, root, policy, HoardStore.ManifestAppend)
+    val st = HoardStore.create(spark, root, policy)
     val rnd = new Random(7)
     def batch(): Seq[RawPoint] = (0 until 40).map(_ =>
       RawPoint("s", now - rnd.between(0L, 20L * 86400), rnd.nextInt(1000).toDouble))
@@ -516,33 +446,6 @@ class StorePropertySpec extends SparkTestBase {
           assert(math.abs(v - exp(k)) < 2e-6, s"it=$it step=${ar.step} $k: $v != ${exp(k)}")
         }
       }
-    }
-  }
-
-  test("a writer that cannot acquire the lock fails cleanly, then succeeds after release") {
-    import java.nio.file.{Files, Paths}
-    val root = tmpDir("locked-store") + "/store"
-    val st = HoardStore.create(spark, root, policy, HoardStore.DeltaAppend)
-    val lock = Paths.get(root, "_lock")
-    Files.createFile(lock) // a stuck/crashed peer holds the lock
-    spark.conf.set("graft.store.lockWaitMs", "300")
-    try {
-      val batch = Seq(RawPoint("s", now - 30, 1.0))
-      val e = intercept[IllegalStateException](st.updateMany(batch, now))
-      assert(e.getMessage.contains("locked"))
-      // clean failure: nothing staged — no commit marker, no level rows
-      val commitsDir = Paths.get(root, "_commits")
-      assert(!Files.exists(commitsDir) || {
-        val s = Files.list(commitsDir)
-        try s.count() == 0 finally s.close()
-      })
-      assert(policy.sorted.forall(ar => st.readLevel(ar).isEmpty))
-      Files.delete(lock)
-      st.updateMany(batch, now) // lock released → the same write succeeds
-      assert(st.readLevel(policy.sorted.head).count() == 1)
-    } finally {
-      spark.conf.set("graft.store.lockWaitMs", "60000")
-      Files.deleteIfExists(lock)
     }
   }
 }

@@ -31,6 +31,58 @@ class StreamingSpec extends SparkTestBase {
     assert(memV.flatten == Seq(9.0))
   }
 
+  test("StreamIngest restarted from its checkpoint after the first of two micro-batches == one-shot run") {
+    import spark.implicits._
+    val now = 1312502906L
+    val day = (now - 2000000) / 86400 * 86400
+    // s6's shape: two parquet files cut mid-day, one file per trigger,
+    // so the daily interval receives hourly points from both batches
+    val pts = (0 until 24).flatMap(h => Seq(
+      ("cpu", day + h * 3600, h * 1.5, h.toLong),
+      ("mem", day + h * 3600 + 60, 100.0 - h, 100L + h)))
+      .toDF("series_id", "ts", "value", "seq")
+    val stage = tmpDir("restart-in")
+    val cut = day + 12 * 3600
+    pts.where($"ts" < cut).coalesce(1).write.mode("append").parquet(stage)
+    pts.where($"ts" >= cut).coalesce(1).write.mode("append").parquet(stage)
+    def stream() = spark.readStream.schema(pts.schema)
+      .option("maxFilesPerTrigger", 1).parquet(stage)
+    def contents(st: HoardStore) = st.policy.sorted.map(ar => ar.step ->
+      st.readLevel(ar).collect()
+        .map(r => (r.getString(0), r.getTimestamp(1).getTime, r.getDouble(2))).toSet
+    ).toMap
+
+    val oneShot = HoardStore.create(spark, tmpDir("restart-one") + "/store",
+      ArchivePolicy.referenceTest)
+    assert(StreamIngest.start(stream(), oneShot, () => now,
+      tmpDir("restart-one-ckpt")).awaitTermination(120000))
+
+    val st = HoardStore.create(spark, tmpDir("restart") + "/store",
+      ArchivePolicy.referenceTest)
+    val ckpt = tmpDir("restart-ckpt")
+    // the query dies when the second micro-batch asks for its clock:
+    // batch 0 is committed, batch 1 is planned but has written nothing
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
+    val dying = StreamIngest.start(stream(), st, () => {
+      if (calls.incrementAndGet() == 2)
+        throw new IllegalStateException("stopped after the first micro-batch")
+      now
+    }, ckpt)
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      dying.awaitTermination())
+    assert(HoardStore.latestManifestVersion(st.root) == 1)
+
+    val resumed = StreamIngest.start(stream(), HoardStore.open(spark, st.root),
+      () => now, ckpt)
+    assert(resumed.awaitTermination(120000))
+    // no batch lost, none applied twice: the same contents, and one
+    // published manifest version per micro-batch on both sides
+    assert(contents(st) == contents(oneShot))
+    assert(contents(st)(86400L).size == 2, "the daily interval spans both batches")
+    assert(HoardStore.latestManifestVersion(st.root) == 2)
+    assert(HoardStore.latestManifestVersion(oneShot.root) == 2)
+  }
+
   test("flatMapGroupsWithState sessionization closes sessions across batches") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
