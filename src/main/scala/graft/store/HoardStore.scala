@@ -16,9 +16,13 @@ import scala.jdk.CollectionConverters._
   * each archive level holds (series_id, interval, value, seq) rows in
   * immutable Parquet files under `_data/`, and the store's state is the
   * file list the latest manifest in `_manifests/` names, each entry
-  * keyed by its (level, month). Semantics per SURVEY §2.2, with the
-  * reference's defects fixed by intent (§2.3): xff honored (B1), single
-  * update propagates (B2), batch coalescing moot under Parquet (B3).
+  * keyed by its (level, month). Each level's series catalog is named by
+  * the same manifest (entries under the reserved month
+  * [[HoardStore.CatalogMonth]]), so one publish makes a batch's rows and
+  * its new series visible together, and a pinned view sees the catalog
+  * of its own version. Semantics per SURVEY §2.2, with the reference's
+  * defects fixed by intent (§2.3): xff honored (B1), single update
+  * propagates (B2), batch coalescing moot under Parquet (B3).
   *
   * Determinism: every write carries a monotone `seq` stamp, whose batch
   * base is claimed by atomically creating a `_commits/` marker; merges
@@ -27,12 +31,13 @@ import scala.jdk.CollectionConverters._
   * a (level, month)'s files. `now` is always an explicit parameter —
   * never wall clock (SURVEY §5.3).
   *
-  * One commit path: a batch stages its per-level winner files against
-  * a pinned manifest version, then publishes one new version by an
-  * atomic claim. Writers take no lock — a publish that finds a
-  * concurrent commit in a (level, month) it read or wrote discards its
-  * staged files and re-runs the cascade (optimistic concurrency).
-  * Nothing is visible before the publish, so a crash at any point
+  * One commit path: a batch stages its per-level winner files and
+  * catalog files against a pinned manifest version, then publishes one
+  * new version by an atomic claim. Writers take no lock — a publish
+  * that finds a concurrent commit in a (level, month) it read or wrote
+  * discards its staged files and re-runs the cascade (optimistic
+  * concurrency). Nothing is visible before the publish and nothing of
+  * the batch is written after it, so a crash at any point
   * leaves readers the last published version; unpublished files are
   * reclaimed by [[expireSnapshots]]. Write-amp is ∝ batch size;
   * compaction, vacuum and deletes are manifest rewrites that free no
@@ -169,9 +174,7 @@ final class HoardStore private (val spark: SparkSession, val root: String,
         .localCheckpoint(true)
       if (touchedHere.head(1).nonEmpty) {
         mergeLevel(ar, newRows, txn)
-        // catalog appends are deferred past the optimistic commit: a
-        // conflicted-and-retried attempt must not leave phantom series
-        txn.catalogQueue += ((ar, touchedHere))
+        stageCatalog(ar, touchedHere, txn)
       }
       touchedBelow =
         if (touchedBelow == null) touchedHere
@@ -204,7 +207,7 @@ final class HoardStore private (val spark: SparkSession, val root: String,
       .localCheckpoint(true)
     if (touched.head(1).nonEmpty) {
       mergeLevel(ar, newRows, txn)
-      txn.catalogQueue += ((ar, touched))
+      stageCatalog(ar, touched, txn)
     }
   }
 
@@ -236,8 +239,7 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     */
   private def runOptimistic(body: Txn => Unit): Unit = synchronized {
     require(pinnedVersion.isEmpty, "snapshot views are read-only")
-    val maxAttempts = scala.util.Try(
-      spark.conf.get("graft.store.commitRetries").toInt).getOrElse(10)
+    val maxAttempts = 10
     var attempt = 0
     var done = false
     while (!done) {
@@ -245,17 +247,13 @@ final class HoardStore private (val spark: SparkSession, val root: String,
       val txn = new Txn(latestManifestVersion(root))
       body(txn)
       val hook = beforeCommitHook; beforeCommitHook = () => (); hook()
-      if (commitTxn(txn)) {
-        // catalog appends deferred past the publish: a conflicted
-        // attempt must not leave phantom series behind
-        txn.catalogQueue.foreach { case (ar, t) => appendCatalog(ar, t) }
-        done = true
-      } else {
-        txn.staged.map(e => Paths.get(root, e.rel).getParent.getParent)
-          .distinct.foreach(deleteRecursively)
+      if (commitTxn(txn)) done = true
+      else {
+        txn.staged.map(_.commitDir).distinct
+          .foreach(d => deleteRecursively(Paths.get(dataPath(root), d)))
         if (attempt > maxAttempts) throw new IllegalStateException(
           s"optimistic commit on $root lost $maxAttempts validation " +
-            "rounds to concurrent writers; raise graft.store.commitRetries")
+            "rounds to concurrent writers")
       }
     }
     lastCommitAttempts = attempt
@@ -371,9 +369,13 @@ final class HoardStore private (val spark: SparkSession, val root: String,
   private[graft] def latestEntries: Seq[ManifestEntry] =
     manifestEntries(root, latestManifestVersion(root))
 
-  /** lww view of a set of manifest entries' files. */
+  /** Merged view of one (level, month)'s or one catalog's entries: the
+    * lww winner per key for level data, the distinct series for catalog
+    * entries.
+    */
   private def readEntries(es: Seq[ManifestEntry]): DataFrame =
-    lww(spark.read.schema(levelSchema).parquet(es.map(e => s"$root/${e.rel}"): _*))
+    if (es.exists(_.isCatalog)) readCatalogEntries(es)
+    else lww(spark.read.schema(levelSchema).parquet(es.map(e => s"$root/${e.rel}"): _*))
 
   /** One manifest rewrite: remove `inputs` and add `rows` as one fresh
     * file of (level `step`, `month`) — no file when `rows` is empty. A
@@ -396,9 +398,9 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     if (!commitRewrite(inputs, added)) deleteRecursively(dir)
   }
 
-  /** Fold every (level, month) whose entries `needsFold` into one file
-    * — contents unchanged by construction (the same lww the readers
-    * apply).
+  /** Fold every (level, month) and every level catalog whose entries
+    * `needsFold` into one file — contents unchanged by construction (the
+    * same merge the readers apply).
     */
   private def foldMonths(needsFold: Seq[ManifestEntry] => Boolean): Unit =
     synchronized {
@@ -438,61 +440,39 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     }
   }
 
-  /** Fold every (level, month) holding more than `maxFilesPerMonth`
-    * files back to one winner per key in one file. The write path
-    * already folds past [[CompactThreshold]] commits per (level,
-    * month); call this to fold below that. The inputs stay on disk
-    * until [[expireSnapshots]].
+  /** Fold every (level, month) — and every level catalog — holding
+    * more than `maxFilesPerMonth` files back to one file (one winner
+    * per key; one row per catalog series). The write path already folds
+    * past [[CompactThreshold]] commits per (level, month) or catalog;
+    * call this to fold below that. The inputs stay on disk until
+    * [[expireSnapshots]].
     */
   def compact(maxFilesPerMonth: Int = 1): Unit =
     foldMonths(_.size > maxFilesPerMonth)
 
   // ---- series catalog ------------------------------------------------
 
-  /** Append-only catalog of (level, series_id) pairs ever merged into a
-    * level, deduplicated on write via a tiny anti-join. This is what
-    * lets fetchMulti derive its series universe WITHOUT scanning the
-    * level's data (at 100 TB the catalog is ~#series rows vs ~#points).
-    * A series stays in the catalog after vacuum expires its points —
-    * matching the reference, where the series file (all-null slots
-    * included) exists until explicitly deleted.
+  /** Stage the series a level gains in this transaction as one small
+    * file in the commit's own directory, named by a catalog entry of the
+    * same manifest publish: the anti-join against the snapshot's catalog
+    * keeps each file to the new series only. This is what lets
+    * fetchMulti derive its series universe WITHOUT scanning the level's
+    * data (at 100 TB the catalog is ~#series rows vs ~#points). Catalog
+    * entries stay out of the conflict footprint: two writers that both
+    * add a series both publish, and every catalog read applies
+    * distinct(). A series stays in the catalog after vacuum expires its
+    * points — matching the reference, where the series file (all-null
+    * slots included) exists until explicitly deleted.
     */
-  private def appendCatalog(ar: Archive, touched: DataFrame): Unit = {
+  private def stageCatalog(ar: Archive, touched: DataFrame, t: Txn): Unit = {
     val fresh = touched.select("series_id").distinct()
-      .join(readCatalog(ar), Seq("series_id"), "left_anti")
-      .withColumn("level", lit(ar.step))
+      .join(catalogAt(t.snapVer, ar), Seq("series_id"), "left_anti")
     if (fresh.head(1).nonEmpty) {
-      fresh.coalesce(1).write.mode(SaveMode.Append)
-        .parquet(catalogPath(root))
-      compactCatalogIfNeeded()
-    }
-  }
-
-  /** Every batch that introduces new series appends one small file to
-    * the catalog; unbounded, each catalog read would eventually list
-    * thousands of tiny files. Past a file-count threshold, fold the
-    * catalog back into one file. Crash-safe ordering (no in-place
-    * overwrite): the compacted file is written to a scratch dir, MOVED
-    * into the live dir under a fresh name, and only then are the
-    * superseded small files deleted — a crash at any point leaves a
-    * readable catalog (transient duplicate rows are folded by the
-    * distinct() every catalog read applies). Bounded work: the catalog
-    * holds ~#series rows.
-    */
-  private def compactCatalogIfNeeded(threshold: Int = 16): Unit = {
-    val dir = Paths.get(catalogPath(root))
-    if (Files.exists(dir)) {
-      val old = listDir(dir).filter(_.endsWith(".parquet"))
-      if (old.size > threshold) {
-        val tmp = catalogPath(root) + "_compact.tmp"
-        spark.read.parquet(catalogPath(root))
-          .select("series_id", "level").distinct()
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-        val tmpDir = Paths.get(tmp)
-        listDir(tmpDir).filter(_.endsWith(".parquet")).foreach(f =>
-          Files.move(tmpDir.resolve(f), dir.resolve(s"compacted-$f")))
-        old.foreach(f => Files.deleteIfExists(dir.resolve(f)))
-        deleteRecursively(tmpDir)
+      val sub = f"c${t.commitId}%012d_s${ar.step}"
+      val dir = Paths.get(dataPath(root), sub)
+      fresh.coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir.toString)
+      listDir(dir).filter(_.endsWith(".parquet")).foreach { f =>
+        t.staged += ManifestEntry(ar.step, CatalogMonth, s"_data/$sub/$f")
       }
     }
   }
@@ -531,19 +511,14 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     col("series_id").rlike(sb.toString)
   }
 
-  /** Distinct series across ALL levels — the browse catalog. Age
-    * routing can land a series only at a coarse level (points already
-    * older than the finer retentions), so a single level's catalog
-    * under-reports the store; the union never does.
+  /** Distinct series across ALL levels of this view's manifest version
+    * — the browse catalog. Age routing can land a series only at a
+    * coarse level (points already older than the finer retentions), so
+    * a single level's catalog under-reports the store; the union never
+    * does.
     */
-  def seriesCatalog(): DataFrame = {
-    val p = catalogPath(root)
-    if (!Files.exists(Paths.get(p)))
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(StructField("series_id", StringType))))
-    else spark.read.parquet(p).select("series_id").distinct()
-  }
+  def seriesCatalog(): DataFrame =
+    readCatalogEntries(manifestEntries(root, viewVersion).filter(_.isCatalog))
 
   /** Graphite's `/metrics/find` over the store catalog: glob → tree
     * nodes with leaf/branch flags ([[graft.operators.GraphiteTarget
@@ -554,20 +529,30 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     graft.operators.GraphiteTarget.findNodes(
       seriesCatalog().select(col("series_id").as("series")), query)
 
-  /** Distinct series ever written at a level: one small parquet read. */
-  def readCatalog(ar: Archive): DataFrame = {
-    val p = catalogPath(root)
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("series_id", StringType))))
-    if (!Files.exists(Paths.get(p))) empty
-    else
-      try spark.read.parquet(p).where(col("level") === ar.step)
-        .select("series_id").distinct()
-      catch { case _: org.apache.spark.sql.AnalysisException => empty }
-  }
+  /** Distinct series ever written at a level, as of this view's
+    * manifest version (pinned or latest): one small parquet read of the
+    * files its catalog entries name — no directory listing.
+    */
+  def readCatalog(ar: Archive): DataFrame = catalogAt(viewVersion, ar)
+
+  private def catalogAt(ver: Long, ar: Archive): DataFrame =
+    readCatalogEntries(manifestEntries(root, ver)
+      .filter(e => e.isCatalog && e.step == ar.step))
+
+  private def readCatalogEntries(es: Seq[ManifestEntry]): DataFrame =
+    if (es.isEmpty) emptyFrame(catalogSchema)
+    else spark.read.schema(catalogSchema)
+      .parquet(es.map(e => s"$root/${e.rel}"): _*).distinct()
+
+  /** The manifest version this view reads: its pinned one, else the
+    * latest.
+    */
+  private def viewVersion: Long =
+    pinnedVersion.getOrElse(latestManifestVersion(root))
 
   // ---- read path -----------------------------------------------------
+
+  private def catalogSchema = StructType(Seq(StructField("series_id", StringType)))
 
   private def levelSchema = StructType(Seq(
     StructField("series_id", StringType), StructField("interval", TimestampType),
@@ -608,21 +593,16 @@ final class HoardStore private (val spark: SparkSession, val root: String,
   private def readLevelWithSeq(ar: Archive,
                                months: Option[Seq[String]] = None,
                                txn: Option[Txn] = None): DataFrame = {
-    val ver = pinnedVersion.orElse(txn.map(_.snapVer))
-      .getOrElse(latestManifestVersion(root))
-    val committed = manifestEntries(root, ver).filter(_.step == ar.step)
-    val staged = txn.map(_.staged.toSeq.filter(_.step == ar.step))
-      .getOrElse(Seq.empty)
-    val selected = (committed ++ staged).filter(e =>
-      months.forall(_.contains(e.month)))
+    val ver = txn.map(_.snapVer).getOrElse(viewVersion)
+    val staged = txn.map(_.staged.toSeq).getOrElse(Seq.empty)
+    val selected = (manifestEntries(root, ver) ++ staged).filter(e =>
+      e.step == ar.step && !e.isCatalog && months.forall(_.contains(e.month)))
     txn.foreach { t =>
       // reads feed propagation: record their footprint for validation
       selected.foreach(e => t.touched += ((e.step, e.month)))
       months.foreach(_.foreach(m => t.touched += ((ar.step, m))))
     }
-    if (selected.isEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], levelSchema)
+    if (selected.isEmpty) emptyFrame(levelSchema)
     else readEntries(selected.distinct)
   }
 
@@ -922,16 +902,18 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     * store operation (and the right-to-be-forgotten path a shared
     * 100 TB store needs, which per-series files got for free): every
     * point of every matching series is removed from every level, and
-    * the catalog forgets the series so fetchMulti's universe shrinks.
-    * `pred` composes with [[seriesGlob]]. Later writes may recreate
-    * the series.
+    * every level's catalog entries are rewritten without the series so
+    * fetchMulti's universe shrinks. `pred` is a `series_id` predicate
+    * (it composes with [[seriesGlob]]). Later writes may recreate the
+    * series.
     *
-    * Cost shape: one read per (level, month) to find the months that
-    * contain matching rows (a delete by arbitrary predicate cannot do
-    * better without a per-series index), then a manifest rewrite of
-    * ONLY those months — snapshot readers pinned before the delete
-    * still see the series until [[expireSnapshots]] physically reclaims
-    * it (call it to actually forget the bytes).
+    * Cost shape: one read per (level, month) and per level catalog to
+    * find the ones that hold matching rows (a delete by arbitrary
+    * predicate cannot do better without a per-series index), then a
+    * manifest rewrite of ONLY those — snapshot readers pinned before
+    * the delete still see the series, catalog included, until
+    * [[expireSnapshots]] physically reclaims it (call it to actually
+    * forget the bytes).
     */
   def deleteSeries(pred: org.apache.spark.sql.Column): Unit = synchronized {
     require(pinnedVersion.isEmpty, "snapshot views are read-only")
@@ -940,29 +922,6 @@ final class HoardStore private (val spark: SparkSession, val root: String,
         val part = readEntries(inputs)
         if (part.where(pred).head(1).nonEmpty)
           rewrite(step, month, "del", inputs.toSet, part.where(!pred))
-    }
-    forgetCatalog(pred)
-  }
-
-  /** Rewrite the series catalog without the matching series — the
-    * compact-catalog transactional shape (write-new, move-in, delete
-    * what was read), so a crash leaves a readable catalog.
-    */
-  private def forgetCatalog(pred: org.apache.spark.sql.Column): Unit = {
-    val dir = Paths.get(catalogPath(root))
-    if (Files.exists(dir)) {
-      val old = listDir(dir).filter(_.endsWith(".parquet"))
-      if (old.nonEmpty) {
-        val tmp = catalogPath(root) + "_forget.tmp"
-        spark.read.parquet(catalogPath(root))
-          .select("series_id", "level").where(!pred).distinct()
-          .coalesce(1).write.mode(SaveMode.Overwrite).parquet(tmp)
-        val tmpDir = Paths.get(tmp)
-        listDir(tmpDir).filter(_.endsWith(".parquet")).foreach(f =>
-          Files.move(tmpDir.resolve(f), dir.resolve(s"forgot-$f")))
-        old.foreach(f => Files.deleteIfExists(dir.resolve(f)))
-        deleteRecursively(tmpDir)
-      }
     }
   }
 
@@ -977,14 +936,15 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     * expired rows. Work is O(1 month), not O(level), and repeated
     * vacuums are no-op idempotent (an emptied level is never re-read).
     * Frees no disk by itself: the superseded files stay (pinned
-    * snapshots may read them) until [[expireSnapshots]].
+    * snapshots may read them) until [[expireSnapshots]]. Catalog
+    * entries are left alone, so a vacuumed-out series stays listed.
     */
   def vacuum(now: Long): Unit = synchronized {
     require(pinnedVersion.isEmpty, "snapshot views are read-only")
     policy.sorted.foreach { ar =>
       val cutoff = now - ar.retention
       val cutoffMonth = monthsCovering(cutoff, cutoff + 1).head
-      val ents = latestEntries.filter(_.step == ar.step)
+      val ents = latestEntries.filter(e => e.step == ar.step && !e.isCatalog)
       val expired = ents.filter(_.month < cutoffMonth).toSet
       val boundary = ents.filter(_.month == cutoffMonth)
       val pred = col("interval") >= timestamp_seconds(lit(cutoff))
@@ -996,10 +956,12 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     }
   }
 
-  private def emptyDense: DataFrame = spark.createDataFrame(
-    spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+  private def emptyDense: DataFrame = emptyFrame(
     StructType(Seq(StructField("series_id", StringType),
       StructField("interval", TimestampType), StructField("value", DoubleType))))
+
+  private def emptyFrame(schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
 
   /** Directory entry names, with the NIO stream closed (Files.list
     * leaks a directory fd per call otherwise — a long-lived driver JVM
@@ -1042,26 +1004,32 @@ object HoardStore {
     */
   case object ManifestAppend extends MergeStrategy
 
-  /** One immutable data file the manifest points at, keyed by the
-    * (level, month) partition it belongs to — the conflict and pruning
-    * granularity.
+  /** One immutable file the manifest points at, keyed by the (level,
+    * month) partition it belongs to — the conflict and pruning
+    * granularity — or, under [[CatalogMonth]], one file of a level's
+    * series catalog.
     */
   private[graft] final case class ManifestEntry(step: Long, month: String,
                                                 rel: String) {
     /** The directory one commit (write, fold, vacuum or delete) wrote. */
     def commitDir: String = rel.split('/')(1)
+
+    /** A series-catalog file, not level data: level reads, vacuum and
+      * the conflict footprint skip it.
+      */
+    def isCatalog: Boolean = month == CatalogMonth
   }
 
+  /** The reserved month of catalog entries; it is never a `yyyy-MM`. */
+  private[graft] val CatalogMonth = "catalog"
+
   /** In-flight optimistic transaction: the snapshot it reads, the files
-    * it staged, its (level, month) conflict footprint, and catalog
-    * appends deferred until the publish succeeds.
+    * it staged and its (level, month) conflict footprint.
     */
   private[store] final class Txn(val snapVer: Long) {
     var commitId: Long = 0L
     val staged = scala.collection.mutable.Buffer.empty[ManifestEntry]
     val touched = scala.collection.mutable.Set.empty[(Long, String)]
-    val catalogQueue =
-      scala.collection.mutable.Buffer.empty[(Archive, DataFrame)]
   }
 
   private[store] def dataPath(root: String): String = s"$root/_data"
@@ -1115,7 +1083,9 @@ object HoardStore {
   /** Opens a store. Stores written by the removed month-rewrite,
     * record-merge or delta-append strategies (or older ones with no
     * `_merge` marker) are refused: their data lives outside any
-    * manifest, and there is no migration path.
+    * manifest, and there is no migration path. So are stores that still
+    * carry the old `_series/` catalog directory, whose catalog no
+    * manifest names.
     */
   def open(spark: SparkSession, root: String): HoardStore = {
     requireManifestStore(root)
@@ -1132,6 +1102,10 @@ object HoardStore {
       throw new IllegalStateException(
         s"Store $root uses merge strategy $found; only $ManifestMarker " +
           "stores can be opened (there is no migration path)")
+    if (Files.exists(Paths.get(root, "_series")))
+      throw new IllegalStateException(
+        s"Store $root has a _series/ catalog directory from before the " +
+          "series catalog moved into the manifest (there is no migration path)")
   }
 
   /** Time travel: a read-only view of the store at a historical
@@ -1210,8 +1184,6 @@ object HoardStore {
     }
     0L // unreachable
   }
-
-  private[store] def catalogPath(root: String): String = s"$root/_series"
 
   /** CASE chain routing an age to the finest covering archive index
     * (`src/hoard.coffee:257-272`); NULL = older than every archive.

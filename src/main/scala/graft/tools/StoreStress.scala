@@ -33,14 +33,10 @@ object StoreStress {
     policy.sorted.foreach { ar =>
       println(s"level ${ar.step}: ${st.readLevel(ar).count()} rows")
     }
-    // catalog small-file growth must stay bounded by compaction
-    val catDir = java.nio.file.Paths.get(root, "_series")
-    val cs = java.nio.file.Files.list(catDir)
-    val catFiles = try {
-      import scala.jdk.CollectionConverters._
-      cs.iterator().asScala.count(_.getFileName.toString.endsWith(".parquet"))
-    } finally cs.close()
-    println(s"catalog files: $catFiles")
+    // catalog small-file growth must stay bounded by the inline fold
+    val catFiles = st.latestEntries.filter(_.isCatalog).groupBy(_.step)
+      .values.map(_.size).maxOption.getOrElse(0)
+    println(s"catalog manifest entries (max per level): $catFiles")
     require(catFiles <= 17, s"catalog file count unbounded: $catFiles")
     spark.stop()
   }

@@ -27,7 +27,7 @@ class HoardStoreSpec extends SparkTestBase {
     }
 
   private def hourlyMonths(s: HoardStore): Map[String, Set[String]] =
-    s.latestEntries.filter(_.step == 3600).groupBy(_.month)
+    s.latestEntries.filter(e => e.step == 3600 && !e.isCatalog).groupBy(_.month)
       .map { case (m, es) => m -> es.map(_.rel).toSet }
 
   test("create rejects an existing store; info reads the catalog back") {
@@ -244,8 +244,11 @@ class HoardStoreSpec extends SparkTestBase {
       HoardStore.RawPoint("mem", t - 3600, 2.0)), now)
     val (_, df) = s.fetchMulti(lit(true), t - 7200, t + 3600, now)
     val scans = scannedPaths(df)
-    assert(scans.exists(_.exists(_.contains("_series"))),
-      s"universe does not read the catalog: $scans")
+    val catalogFiles = s.latestEntries.filter(e => e.isCatalog && e.step == 3600)
+      .map(_.rel)
+    assert(catalogFiles.nonEmpty &&
+      scans.exists(_.exists(p => catalogFiles.exists(p.endsWith))),
+      s"universe does not read the catalog entries $catalogFiles: $scans")
     // exactly ONE scan of the level data (the windowed read); the
     // pre-catalog plan scanned the level a second time for the universe
     val levelScans = scans.count(_.exists(_.contains("_l3600/")))
@@ -301,6 +304,13 @@ class HoardStoreSpec extends SparkTestBase {
     Files.delete(marker)
     val unmarked = intercept[IllegalStateException](HoardStore.open(spark, s.root))
     assert(unmarked.getMessage.contains("no _merge marker"), unmarked.getMessage)
+    // a store that still carries the old side-store catalog directory
+    Files.writeString(marker, "manifest_append")
+    Files.createDirectory(Paths.get(s.root, "_series"))
+    val sideCatalog = Seq(
+      intercept[IllegalStateException](HoardStore.open(spark, s.root)),
+      intercept[IllegalStateException](HoardStore.openVersion(spark, s.root, 1)))
+    sideCatalog.foreach(e => assert(e.getMessage.contains("_series/"), e.getMessage))
   }
 
   test("17 single-point commits into one month trigger the inline fold; contents unchanged") {
@@ -328,20 +338,57 @@ class HoardStoreSpec extends SparkTestBase {
     (0 until 20).foreach { i =>
       s.updateMany(Seq(RawPoint(s"srv$i", now - 3600, i.toDouble)), now)
     }
-    val dir = java.nio.file.Paths.get(s.root, "_series")
-    val st = java.nio.file.Files.list(dir)
-    val files = try {
-      import scala.jdk.CollectionConverters._
-      st.iterator().asScala.map(_.getFileName.toString)
-        .count(_.endsWith(".parquet"))
-    } finally st.close()
-    // 20 batches x 2 levels = 40 appends without compaction; the
-    // threshold (16) folds the catalog back to one file each time
-    assert(files <= 17, s"catalog grew to $files files")
+    // 20 batches add one catalog entry per level each; the inline fold
+    // (past 16 commits) folds a level's catalog back to one entry
+    s.latestEntries.filter(_.isCatalog).groupBy(_.step).foreach { case (step, es) =>
+      assert(es.size <= 17, s"level $step catalog grew to ${es.size} entries")
+    }
     val (_, df) = s.fetchMulti(org.apache.spark.sql.functions.lit(true),
       now - 7200, now, now)
     assert(df.select("series_id").distinct().count() == 20,
       "compaction lost catalog entries")
+  }
+
+  test("a pinned view lists the series of its own version, not the latest catalog") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val s = freshStore()
+    s.updateMany(Seq(RawPoint("x", now - 3600, 1.0), RawPoint("keep", now - 3600, 2.0)),
+      now)
+    val snap = s.snapshot()
+    s.deleteSeries(col("series_id") === "x")
+    val (_, dense) = snap.fetchMulti(lit(true), now - 7200, now, now)
+    val xs = dense.where(col("series_id") === "x").collect()
+      .flatMap(r => Option(r.getAs[java.lang.Double]("value")))
+    assert(xs.toSeq == Seq(1.0), s"snapshot before the delete lost x: $xs")
+
+    val pinned = HoardStore.openVersion(spark, s.root, HoardStore.latestManifestVersion(s.root))
+    s.updateMany(Seq(RawPoint("y", now - 3600, 3.0)), now)
+    def names(st: HoardStore) = st.seriesCatalog().collect().map(_.getString(0)).toSet
+    assert(names(pinned) == Set("keep"), "a version pinned before y's write lists y")
+    val (_, pd) = pinned.fetchMulti(lit(true), now - 7200, now, now)
+    assert(pd.select("series_id").distinct().collect().map(_.getString(0)).toSet ==
+      Set("keep"))
+    assert(names(s) == Set("keep", "y"))
+  }
+
+  test("a planned fetchMulti frame survives later commits and catalog folds") {
+    import org.apache.spark.sql.functions.lit
+    val s = freshStore()
+    s.updateMany(Seq(RawPoint("srv0", now - 3600, 0.0)), now)
+    def plan() = s.fetchMulti(lit(true), now - 7200, now, now)._2
+      .orderBy("series_id", "interval").collect().toSeq
+    val want = plan()
+    val (_, planned) = s.fetchMulti(lit(true), now - 7200, now, now)
+    // each commit adds a series to both levels' catalogs: 20 commits
+    // pass the fold threshold, so the planned frame's catalog files
+    // are superseded (but not deleted) before it runs
+    (1 to 20).foreach(i =>
+      s.updateMany(Seq(RawPoint(s"srv$i", now - 3600, i.toDouble)), now))
+    assert(planned.orderBy("series_id", "interval").collect().toSeq == want,
+      "the planned frame does not return the pre-commit view")
+    assert(s.latestEntries.exists(e => e.isCatalog && e.commitDir.contains("_fold_")),
+      "20 catalog commits did not fold")
+    assert(plan().map(_.getString(0)).distinct.size == 21)
   }
 
   test("zero-slot window returns an empty frame, not an error (reference :493-509)") {

@@ -132,6 +132,19 @@ class StorePropertySpec extends SparkTestBase {
         }
       }
     }
+
+    // every version the replay published (writes, folds, vacuums) lists
+    // in each level's catalog every series holding rows at that level
+    (1L to HoardStore.latestManifestVersion(store.root)).foreach { v =>
+      import org.apache.spark.sql.functions.lit
+      val at = HoardStore.openVersion(spark, store.root, v)
+      val missing = policy.sorted.map { ar =>
+        at.readLevel(ar).select("series_id").except(at.readCatalog(ar))
+          .withColumn("step", lit(ar.step))
+      }.reduce(_ unionByName _).collect()
+      assert(missing.isEmpty, s"v$v: series with rows missing from the level catalog: " +
+        missing.mkString(", "))
+    }
   }
 
   // --- multi-writer transactions --------------------------------------
