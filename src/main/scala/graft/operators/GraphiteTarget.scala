@@ -415,28 +415,28 @@ object GraphiteTarget {
     }
   }
 
-  /** Graphite glob → anchored Java regex: `*` matches within one dotted
-    * node (`[^.]*`), `?` one char, `{a,b}` alternation, `[…]` a char
-    * class; everything else is literal.
+  /** Graphite glob → anchored Java regex, the one translation behind
+    * both the render evaluator and the store's `seriesGlob`: `*`
+    * matches within one dotted node (`[^.]*`), `?` one non-dot char,
+    * `{a,b}` alternation (nestable, non-capturing), `[…]` a char class
+    * passed through verbatim; everything else is literal.
     */
   def globToRegex(glob: String): String = {
     val sb = new StringBuilder("^")
-    var i = 0
-    var inBrace = false
-    while (i < glob.length) {
-      glob(i) match {
-        case '*' => sb.append("[^.]*")
-        case '?' => sb.append("[^.]")
-        case '{' => sb.append("(?:"); inBrace = true
-        case '}' => sb.append(")"); inBrace = false
-        case ',' if inBrace => sb.append("|")
-        case '[' => sb.append("[")
-        case ']' => sb.append("]")
-        case '.' => sb.append("\\.")
-        case c if c.isLetterOrDigit || c == '_' || c == '-' => sb.append(c)
-        case c => sb.append("\\").append(c)
-      }
-      i += 1
+    var inClass = false
+    var braces = 0
+    glob.foreach {
+      case ']' => inClass = false; sb.append(']')
+      case c if inClass => sb.append(c)
+      case '[' => inClass = true; sb.append('[')
+      case '*' => sb.append("[^.]*")
+      case '?' => sb.append("[^.]")
+      case '{' => braces += 1; sb.append("(?:")
+      case '}' => braces -= 1; sb.append(")")
+      case ',' if braces > 0 => sb.append("|")
+      case '.' => sb.append("\\.")
+      case c if c.isLetterOrDigit || c == '_' || c == '-' => sb.append(c)
+      case c => sb.append("\\").append(c)
     }
     sb.append("$").toString
   }

@@ -553,13 +553,14 @@ object StoreQueries {
     }),
 
     "hs16_treeexport" -> ((s, dir) => {
-      // bulk REVERSE migration round-trip: the shared store exports to
-      // a graphite tree in one distributed pass (one shuffle, one file
-      // per series written executor-side), and the exported rings are
-      // read back through the DSv2 whisper source — the daily level
-      // must still match the from-scratch recomputation, so encode +
-      // decode + tree layout are all on the hook for the same oracle
-      // every other store build shares
+      // bulk REVERSE migration round-trip through the HoardExport API:
+      // toWhisperTree writes the store's live rings (HoardExport
+      // .liveRings) through the whisper sink in one distributed pass
+      // (one shuffle, one file per series written executor-side), and
+      // the exported rings are read back through the DSv2 whisper
+      // source — the daily level must still match the from-scratch
+      // recomputation, so encode + decode + tree layout are all on the
+      // hook for the same oracle every other store build shares
       val st = storeFor(s, dir)
       val tree = builtTree.computeIfAbsent(dir, _ => {
         val tmp = java.nio.file.Files.createTempDirectory("graft-tree")
@@ -577,24 +578,20 @@ object StoreQueries {
     }),
 
     "hs18_sinkroundtrip" -> ((s, dir) => {
-      // DSv2 WRITE-path round-trip: the store's levels exported as a
-      // graphite tree through `df.write.format("whisper")` (the sink's
+      // DSv2 WRITE-path round-trip: the store's live rings (the same
+      // HoardExport.liveRings frame toWhisperTree writes) go through
+      // `df.write.format("whisper")` directly (the sink's
       // RequiresDistributionAndOrdering makes Spark plan the one
-      // series-clustering shuffle) and read back through the source —
-      // hs16's contract, but the encoder runs inside Spark's own V2
-      // write protocol instead of the HoardExport API. Same shared
-      // daily-rollup oracle as every other store build.
+      // series-clustering shuffle) and are read back through the
+      // source — hs16's contract with the sink driven by its options
+      // instead of the HoardExport API. Same shared daily-rollup
+      // oracle as every other store build.
       val st = storeFor(s, dir)
       val tree = builtSink.computeIfAbsent(dir, _ => {
         val tmp = java.nio.file.Files.createTempDirectory("graft-sinktree")
           .toString + "/tree"
         val p = st.policy
-        val frame = p.sorted.map { ar =>
-          st.readLevelRange(ar, Now - ar.retention + 1, Now + ar.step)
-            .select(col("series_id"), lit(ar.step).cast("long").as("step"),
-              col("interval").as("ts"), col("value").cast("double").as("value"))
-        }.reduce(_ unionByName _)
-        frame.write.format("whisper")
+        graft.store.HoardExport.liveRings(st, Now).write.format("whisper")
           .option("archives",
             p.sorted.map(a => s"${a.step}:${a.points}").mkString(","))
           .option("now", Now.toString)

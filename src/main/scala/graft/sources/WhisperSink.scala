@@ -23,8 +23,9 @@ import org.apache.spark.util.SerializableConfiguration
   * shuffle that co-locates each series, and every task then streams
   * its run of sorted rows into ring encodes with O(ring) memory, one
   * file per series, N-way parallel. No driver materialization, no
-  * second pass. (HoardExport.toWhisperTree is the store-side cousin;
-  * this sink exports ANY frame, not a store.)
+  * second pass. It exports ANY frame in the source schema; a store's
+  * bulk export (`HoardExport.toWhisperTree`) is this sink fed the
+  * store's live rings.
   *
   * Required options:
   *  - `archives`: the layout, "step:points[,step:points…]" (e.g.
@@ -38,7 +39,7 @@ import org.apache.spark.util.SerializableConfiguration
   * attempt-unique temp name and renames into place on task COMMIT;
   * clustering guarantees a series belongs to exactly one partition, so
   * a speculative duplicate attempt produces byte-identical content and
-  * the rename race is benign (same contract as HoardExport).
+  * the rename race is benign.
   */
 object WhisperSink {
 

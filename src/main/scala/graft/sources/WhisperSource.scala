@@ -18,9 +18,10 @@ import scala.jdk.CollectionConverters._
   * `.whisper`/`.hoard` ring files read as a DataFrame —
   * `spark.read.format("whisper").load(dir)` → one row per POPULATED
   * ring slot, schema (series_id, step, ts, value). This is the
-  * migration-free query path next to [[graft.store.HoardImport]]'s
-  * one-shot store load: point Spark at the live graphite data dir and
-  * join/aggregate it like any table.
+  * engine's one ring-file reader: the migration-free query path (point
+  * Spark at the live graphite data dir and join/aggregate it like any
+  * table) and the decoder behind [[graft.store.HoardImport]]'s
+  * one-shot store load.
   *
   * Scale shape (a graphite tree is millions of SMALL files, one per
   * series — reference model `src/hoard.coffee:30`):
@@ -63,12 +64,6 @@ object WhisperSource {
     * Spark job (mirrors spark.sql.sources.parallelPartitionDiscovery
     * .threshold's default). */
   private val FanOutThreshold = 32
-
-  private[sources] def seriesName(path: String): String = {
-    val base = path.substring(path.lastIndexOf('/') + 1)
-    val dot = base.lastIndexOf('.')
-    if (dot > 0) base.substring(0, dot) else base
-  }
 
   /** Graphite layout inverted: the series name is the file path
     * RELATIVE to the load root with '/' → '.' (web/srv1/cpu.whisper
@@ -137,7 +132,7 @@ object WhisperSource {
     * Spark job (one task per frontier dir, capped). Returns
     * (path, bytes) so packing can size-bin without a second FS call.
     */
-  private[sources] def listFilesWithSize(roots: Seq[String]): Seq[(String, Long)] = {
+  private[graft] def listFilesWithSize(roots: Seq[String]): Seq[(String, Long)] = {
     val spark = SparkSession.active
     val conf = spark.sessionState.newHadoopConf()
     val files = scala.collection.mutable.Buffer.empty[(String, Long)]

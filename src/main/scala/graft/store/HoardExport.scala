@@ -2,54 +2,57 @@ package graft.store
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.SerializableConfiguration
 
 /** Reverse migration: export series from a [[HoardStore]] back to
   * whisper/hoard binary files (`src/hoard.coffee:30-69` layout) that
   * any whisper/graphite/hoard reader — including [[HoardImport]] —
   * can consume.
   *
-  * [[toWhisper]] is the single-series path, driver-side by design: ONE
-  * series' export is bounded by the policy's total ring capacity (the
-  * target file IS a fixed-size ring), the same cap rationale as
-  * `fetchValues`. [[toWhisperTree]] is the bulk reverse migration — a
-  * whole store back to a graphite tree in ONE distributed pass: each
-  * level read is month-pruned to its retention window, the union is
-  * shuffled once on series_id, and each group (bounded by ring
-  * capacity) encodes and writes its file inside an executor task, so
-  * an N-series store exports with N-way parallelism instead of a
-  * driver loop.
+  * Both paths encode [[liveRings]], the store's in-retention ring
+  * content in the whisper source's schema. [[toWhisper]] is the
+  * single-series path, driver-side by design: ONE series' export is
+  * bounded by the policy's total ring capacity (the target file IS a
+  * fixed-size ring), the same cap rationale as `fetchValues`.
+  * [[toWhisperTree]] is the bulk reverse migration — a whole store back
+  * to a graphite tree through the DSv2 whisper sink
+  * ([[graft.sources.WhisperSink]]): one shuffle on series_id, each
+  * series encoded and written inside an executor task, so an N-series
+  * store exports with N-way parallelism instead of a driver loop.
   */
 object HoardExport {
 
+  /** Every level's merged (last-write-wins) rows inside its ring span
+    * `(now - retention, now + step)` — what `fetch` would serve — as
+    * `(series_id, step, ts, value)`, the whisper source/sink schema.
+    * Each level read is month-pruned to that window.
+    */
+  def liveRings(st: HoardStore, now: Long): DataFrame =
+    st.policy.sorted.map { ar =>
+      st.readLevelRange(ar, now - ar.retention + 1, now + ar.step)
+        .select(col("series_id"), lit(ar.step).cast("long").as("step"),
+          col("interval").as("ts"), col("value").cast("double").as("value"))
+    }.reduce(_ unionByName _)
+
   /** Write `series` at clock `now` (explicit, never wall time) to
-    * `path`. Each level's rows inside its retention land in the
-    * matching archive ring; values are the level's merged
-    * (last-write-wins) state, i.e. what `fetch` would serve.
+    * `path`: [[liveRings]] of that series, one archive ring per level.
     */
   def toWhisper(st: HoardStore, series: String, path: String,
                 now: Long): Unit = {
-    val p = st.policy
-    val levels = p.sorted.map { ar =>
-      val rows = st.readLevel(ar)
-        .where(col("series_id") === series)
-        // same window as toWhisperTree's readLevelRange call:
-        // (now - retention, now + step) — without the upper clamp a
-        // future-dated point would make the two paths' bytes diverge
-        // despite the byte-identical contract
-        .where(col("interval").cast("long") > lit(now - ar.retention) &&
-          col("interval").cast("long") < lit(now + ar.step))
-        .select(col("interval").cast("long"), col("value"))
-        .collect() // bounded: at most ar.points live slots
-        .map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      require(rows.size <= ar.points,
-        s"level ${ar.step} holds ${rows.size} live intervals > ring " +
+    val rows = liveRings(st, now).where(col("series_id") === series)
+      .select(col("step"), col("ts").cast("long"), col("value"))
+      .collect() // bounded: at most the policy's total ring capacity
+      .map(r => (r.getLong(0), (r.getLong(1), r.getDouble(2))))
+      .groupMap(_._1)(_._2)
+    val levels = st.policy.sorted.map { ar =>
+      val pts = rows.getOrElse(ar.step, Array.empty[(Long, Double)]).toSeq
+      require(pts.size <= ar.points,
+        s"level ${ar.step} holds ${pts.size} live intervals > ring " +
           s"capacity ${ar.points} — vacuum before export")
-      (ar, rows)
+      (ar, pts)
     }
-    val bytes = WhisperFormat.write(now, p.xff.toFloat, levels)
+    val bytes = WhisperFormat.write(now, st.policy.xff.toFloat, levels)
     val target = Paths.get(path)
     if (target.getParent != null) Files.createDirectories(target.getParent)
     Files.write(target, bytes)
@@ -58,63 +61,19 @@ object HoardExport {
   /** Bulk reverse migration: every series of `st` at clock `now` to a
     * graphite tree under `dir` — dotted series names map to
     * subdirectories (`web.srv1.cpu` → `dir/web/srv1/cpu.whisper`,
-    * graphite's own layout), dotless names land flat. Rings hold each
-    * level's merged last-write-wins state inside its retention, byte-
-    * identical to what [[toWhisper]] writes for the same series.
-    *
-    * Scale shape: one month-pruned scan per level, ONE shuffle (by
-    * series_id), one task group per series writing through the Hadoop
-    * FS API — no driver materialization, no per-series driver loop.
-    * Returns the number of files written.
+    * graphite's own layout), dotless names land flat. [[liveRings]]
+    * goes through `write.format("whisper")`, so each file is
+    * byte-identical to what [[toWhisper]] writes for the same series.
+    * Returns the number of files written (one per series).
     */
   def toWhisperTree(st: HoardStore, dir: String, now: Long): Long = {
-    val spark = st.spark
-    import spark.implicits._
     val p = st.policy
-    val xff = p.xff.toFloat
-    val archives = p.sorted.map(ar => (ar.step, ar.points))
-    val union = p.sorted.map { ar =>
-      // month-pruned to the ring span (now - retention, now]; strict >
-      // like toWhisper (readLevelRange's >= bound is shifted by 1 s)
-      st.readLevelRange(ar, now - ar.retention + 1, now + ar.step)
-        .select(col("series_id"),
-          lit(ar.step).cast("long").as("step"),
-          col("interval").cast("long").as("ts"),
-          col("value").cast("double").as("value"))
-    }.reduce(_.unionByName(_))
-    val ser = new SerializableConfiguration(spark.sessionState.newHadoopConf())
-    union.as[(String, Long, Long, Double)]
-      .groupByKey(_._1)
-      .mapGroups { (series: String, rows: Iterator[(String, Long, Long, Double)]) =>
-        val byStep = rows.toSeq.groupBy(_._2)
-        val levels = archives.map { case (step, points) =>
-          val pts = byStep.getOrElse(step, Seq.empty).map(r => (r._3, r._4))
-          require(pts.size <= points,
-            s"series $series level $step holds ${pts.size} live intervals" +
-              s" > ring capacity $points — vacuum before export")
-          (graft.core.Archive(step, points), pts)
-        }
-        val bytes = WhisperFormat.write(now, xff, levels)
-        val rel = series.split('.').mkString("/") + ".whisper"
-        val path = new HPath(dir, rel)
-        val fs = path.getFileSystem(ser.value)
-        // Task-retry / speculation safety: write to an attempt-unique
-        // temp path, then rename into place — two concurrent attempts
-        // each produce a complete file and the rename decides, instead
-        // of racing interleaved writes on the final path.
-        val attempt = Option(org.apache.spark.TaskContext.get())
-          .map(_.taskAttemptId()).getOrElse(0L)
-        val tmp = new HPath(dir, rel + s".tmp-$attempt")
-        val out = fs.create(tmp, true)
-        try out.write(bytes) finally out.close()
-        fs.delete(path, false)
-        if (!fs.rename(tmp, path)) {
-          fs.delete(tmp, false)
-          require(fs.exists(path),
-            s"export rename lost for $series: neither $tmp nor $path")
-        }
-        series
-      }
-      .count()
+    val rings = liveRings(st, now)
+    rings.write.format("whisper")
+      .option("archives", p.sorted.map(a => s"${a.step}:${a.points}").mkString(","))
+      .option("now", now.toString)
+      .option("xff", p.xff.toFloat.toString)
+      .mode("append").save(dir)
+    rings.select("series_id").distinct().count()
   }
 }

@@ -2,18 +2,14 @@ package graft.store
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
-/** One populated whisper ring slot as a relational row. */
-final case class ImportedPoint(series_id: String, step: Long, ts: Long,
-                               value: Double)
-
 /** Migration path from on-disk whisper/hoard binary files into the
-  * engine (`src/hoard.coffee:392-424` header, `:426-513` rings): bulk
-  * decode of archive rings into relational rows, and a one-shot import
-  * that recreates the file's policy as a [[HoardStore]] and loads each
-  * archive into the matching level AS-IS.
+  * engine (`src/hoard.coffee:392-424` header, `:426-513` rings): a
+  * one-shot import that recreates the file's policy as a [[HoardStore]]
+  * and loads each archive into the matching level AS-IS.
   *
   * Levels are loaded verbatim rather than re-aggregated because a
   * whisper file's coarse archives carry independently-propagated
@@ -22,73 +18,37 @@ final case class ImportedPoint(series_id: String, step: Long, ts: Long,
   * its hourly ring 1 year) — recomputing rollups from the fine ring
   * would silently truncate that history.
   *
-  * Scale shape: files are parsed inside executor tasks via the
-  * `binaryFile` source (one task per file, no driver materialization),
-  * so a directory of millions of graphite files imports as an
-  * embarrassingly-parallel scan. Only ONE header is read driver-side
-  * (to derive the store policy).
+  * Scale shape: the rings are decoded by the DSv2 whisper source
+  * ([[graft.sources.WhisperSource]]: distributed listing, size-binned
+  * multi-file partitions, executor-side decode), so a directory of
+  * millions of graphite files imports as an embarrassingly-parallel
+  * scan. Only ONE header is read driver-side (to derive the store
+  * policy).
   */
 object HoardImport {
-
-  /** Graphite convention: series name = file basename sans extension. */
-  private[store] def seriesName(path: String): String = {
-    val base = path.substring(path.lastIndexOf('/') + 1)
-    val dot = base.lastIndexOf('.')
-    if (dot > 0) base.substring(0, dot) else base
-  }
-
-  /** Decode every populated ring slot of every `.whisper`/`.hoard`
-    * file under `path` (a file or a directory) into rows
-    * `(series_id, step, ts, value)`. Executor-side parse; linear in
-    * total file bytes.
-    */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    // tree-aware naming (web/srv1/cpu.whisper → web.srv1.cpu), same
-    // rule as the whisper DSv2 source — basename-only naming dropped
-    // the tree prefix for nested series
-    val qualRoots = graft.sources.WhisperSource.qualify(Seq(path))
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.{whisper,hoard}")
-      .option("recursiveFileLookup", "true")
-      .load(path)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (p, bytes) =>
-        val series = graft.sources.WhisperSource.relativeSeries(qualRoots, p)
-        WhisperFormat.slots(bytes)
-          .map(sl => ImportedPoint(series, sl.step.toLong, sl.ts, sl.value))
-      }
-      .toDF()
-  }
 
   /** Driver-side header peek of one local file. */
   def headerOf(path: String): WhisperFormat.Header =
     WhisperFormat.header(Files.readAllBytes(Paths.get(path)))
 
   /** One-shot migration: create a store at `root` with the policy of
-    * the (first) file under `path` and bulk-load every archive ring
-    * into its level. All files must share the policy (steps are
-    * validated against it; distinct-step check is O(#archives)).
+    * the first file (by sorted path, anywhere in the tree) under `path`
+    * and bulk-load every archive ring into its level. All files must
+    * share the policy (steps are validated against it; distinct-step
+    * check is O(#archives)).
     */
   def intoStore(spark: SparkSession, path: String, root: String,
                 cf: String = "avg"): HoardStore = {
-    val p = Paths.get(path)
-    val firstFile =
-      if (Files.isDirectory(p)) {
-        val it = Files.list(p).filter { f =>
-          val n = f.toString
-          n.endsWith(".whisper") || n.endsWith(".hoard")
-        }.sorted().findFirst()
-        require(it.isPresent, s"no .whisper/.hoard files under $path")
-        it.get
-      } else p
-    val header = WhisperFormat.header(Files.readAllBytes(firstFile))
-    val policy = header.policy(cf)
+    // the source's own listing, so the header file is one the read sees
+    val files = graft.sources.WhisperSource.listFilesWithSize(Seq(path)).map(_._1)
+    require(files.nonEmpty, s"no .whisper/.hoard files under $path")
+    val policy = headerOf(new HPath(files.min).toUri.getPath).policy(cf)
     val st = HoardStore.create(spark, root, policy)
 
     // one parse of every file, shared by all level loads
-    val rows = read(spark, path).localCheckpoint(eager = true)
+    val rows = spark.read.format("whisper").load(path)
+      .withColumn("ts", col("ts").cast("long"))
+      .localCheckpoint(eager = true)
     val fileSteps = rows.select("step").distinct().collect()
       .map(_.getLong(0)).toSet // bounded by archive count
     val policySteps = policy.sorted.map(_.step).toSet

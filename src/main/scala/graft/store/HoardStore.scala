@@ -1,7 +1,7 @@
 package graft.store
 
 import graft.core.{Archive, ArchivePolicy, Time}
-import graft.operators.{Dedup, GapFill, Rollup}
+import graft.operators.{Dedup, GapFill, GraphiteTarget, Rollup}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -477,39 +477,16 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     }
   }
 
-  /** Graphite-style series glob → predicate for [[fetchMulti]]:
-    * `*` matches within one dotted path segment, `?` one non-dot char,
-    * `{a,b}` alternation, `[...]` a char class — the target syntax a
-    * graphite user brings to a tree imported by [[HoardImport]]
-    * (`web*.cpu.user`, `web{01,02}.load`). Evaluates as one RLIKE
-    * column: applied to the catalog for the fetch universe and pushed
-    * into the level scan like any predicate.
+  /** Graphite-style series glob → predicate for [[fetchMulti]]: the
+    * target syntax a graphite user brings to a tree imported by
+    * [[HoardImport]] (`web*.cpu.user`, `web{01,02}.load`), translated by
+    * the render evaluator's own [[GraphiteTarget.globToRegex]] so fetch
+    * and render select the same series. Evaluates as one RLIKE column:
+    * applied to the catalog for the fetch universe and pushed into the
+    * level scan like any predicate.
     */
-  def seriesGlob(pattern: String): org.apache.spark.sql.Column = {
-    val sb = new StringBuilder("^")
-    var i = 0
-    var inClass = false
-    var braces = 0
-    while (i < pattern.length) {
-      val c = pattern.charAt(i)
-      c match {
-        case '[' => inClass = true; sb.append('[')
-        case ']' => inClass = false; sb.append(']')
-        case _ if inClass => sb.append(c) // classes pass through verbatim
-        case '*' => sb.append("[^.]*")
-        case '?' => sb.append("[^.]")
-        case '{' => braces += 1; sb.append('(')
-        case '}' => braces -= 1; sb.append(')')
-        case ',' if braces > 0 => sb.append('|')
-        case '.' => sb.append("\\.")
-        case ch if "\\^$+(),|".indexOf(ch) >= 0 => sb.append('\\').append(ch)
-        case ch => sb.append(ch)
-      }
-      i += 1
-    }
-    sb.append('$')
-    col("series_id").rlike(sb.toString)
-  }
+  def seriesGlob(pattern: String): org.apache.spark.sql.Column =
+    col("series_id").rlike(GraphiteTarget.globToRegex(pattern))
 
   /** Distinct series across ALL levels of this view's manifest version
     * — the browse catalog. Age routing can land a series only at a

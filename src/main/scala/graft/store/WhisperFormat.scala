@@ -16,7 +16,7 @@ import graft.core.{Archive, ArchivePolicy}
   *
   * All functions are driver-free pure byte-array decoders so the same
   * code parses a file on the driver (header peek) or inside an
-  * executor task (`binaryFile` bulk import of many files).
+  * executor task (the whisper source's bulk decode of many files).
   */
 object WhisperFormat {
 

@@ -67,7 +67,7 @@ class FixtureReplaySpec extends SparkTestBase {
     assert(h.archives.map(_.sizeBytes) == Seq(105120, 13140))
 
     // ring decode: both archives are fully populated in the fixture
-    val rows = HoardImport.read(spark, path)
+    val rows = spark.read.format("whisper").load(path)
     import org.apache.spark.sql.functions._
     val counts = rows.groupBy("step").count().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -388,7 +388,17 @@ class GraphiteTailSpec extends SparkTestBase {
       val gd = nodes.updated(i, "{zzz9,qqq8}").mkString(".")
       assert(!name.matches(globToRegex(gd)) ||
         nodes(i) == "zzz9" || nodes(i) == "qqq8")
+      // braces nest: the true node after an inner group still alternates
+      val gn = nodes.updated(i, s"{{zzz9,qqq8},${nodes(i)}}").mkString(".")
+      assert(name.matches(globToRegex(gn)), s"'$name' !~ '$gn'")
+      // a class passes through verbatim: [*] is a literal star
+      val gc = nodes.updated(i, "[*]").mkString(".")
+      assert(!name.matches(globToRegex(gc)), s"'$name' =~ '$gc'")
+      assert(nodes.updated(i, "*").mkString(".").matches(globToRegex(gc)))
     }
+    // the dashboard's globs keep their exact regex strings
+    assert(globToRegex("app.*.cpu") == "^app\\.[^.]*\\.cpu$")
+    assert(globToRegex("app.h0{1,2}.*") == "^app\\.h0(?:1|2)\\.[^.]*$")
   }
 
   test("aliasSub rewrites with backrefs; substr slices nodes") {

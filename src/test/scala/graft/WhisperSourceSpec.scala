@@ -3,27 +3,42 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** The DataSource V2 whisper reader: `format("whisper")` must decode
-  * exactly what the binaryFile import path decodes, prune the file
-  * list on series_id filters at PLANNING time, and honor column
-  * pruning — the migration-free query path over a live graphite tree.
+  * exactly what a plain whole-file `WhisperFormat.slots` decode of each
+  * ring yields, prune the file list on series_id filters at PLANNING
+  * time, and honor column pruning — the engine's one ring-file reader
+  * (the migration-free query path and HoardImport's decoder).
   */
 class WhisperSourceSpec extends SparkTestBase {
 
   private val dir = "/root/reference/test" // large.whisper + testcreate.whisper
 
-  test("format(whisper) == HoardImport.read on the reference fixtures") {
+  test("format(whisper) == a direct WhisperFormat decode on the reference fixtures") {
+    import graft.sources.WhisperSource
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
     val v2 = spark.read.format("whisper").load(dir)
       .select(col("series_id"), col("step"),
         col("ts").cast("long").as("ts"), col("value"))
-      .collect().toSet
-    val ref = graft.store.HoardImport.read(spark, dir)
-      .select("series_id", "step", "ts", "value")
-      .collect().toSet
-    assert(v2 == ref, "V2 source and binaryFile import decode differently")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3))).toSet
+    // independent decode: walk the tree, read each ring whole, name it
+    // by the graphite layout rule
+    val qualRoots = WhisperSource.qualify(Seq(dir))
+    val rings = Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+      .filter(f => Files.isRegularFile(f) &&
+        (f.toString.endsWith(".whisper") || f.toString.endsWith(".hoard")))
+      .toSeq
+    val ref = rings.flatMap { (f: Path) =>
+      val series = WhisperSource.relativeSeries(qualRoots,
+        WhisperSource.qualify(Seq(f.toString)).head)
+      graft.store.WhisperFormat.slots(Files.readAllBytes(f))
+        .map(sl => (series, sl.step.toLong, sl.ts, sl.value))
+    }.toSet
+    assert(v2 == ref, "V2 source and a direct ring decode differ")
     assert(v2.nonEmpty)
     // testcreate.whisper is a freshly-created ring: every slot zeroed,
-    // so it contributes a FILE but no rows — exactly like the import
-    assert(v2.map(_.getString(0)) == Set("large"))
+    // so it contributes a FILE but no rows
+    assert(v2.map(_._1) == Set("large"))
   }
 
   test("series_id equality prunes the file list at planning time") {
