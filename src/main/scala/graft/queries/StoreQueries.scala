@@ -318,7 +318,7 @@ object StoreQueries {
     * is the file's `lastUpdate` header word — the natural replay
     * clock for archived data.
     */
-  private val WhisperPath = "/root/reference/test/large.whisper"
+  private[graft] val WhisperPath = "/root/reference/test/large.whisper"
   private[graft] val WhisperNow = 1312504705L
   private val builtWhisper = new java.util.concurrent.ConcurrentHashMap[String, String]()
 

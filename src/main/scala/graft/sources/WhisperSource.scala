@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.store.WhisperFormat
 import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -131,6 +131,9 @@ object WhisperSource {
     * until the frontier reaches [[FanOutThreshold]], then finish as a
     * Spark job (one task per frontier dir, capped). Returns
     * (path, bytes) so packing can size-bin without a second FS call.
+    * A root that does not exist is refused with `PATH_NOT_FOUND`
+    * naming it, as Spark's file sources refuse a missing load path; an
+    * existing empty directory lists no files.
     */
   private[graft] def listFilesWithSize(roots: Seq[String]): Seq[(String, Long)] = {
     val spark = SparkSession.active
@@ -139,7 +142,9 @@ object WhisperSource {
     var frontier = roots.flatMap { r =>
       val p = new HPath(r)
       val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) Seq.empty
+      if (!fs.exists(p))
+        throw new AnalysisException("PATH_NOT_FOUND",
+          Map("path" -> fs.makeQualified(p).toString))
       else if (fs.getFileStatus(p).isFile) {
         if (isRing(p.getName)) files += ((p.toString, fs.getFileStatus(p).getLen))
         Seq.empty

@@ -35,7 +35,9 @@ object HoardImport {
     * the first file (by sorted path, anywhere in the tree) under `path`
     * and bulk-load every archive ring into its level. All files must
     * share the policy (steps are validated against it; distinct-step
-    * check is O(#archives)).
+    * check is O(#archives)). A missing `path` is refused by the
+    * source's listing (`PATH_NOT_FOUND`, naming it); an existing
+    * directory without ring files by the `require` below.
     */
   def intoStore(spark: SparkSession, path: String, root: String,
                 cf: String = "avg"): HoardStore = {

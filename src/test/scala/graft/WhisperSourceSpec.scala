@@ -12,7 +12,39 @@ class WhisperSourceSpec extends SparkTestBase {
 
   private val dir = "/root/reference/test" // large.whisper + testcreate.whisper
 
+  /** Cancels (with its reason) a reference golden whose path is absent;
+    * each has a "(built fixture)" twin on [[WhisperFixtures]]' files. */
+  private def assumeReference(path: String): Unit =
+    assume(java.nio.file.Files.exists(java.nio.file.Paths.get(path)),
+      s"$path absent: reference golden not checked on this box")
+
+  /** The built large-shaped and testcreate files in one directory. */
+  private lazy val built: String = {
+    val d = tmpDir("whisper-built")
+    WhisperFixtures.write(d, "large.whisper", WhisperFixtures.large)
+    WhisperFixtures.write(d, "testcreate.whisper", WhisperFixtures.testcreate)
+    d
+  }
+
+  private def scansOf(q: org.apache.spark.sql.DataFrame) = {
+    def flatten(p: org.apache.spark.sql.execution.SparkPlan):
+        Seq[org.apache.spark.sql.execution.SparkPlan] = {
+      val kids = p match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          Seq(a.executedPlan)
+        case s: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
+          Seq(s.plan)
+        case o => o.children
+      }
+      p +: kids.flatMap(flatten)
+    }
+    flatten(q.queryExecution.executedPlan).collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }
+  }
+
   test("format(whisper) == a direct WhisperFormat decode on the reference fixtures") {
+    assumeReference(dir)
     import graft.sources.WhisperSource
     import java.nio.file.{Files, Path}
     import scala.jdk.CollectionConverters._
@@ -41,7 +73,37 @@ class WhisperSourceSpec extends SparkTestBase {
     assert(v2.map(_._1) == Set("large"))
   }
 
+  test("format(whisper) == a direct WhisperFormat decode on the reference fixtures (built fixture)") {
+    import graft.sources.WhisperSource
+    import java.nio.file.{Files, Path}
+    import scala.jdk.CollectionConverters._
+    val v2 = spark.read.format("whisper").load(built)
+      .select(col("series_id"), col("step"),
+        col("ts").cast("long").as("ts"), col("value"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3))).toSet
+    val qualRoots = WhisperSource.qualify(Seq(built))
+    val rings = Files.walk(java.nio.file.Paths.get(built)).iterator().asScala
+      .filter(f => Files.isRegularFile(f) &&
+        (f.toString.endsWith(".whisper") || f.toString.endsWith(".hoard")))
+      .toSeq
+    assert(rings.size == 2)
+    val ref = rings.flatMap { (f: Path) =>
+      val series = WhisperSource.relativeSeries(qualRoots,
+        WhisperSource.qualify(Seq(f.toString)).head)
+      graft.store.WhisperFormat.slots(Files.readAllBytes(f))
+        .map(sl => (series, sl.step.toLong, sl.ts, sl.value))
+    }.toSet
+    assert(v2 == ref, "V2 source and a direct ring decode differ")
+    // both decodes equal what the builder put in the rings
+    assert(v2 == WhisperFixtures.largeValues.map { case ((step, ts), v) =>
+      ("large", step, ts, v) }.toSet)
+    // testcreate.whisper's zeroed rings contribute a FILE but no rows
+    assert(v2.map(_._1) == Set("large"))
+  }
+
   test("series_id equality prunes the file list at planning time") {
+    assumeReference(dir)
     val q = spark.read.format("whisper").load(dir)
       .where(col("series_id") === "large")
     q.collect()
@@ -70,7 +132,27 @@ class WhisperSourceSpec extends SparkTestBase {
       .map(_.getString(0)).toSeq == Seq("large"))
   }
 
+  test("series_id equality prunes the file list at planning time (built fixture)") {
+    // unfiltered, the two files pack into two partitions (each costs
+    // more than half the 4 MB open-cost split) ...
+    val all = spark.read.format("whisper").load(built)
+    all.collect()
+    assert(scansOf(all).head.inputPartitions.size == 2)
+    // ... and series_id equality leaves one file, so one partition
+    val q = spark.read.format("whisper").load(built)
+      .where(col("series_id") === "large")
+    q.collect()
+    val scans = scansOf(q)
+    assert(scans.nonEmpty, "no BatchScanExec in the whisper plan")
+    assert(scans.head.inputPartitions.size == 1,
+      s"expected 1 file partition after pushdown, " +
+        s"got ${scans.head.inputPartitions.size}")
+    assert(q.select("series_id").distinct().collect()
+      .map(_.getString(0)).toSeq == Seq("large"))
+  }
+
   test("column pruning reaches the reader (2-column projection)") {
+    assumeReference(dir)
     val q = spark.read.format("whisper").load(dir)
       .select("series_id", "value")
     val rows = q.collect()
@@ -84,7 +166,22 @@ class WhisperSourceSpec extends SparkTestBase {
     assert(narrow == full)
   }
 
+  test("column pruning reaches the reader (2-column projection) (built fixture)") {
+    val q = spark.read.format("whisper").load(built)
+      .select("series_id", "value")
+    val rows = q.collect()
+    assert(rows.nonEmpty && rows.head.length == 2)
+    val narrow = q.groupBy("series_id").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val full = spark.read.format("whisper").load(built)
+      .groupBy("series_id").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(narrow == full)
+    assert(full == Map("large" -> WhisperFixtures.largeValues.size.toLong))
+  }
+
   test("the imported-store fetch golden also holds through the V2 source") {
+    assumeReference(s"$dir/large.whisper")
     // the reference's golden window (test/hoard.test.coffee:36-51):
     // hourly means from the finest ring must reproduce the five fetch
     // values [2048, 4546, 794, 805, 4718] — here read STRAIGHT off the
@@ -95,6 +192,32 @@ class WhisperSourceSpec extends SparkTestBase {
         col("ts") < timestamp_seconds(lit(1311181200L)))
       .orderBy("ts").select("value").collect().map(_.getDouble(0)).toSeq
     assert(got == Seq(2048.0, 4546.0, 794.0, 805.0, 4718.0))
+  }
+
+  test("the imported-store fetch golden also holds through the V2 source (built fixture)") {
+    // the golden window's hourly slots read straight off the built file
+    val got = spark.read.format("whisper").load(s"$built/large.whisper")
+      .where(col("step") === 3600 &&
+        col("ts") >= timestamp_seconds(lit(1311163200L)) &&
+        col("ts") < timestamp_seconds(lit(1311181200L)))
+      .orderBy("ts").select("value").collect().map(_.getDouble(0)).toSeq
+    assert(got == (1311163200L until 1311181200L by 3600L)
+      .map(ts => WhisperFixtures.largeValues((3600L, ts))))
+  }
+
+  test("a missing load path is refused, naming it; an empty directory reads as no rows") {
+    import org.apache.spark.sql.AnalysisException
+    val missing = tmpDir("whisper-missing") + "/no-such-tree"
+    val read = intercept[AnalysisException](
+      spark.read.format("whisper").load(missing).collect())
+    assert(read.getCondition == "PATH_NOT_FOUND")
+    assert(read.getMessage.contains(missing), read.getMessage)
+    val imp = intercept[AnalysisException](graft.store.HoardImport.intoStore(
+      spark, missing, tmpDir("whisper-missing-st") + "/store"))
+    assert(imp.getMessage.contains(missing), imp.getMessage)
+
+    val empty = tmpDir("whisper-empty")
+    assert(spark.read.format("whisper").load(empty).count() == 0L)
   }
 
   test("many-files gate: 10k tiny rings list fast and pack into few partitions") {
