@@ -27,15 +27,4 @@ object Dedup {
       max(seq).as("__seq")
     df.groupBy(groupCols: _*).agg(aggs.head, aggs.tail: _*).drop("__seq")
   }
-
-  /** Window-function variant retaining whole rows (used where all columns
-    * must survive). Costlier than [[lastWriteWins]]; prefer that form.
-    */
-  def lastRowWins(df: DataFrame, groupCols: Seq[Column], seq: Column): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(groupCols: _*).orderBy(seq.desc)
-    df.withColumn("__rn", row_number().over(w))
-      .where(col("__rn") === 1)
-      .drop("__rn")
-  }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.core.{ArchivePolicy, Time}
+import graft.core.Time
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -61,18 +61,5 @@ object Rollup {
       // xff gate: >= keeps the boundary case, matching `knownPercent >= xff`
       .where(col("__known").cast("double") / lit(expected) >= lit(xff))
       .drop("__known")
-  }
-
-  /** Full cascade: returns one DataFrame per archive level, keyed by step.
-    * `finest` must already be aligned+deduped at the finest step.
-    */
-  def cascade(finest: DataFrame, seriesCol: String, intervalCol: String,
-              valueCol: String, policy: ArchivePolicy): Map[Long, DataFrame] = {
-    val steps = policy.sorted.map(_.step)
-    steps.tail.foldLeft(Map(steps.head -> finest)) { (acc, coarser) =>
-      val finerStep = steps(steps.indexOf(coarser) - 1)
-      acc + (coarser -> downsample(acc(finerStep), seriesCol, intervalCol,
-        valueCol, finerStep, coarser, policy.xff, policy.cf))
-    }
   }
 }

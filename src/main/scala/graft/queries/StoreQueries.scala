@@ -313,25 +313,42 @@ object StoreQueries {
     HoardStore.open(s, root)
   }
 
-  /** The reference's golden whisper fixture, imported once per JVM
-    * through the binary migration path (`HoardImport`). `WhisperNow`
-    * is the file's `lastUpdate` header word — the natural replay
-    * clock for archived data.
+  /** hs7's whisper store: [[largeWhisper]] imported once per JVM through
+    * the binary migration path (`HoardImport`). `WhisperNow` is the
+    * file's `lastUpdate` header word — the natural replay clock for
+    * archived data.
     */
-  private[graft] val WhisperPath = "/root/reference/test/large.whisper"
   private[graft] val WhisperNow = 1312504705L
   private val builtWhisper = new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** A whisper file shaped like the reference's `test/large.whisper`
+    * (policy [[3600,8760],[86400,1095]], lastUpdate `WhisperNow`), built
+    * from this repository alone: the reference's golden fetch values
+    * (test/hoard.test.coffee:36-51) at the hourly slots 1311163200 …
+    * 1311177600, seeded integers in every other slot of both rings.
+    */
+  private def largeWhisper: Array[Byte] = {
+    val planted = Seq(2048.0, 4546.0, 794.0, 805.0, 4718.0)
+      .zipWithIndex.map { case (v, i) => (1311163200L + 3600L * i) -> v }.toMap
+    val rnd = new scala.util.Random(20110805)
+    graft.store.WhisperFormat.write(WhisperNow, 0.5f,
+      Seq(graft.core.Archive(3600, 8760), graft.core.Archive(86400, 1095)).map { ar =>
+        val newest = WhisperNow / ar.step * ar.step
+        ar -> (0L until ar.points).reverse.map(k => newest - k * ar.step)
+          .map(t => t -> planted.getOrElse(t, (10 + rnd.nextInt(4990)).toDouble))
+      })
+  }
 
   /** hs16's exported graphite tree, one per sf dir per JVM. */
   private val builtTree = new java.util.concurrent.ConcurrentHashMap[String, String]()
   private val builtSink = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   private[graft] def whisperStore(s: SparkSession): HoardStore = {
-    val root = builtWhisper.computeIfAbsent(WhisperPath, _ => {
+    val root = builtWhisper.computeIfAbsent("large", _ => {
       val tmp = java.nio.file.Files.createTempDirectory("graft-whisper")
-        .toString + "/store"
-      graft.store.HoardImport.intoStore(s, WhisperPath, tmp)
-      tmp
+      val file = java.nio.file.Files.write(tmp.resolve("large.whisper"), largeWhisper)
+      graft.store.HoardImport.intoStore(s, file.toString, tmp.toString + "/store")
+      tmp.toString + "/store"
     })
     HoardStore.open(s, root)
   }
@@ -608,12 +625,15 @@ object StoreQueries {
     }),
 
     "hs7_whisperimport" -> ((s, dir) => {
-      // the reference's own golden fetch (test/hoard.test.coffee:36-51)
-      // replayed through the BINARY IMPORT path: large.whisper →
-      // HoardImport.intoStore (ring decode, level bulk-load) → the
-      // engine's fetch planner. `now` pins to the file's lastUpdate
-      // header word so archive routing matches the reference test's
-      // 2011-era run (fetch clamps against wall clock otherwise).
+      // the reference's golden fetch (test/hoard.test.coffee:36-51)
+      // replayed through the BINARY IMPORT path: a large-shaped file
+      // with the golden values planted → HoardImport.intoStore (ring
+      // decode, level bulk-load) → the engine's fetch planner. It proves
+      // the import recovers planted values; byte-compatibility with the
+      // reference's own file is FixtureReplaySpec's (reference-only)
+      // golden. `now` pins to the file's lastUpdate header word so
+      // archive routing matches the reference test's 2011-era run
+      // (fetch clamps against wall clock otherwise).
       val st = whisperStore(s)
       val (_, dense) = st.fetch("large", 1311161605L, 1311179605L,
         WhisperNow)

@@ -2,7 +2,9 @@ package graft.store
 
 import graft.core.{Archive, ArchivePolicy, Time}
 import graft.operators.{Dedup, GapFill, GraphiteTarget, Rollup}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import java.nio.file.{Files, Paths, Path => JPath}
@@ -31,12 +33,12 @@ import scala.jdk.CollectionConverters._
   * a (level, month)'s files. `now` is always an explicit parameter —
   * never wall clock (SURVEY §5.3).
   *
-  * One commit path: a batch stages its per-level winner files and
-  * catalog files against a pinned manifest version, then publishes one
-  * new version by an atomic claim. Writers take no lock — a publish
-  * that finds a concurrent commit in a (level, month) it read or wrote
-  * discards its staged files and re-runs the cascade (optimistic
-  * concurrency). Nothing is visible before the publish and nothing of
+  * One commit path: a batch stages its winner files for every level
+  * and its catalog files in one write against a pinned manifest
+  * version, then publishes one new version by an atomic claim. Writers
+  * take no lock — a publish that finds a concurrent commit in a (level,
+  * month) it read or wrote discards its staged files and re-runs the
+  * cascade (optimistic concurrency). Nothing is visible before the publish and nothing of
   * the batch is written after it, so a crash at any point
   * leaves readers the last published version; unpublished files are
   * reclaimed by [[expireSnapshots]]. Write-amp is ∝ batch size;
@@ -44,7 +46,8 @@ import scala.jdk.CollectionConverters._
   * disk: [[expireSnapshots]] is the only call that deletes data files,
   * and the store never calls it on its own. Propagation
   * recomputes only touched coarser intervals (§2.2.10) from the level
-  * above (§2.2.8), each hop one partial-aggregated groupBy.
+  * above (§2.2.8), each hop one partial-aggregated groupBy, all levels
+  * in one plan: nothing is written and read back between levels.
   */
 final class HoardStore private (val spark: SparkSession, val root: String,
                                 val pinnedVersion: Option[Long] = None) {
@@ -112,75 +115,104 @@ final class HoardStore private (val spark: SparkSession, val root: String,
 
   private def cascade(batch0: DataFrame, now: Long, txn: Txn): Unit = {
     val p = policy
+    val levels = p.sorted
     val base = HoardStore.claimCommitBase(root) // this batch's seq base
     txn.commitId = base
-    val levels = p.sorted
 
-    val hasSeq = batch0.columns.contains("seq")
-    val batch = if (hasSeq) batch0.withColumnRenamed("seq", "in_seq") else batch0
     // without a caller seq, synthesize a monotone per-row ingest id so
     // two same-second points for one series still resolve to ONE
     // deterministic winner for a given input ordering (callers needing
     // replay-stable lww across repartitionings should supply `seq`)
-    val tieBreak = if (hasSeq) col("in_seq") else monotonically_increasing_id()
+    val tieBreak =
+      if (batch0.columns.contains("seq")) col("seq") else monotonically_increasing_id()
 
-    // age-based routing: level index = finest archive covering the age
-    val routed = batch
-      .withColumn("age", lit(now) - col("ts"))
-      .withColumn("lvl", levelForAgeExpr(levels))
-      .where(col("lvl").isNotNull) // too-old points silently dropped
-      .withColumn("seq", struct(
-        lit(base).as("b"), lit(1).as("k"),
-        col("ts").as("t"), tieBreak.cast("long").as("s")))
+    // route each point to the step of the finest level covering its age
+    // (too-old points are silently dropped); the same pass observes, per
+    // coarser level, the ts bounds of the rows whose intervals it
+    // recomputes
+    val bounds = new Observation()
+    val routed = batch0
+      .withColumn("l", stepForAgeExpr(levels, lit(now) - col("ts")))
+      .where(col("l").isNotNull)
+      .observe(bounds, count(lit(1)).as("rows"), levels.tail.flatMap(ar => Seq(
+        min(when(col("l") < ar.step, col("ts"))).as(s"lo${ar.step}"),
+        max(when(col("l") < ar.step, col("ts"))).as(s"hi${ar.step}"))): _*)
+      .select(lit(Routed).as("kind"), col("l"), col("series_id"),
+        timestamp_seconds(col("ts")).as("interval"), col("value"),
+        struct(lit(base).as("b"), lit(1).as("k"),
+          col("ts").as("t"), tieBreak.cast("long").as("s")).as("seq"))
       .localCheckpoint(true)
+    val seen = bounds.get
+    if (seen("rows") == 0L) return
 
-    // touched coarse intervals cascade down from every direct write
-    var touchedBelow: DataFrame = null // (series_id, interval) at current lvl
-    levels.zipWithIndex.foreach { case (ar, i) =>
-      val direct = routed.where(col("lvl") === i)
-        .select(col("series_id"),
-          Time.align(timestamp_seconds(col("ts")), ar.step).as("interval"),
-          col("value"), col("seq"))
-
-      val newRows =
-        if (i == 0) direct
-        else {
-          // propagation (xff gate + mean) from the level above, only for
-          // touched intervals; propagated rows stamp below this batch's
-          // direct rows (the reference commits direct archive writes
-          // after earlier archives' propagation)
-          val touched = touchedBelow
-            .select(col("series_id"),
-              Time.align(col("interval"), ar.step).as("interval"))
-            .distinct()
-          // propagation cost ∝ touched intervals (§2.2.10) down to the
-          // I/O: read only the finer level's touched month partitions
-          val finer = readLevelWithSeq(levels(i - 1),
-              Some(touchedMonths(touched, ar.step)), Some(txn))
-            .select("series_id", "interval", "value")
-          val prop = Rollup.downsample(
-              finer.join(touched.select(col("series_id").as("s2"),
-                col("interval").as("i2")),
-                col("series_id") === col("s2") &&
-                  Time.align(col("interval"), ar.step) === col("i2"), "left_semi"),
-              "series_id", "interval", "value",
-              levels(i - 1).step, ar.step, p.xff, p.cf)
-            .withColumn("seq", struct(lit(base).as("b"), lit(0).as("k"),
-              lit(0L).as("t"), lit(0L).as("s")))
-          prop.unionByName(direct)
-        }
-
-      val touchedHere = newRows.select("series_id", "interval").distinct()
-        .localCheckpoint(true)
-      if (touchedHere.head(1).nonEmpty) {
-        mergeLevel(ar, newRows, txn)
-        stageCatalog(ar, touchedHere, txn)
-      }
-      touchedBelow =
-        if (touchedBelow == null) touchedHere
-        else touchedBelow.select(col("series_id"), col("interval"))
-          .unionByName(touchedHere).distinct().localCheckpoint(true)
+    // A coarse level recomputes exactly the intervals that routed rows
+    // of finer levels fall in (each step divides the next), from the
+    // next-finer level as this batch leaves it: the pinned files of the
+    // months those intervals span — read, they are the conflict
+    // footprint — under this batch's own winners there. Only pinned rows
+    // inside the bounds' span reach the shuffle.
+    val snap = manifestEntries(root, txn.snapVer)
+    def scan(kind: Int, step: Long, es: Seq[ManifestEntry]) =
+      if (es.isEmpty) None
+      else Some(spark.read.schema(if (kind == Known) catalogSchema else levelSchema)
+        .parquet(es.map(e => s"$root/${e.rel}"): _*)
+        .select(lit(kind).as("kind"), lit(step).as("l"), col("*")))
+    val pinned = levels.sliding(2).toSeq.flatMap {
+      case Seq(fine, coarse) if seen(s"lo${coarse.step}") != null =>
+        def edge(k: String) =
+          Math.floorDiv(seen(s"$k${coarse.step}").asInstanceOf[Long], coarse.step) * coarse.step
+        val (from, to) = (edge("lo"), edge("hi") + coarse.step)
+        val months = monthsCovering(from, to)
+        months.foreach(m => txn.touched += ((fine.step, m)))
+        scan(Pinned, fine.step, snap.filter(e =>
+            e.step == fine.step && !e.isCatalog && months.contains(e.month)))
+          .map(_.where(col("interval") >= timestamp_seconds(lit(from)) &&
+            col("interval") < timestamp_seconds(lit(to))))
+      case _ => None
     }
+    val catalog = levels.flatMap(ar =>
+      scan(Known, ar.step, snap.filter(e => e.isCatalog && e.step == ar.step)))
+    // The commit's one shuffle: every step below groups by series_id
+    // (plus other keys), so none shuffles again. A checkpoint would
+    // forget the hash partitioning, and so would a cache planned on before
+    // it is built; AQE does not coalesce a cached shuffle, hence the width.
+    val input = (routed +: (pinned ++ catalog))
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val u = input.repartition(shuffleWidth(input), col("series_id")).persist()
+    def rows(kind: Int) = u.where(col("kind") === kind)
+    try {
+      u.foreachPartition((_: Iterator[Row]) => ())
+      val winners = levels.indices.foldLeft(Seq.empty[DataFrame]) { (done, i) =>
+        val ar = levels(i)
+        val direct = rows(Routed).where(col("l") === ar.step).select(col("series_id"),
+          Time.align(col("interval"), ar.step).as("interval"), col("value"), col("seq"))
+        val newRows =
+          if (i == 0) direct
+          else {
+            val finer = lww(rows(Pinned).where(col("l") === levels(i - 1).step)
+                .select("series_id", "interval", "value", "seq").unionByName(done.last))
+              .select(col("series_id"), col("interval"), col("value"), lit(false).as("mark"))
+            val marks = rows(Routed).where(col("l") < ar.step).select(col("series_id"),
+              col("interval"), lit(null).cast(DoubleType).as("value"), lit(true).as("mark"))
+            val touched = finer.unionByName(marks)
+              .withColumn("hit", max(col("mark")).over(Window.partitionBy(
+                col("series_id"), Time.align(col("interval"), ar.step))))
+              .where(col("hit") && !col("mark"))
+              .select("series_id", "interval", "value")
+            // propagation (xff gate + mean); propagated rows stamp below
+            // this batch's direct rows (the reference commits direct
+            // archive writes after earlier archives' propagation)
+            Rollup.downsample(touched, "series_id", "interval", "value",
+                levels(i - 1).step, ar.step, p.xff, p.cf)
+              .withColumn("seq", struct(lit(base).as("b"), lit(0).as("k"),
+                lit(0L).as("t"), lit(0L).as("s")))
+              .unionByName(direct)
+          }
+        done :+ lww(newRows)
+      }
+      stage(levels.zip(winners).map { case (ar, w) => w.withColumn("l", lit(ar.step)) }
+        .reduce(_ unionByName _), rows(Known).select("l", "series_id"), txn)
+    } finally u.unpersist()
   }
 
   /** Bulk-load pre-aggregated rows into ONE level AS-IS — no age
@@ -190,24 +222,59 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     * finer archives' retention and therefore must NOT be recomputed
     * from the fine level. Rows: `(series_id, ts` epoch-seconds`,
     * value)`; intervals are aligned to the level's step. Later normal
-    * writes stamp newer seqs and win lww as usual.
+    * writes stamp newer seqs and win lww as usual. The staging write
+    * reads `rows` twice (its rows, then its series for the catalog), so
+    * callers pass a materialized frame.
     */
   def importArchive(ar: Archive, rows: DataFrame): Unit = runOptimistic { txn =>
     require(policy.sorted.exists(_.step == ar.step),
       s"no level with step ${ar.step} in this store's policy")
     val base = HoardStore.claimCommitBase(root)
     txn.commitId = base
-    val newRows = rows.select(col("series_id"),
+    val winners = lww(rows.select(col("series_id"),
         Time.align(timestamp_seconds(col("ts")), ar.step).as("interval"),
         col("value"),
         struct(lit(base).as("b"), lit(1).as("k"),
-          col("ts").cast("long").as("t"), lit(0L).as("s")).as("seq"))
-      .localCheckpoint(true)
-    val touched = newRows.select("series_id", "interval").distinct()
-      .localCheckpoint(true)
-    if (touched.head(1).nonEmpty) {
-      mergeLevel(ar, newRows, txn)
-      stageCatalog(ar, touched, txn)
+          col("ts").cast("long").as("t"), lit(0L).as("s")).as("seq")))
+    stage(winners.withColumn("l", lit(ar.step)),
+      catalogAt(txn.snapVer, ar).withColumn("l", lit(ar.step)), txn)
+  }
+
+  /** Stage one commit — a cascade or an archive import — in one write
+    * to the commit's OWN directory (nobody else writes there, so its
+    * listing is race-free). `winners` holds every level's new rows
+    * `(l, series_id, interval, value, seq)`, one per key, `l` being the
+    * level's step; they go to `l=<step>/p_month=<yyyy-MM>`, so a level
+    * with no rows writes nothing. Existing data is neither read nor
+    * rewritten (write-amp ∝ batch); readers resolve lww across a month's
+    * files. The series of each level's winners that `known` (the
+    * snapshot catalog's `(l, series_id)`) does not list go to
+    * `l=<step>/p_month=catalog` (null data columns; catalog reads take
+    * `series_id` only): catalog entries of the same publish, outside the
+    * conflict footprint — two writers that both add a series both
+    * publish, and every catalog read applies distinct(). The catalog is
+    * what lets fetchMulti derive its series universe WITHOUT scanning the
+    * level's data; a series stays in it after vacuum expires its points,
+    * as the reference's series file exists until deleted.
+    */
+  private def stage(winners: DataFrame, known: DataFrame, t: Txn): Unit = {
+    val sub = f"c${t.commitId}%012d"
+    val dir = Paths.get(dataPath(root), sub)
+    val fresh = winners.select(col("l"), col("series_id"), lit(true).as("fresh"))
+      .unionByName(known.select(col("l"), col("series_id"), lit(false).as("fresh")))
+      .groupBy("l", "series_id").agg(bool_and(col("fresh")).as("fresh"))
+      .where(col("fresh"))
+      .select(col("l"), col("series_id"), lit(CatalogMonth).as("p_month"))
+    winners.withColumn("p_month", date_format(col("interval"), "yyyy-MM"))
+      .unionByName(fresh, allowMissingColumns = true)
+      .write.mode(SaveMode.Overwrite).partitionBy("l", "p_month").parquet(dir.toString)
+    for (l <- listDir(dir) if l.startsWith("l=");
+         m <- listDir(dir.resolve(l)) if m.startsWith("p_month=");
+         f <- listDir(dir.resolve(l).resolve(m)) if f.endsWith(".parquet")) {
+      val e = ManifestEntry(l.stripPrefix("l=").toLong, m.stripPrefix("p_month="),
+        s"_data/$sub/$l/$m/$f")
+      t.staged += e
+      if (!e.isCatalog) t.touched += ((e.step, e.month))
     }
   }
 
@@ -418,28 +485,6 @@ final class HoardStore private (val spark: SparkSession, val root: String,
       Seq("value" -> col("value"), "seq_keep" -> col("seq")))
     .withColumnRenamed("seq_keep", "seq")
 
-  /** Stage new rows for a level: fold the batch to one winner per key,
-    * write the files into this commit's OWN directory (nobody else
-    * writes there — enumeration is race-free), and record their
-    * manifest entries in the txn. Existing data is neither read nor
-    * rewritten (write-amp ∝ batch); readers resolve lww across the
-    * month's files. Nothing is visible until the manifest publish.
-    */
-  private def mergeLevel(ar: Archive, newRows: DataFrame, t: Txn): Unit = {
-    val sub = f"c${t.commitId}%012d_l${ar.step}"
-    val dirP = Paths.get(dataPath(root), sub)
-    lww(newRows)
-      .withColumn("p_month", date_format(col("interval"), "yyyy-MM"))
-      .write.mode(SaveMode.Overwrite).partitionBy("p_month").parquet(dirP.toString)
-    listDir(dirP).filter(_.startsWith("p_month=")).foreach { mdir =>
-      val month = mdir.stripPrefix("p_month=")
-      listDir(dirP.resolve(mdir)).filter(_.endsWith(".parquet")).foreach { f =>
-        t.staged += ManifestEntry(ar.step, month, s"_data/$sub/$mdir/$f")
-      }
-      t.touched += ((ar.step, month))
-    }
-  }
-
   /** Fold every (level, month) — and every level catalog — holding
     * more than `maxFilesPerMonth` files back to one file (one winner
     * per key; one row per catalog series). The write path already folds
@@ -451,31 +496,6 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     foldMonths(_.size > maxFilesPerMonth)
 
   // ---- series catalog ------------------------------------------------
-
-  /** Stage the series a level gains in this transaction as one small
-    * file in the commit's own directory, named by a catalog entry of the
-    * same manifest publish: the anti-join against the snapshot's catalog
-    * keeps each file to the new series only. This is what lets
-    * fetchMulti derive its series universe WITHOUT scanning the level's
-    * data (at 100 TB the catalog is ~#series rows vs ~#points). Catalog
-    * entries stay out of the conflict footprint: two writers that both
-    * add a series both publish, and every catalog read applies
-    * distinct(). A series stays in the catalog after vacuum expires its
-    * points — matching the reference, where the series file (all-null
-    * slots included) exists until explicitly deleted.
-    */
-  private def stageCatalog(ar: Archive, touched: DataFrame, t: Txn): Unit = {
-    val fresh = touched.select("series_id").distinct()
-      .join(catalogAt(t.snapVer, ar), Seq("series_id"), "left_anti")
-    if (fresh.head(1).nonEmpty) {
-      val sub = f"c${t.commitId}%012d_s${ar.step}"
-      val dir = Paths.get(dataPath(root), sub)
-      fresh.coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir.toString)
-      listDir(dir).filter(_.endsWith(".parquet")).foreach { f =>
-        t.staged += ManifestEntry(ar.step, CatalogMonth, s"_data/$sub/$f")
-      }
-    }
-  }
 
   /** Graphite-style series glob → predicate for [[fetchMulti]]: the
     * target syntax a graphite user brings to a tree imported by
@@ -538,49 +558,18 @@ final class HoardStore private (val spark: SparkSession, val root: String,
       StructField("b", LongType), StructField("k", IntegerType),
       StructField("t", LongType), StructField("s", LongType))))))
 
-  /** Distinct `yyyy-MM` partition keys covered by a (small) frame of
-    * touched intervals, where each interval spans [t, t+spanSec) —
-    * a coarse interval can cross a month boundary, so both edges count.
-    * Driver-side, bounded by retention/30 days. Steps longer than 28
-    * days fall back to the full min..max month span (correct, coarser).
-    */
-  private def touchedMonths(touched: DataFrame, spanSec: Long): Seq[String] =
-    if (spanSec <= 28L * 86400)
-      touched.select(explode(array(
-          date_format(col("interval"), "yyyy-MM"),
-          date_format(timestamp_seconds(col("interval").cast("long") +
-            (spanSec - 1)), "yyyy-MM"))).as("m"))
-        .distinct().collect().map(_.getString(0)).toSeq
-    else {
-      val r = touched.agg(min(col("interval")).cast("long"),
-        max(col("interval")).cast("long")).head()
-      if (r.isNullAt(0)) Seq.empty
-      else monthsCovering(r.getLong(0), r.getLong(1) + spanSec)
-    }
-
-  /** Manifest-planned read: the file list comes from the pinned (or
-    * latest) manifest — NO directory listing, which at object-store
+  /** Manifest-planned read: the file list comes from this view's
+    * manifest version — NO directory listing, which at object-store
     * scale is the difference between one small metadata read and a
     * recursive LIST over millions of files. Month pruning selects
     * manifest entries, so partition pruning happens before Spark ever
-    * sees a path. An in-flight transaction overlays its own staged
-    * files (its propagation must read what it just wrote) and records
-    * the (level, month) pairs it read — the conflict footprint.
+    * sees a path.
     */
   private def readLevelWithSeq(ar: Archive,
-                               months: Option[Seq[String]] = None,
-                               txn: Option[Txn] = None): DataFrame = {
-    val ver = txn.map(_.snapVer).getOrElse(viewVersion)
-    val staged = txn.map(_.staged.toSeq).getOrElse(Seq.empty)
-    val selected = (manifestEntries(root, ver) ++ staged).filter(e =>
+                               months: Option[Seq[String]] = None): DataFrame = {
+    val selected = manifestEntries(root, viewVersion).filter(e =>
       e.step == ar.step && !e.isCatalog && months.forall(_.contains(e.month)))
-    txn.foreach { t =>
-      // reads feed propagation: record their footprint for validation
-      selected.foreach(e => t.touched += ((e.step, e.month)))
-      months.foreach(_.foreach(m => t.touched += ((ar.step, m))))
-    }
-    if (selected.isEmpty) emptyFrame(levelSchema)
-    else readEntries(selected.distinct)
+    if (selected.isEmpty) emptyFrame(levelSchema) else readEntries(selected)
   }
 
   def readLevel(ar: Archive): DataFrame =
@@ -639,9 +628,7 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     val data = readLevelRange(ar, ti.fromInterval, ti.toInterval)
       .where(col("series_id") === series)
     val universe = spark.createDataFrame(
-      java.util.List.of[org.apache.spark.sql.Row](
-        org.apache.spark.sql.Row(series)),
-      StructType(Seq(StructField("series_id", StringType))))
+      java.util.List.of(Row(series)), catalogSchema)
     val dense = GapFill.densify(data, universe, "series_id", "interval",
       Seq("value"), ti.fromInterval, ti.toInterval, ar.step)
     (ti, dense)
@@ -834,13 +821,7 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     import spark.implicits._
     val rows = policy.sorted.sliding(2).collect {
       case Seq(fine, coarse) =>
-        val expected = graft.operators.Rollup.downsample(
-          readLevel(fine), "series_id", "interval", "value",
-          fine.step, coarse.step, policy.xff, policy.cf)
-          .select(col("series_id"), col("interval"),
-            col("value").as("expected"))
-        val cmp = readLevel(coarse)
-          .join(expected, Seq("series_id", "interval"), "inner")
+        val cmp = rederived(fine, coarse)
           .select(when(col("value") === col("expected"), 0L)
             .otherwise(1L).as("bad"))
           .agg(count(lit(1)).as("n"), sum(col("bad")).as("m"))
@@ -859,13 +840,7 @@ final class HoardStore private (val spark: SparkSession, val root: String,
   def fsckRepair(): Unit =
     policy.sorted.sliding(2).foreach {
       case Seq(fine, coarse) =>
-        val expected = graft.operators.Rollup.downsample(
-          readLevel(fine), "series_id", "interval", "value",
-          fine.step, coarse.step, policy.xff, policy.cf)
-        val bad = readLevel(coarse)
-          .join(expected.select(col("series_id"), col("interval"),
-            col("value").as("expected")),
-            Seq("series_id", "interval"), "inner")
+        val bad = rederived(fine, coarse)
           .where(!(col("value") === col("expected")))
           .select(col("series_id"),
             col("interval").cast("long").as("ts"),
@@ -874,6 +849,16 @@ final class HoardStore private (val spark: SparkSession, val root: String,
         if (bad.head(1).nonEmpty) importArchive(coarse, bad)
       case _ => ()
     }
+
+  /** `coarse`'s stored slots that `fine` can derive, each beside the
+    * `expected` value the write path's cascade operator derives.
+    */
+  private def rederived(fine: Archive, coarse: Archive): DataFrame =
+    readLevel(coarse).join(
+      Rollup.downsample(readLevel(fine), "series_id", "interval", "value",
+          fine.step, coarse.step, policy.xff, policy.cf)
+        .withColumnRenamed("value", "expected"),
+      Seq("series_id", "interval"))
 
   /** Series deletion — the reference's `rm <series>.whisper`, as a
     * store operation (and the right-to-be-forgotten path a shared
@@ -938,7 +923,7 @@ final class HoardStore private (val spark: SparkSession, val root: String,
       StructField("interval", TimestampType), StructField("value", DoubleType))))
 
   private def emptyFrame(schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+    spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
 
   /** Directory entry names, with the NIO stream closed (Files.list
     * leaks a directory fd per call otherwise — a long-lived driver JVM
@@ -1162,14 +1147,26 @@ object HoardStore {
     0L // unreachable
   }
 
-  /** CASE chain routing an age to the finest covering archive index
-    * (`src/hoard.coffee:257-272`); NULL = older than every archive.
-    */
-  private def levelForAgeExpr(levels: Seq[Archive]) = {
-    val first = when(col("age") <= levels.head.retention, lit(0))
-    val chained = levels.zipWithIndex.tail.foldLeft(first) {
-      case (acc, (ar, i)) => acc.when(col("age") <= ar.retention, lit(i))
+  /** CASE chain routing an age to the step of the finest covering archive
+    * (`src/hoard.coffee:257-272`); NULL = older than every archive. */
+  private def stepForAgeExpr(levels: Seq[Archive], age: Column): Column =
+    levels.tail.foldLeft(when(age <= levels.head.retention, lit(levels.head.step))) {
+      (acc, ar) => acc.when(age <= ar.retention, lit(ar.step))
     }
-    chained.otherwise(lit(null))
+
+  /** Shuffle width for `df`: one task per advisory partition size of
+    * its estimated bytes — the width AQE's coalescing would pick.
+    */
+  private def shuffleWidth(df: DataFrame): Int = {
+    val conf = df.sparkSession.sessionState.conf
+    (df.queryExecution.optimizedPlan.stats.sizeInBytes /
+      conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) + 1)
+      .min(BigInt(conf.numShufflePartitions)).toInt
   }
+
+  // a cascade's input rows: this batch's routed points, a finer level's
+  // pinned rows that propagation reads, a level's snapshot catalog
+  private val Routed = 0
+  private val Pinned = 1
+  private val Known = 2
 }

@@ -21,13 +21,7 @@ class AnalysisSmokeSpec extends SparkTestBase {
   private val dir = "/root/testdata/sf0.001"
 
   test("every declared query analyzes at sf0.001") {
-    // hs7 imports the reference's large.whisper while its frame is built;
-    // it is analyzed wherever that file exists, and named where it does not
-    val whisper = graft.queries.StoreQueries.WhisperPath
-    val hs7Runs = java.nio.file.Files.exists(java.nio.file.Paths.get(whisper))
-    if (!hs7Runs) info(s"hs7_whisperimport not analyzed: $whisper absent")
     val failures = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => hs7Runs || name != "hs7_whisperimport" }
       .flatMap { case (name, fn) =>
         try { fn(spark, dir).queryExecution.analyzed; None }
         catch { case e: Throwable =>

@@ -251,7 +251,8 @@ class HoardStoreSpec extends SparkTestBase {
       s"universe does not read the catalog entries $catalogFiles: $scans")
     // exactly ONE scan of the level data (the windowed read); the
     // pre-catalog plan scanned the level a second time for the universe
-    val levelScans = scans.count(_.exists(_.contains("_l3600/")))
+    val levelScans = scans.count(_.exists(p =>
+      p.contains("/l=3600/") && !p.contains(s"p_month=${HoardStore.CatalogMonth}")))
     assert(levelScans == 1, s"expected 1 level scan, got $levelScans: $scans")
   }
 
@@ -507,5 +508,72 @@ class HoardStoreSpec extends SparkTestBase {
     val other = HoardStore.create(spark, tmpDir("hoard-p") + "/store",
       ArchivePolicy(Seq(Archive(3600, 8760))))
     intercept[IllegalArgumentException] { dst.fill(other) }
+  }
+
+  test("one batch commit on a 3-level store runs at most 6 Spark jobs") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val s = HoardStore.create(spark, tmpDir("hoard-jobs") + "/store", ArchivePolicy(
+      Seq(Archive(60, 1440), Archive(600, 4320), Archive(3600, 8760))))
+    val t0 = now - 3600
+    val batch = (0 until 33).map(i => RawPoint(s"h${i % 8}.cpu", t0 + i / 8 * 60, i.toDouble))
+    // the measured commit also reads pinned finer rows and a catalog
+    s.updateMany(batch, now)
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("commit", "one updateMany")
+      try s.updateMany(batch.map(p => p.copy(value = p.value + 1)), now)
+      finally sc.clearJobGroup()
+      // the listener bus delivers in order: once the marker job is seen,
+      // so is every job of the commit
+      sc.setJobGroup("marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains("marker"), "the listener never saw the marker job")
+    } finally sc.removeSparkListener(listener)
+    val jobs = groups.toArray.count(_ == "commit")
+    assert(jobs <= 6, s"one updateMany ran $jobs Spark jobs")
+  }
+
+  test("propagation into a coarse interval that straddles a month edge reads both months") {
+    import org.apache.spark.sql.functions.col
+    // a weekly level: the epoch-aligned week [2011-07-28, 2011-08-04)
+    // crosses the 2011-08-01 month edge
+    val hourly = Archive(3600, 1440)
+    val weekly = Archive(604800, 520)
+    val s = HoardStore.create(spark, tmpDir("hoard-week") + "/store",
+      ArchivePolicy(Seq(hourly, weekly), xff = 0.5))
+    val week = 1311811200L
+    val edge = 1312156800L // 2011-08-01T00:00:00Z
+    assert(week < edge && edge < week + weekly.step)
+    // naive mirror: last write per hourly slot, then the xff-gated mean
+    val mirror = scala.collection.mutable.Map.empty[Long, Double]
+    def expected: Option[Double] = {
+      val known = mirror.filter { case (t, _) => t >= week && t < week + weekly.step }
+      if (known.size.toDouble / (weekly.step / hourly.step) >= 0.5)
+        Some(known.values.sum / known.size)
+      else None
+    }
+    def stored: Option[Double] = s.readLevel(weekly).where(col("series_id") === "w")
+      .collect().map(_.getAs[Double]("value")).headOption
+    def write(ts: Seq[Long], base: Int): Unit = {
+      val pts = ts.zipWithIndex.map { case (t, i) => RawPoint("w", t, (base + i).toDouble) }
+      s.updateMany(pts, now)
+      pts.foreach(p => mirror(p.ts) = p.value)
+    }
+    // 45 hours on each side: 90 of 168 passes the gate, neither side alone does
+    write((1 to 45).map(h => edge - h * 3600L) ++ (0 until 45).map(h => edge + h * 3600L), 100)
+    assert(expected.isDefined)
+    assert(stored == expected, s"first batch: stored $stored, mirror $expected")
+    // a second batch into August only: five overwrites and ten new hours;
+    // the July rows it does not touch still count
+    write((0 until 5).map(h => edge + h * 3600L) ++ (45 until 55).map(h => edge + h * 3600L), 1000)
+    assert(stored == expected, s"second batch: stored $stored, mirror $expected")
   }
 }

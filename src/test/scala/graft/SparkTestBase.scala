@@ -17,7 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * broadcast/subquery job — exactly the stack VERIFY_r13 recorded).
   * After each suite: wait for the suite's async jobs to drain, then
   * drop its checkpoint blocks — the same unpersist discipline
-  * Bench.run applies between queries.
+  * Bench.run applies between queries — and delete the temp directories
+  * its tests made.
   */
 trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
   @volatile private var sparkStarted = false
@@ -26,8 +27,24 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     Graft.session(cores = 8, appName = getClass.getSimpleName)
   }
 
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[java.nio.file.Path]()
+
+  /** A fresh temp directory, deleted with everything under it after the
+    * suite.
+    */
+  def tmpDir(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    tmpDirs.add(d)
+    d.toString
+  }
+
+  private def deleteRecursively(p: java.nio.file.Path): Unit =
+    if (java.nio.file.Files.exists(p)) {
+      val st = java.nio.file.Files.walk(p)
+      try st.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+        .forEach(f => java.nio.file.Files.deleteIfExists(f))
+      finally st.close()
+    }
 
   override def afterAll(): Unit = {
     try {
@@ -43,6 +60,9 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
           sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
         }
       }
-    } finally super.afterAll()
+    } finally {
+      tmpDirs.forEach(d => deleteRecursively(d))
+      super.afterAll()
+    }
   }
 }
