@@ -60,17 +60,7 @@ object Bench {
         f"[bench] hwfp cores=$cores mem=${memGb}g heap=${heapGb}g " +
           f"spin_ms=$spinMs%.0f wr_mbps=$wMbps%.0f"
       }.getOrElse("[bench] hwfp failed")
-    if (hwfp.nonEmpty) {
-      System.err.println(hwfp)
-      scala.util.Try {
-        val notes = java.nio.file.Paths.get("BENCH_NOTES.md")
-        if (java.nio.file.Files.isRegularFile(notes))
-          java.nio.file.Files.writeString(notes,
-            s"- [auto hwfp] sf=${new java.io.File(sfDir).getName} " +
-              s"cpus=$cpus ${hwfp.stripPrefix("[bench] hwfp ")}\n",
-            java.nio.file.StandardOpenOption.APPEND)
-      }
-    }
+    if (hwfp.nonEmpty) System.err.println(hwfp)
 
     // partial-results insurance for multi-hour scale-step sweeps: every
     // completed measurement rides stderr immediately, and a shutdown
@@ -388,8 +378,8 @@ object Bench {
     // that explain the pair-generator wall times at this SF, recorded
     // automatically so the saturated-fixture attribution of p4/p45
     // stays falsifiable as data grows. Counts only — never a pair
-    // join — so it's bounded at any SF. Appends one line per sweep to
-    // BENCH_NOTES.md and keeps a machine-readable copy in target/.
+    // join — so it's bounded at any SF. Printed to stderr, with a
+    // machine-readable copy in target/.
     if (!sys.env.get("SPARK_GRAFT_BENCH_PROBEVOL").contains("off"))
       scala.util.Try {
         // measure the volumes of the fixture the pairs family actually
@@ -414,12 +404,6 @@ object Bench {
           java.nio.file.Paths.get("target"))
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(s"target/bench-probevol-$sfName.json"), json)
-        val notes = java.nio.file.Paths.get("BENCH_NOTES.md")
-        if (java.nio.file.Files.isRegularFile(notes))
-          java.nio.file.Files.writeString(notes,
-            s"- [auto probe-volume sidecar] $sfName: $volStr " +
-              s"lastGenerator=$gen incGenerator=$incGen\n",
-            java.nio.file.StandardOpenOption.APPEND)
       }.failed.foreach(e =>
         System.err.println(s"[bench] probe-volume sidecar failed: $e"))
 

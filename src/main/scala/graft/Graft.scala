@@ -40,7 +40,7 @@ object Graft {
       .config("spark.sql.parquet.compression.codec", "zstd")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
-        sys.props("java.io.tmpdir") + "/graft-warehouse")
+        Scratch.memo("graft-warehouse")(Scratch.dir("graft-warehouse")))
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     configure(spark)

@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.core.Time
 import graft.operators.{AsOf, Dedup, GapFill, Rollup}
+import graft.streaming.Replay
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -1016,20 +1017,14 @@ object HoardQueries {
       // island
       graft.Graft.configure(s)
       import s.implicits._
-      val path = s"$dir/events.parquet"
       val raw = graft.Tables.loadStream(s, dir, "events")
       val pts = raw
         .transform(Tables.normalizeEventTs)
         .select(concat(lit("u"), col("user_id")).as("series_id"),
           col("ts").cast("long").as("ts"), col("value"))
         .as[(String, Long, Double)]
-      val name = "s2_sessions_" + StreamCounter.incrementAndGet()
-      val q = graft.streaming.StreamIngest.sessionize(pts, gapSec = 7200)
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      graft.streaming.StreamStats.record("s2_sessions", q); q.stop()
-      s.table(name)
+      Replay.toMemory("s2_sessions",
+          graft.streaming.StreamIngest.sessionize(pts, gapSec = 7200).toDF(), "append")
         .select(col("series_id"), col("start"), col("end"), col("n"),
           round(col("sum"), 6).as("sum"))
         .orderBy("series_id", "start")
@@ -1043,7 +1038,6 @@ object HoardQueries {
       // "enrich the firehose with a dim table": at any event rate the
       // only streaming state is the aggregate itself.
       graft.Graft.configure(s)
-      val path = s"$dir/events.parquet"
       val raw = graft.Tables.loadStream(s, dir, "events")
       val dim = broadcast(Tables.load(s, dir, "customer")
         .select(col("c_custkey"), col("c_mktsegment")))
@@ -1052,12 +1046,7 @@ object HoardQueries {
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(18,6)")).cast("double")
             .as("sum_value"))
-      val name = "s7_dim_" + StreamCounter.incrementAndGet()
-      val q = agged.writeStream.outputMode("complete")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      graft.streaming.StreamStats.record("s7_streamdim", q); q.stop()
-      s.table(name)
+      Replay.toMemory("s7_streamdim", agged, "complete")
         .select(col("c_mktsegment"), col("event_type"), col("n"),
           round(col("sum_value"), 6).as("sum_value"))
         .orderBy("c_mktsegment", "event_type")
@@ -1072,20 +1061,13 @@ object HoardQueries {
       // windows stay in state, never emitted; the oracle replays the
       // strict watermark-passed-end rule statically.
       graft.Graft.configure(s)
-      val path = s"$dir/events.parquet"
       val raw = graft.Tables.loadStream(s, dir, "events")
       val ev = raw
         .transform(Tables.normalizeEventTs)
         .select(col("ts"), concat(lit("u"), col("user_id")).as("key"))
-      val name = "s10_topk_" + StreamCounter.incrementAndGet()
-      val q = graft.streaming.StreamIngest
-        .windowedTopK(ev, windowSec = 21600, k = 5, delay = "2 hours")
-        .toDF()
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      graft.streaming.StreamStats.record("s10_streamtopk", q); q.stop()
-      s.table(name)
+      Replay.toMemory("s10_streamtopk", graft.streaming.StreamIngest
+          .windowedTopK(ev, windowSec = 21600, k = 5, delay = "2 hours")
+          .toDF(), "append")
         .select(col("wstart"), col("rnk"), col("key"), col("n"))
         .orderBy("wstart", "rnk")
     }),
@@ -1106,27 +1088,14 @@ object HoardQueries {
       import s.implicits._
       val k = 256
       val two60 = 1.152921504606846976e18
-      val inDir = java.nio.file.Files
-        .createTempDirectory("graft-s12-in").toString
-      (0 until 3).foreach { i =>
+      val in = Replay.stage("s12_streamkmv", (0 until 3).map(i =>
         s.read.parquet(s"$dir/events.parquet")
           .where(pmod(col("event_id"), lit(3)) === i)
-          .select(col("event_id"), col("event_type"), col("user_id"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$inDir/b$i")
-      }
-      val schema = s.read.parquet(s"$inDir/b0").schema
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-s12-ckpt").toString
+          .select(col("event_id"), col("event_type"), col("user_id"))))
       var surv = Seq.empty[(String, Long)].toDF("event_type", "h")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("event_type")).orderBy(col("h"))
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(inDir)
-        .writeStream.option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      Replay.run("s12_streamkmv", in.stream().writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val bh = batch.select(col("event_type"),
             conv(substring(md5(col("user_id").cast("string")), 1, 15),
@@ -1146,10 +1115,7 @@ object HoardQueries {
             .select(col("event_type"), explode(col("hs")).as("h"))
             .localCheckpoint(true)
           ()
-        }
-        .start()
-      q.processAllAvailable()
-      graft.streaming.StreamStats.record("s12_streamkmv", q); q.stop()
+        })
       surv.withColumn("rn", row_number().over(w))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_survivors"),
@@ -1173,7 +1139,6 @@ object HoardQueries {
       // the same finalization rule statically: windows whose end ≤
       // max event time (µs) − 2h.
       graft.Graft.configure(s)
-      val path = s"$dir/events.parquet"
       val raw = graft.Tables.loadStream(s, dir, "events")
       val agged = raw
         .transform(Tables.normalizeEventTs)
@@ -1182,15 +1147,9 @@ object HoardQueries {
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast("decimal(18,6)")).cast("double")
             .as("sum_value"))
-      val name = "s8_final_" + StreamCounter.incrementAndGet()
-      val q = agged
-        .select(col("window.start").as("bucket"), col("event_type"),
-          col("n"), col("sum_value"))
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      graft.streaming.StreamStats.record("s8_streamfinal", q); q.stop()
-      s.table(name)
+      Replay.toMemory("s8_streamfinal", agged
+          .select(col("window.start").as("bucket"), col("event_type"),
+            col("n"), col("sum_value")), "append")
         .select(col("event_type"), col("bucket").cast("string").as("bucket"),
           col("n"), round(col("sum_value"), 6).as("sum_value"))
         .orderBy("event_type", "bucket")
@@ -1201,20 +1160,14 @@ object HoardQueries {
       // micro-batched file source -> tumbling hourly aggregate -> memory
       // sink; the oracle recomputes it statically
       graft.Graft.configure(s)
-      val path = s"$dir/events.parquet"
       // the file source wants a directory: stream the sf dir filtered
       // down to the events file
       val raw = graft.Tables.loadStream(s, dir, "events")
       val stream = raw
         .transform(Tables.normalizeEventTs)
         .select(col("event_type").as("series_id"), col("ts"), col("value"))
-      val name = "s1_agg_" + StreamCounter.incrementAndGet()
-      val q = graft.streaming.StreamIngest.hourlyAggregates(stream)
-        .writeStream.outputMode("complete").format("memory").queryName(name)
-        .start()
-      q.processAllAvailable()
-      graft.streaming.StreamStats.record("s1_stream", q); q.stop()
-      s.table(name)
+      Replay.toMemory("s1_stream",
+          graft.streaming.StreamIngest.hourlyAggregates(stream), "complete")
         .select(col("series_id"), col("bucket").cast("string").as("bucket"),
           col("n"),
           (round(col("mean_value") * lit(1e6)) / lit(1e6)).as("mean_value"),
@@ -1230,20 +1183,13 @@ object HoardQueries {
       // once). The watermark bounds dedup state, matching SURVEY §3.4's
       // stance: watermarks bound state, never rollup finality.
       graft.Graft.configure(s)
-      val path = s"$dir/events.parquet"
-      val schema = s.read.parquet(path).schema
       def src() = graft.Tables.loadStream(s, dir, "events")
         .transform(Tables.normalizeEventTs)
         .select(col("event_id"), col("event_type"), col("ts"))
       val deduped = src().unionByName(src())
         .withWatermark("ts", "1 hour")
         .dropDuplicatesWithinWatermark("event_id")
-      val name = "s3_dedup_" + StreamCounter.incrementAndGet()
-      val q = deduped.writeStream.outputMode("append")
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      graft.streaming.StreamStats.record("s3_streamdedup", q); q.stop()
-      s.table(name)
+      Replay.toMemory("s3_streamdedup", deduped, "append")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"),
           countDistinct(col("event_id")).as("n_distinct"))
@@ -1266,11 +1212,8 @@ object HoardQueries {
       // not to the batch-side core count. (Pinned at query START —
       // state partitioning is immutable for the life of a stream.)
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val name = "s5_join_" + StreamCounter.incrementAndGet()
-      try {
+      val pairs = try {
         s.conf.set("spark.sql.shuffle.partitions", "8")
-        val path = s"$dir/events.parquet"
-        val schema = s.read.parquet(path).schema
         def src(et: String) = graft.Tables.loadStream(s, dir, "events")
           .transform(Tables.normalizeEventTs)
           .where(col("event_type") === et)
@@ -1286,12 +1229,9 @@ object HoardQueries {
           col("user_id") === col("p_user") &&
             col("purchase_ts") >= col("click_ts") &&
             col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"))
-        val q = joined.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        q.processAllAvailable()
-        graft.streaming.StreamStats.record("s5_streamjoin", q); q.stop()
+        Replay.toMemory("s5_streamjoin", joined, "append")
       } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table(name)
+      pairs
         .select(col("click_id"), col("purchase_id"), col("user_id"),
           (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts")))
             .as("gap_us"))
@@ -1314,30 +1254,16 @@ object HoardQueries {
       graft.Graft.configure(s)
       import s.implicits._
       val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-      val name = "s15_loj_" + StreamCounter.incrementAndGet()
-      try {
+      val pairs = try {
         s.conf.set("spark.sql.shuffle.partitions", "8")
         val ev = Tables.load(s, dir, "events")
           .select(col("event_id"), col("ts"), col("user_id"),
             col("event_type"))
-        val inDir = java.nio.file.Files
-          .createTempDirectory("graft-s15-in").toString
-        ev.coalesce(1).write.mode("overwrite").parquet(s"$inDir/b0")
         val farTs = java.sql.Timestamp.valueOf("2035-01-01 00:00:00")
-        Seq((-1L, farTs, -1L, "click"), (-2L, farTs, -2L, "purchase"))
-          .toDF("event_id", "ts", "user_id", "event_type")
-          .coalesce(1).write.mode("overwrite").parquet(s"$inDir/b1")
-        Seq("b0", "b1").zipWithIndex.foreach { case (b, i) =>
-          new java.io.File(s"$inDir/$b").listFiles()
-            .foreach(f => f.setLastModified(1000000000000L + i * 60000L))
-        }
-        val schema = s.read.parquet(s"$inDir/b0").schema
-        def src(et: String) = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", 1)
-          .option("recursiveFileLookup", "true")
-          .option("pathGlobFilter", "*.parquet")
-          .parquet(inDir)
-          .where(col("event_type") === et)
+        val in = Replay.stage("s15_louterjoin", Seq(ev,
+          Seq((-1L, farTs, -1L, "click"), (-2L, farTs, -2L, "purchase"))
+            .toDF("event_id", "ts", "user_id", "event_type")))
+        def src(et: String) = in.stream().where(col("event_type") === et)
         val clicks = src("click")
           .select(col("event_id").as("click_id"), col("user_id"),
             col("ts").as("click_ts"))
@@ -1352,12 +1278,9 @@ object HoardQueries {
             col("purchase_ts") <= col("click_ts") +
               expr("INTERVAL 30 MINUTES"),
           "left_outer")
-        val q = joined.writeStream.outputMode("append")
-          .format("memory").queryName(name).start()
-        q.processAllAvailable()
-        graft.streaming.StreamStats.record("s15_louterjoin", q); q.stop()
+        Replay.toMemory("s15_louterjoin", joined, "append")
       } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.table(name)
+      pairs
         .where(col("click_id") >= 0)
         .select(col("click_id"), col("user_id"), col("purchase_id"),
           (unix_micros(col("purchase_ts")) - unix_micros(col("click_ts")))
@@ -1385,32 +1308,12 @@ object HoardQueries {
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("ts"), col("user_id"),
           col("event_type"))
-      val inDir = java.nio.file.Files
-        .createTempDirectory("graft-s13-in").toString
-      val bounds = Seq(("b0", 1, 10), ("b1", 11, 20), ("b2", 21, 32))
-      bounds.foreach { case (b, lo, hi) =>
+      val in = Replay.stage("s13_streamfunnel", DayRanges.map { case (lo, hi) =>
         ev.where(dayofmonth(col("ts")).between(lo, hi))
-          .coalesce(1).write.mode("overwrite").parquet(s"$inDir/$b")
-      }
-      // AvailableNow orders files by modification time: pin strictly
-      // increasing mtimes so the replay is event-time ordered even
-      // when the three writes land inside one filesystem tick
-      bounds.zipWithIndex.foreach { case ((b, _, _), i) =>
-        val d = new java.io.File(s"$inDir/$b")
-        d.listFiles().foreach(f => f.setLastModified(1000000000000L + i * 60000L))
-      }
-      val schema = s.read.parquet(s"$inDir/b0").schema
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-s13-ckpt").toString
+      })
       var state = Seq.empty[(Long, java.sql.Timestamp, java.sql.Timestamp)]
         .toDF("user_id", "fc", "fp")
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(inDir)
-        .writeStream.option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      Replay.run("s13_streamfunnel", in.stream().writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val clicks = batch.where(col("event_type") === "click")
             .groupBy(col("user_id")).agg(min(col("ts")).as("bc"))
@@ -1427,10 +1330,7 @@ object HoardQueries {
               coalesce(col("fp"), col("bp")).as("fp"))
             .localCheckpoint(true)
           ()
-        }
-        .start()
-      q.processAllAvailable()
-      graft.streaming.StreamStats.record("s13_streamfunnel", q); q.stop()
+        })
       state.where(col("fc").isNotNull)
         .select(col("user_id"),
           unix_micros(col("fc")).as("first_click_us"),
@@ -1457,20 +1357,9 @@ object HoardQueries {
       import s.implicits._
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("ts"), col("event_type"), col("value"))
-      val inDir = java.nio.file.Files
-        .createTempDirectory("graft-s14-in").toString
-      val bounds = Seq(("b0", 1, 10), ("b1", 11, 20), ("b2", 21, 32))
-      bounds.foreach { case (b, lo, hi) =>
+      val in = Replay.stage("s14_streamhw", DayRanges.map { case (lo, hi) =>
         ev.where(dayofmonth(col("ts")).between(lo, hi))
-          .coalesce(1).write.mode("overwrite").parquet(s"$inDir/$b")
-      }
-      bounds.zipWithIndex.foreach { case ((b, _, _), i) =>
-        new java.io.File(s"$inDir/$b").listFiles()
-          .foreach(_.setLastModified(1000000000000L + i * 60000L))
-      }
-      val schema = s.read.parquet(s"$inDir/b0").schema
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-s14-ckpt").toString
+      })
       // (series, l, b, t, s[24], d[24])
       var state = Seq.empty[(String, Double, Double, Int,
         Seq[Double], Seq[Double])]
@@ -1482,13 +1371,7 @@ object HoardQueries {
       val (alpha, beta, gamma, delta) = (0.5, 0.25, 0.25, 3.0)
       val (a1, b1, g1) = (1.0 - alpha, 1.0 - beta, 1.0 - gamma)
       val period = 24
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(inDir)
-        .writeStream.option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      Replay.run("s14_streamhw", in.stream().writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val hourly = Dedup.lastWriteWins(batch,
             Seq(col("event_type"), Time.align(col("ts"), 3600).as("bucket")),
@@ -1549,10 +1432,7 @@ object HoardQueries {
                 col("pred"), col("dev"), col("upper"), col("lower"),
                 col("aberrant"))).localCheckpoint(true)
           ()
-        }
-        .start()
-      q.processAllAvailable()
-      graft.streaming.StreamStats.record("s14_streamhw", q); q.stop()
+        })
       def r6(c: org.apache.spark.sql.Column) = round(c * lit(1e6)) / lit(1e6)
       out.select(col("event_type"),
         timestamp_seconds(col("bkt")).cast("string").as("bucket"),
@@ -1593,7 +1473,8 @@ object HoardQueries {
     })
   )
 
-  private val StreamCounter = new java.util.concurrent.atomic.AtomicInteger(0)
+  /** s13/s14's replay: the month as three day-ranged files, oldest first. */
+  private val DayRanges = Seq((1, 10), (11, 20), (21, 32))
 
   private val oraclesBase: Map[String, String] = Map(
     "h1_lww" ->

@@ -1,7 +1,8 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.pipeline._
+import graft.streaming.Replay
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -55,10 +56,6 @@ object PipelineQueries {
   // invalidate the shared stage. Compute counters are test-gated in
   // SelectionSpec: one sweep = one pairs computation.
   // ---------------------------------------------------------------------
-  private val pairsPath =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), String]
-  private val compPath =
-    scala.collection.concurrent.TrieMap.empty[(Int, String), String]
   private[graft] val pairsComputeCount =
     new java.util.concurrent.atomic.AtomicLong(0)
   private[graft] val componentsComputeCount =
@@ -68,8 +65,8 @@ object PipelineQueries {
     * τ=0.7 threshold over xxhash64 3-shingles — p10's semantics,
     * provably complete via the ppjoin prefix filter (Jaccard.scala).
     */
-  private[graft] def nearDupPairs(s: SparkSession, dir: String): DataFrame = {
-    val p = pairsPath.getOrElseUpdate((System.identityHashCode(s), dir), {
+  private[graft] def nearDupPairs(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(Scratch.memo(("neardup-pairs", System.identityHashCode(s), dir)) {
       pairsComputeCount.incrementAndGet()
       // checkpointed like exactTopK's input: thresholdPairs' volume-
       // estimate job runs BEFORE the main plan, and without this it
@@ -78,8 +75,7 @@ object PipelineQueries {
       val ids = TextOps.shinglesOfText(docs(s, dir), "doc_id", "text", 3)
         .select(col("doc_id"), xxhash64(col("shingle")).as("vid"))
         .distinct().localCheckpoint(true)
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-neardup-pairs").toString
+      val out = Scratch.dir("graft-neardup-pairs")
       Jaccard.thresholdPairs(ids, "doc_id", tau = 0.7)
         .where(col("i") * 17 >= (col("na") + col("nb")) * 7)
         .select(col("id_a"), col("id_b"),
@@ -88,25 +84,20 @@ object PipelineQueries {
         .write.mode("overwrite").parquet(out)
       out
     })
-    s.read.parquet(p)
-  }
 
   /** (doc_id, component) labels over the verified pair graph — p18's
     * large-star/small-star result, shared with p31's keeper selection.
     */
-  private[graft] def nearDupComponents(s: SparkSession, dir: String): DataFrame = {
-    val p = compPath.getOrElseUpdate((System.identityHashCode(s), dir), {
+  private[graft] def nearDupComponents(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(Scratch.memo(("neardup-comp", System.identityHashCode(s), dir)) {
       componentsComputeCount.incrementAndGet()
       val pairs = nearDupPairs(s, dir)
         .select(col("id_a").as("a"), col("id_b").as("b"))
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-neardup-comp").toString
+      val out = Scratch.dir("graft-neardup-comp")
       Components.componentsOver(docs(s, dir), "doc_id", pairs)
         .write.mode("overwrite").parquet(out)
       out
     })
-    s.read.parquet(p)
-  }
 
   /** p54's JSD computation from a (source, token, c) count table —
     * shared by the batch query and s16's maintained-state stream so
@@ -1064,7 +1055,6 @@ object PipelineQueries {
       // answer — s4 shares p23's oracle verbatim.
       graft.Graft.configure(s)
       val path = s"$dir/documents.parquet"
-      val schema = s.read.parquet(path).schema
       def shingleIds(d: DataFrame) =
         TextOps.shinglesOfText(d, "doc_id", "text", 3)
           .select(col("doc_id"), xxhash64(col("shingle")).as("vid"))
@@ -1075,22 +1065,14 @@ object PipelineQueries {
       val exIndex = IncrementalDedup.buildIndex(shingleIds(
         s.read.parquet(path).where(pmod(col("doc_id"), lit(2)) === 0)),
         "doc_id").checkpointed
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-s4-out").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-s4-ckpt").toString
+      val out = Scratch.dir("graft-s4-out")
       val incoming = graft.Tables.loadStream(s, dir, "documents")
         .where(pmod(col("doc_id"), lit(2)) === 1)
-      val q = incoming.writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      Replay.run("s4_streamincrement", incoming.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           IncrementalDedup.crossMatches(shingleIds(batch), exIndex, "doc_id")
             .write.mode("append").parquet(out)
-        }
-        .start()
-      q.processAllAvailable()
-      graft.streaming.StreamStats.record("s4_streamincrement", q); q.stop()
+        })
       // witness selection runs over the union of all batch outputs, so
       // a doc matched in any batch reports its global best
       IncrementalDedup.bestWitness(s.read.parquet(out)).orderBy("doc_id")
@@ -1612,27 +1594,18 @@ object PipelineQueries {
       // shape, with a doc REWRITE instead of a match report.
       graft.Graft.configure(s)
       val path = s"$dir/documents.parquet"
-      val schema = s.read.parquet(path).schema
       val known = TextAnalysis.linesOf(
           s.read.parquet(path).where(pmod(col("doc_id"), lit(2)) === 0),
           "doc_id", "text", 8)
         .select(col("lid")).distinct().localCheckpoint(true)
-      val out = java.nio.file.Files
-        .createTempDirectory("graft-s9-out").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-s9-ckpt").toString
+      val out = Scratch.dir("graft-s9-out")
       val incoming = graft.Tables.loadStream(s, dir, "documents")
         .where(pmod(col("doc_id"), lit(2)) === 1)
-      val q = incoming.writeStream
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      Replay.run("s9_streamlinefilter", incoming.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           TextAnalysis.lineFilter(batch, "doc_id", "text", 8, known)
             .write.mode("append").parquet(out)
-        }
-        .start()
-      q.processAllAvailable()
-      graft.streaming.StreamStats.record("s9_streamlinefilter", q); q.stop()
+        })
       s.read.parquet(out).orderBy("doc_id")
     }),
 
@@ -1806,25 +1779,12 @@ object PipelineQueries {
       // combinable aggregate + one additive merge join.
       graft.Graft.configure(s)
       import s.implicits._
-      val inDir = java.nio.file.Files
-        .createTempDirectory("graft-s16-in").toString
-      (0 until 3).foreach { i =>
+      val in = Replay.stage("s16_streamjsd", (0 until 3).map(i =>
         docs(s, dir).where(pmod(col("doc_id"), lit(3)) === i)
-          .select(col("doc_id"), col("text"), col("source"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$inDir/b$i")
-      }
-      val schema = s.read.parquet(s"$inDir/b0").schema
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-s16-ckpt").toString
+          .select(col("doc_id"), col("text"), col("source"))))
       var state = Seq.empty[(String, String, Long)]
         .toDF("source", "token", "c")
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(inDir)
-        .writeStream.option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      Replay.run("s16_streamjsd", in.stream().writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val bc = batch
             .select(col("source"),
@@ -1837,10 +1797,7 @@ object PipelineQueries {
                 .as("c"))
             .localCheckpoint(true)
           ()
-        }
-        .start()
-      q.processAllAvailable()
-      graft.streaming.StreamStats.record("s16_streamjsd", q); q.stop()
+        })
       jsdOverCounts(state)
     }),
 

@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Scratch, Tables}
+import graft.streaming.Replay
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -242,26 +243,13 @@ object RelationalQueries {
       // aggregate + one merge join on the bin key.
       graft.Graft.configure(s)
       import s.implicits._
-      val inDir = java.nio.file.Files
-        .createTempDirectory("graft-s17-in").toString
-      (0 until 3).foreach { i =>
+      val in = Replay.stage("s17_streamhistogram", (0 until 3).map(i =>
         Tables.load(s, dir, "orders")
           .where(pmod(col("o_orderkey"), lit(3)) === i)
-          .select(col("o_orderkey"), col("o_totalprice"))
-          .coalesce(1).write.mode("overwrite").parquet(s"$inDir/b$i")
-      }
-      val schema = s.read.parquet(s"$inDir/b0").schema
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-s17-ckpt").toString
+          .select(col("o_orderkey"), col("o_totalprice"))))
       var state = Seq.empty[(Long, Long, Long, Long, Long)]
         .toDF("bin", "n_orders", "min_cents", "max_cents", "sum_cents")
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .option("recursiveFileLookup", "true")
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(inDir)
-        .writeStream.option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      Replay.run("s17_streamhistogram", in.stream().writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val bc = batch
             .select(((col("o_totalprice").cast("decimal(18,2)") * 100)
@@ -282,10 +270,7 @@ object RelationalQueries {
                 coalesce(col("bsum"), lit(0L))).as("sum_cents"))
             .localCheckpoint(true)
           ()
-        }
-        .start()
-      q.processAllAvailable()
-      graft.streaming.StreamStats.record("s17_streamhistogram", q); q.stop()
+        })
       state
         .select(col("bin"), (col("bin") * 20000).as("bin_lo_usd"),
           col("n_orders"), col("min_cents"), col("max_cents"),
@@ -326,8 +311,7 @@ object RelationalQueries {
       // partition-discovered `gen` column) against the oracle's
       // replay. Writing the two generations is part of the gate.
       val e = Tables.load(s, dir, "events")
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft-q44").toString
+      val tmp = Scratch.dir("graft-q44")
       e.where(pmod(col("event_id"), lit(2)) === 0)
         .select("event_id", "ts", "user_id", "event_type", "value")
         .write.mode("overwrite").parquet(s"$tmp/gen=1")
@@ -1026,17 +1010,14 @@ object RelationalQueries {
     * under test consumes files with real quoting/escaping, not
     * hand-built fixtures.
     */
-  private val stagedFormats = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   private def formatsDir(s: SparkSession, dir: String): String =
-    stagedFormats.computeIfAbsent(dir, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-formats")
-        .toString
+    Scratch.memo(("formats", dir)) {
+      val tmp = Scratch.dir("graft-formats")
       t(s, dir, "customer").write.option("header", "true")
         .mode("overwrite").csv(s"$tmp/customer_csv")
       t(s, dir, "nation").write.mode("overwrite").json(s"$tmp/nation_json")
       tmp
-    })
+    }
 
   /** The table written as a bucketed+sorted copy (8 buckets on `key`),
     * created once per (session, sfDir) and reused — the ingest-time cost
@@ -1047,8 +1028,7 @@ object RelationalQueries {
                                 key: String): DataFrame = {
     val tag = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val name = s"graft_bkt_${table}_$tag"
-    val path = new java.io.File(
-      s"${sys.props("java.io.tmpdir")}/graft-buckets/$name").getAbsolutePath
+    val path = Scratch.memo("graft-buckets")(Scratch.dir("graft-buckets")) + s"/$name"
     // a surviving catalog entry whose external data dir was cleaned (or
     // predates a regenerated fixture) would otherwise serve stale rows:
     // reuse only when the data path still exists AND is at least as new

@@ -1,8 +1,9 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Scratch, Tables}
 import graft.core.{Archive, ArchivePolicy}
 import graft.store.HoardStore
+import graft.streaming.{CarbonIngest, Replay, StreamIngest}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -30,20 +31,32 @@ object StoreQueries {
   private val PolicyR = ArchivePolicy(
     Seq(Archive(3600, 8760), Archive(172800, 548)), cf = "avg_exact")
 
-  /** one store build per sf dir per JVM (queries stay idempotent). */
-  private val built = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** The events table in the store's ingest shape. */
+  private def events(s: SparkSession, dir: String): DataFrame =
+    Tables.load(s, dir, "events").select(
+      col("event_type").as("series_id"),
+      col("ts").cast("long").as("ts"), // uint32-second semantics: truncate
+      col("value"),
+      col("event_id").as("seq"))      // ingest sequence breaks second-ties
 
-  private val builtResize = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def storeResized(s: SparkSession, dir: String): HoardStore = {
-    val root = builtResize.computeIfAbsent(dir, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-store-rs")
-        .toString + "/store"
-      storeFor(s, dir).resize(tmp, PolicyR, Now)
-      tmp
+  /** The store `build` writes at a fresh scratch root, built once per
+    * JVM per (`kind`, sf dir) so queries stay idempotent.
+    */
+  private def built(s: SparkSession, kind: String, dir: String)(
+      build: String => Unit): HoardStore =
+    HoardStore.open(s, Scratch.memo((kind, dir)) {
+      val root = Scratch.dir(s"graft-$kind") + "/store"
+      build(root)
+      root
     })
-    HoardStore.open(s, root)
-  }
+
+  // mid-day cut: Jan-16's DAILY interval receives hourly points from
+  // both batches, so batch 2 must re-propagate an interval batch 1
+  // already wrote (the stale-overwrite path)
+  private val Cut = 1705406400L // 2024-01-16 12:00:00 UTC
+
+  private def storeResized(s: SparkSession, dir: String): HoardStore =
+    built(s, "store-rs", dir)(storeFor(s, dir).resize(_, PolicyR, Now))
 
   /** hs13's two-store fill scenario: the destination ingested only the
     * TAIL of the month (ts >= Jan-16 00:00 — a freshly provisioned
@@ -56,35 +69,17 @@ object StoreQueries {
     * shares hs2's oracle VERBATIM. Dst-wins conflict semantics get
     * their own divergent-values unit gate in HoardStoreSpec.
     */
-  private val builtFill = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def storeFilled(s: SparkSession, dir: String): HoardStore = {
-    val root = builtFill.computeIfAbsent(dir, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-store-fill")
-        .toString + "/store"
-      val dst = HoardStore.create(s, tmp, Policy)
-      val ev = Tables.load(s, dir, "events").select(
-        col("event_type").as("series_id"),
-        col("ts").cast("long").as("ts"),
-        col("value"), col("event_id").as("seq"))
+  private def storeFilled(s: SparkSession, dir: String): HoardStore =
+    built(s, "store-fill", dir) { root =>
+      val dst = HoardStore.create(s, root, Policy)
       val cut = 1705363200L // 2024-01-16 00:00:00 UTC (day boundary)
-      dst.updateManyDf(ev.where(col("ts") >= cut), Now)
+      dst.updateManyDf(events(s, dir).where(col("ts") >= cut), Now)
       dst.fill(storeFor(s, dir))
-      tmp
-    })
-    HoardStore.open(s, root)
-  }
+    }
 
-  private def storeFor(s: SparkSession, dir: String): HoardStore = {
-    val root = built.computeIfAbsent(dir, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-store")
-        .toString + "/store"
-      val st = HoardStore.create(s, tmp, Policy)
-      val ev = Tables.load(s, dir, "events").select(
-        col("event_type").as("series_id"),
-        col("ts").cast("long").as("ts"), // uint32-second semantics: truncate
-        col("value"),
-        col("event_id").as("seq"))      // ingest sequence breaks second-ties
+  private def storeFor(s: SparkSession, dir: String): HoardStore =
+    built(s, "store", dir) { root =>
+      val ev = events(s, dir)
       // the oracle packs (second, seq) as second*1e9 + event_id — 9
       // digits is the int64-safe max (epoch ~1.7e9 * 1e9 < 2^63); the
       // engine itself orders by the (ts, seq) PAIR, so the guard is
@@ -95,41 +90,24 @@ object StoreQueries {
         .map(_.asInstanceOf[Long]).getOrElse(0L)
       require(maxId < 1000000000L,
         s"hs oracle key packs seq into 9 digits; max event_id $maxId too large")
-      st.updateManyDf(ev, Now)
-      tmp
-    })
-    HoardStore.open(s, root)
-  }
+      HoardStore.create(s, root, Policy).updateManyDf(ev, Now)
+    }
 
   /** Two-batch store: the same events split chronologically at
-    * 2024-01-16 and ingested as two updateMany calls. Slots straddling
+    * [[Cut]] and ingested as two updateMany calls. Slots straddling
     * nothing — every slot's batch-2 points are later than its batch-1
     * points, so batch-wins == chronological lww and the SAME oracle as
     * the one-batch store must hold. This is the incremental-correctness
     * property: merge + re-propagation of touched intervals converges to
     * the from-scratch computation.
     */
-  private val built2 = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def storeTwoBatch(s: SparkSession, dir: String): HoardStore = {
-    val root = built2.computeIfAbsent(dir, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-store2")
-        .toString + "/store"
-      val st = HoardStore.create(s, tmp, Policy)
-      val ev = Tables.load(s, dir, "events").select(
-        col("event_type").as("series_id"),
-        col("ts").cast("long").as("ts"),
-        col("value"), col("event_id").as("seq"))
-      // mid-day cut: Jan-16's DAILY interval receives hourly points from
-      // both batches, so batch 2 must re-propagate an interval batch 1
-      // already wrote (the stale-overwrite path)
-      val cut = 1705406400L // 2024-01-16 12:00:00 UTC
-      st.updateManyDf(ev.where(col("ts") < cut), Now)
-      st.updateManyDf(ev.where(col("ts") >= cut), Now)
-      tmp
-    })
-    HoardStore.open(s, root)
-  }
+  private def storeTwoBatch(s: SparkSession, dir: String): HoardStore =
+    built(s, "store2", dir) { root =>
+      val st = HoardStore.create(s, root, Policy)
+      val ev = events(s, dir)
+      st.updateManyDf(ev.where(col("ts") < Cut), Now)
+      st.updateManyDf(ev.where(col("ts") >= Cut), Now)
+    }
 
   /** Two-batch store with a compaction between the batches, and with
     * `expire` a snapshot reclaim after them: append-only commits +
@@ -137,97 +115,55 @@ object StoreQueries {
     * same rollup as the one-batch store — hs6 (`expire = false`) and
     * hs9 (`expire = true`) share hs2/hs3's oracle VERBATIM.
     */
-  private val builtCompacted =
-    new java.util.concurrent.ConcurrentHashMap[(String, Boolean), String]()
-
   private def storeCompacted(s: SparkSession, dir: String,
-                             expire: Boolean): HoardStore = {
-    val root = builtCompacted.computeIfAbsent((dir, expire), _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-store-compacted")
-        .toString + "/store"
-      val st = HoardStore.create(s, tmp, Policy)
-      val ev = Tables.load(s, dir, "events").select(
-        col("event_type").as("series_id"),
-        col("ts").cast("long").as("ts"),
-        col("value"), col("event_id").as("seq"))
-      val cut = 1705406400L // 2024-01-16 12:00:00 UTC (same as hs3)
-      st.updateManyDf(ev.where(col("ts") < cut), Now)
+                             expire: Boolean): HoardStore =
+    built(s, s"store-compacted-$expire", dir) { root =>
+      val st = HoardStore.create(s, root, Policy)
+      val ev = events(s, dir)
+      st.updateManyDf(ev.where(col("ts") < Cut), Now)
       st.compact(maxFilesPerMonth = 1) // fold mid-stream: must be invisible
-      st.updateManyDf(ev.where(col("ts") >= cut), Now)
+      st.updateManyDf(ev.where(col("ts") >= Cut), Now)
       if (expire) st.expireSnapshots(keepLast = 1) // must not change reads
-      tmp
-    })
-    HoardStore.open(s, root)
-  }
+    }
 
   /** Streaming-ingested store: the events staged as TWO parquet files
-    * and delivered through Structured Streaming (`maxFilesPerTrigger=1`
-    * ⇒ two micro-batches) into `StreamIngest.start`'s foreachBatch →
-    * `updateManyDf` path — the production ingress shape of SURVEY
-    * §3.4. The store after the stream drains must equal the
+    * cut at [[Cut]] (Jan-16's daily interval spans both micro-batches,
+    * exercising re-propagation through the STREAMING path) and
+    * replayed one file per micro-batch into `StreamIngest.start`'s
+    * foreachBatch → `updateManyDf` path — the production ingress shape
+    * of SURVEY §3.4. The store after the stream drains must equal the
     * from-scratch batch store, so s6 and s11 share hs2/hs3's oracle
     * VERBATIM. Each `statsName` (the query recording the stream's
     * stats) builds its own store, so the two queries' stats stay apart.
     */
-  private val builtStream =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   private def storeStreamed(s: SparkSession, dir: String,
-                            statsName: String): HoardStore = {
-    val root = builtStream.computeIfAbsent((dir, statsName), _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-store-stream")
-        .toString
-      val st = HoardStore.create(s, tmp + "/store", Policy)
-      val ev = Tables.load(s, dir, "events").select(
-        col("event_type").as("series_id"),
-        col("ts").cast("long").as("ts"),
-        col("value"), col("event_id").as("seq"))
-      // stage as two files cut mid-day (hs3's boundary: Jan-16's daily
-      // interval spans both micro-batches, exercising re-propagation
-      // through the STREAMING path)
-      val cut = 1705406400L // 2024-01-16 12:00:00 UTC
-      val stage = tmp + "/in"
-      ev.where(col("ts") < cut).coalesce(1)
-        .write.mode("append").parquet(stage)
-      ev.where(col("ts") >= cut).coalesce(1)
-        .write.mode("append").parquet(stage)
-      val stream = s.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-      val q = graft.streaming.StreamIngest.start(stream, st, () => Now,
-        tmp + "/ckpt")
-      q.processAllAvailable()
-      graft.streaming.StreamStats.record(statsName, q)
-      q.stop()
-      tmp + "/store"
-    })
-    HoardStore.open(s, root)
-  }
+                            statsName: String): HoardStore =
+    built(s, s"store-stream-$statsName", dir) { root =>
+      val st = HoardStore.create(s, root, Policy)
+      val ev = events(s, dir)
+      val in = Replay.stage(statsName,
+        Seq(ev.where(col("ts") < Cut), ev.where(col("ts") >= Cut)))
+      Replay.runQuery(statsName)(StreamIngest.start(in.stream(), st, () => Now, _))
+    }
 
   /** Carbon-ingested store: the events rendered onto the WIRE as carbon
     * plaintext lines (`metric value timestamp`), staged as two text
-    * files cut at hs3's mid-day boundary, and replayed through
-    * Structured Streaming → [[graft.streaming.CarbonIngest]]'s parse →
-    * the real write path. Every 97th event is corrupted on the wire
-    * (three deterministic malformed shapes: missing field, non-numeric
-    * value, non-integer timestamp) and must be DROPPED by the parser,
-    * never ingested, never fatal. Carbon lww is arrival-order, which a
-    * distributed replay cannot pin, so the fixture pins it by
-    * construction: survivors pre-dedup to one point per (series,
-    * second), max event_id winning — the oracle replays the identical
-    * rule. The daily rollup after the stream drains must equal the
-    * from-wire recomputation.
+    * files cut at [[Cut]], and replayed through Structured Streaming →
+    * [[graft.streaming.CarbonIngest]]'s parse → the real write path.
+    * Every 97th event is corrupted on the wire (three deterministic
+    * malformed shapes: missing field, non-numeric value, non-integer
+    * timestamp) and must be DROPPED by the parser, never ingested,
+    * never fatal. Carbon lww is arrival-order, which a distributed
+    * replay cannot pin, so the fixture pins it by construction:
+    * survivors pre-dedup to one point per (series, second), max
+    * event_id winning — the oracle replays the identical rule. The
+    * daily rollup after the stream drains must equal the from-wire
+    * recomputation.
     */
-  private val builtCarbon = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def storeCarbon(s: SparkSession, dir: String): HoardStore = {
-    val root = builtCarbon.computeIfAbsent(dir, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-carbon")
-        .toString
-      val st = HoardStore.create(s, tmp + "/store", Policy)
-      val ev = Tables.load(s, dir, "events").select(
-        col("event_type").as("series_id"),
-        col("ts").cast("long").as("ts"),
-        col("value"), col("event_id").as("seq"))
+  private def storeCarbon(s: SparkSession, dir: String): HoardStore =
+    built(s, "carbon", dir) { root =>
+      val st = HoardStore.create(s, root, Policy)
+      val ev = events(s, dir)
       // double → string → double round-trips exactly (Spark casts via
       // Double.toString, shortest-exact), so the wire adds no error
       val good = ev.where(col("seq") % 97 =!= 0)
@@ -245,22 +181,11 @@ object StoreQueries {
             col("value").cast("string"), lit("12x4"))).as("line"),
         col("ts"))
       val lines = good.unionByName(bad)
-      val cut = 1705406400L // 2024-01-16 12:00:00 UTC (same as hs3/s6)
-      val stage = tmp + "/in"
-      lines.where(col("ts") < cut).select("line").coalesce(1)
-        .write.mode("append").text(stage)
-      lines.where(col("ts") >= cut).select("line").coalesce(1)
-        .write.mode("append").text(stage)
-      val stream = s.readStream.option("maxFilesPerTrigger", 1).text(stage)
-      val q = graft.streaming.CarbonIngest.start(stream, st, () => Now,
-        tmp + "/ckpt")
-      q.processAllAvailable()
-      graft.streaming.StreamStats.record("s18_carbon", q)
-      q.stop()
-      tmp + "/store"
-    })
-    HoardStore.open(s, root)
-  }
+      // `value`: the text source's column name
+      val in = Replay.stage("s18_carbon", Seq(col("ts") < Cut, col("ts") >= Cut)
+        .map(half => lines.where(half).select(col("line").as("value"))), "text")
+      Replay.runQuery("s18_carbon")(CarbonIngest.start(in.stream(), st, () => Now, _))
+    }
 
   /** Store whose manifest version after batch 1 is remembered:
     * batch 2 and a compaction land AFTER the pin, so a time-travel
@@ -269,25 +194,17 @@ object StoreQueries {
     * reclaim) — the pinned version must stay readable, the
     * reader-lease contract.
     */
-  private val builtSnapshotted =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]()
-
   private def storeSnapshotted(s: SparkSession, dir: String): (String, Long) =
-    builtSnapshotted.computeIfAbsent(dir, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-store-snap")
-        .toString + "/store"
-      val st = HoardStore.create(s, tmp, Policy)
-      val ev = Tables.load(s, dir, "events").select(
-        col("event_type").as("series_id"),
-        col("ts").cast("long").as("ts"),
-        col("value"), col("event_id").as("seq"))
-      val cut = 1705406400L // 2024-01-16 12:00:00 UTC (same as hs3/hs6/hs9)
-      st.updateManyDf(ev.where(col("ts") < cut), Now)
+    Scratch.memo(("store-snap", dir)) {
+      val root = Scratch.dir("graft-store-snap") + "/store"
+      val st = HoardStore.create(s, root, Policy)
+      val ev = events(s, dir)
+      st.updateManyDf(ev.where(col("ts") < Cut), Now)
       val pinned = st.snapshot().pinnedVersion.get
-      st.updateManyDf(ev.where(col("ts") >= cut), Now)
+      st.updateManyDf(ev.where(col("ts") >= Cut), Now)
       st.compact(maxFilesPerMonth = 1)
-      (tmp, pinned)
-    })
+      (root, pinned)
+    }
 
   /** Store with a series DELETED after ingest (the reference's
     * `rm <series>.whisper` as a store op): the delete rewrites every
@@ -295,23 +212,12 @@ object StoreQueries {
     * shared rollup recomputation minus the deleted series — per-series
     * rollups mean other series are untouched.
     */
-  private val builtDeleted = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def storeDeleted(s: SparkSession, dir: String): HoardStore = {
-    val root = builtDeleted.computeIfAbsent(dir, _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-store-del")
-        .toString + "/store"
-      val st = HoardStore.create(s, tmp, Policy)
-      val ev = Tables.load(s, dir, "events").select(
-        col("event_type").as("series_id"),
-        col("ts").cast("long").as("ts"),
-        col("value"), col("event_id").as("seq"))
-      st.updateManyDf(ev, Now)
+  private def storeDeleted(s: SparkSession, dir: String): HoardStore =
+    built(s, "store-del", dir) { root =>
+      val st = HoardStore.create(s, root, Policy)
+      st.updateManyDf(events(s, dir), Now)
       st.deleteSeries(st.seriesGlob("click"))
-      tmp
-    })
-    HoardStore.open(s, root)
-  }
+    }
 
   /** hs7's whisper store: [[largeWhisper]] imported once per JVM through
     * the binary migration path (`HoardImport`). `WhisperNow` is the
@@ -319,7 +225,6 @@ object StoreQueries {
     * archived data.
     */
   private[graft] val WhisperNow = 1312504705L
-  private val builtWhisper = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** A whisper file shaped like the reference's `test/large.whisper`
     * (policy [[3600,8760],[86400,1095]], lastUpdate `WhisperNow`), built
@@ -339,19 +244,39 @@ object StoreQueries {
       })
   }
 
-  /** hs16's exported graphite tree, one per sf dir per JVM. */
-  private val builtTree = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val builtSink = new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private[graft] def whisperStore(s: SparkSession): HoardStore =
+    built(s, "whisper", "large") { root =>
+      val file = java.nio.file.Paths.get(root).resolveSibling("large.whisper")
+      java.nio.file.Files.write(file, largeWhisper)
+      graft.store.HoardImport.intoStore(s, file.toString, root)
+    }
 
-  private[graft] def whisperStore(s: SparkSession): HoardStore = {
-    val root = builtWhisper.computeIfAbsent("large", _ => {
-      val tmp = java.nio.file.Files.createTempDirectory("graft-whisper")
-      val file = java.nio.file.Files.write(tmp.resolve("large.whisper"), largeWhisper)
-      graft.store.HoardImport.intoStore(s, file.toString, tmp.toString + "/store")
-      tmp.toString + "/store"
-    })
-    HoardStore.open(s, root)
+  /** hs16/hs18: the daily ring of the graphite tree `export` writes at
+    * a fresh scratch path (once per JVM per sf dir), read back through
+    * the whisper source.
+    */
+  private def exportedDaily(s: SparkSession, kind: String, dir: String)(
+      export: String => Unit): DataFrame = {
+    val tree = Scratch.memo((kind, dir)) {
+      val tree = Scratch.dir(s"graft-$kind") + "/tree"
+      export(tree)
+      tree
+    }
+    s.read.format("whisper").load(tree)
+      .where(col("step") === 86400)
+      .select(col("series_id"),
+        col("ts").cast("date").cast("string").as("bucket"),
+        round(col("value"), 6).as("value"))
+      .orderBy("series_id", "bucket")
   }
+
+  /** The daily level as every store-convergence gate reads it. */
+  private def daily(st: HoardStore): DataFrame =
+    st.readLevel(Policy.sorted.last)
+      .select(col("series_id"),
+        col("interval").cast("date").cast("string").as("bucket"),
+        round(col("value"), 6).as("value"))
+      .orderBy("series_id", "bucket")
 
   val defs: Map[String, (SparkSession, String) => DataFrame] = Map(
     "s6_streamstore" -> ((s, dir) => {
@@ -360,12 +285,7 @@ object StoreQueries {
       // equal the from-scratch batch recomputation — same oracle as
       // hs2/hs3/hs6
       graft.Graft.configure(s)
-      val st = storeStreamed(s, dir, "s6_streamstore")
-      st.readLevel(Policy.sorted.last)
-        .select(col("series_id"),
-          col("interval").cast("date").cast("string").as("bucket"),
-          round(col("value"), 6).as("value"))
-        .orderBy("series_id", "bucket")
+      daily(storeStreamed(s, dir, "s6_streamstore"))
     }),
 
     "s18_carbon" -> ((s, dir) => {
@@ -374,24 +294,14 @@ object StoreQueries {
       // of the fixture): the graphite ecosystem's write protocol into
       // the real store path, verified against a from-wire recompute
       graft.Graft.configure(s)
-      val st = storeCarbon(s, dir)
-      st.readLevel(Policy.sorted.last)
-        .select(col("series_id"),
-          col("interval").cast("date").cast("string").as("bucket"),
-          round(col("value"), 6).as("value"))
-        .orderBy("series_id", "bucket")
+      daily(storeCarbon(s, dir))
     }),
 
     "hs6_deltastore" -> ((s, dir) => {
       // daily rollup level after two append-only batches with a
       // compaction between them (write-amp ∝ batch): must equal the
       // from-scratch recomputation — the same oracle as hs2/hs3
-      val st = storeCompacted(s, dir, expire = false)
-      st.readLevel(Policy.sorted.last)
-        .select(col("series_id"),
-          col("interval").cast("date").cast("string").as("bucket"),
-          round(col("value"), 6).as("value"))
-        .orderBy("series_id", "bucket")
+      daily(storeCompacted(s, dir, expire = false))
     }),
 
     "s11_streammanifest" -> ((s, dir) => {
@@ -399,12 +309,7 @@ object StoreQueries {
       // micro-batch committing through the lock-free optimistic
       // manifest path — must equal the from-scratch recomputation
       graft.Graft.configure(s)
-      val st = storeStreamed(s, dir, "s11_streammanifest")
-      st.readLevel(Policy.sorted.last)
-        .select(col("series_id"),
-          col("interval").cast("date").cast("string").as("bucket"),
-          round(col("value"), 6).as("value"))
-        .orderBy("series_id", "bucket")
+      daily(storeStreamed(s, dir, "s11_streammanifest"))
     }),
 
     "hs11_snapshot" -> ((s, dir) => {
@@ -415,24 +320,14 @@ object StoreQueries {
       // commits and file rewrites are invisible to a historical
       // version, the snapshot-isolation contract (SURVEY §8.3).
       val (root, ver) = storeSnapshotted(s, dir)
-      HoardStore.openVersion(s, root, ver)
-        .readLevel(Policy.sorted.last)
-        .select(col("series_id"),
-          col("interval").cast("date").cast("string").as("bucket"),
-          round(col("value"), 6).as("value"))
-        .orderBy("series_id", "bucket")
+      daily(HoardStore.openVersion(s, root, ver))
     }),
 
     "hs10_delete" -> ((s, dir) => {
       // daily rollup after deleteSeries('click'): the deleted series is
       // gone from every level AND from the fetch universe; the rest is
       // bit-identical to the undeleted recomputation
-      val st = storeDeleted(s, dir)
-      st.readLevel(Policy.sorted.last)
-        .select(col("series_id"),
-          col("interval").cast("date").cast("string").as("bucket"),
-          round(col("value"), 6).as("value"))
-        .orderBy("series_id", "bucket")
+      daily(storeDeleted(s, dir))
     }),
 
     "hs9_manifeststore" -> ((s, dir) => {
@@ -440,23 +335,13 @@ object StoreQueries {
       // compaction rewrite between them and a snapshot-expire after:
       // must equal the from-scratch recomputation — the same oracle as
       // every other store build
-      val st = storeCompacted(s, dir, expire = true)
-      st.readLevel(Policy.sorted.last)
-        .select(col("series_id"),
-          col("interval").cast("date").cast("string").as("bucket"),
-          round(col("value"), 6).as("value"))
-        .orderBy("series_id", "bucket")
+      daily(storeCompacted(s, dir, expire = true))
     }),
 
     "hs3_incremental" -> ((s, dir) => {
       // daily rollup level after TWO chronological batches — must equal
       // the from-scratch recomputation (same oracle as hs2)
-      val st = storeTwoBatch(s, dir)
-      st.readLevel(Policy.sorted.last)
-        .select(col("series_id"),
-          col("interval").cast("date").cast("string").as("bucket"),
-          round(col("value"), 6).as("value"))
-        .orderBy("series_id", "bucket")
+      daily(storeTwoBatch(s, dir))
     }),
 
     "hs12_resize" -> ((s, dir) => {
@@ -523,21 +408,11 @@ object StoreQueries {
       // from-scratch store — head slots arrive via fill (src
       // provenance, no repropagation), tail slots are dst's own and
       // fill may not touch them. Shares hs2's oracle verbatim.
-      val st = storeFilled(s, dir)
-      st.readLevel(Policy.sorted.last)
-        .select(col("series_id"),
-          col("interval").cast("date").cast("string").as("bucket"),
-          round(col("value"), 6).as("value"))
-        .orderBy("series_id", "bucket")
+      daily(storeFilled(s, dir))
     }),
 
     "hs2_storerollup" -> ((s, dir) => {
-      val st = storeFor(s, dir)
-      st.readLevel(Policy.sorted.last)
-        .select(col("series_id"),
-          col("interval").cast("date").cast("string").as("bucket"),
-          round(col("value"), 6).as("value"))
-        .orderBy("series_id", "bucket")
+      daily(storeFor(s, dir))
     }),
 
     "hs4_multifetch" -> ((s, dir) => {
@@ -578,20 +453,10 @@ object StoreQueries {
       // source — the daily level must still match the from-scratch
       // recomputation, so encode + decode + tree layout are all on the
       // hook for the same oracle every other store build shares
-      val st = storeFor(s, dir)
-      val tree = builtTree.computeIfAbsent(dir, _ => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-tree")
-          .toString + "/tree"
-        val n = graft.store.HoardExport.toWhisperTree(st, tmp, Now)
+      exportedDaily(s, "tree", dir) { tree =>
+        val n = graft.store.HoardExport.toWhisperTree(storeFor(s, dir), tree, Now)
         require(n > 0, "tree export wrote no files")
-        tmp
-      })
-      s.read.format("whisper").load(tree)
-        .where(col("step") === 86400)
-        .select(col("series_id"),
-          col("ts").cast("date").cast("string").as("bucket"),
-          round(col("value"), 6).as("value"))
-        .orderBy("series_id", "bucket")
+      }
     }),
 
     "hs18_sinkroundtrip" -> ((s, dir) => {
@@ -603,25 +468,16 @@ object StoreQueries {
       // source — hs16's contract with the sink driven by its options
       // instead of the HoardExport API. Same shared daily-rollup
       // oracle as every other store build.
-      val st = storeFor(s, dir)
-      val tree = builtSink.computeIfAbsent(dir, _ => {
-        val tmp = java.nio.file.Files.createTempDirectory("graft-sinktree")
-          .toString + "/tree"
+      exportedDaily(s, "sinktree", dir) { tree =>
+        val st = storeFor(s, dir)
         val p = st.policy
         graft.store.HoardExport.liveRings(st, Now).write.format("whisper")
           .option("archives",
             p.sorted.map(a => s"${a.step}:${a.points}").mkString(","))
           .option("now", Now.toString)
           .option("xff", p.xff.toString)
-          .mode("append").save(tmp)
-        tmp
-      })
-      s.read.format("whisper").load(tree)
-        .where(col("step") === 86400)
-        .select(col("series_id"),
-          col("ts").cast("date").cast("string").as("bucket"),
-          round(col("value"), 6).as("value"))
-        .orderBy("series_id", "bucket")
+          .mode("append").save(tree)
+      }
     }),
 
     "hs7_whisperimport" -> ((s, dir) => {
@@ -644,8 +500,7 @@ object StoreQueries {
 
     "hs5_info" -> ((s, dir) => {
       // catalog read (the reference's info()): policy rows, no data I/O
-      storeFor(s, dir) // ensure the store exists
-      val p = HoardStore.info(s, built.get(dir))
+      val p = HoardStore.info(s, storeFor(s, dir).root)
       import s.implicits._
       p.sorted.map(a => (a.step, a.points, a.retention, p.maxRetention,
           p.xff, p.cf))

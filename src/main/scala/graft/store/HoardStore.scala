@@ -1,5 +1,6 @@
 package graft.store
 
+import graft.Scratch
 import graft.core.{Archive, ArchivePolicy, Time}
 import graft.operators.{Dedup, GapFill, GraphiteTarget, Rollup}
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
@@ -302,7 +303,8 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     * (level, month)s fed by more than [[CompactThreshold]] commits are
     * folded, so read-time lww fan-in stays bounded on long ingests. A
     * fold writes a full copy of its month and keeps the inputs on disk
-    * until [[expireSnapshots]].
+    * until [[expireSnapshots]]. A body that stages nothing (an empty
+    * or all-too-old batch) publishes no version.
     */
   private def runOptimistic(body: Txn => Unit): Unit = synchronized {
     require(pinnedVersion.isEmpty, "snapshot views are read-only")
@@ -313,14 +315,17 @@ final class HoardStore private (val spark: SparkSession, val root: String,
       attempt += 1
       val txn = new Txn(latestManifestVersion(root))
       body(txn)
-      val hook = beforeCommitHook; beforeCommitHook = () => (); hook()
-      if (commitTxn(txn)) done = true
+      if (txn.staged.isEmpty) done = true
       else {
-        txn.staged.map(_.commitDir).distinct
-          .foreach(d => deleteRecursively(Paths.get(dataPath(root), d)))
-        if (attempt > maxAttempts) throw new IllegalStateException(
-          s"optimistic commit on $root lost $maxAttempts validation " +
-            "rounds to concurrent writers")
+        val hook = beforeCommitHook; beforeCommitHook = () => (); hook()
+        if (commitTxn(txn)) done = true
+        else {
+          txn.staged.map(_.commitDir).distinct
+            .foreach(d => Scratch.deleteRecursively(Paths.get(dataPath(root), d)))
+          if (attempt > maxAttempts) throw new IllegalStateException(
+            s"optimistic commit on $root lost $maxAttempts validation " +
+              "rounds to concurrent writers")
+        }
       }
     }
     lastCommitAttempts = attempt
@@ -462,7 +467,7 @@ final class HoardStore private (val spark: SparkSession, val root: String,
         listDir(dir).filter(_.endsWith(".parquet"))
           .map(f => ManifestEntry(step, month, s"_data/$sub/$f"))
       }
-    if (!commitRewrite(inputs, added)) deleteRecursively(dir)
+    if (!commitRewrite(inputs, added)) Scratch.deleteRecursively(dir)
   }
 
   /** Fold every (level, month) and every level catalog whose entries
@@ -934,14 +939,6 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     try st.iterator().asScala.map(_.getFileName.toString).toList
     finally st.close()
   }
-
-  private def deleteRecursively(p: JPath): Unit =
-    if (Files.exists(p)) {
-      val st = Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(Files.delete)
-      finally st.close()
-    }
 }
 
 object HoardStore {

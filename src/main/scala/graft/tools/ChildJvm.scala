@@ -9,7 +9,7 @@ package graft.tools
   */
 object ChildJvm {
 
-  private val AddOpens = Seq(
+  private[graft] val AddOpens = Seq(
     "java.base/java.lang", "java.base/java.lang.invoke",
     "java.base/java.lang.reflect", "java.base/java.io",
     "java.base/java.net", "java.base/java.nio",

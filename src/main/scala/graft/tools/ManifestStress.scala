@@ -41,8 +41,7 @@ object ManifestStress {
     val policy = ArchivePolicy(Seq(
       Archive(60, 60), Archive(3600, 24), Archive(86400, 30)))
     val now = 1700000000L
-    val root = java.nio.file.Files.createTempDirectory("graft-mstress")
-      .toString + "/store"
+    val root = graft.Scratch.dir("graft-mstress") + "/store"
     HoardStore.create(spark, root, policy)
 
     // every writer hits the SAME series and the same 20-day range:
@@ -75,8 +74,7 @@ object ManifestStress {
     // markers define the serialization the lww keys encode
     val st = HoardStore.open(spark, root)
     val ref = HoardStore.create(spark,
-      java.nio.file.Files.createTempDirectory("graft-mstress-ref")
-        .toString + "/store", policy)
+      graft.Scratch.dir("graft-mstress-ref") + "/store", policy)
     // replay order: batches sorted by the base each landed with is not
     // directly observable, but ANY sequential order of these batches
     // converges to the same lww state per-key IFF propagation saw every

@@ -82,7 +82,7 @@ object SkewStress {
     * q8's bucketized plan result-identical to the naive join.
     */
   def run(spark: SparkSession, n: Long, timeNaive: Boolean = false): Boolean = {
-    val root = java.nio.file.Files.createTempDirectory("graft-skew").toString
+    val root = graft.Scratch.dir("graft-skew")
     val dirs = Seq(("uniform", false, false), ("hot", true, false),
       ("burst", false, true)).map { case (name, h, b) =>
       val d = s"$root/$name"

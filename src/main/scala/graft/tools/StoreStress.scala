@@ -18,7 +18,7 @@ object StoreStress {
     spark.sparkContext.setLogLevel("ERROR")
     val now = 1706745600L + 86400L * 400 // room for shifted copies
     val policy = ArchivePolicy(Seq(Archive(3600, 24 * 366 * 2), Archive(86400, 1095)))
-    val root = java.nio.file.Files.createTempDirectory("stress").toString + "/store"
+    val root = graft.Scratch.dir("stress") + "/store"
     val st = HoardStore.create(spark, root, policy)
     val base = Tables.load(spark, "/root/testdata/sf0.1", "events").select(
       col("event_type").as("series_id"), col("ts").cast("long").as("ts"),

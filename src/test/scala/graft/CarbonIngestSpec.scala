@@ -65,4 +65,17 @@ class CarbonIngestSpec extends SparkTestBase {
     val (_, mem) = store.fetchValues("mem", now - 10800, now, now)
     assert(mem.flatten == Seq(9.0))
   }
+
+  test("a micro-batch of only malformed lines publishes no manifest version") {
+    val now = 1312502906L
+    val store = HoardStore.create(spark, tmpDir("carbon-bad") + "/store",
+      ArchivePolicy.referenceTest)
+    val before = HoardStore.latestManifestVersion(store.root)
+    val stage = tmpDir("carbon-bad-in")
+    linesDf("garbage-line-without-fields", "mem broken", s"cpu x $now")
+      .coalesce(1).write.mode("append").text(stage)
+    assert(CarbonIngest.start(spark.readStream.text(stage), store, () => now,
+      tmpDir("carbon-bad-ckpt")).awaitTermination(120000))
+    assert(HoardStore.latestManifestVersion(store.root) == before)
+  }
 }

@@ -38,14 +38,6 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
     d.toString
   }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      val st = java.nio.file.Files.walk(p)
-      try st.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      finally st.close()
-    }
-
   override def afterAll(): Unit = {
     try {
       if (sparkStarted) {
@@ -61,7 +53,7 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
         }
       }
     } finally {
-      tmpDirs.forEach(d => deleteRecursively(d))
+      tmpDirs.forEach(d => Scratch.deleteRecursively(d))
       super.afterAll()
     }
   }

@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
 
 class StreamingSpec extends SparkTestBase {
 
+  private val dir = "/root/testdata/sf0.001"
+
   test("streaming micro-batches feed the store upsert + cascade") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -260,7 +262,6 @@ class StreamingSpec extends SparkTestBase {
     // single-batch p23 answer (batches partition the incoming set, so
     // no match is found twice and none is lost).
     import graft.pipeline.{IncrementalDedup, TextOps}
-    val dir = "/root/testdata/sf0.001"
     val docs = Tables.load(spark, dir, "documents").select("doc_id", "text")
     def shingleIds(d: org.apache.spark.sql.DataFrame) =
       TextOps.shinglesOfText(d, "doc_id", "text", 3)
@@ -310,7 +311,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("stream-stream interval join (s5) == static self-join") {
-    val dir = "/root/testdata/sf0.001"
     val streamed = SparkEntry.queries("s5_streamjoin")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val ev = Tables.load(spark, dir, "events")
@@ -330,7 +330,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("stream-static dim join (s7) == static join+aggregate") {
-    val dir = "/root/testdata/sf0.001"
     val streamed = SparkEntry.queries("s7_streamdim")(spark, dir)
       .collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getDouble(3)))
@@ -387,7 +386,6 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("left-outer stream join (s15): null rows emit; matched == s5 inner") {
-    val dir = "/root/testdata/sf0.001"
     val rows = SparkEntry.queries("s15_louterjoin")(spark, dir).collect()
     assert(rows.nonEmpty)
     // the outer semantics must actually fire: some clicks have no
@@ -410,5 +408,98 @@ class StreamingSpec extends SparkTestBase {
       .where(org.apache.spark.sql.functions.col("event_type") === "click")
       .count()
     assert(rows.map(_.getLong(0)).distinct.length.toLong == clicks)
+  }
+
+  test("memory-sink s-queries (s3, s8) equal their static answers and drop their views") {
+    val ev = Tables.load(spark, dir, "events")
+    val s3 = SparkEntry.queries("s3_streamdedup")(spark, dir).collect().toSeq
+    val s3Static = ev.groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"), countDistinct(col("event_id")).as("n_distinct"))
+      .orderBy("event_type").collect().toSeq
+    assert(s3.nonEmpty && s3 == s3Static)
+    val s8 = SparkEntry.queries("s8_streamfinal")(spark, dir).collect().toSeq
+    // s8's oracle: hourly windows that end at or before the
+    // millisecond-floored max event time minus the 2h watermark delay
+    val wm = ev.agg(max(col("ts"))).head().getTimestamp(0).getTime - 2 * 3600 * 1000L
+    val s8Static = ev.groupBy(col("event_type"), date_trunc("hour", col("ts")).as("b"))
+      .agg(count(lit(1)).as("n"),
+        round(sum(col("value").cast("decimal(18,6)")).cast("double"), 6).as("sum_value"))
+      .where(unix_millis(col("b")) + 3600 * 1000L <= wm)
+      .select(col("event_type"), col("b").cast("string").as("bucket"), col("n"),
+        col("sum_value"))
+      .orderBy("event_type", "bucket").collect().toSeq
+    assert(s8.nonEmpty && s8 == s8Static)
+    val views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name)
+    assert(!views.exists(_.matches("s\\d+_.*_\\d+")), s"memory-sink views left: ${views.mkString(",")}")
+  }
+
+  test("a streamed micro-batch runs the same Spark jobs as the direct commit of its rows") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import spark.implicits._
+    val now = 1312502906L
+    val stage = tmpDir("jobs-in")
+    Seq(("cpu", now - 7200, 1.0), ("cpu", now - 7140, 2.0), ("mem", now - 3600, 9.0))
+      .toDF("series_id", "ts", "value").coalesce(1).write.mode("append").parquet(stage)
+    val rows = spark.read.parquet(stage)
+    def store(tag: String) = HoardStore.create(spark, tmpDir(tag) + "/store",
+      ArchivePolicy.referenceTest)
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    sc.addSparkListener(listener)
+    val runId = try {
+      sc.setJobGroup("direct", "one updateManyDf")
+      try store("jobs-direct").updateManyDf(rows, now) finally sc.clearJobGroup()
+      // a stream runs its micro-batches under its run id as job group
+      val q = StreamIngest.start(spark.readStream.schema(rows.schema).parquet(stage),
+        store("jobs-stream"), () => now, tmpDir("jobs-ckpt"))
+      assert(q.awaitTermination(120000))
+      // the listener bus delivers in order: once the marker job is
+      // seen, so is every job before it
+      sc.setJobGroup("marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!groups.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains("marker"), "the listener never saw the marker job")
+      q.runId.toString
+    } finally sc.removeSparkListener(listener)
+    val direct = groups.toArray.count(_ == "direct")
+    val streamed = groups.toArray.count(_ == runId)
+    assert(direct > 0 && streamed == direct,
+      s"the micro-batch ran $streamed jobs, the direct commit $direct")
+  }
+
+  test("query fixtures leave nothing in java.io.tmpdir once their JVM exits") {
+    // a child JVM with a fresh temp dir builds and collects store, fill,
+    // stream-store, staged-replay and carbon fixtures, then exits
+    val tmp = new java.io.File(tmpDir("leak-tmp"))
+    val log = new java.io.File(tmpDir("leak-log"), "child.log")
+    val cmd = Seq(System.getProperty("java.home") + "/bin/java", "-Xmx2g") ++
+      graft.tools.ChildJvm.AddOpens ++ Seq("-Dspark.ui.enabled=false",
+        s"-Djava.io.tmpdir=$tmp", "-cp", System.getProperty("java.class.path"),
+        "graft.QueryLeakMain", dir,
+        "hs2_storerollup", "hs13_fill", "s6_streamstore", "s13_streamfunnel", "s18_carbon")
+    val pb = new ProcessBuilder(cmd: _*).redirectErrorStream(true).redirectOutput(log)
+    // Spark's local dirs follow java.io.tmpdir too
+    pb.environment().remove("SPARK_LOCAL_DIRS")
+    val rc = pb.start().waitFor()
+    def tail = scala.io.Source.fromFile(log).getLines().toSeq.takeRight(30).mkString("\n")
+    assert(rc == 0, s"child exited $rc:\n$tail")
+    val left = Option(tmp.list()).toSeq.flatten.sorted
+    assert(left.isEmpty, s"left in the child's temp dir: ${left.mkString(", ")}")
+  }
+}
+
+/** The leak test's child JVM: collects each declared query named after
+  * the sf dir, then exits.
+  */
+object QueryLeakMain {
+  def main(args: Array[String]): Unit = {
+    val spark = Graft.session(cores = 2, appName = "graft-leak")
+    args.tail.foreach(n => SparkEntry.queries(n)(spark, args.head).collect())
+    spark.stop()
   }
 }
