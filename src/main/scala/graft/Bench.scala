@@ -166,6 +166,11 @@ object Bench {
       new java.io.File(dir).getUsableSpace / 1e9
     }
 
+    // classes the JVM's codegen compiled so far: what a query adds shows
+    // whether its generated code came from the cache
+    def compiled(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
     def run(name: String): Double = {
       if (minFreeGb > 0.0) {
         val free = scratchFreeGb()
@@ -178,6 +183,7 @@ object Bench {
         }
       }
       val t0 = System.nanoTime()
+      val compiled0 = compiled()
       try SparkEntry.queries(name)(spark, dirFor(name))
         .write.format("noop").mode("overwrite").save()
       catch { case e: Throwable =>
@@ -189,7 +195,7 @@ object Bench {
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); return -1.0
       }
       val dt = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench] done $name $dt%.3f")
+      System.err.println(f"[bench] done $name $dt%.3f ${compiled() - compiled0} classes")
       done.put(name, dt)
       // a query's localCheckpoint blocks live until its DataFrame is
       // GC'd; across 100+ queries in one JVM they pile up in the block

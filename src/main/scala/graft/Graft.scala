@@ -28,6 +28,27 @@ object Graft {
     */
   val BroadcastRowGate: Long = 2L * 1024 * 1024
 
+  /** Entries of the JVM-wide cache of classes compiled from generated
+    * code (`spark.sql.codegen.cache.maxEntries`; Spark's default is 100).
+    * Spark compiles one class per distinct generated source, and a class
+    * evicted before its plan shape runs again is compiled again: at 100
+    * a warm 8-query perfbench `batch` pass recompiles 167 to 171 classes
+    * on every pass. Measured with an unbounded cache (4 cores, sf0.01): one
+    * perfbench `batch` run's first pass compiles 225 distinct classes
+    * (warm passes compile only s8's 18 streaming classes), one
+    * `dashboard` run 261 over the whole run, and a 3-level store commit
+    * about 100 (55 on the first commit, then 2 to 8). 1,000 leaves about
+    * four times the largest of these. An entry keeps its generated source
+    * as the key (about 7 KB on average) and its compiled classes (about
+    * 5.5 KB of bytecode), so a full cache costs about 12 MB of heap plus
+    * the JVM's metadata for the loaded classes.
+    *
+    * The conf is static and the cache is built once per JVM, by the first
+    * session that compiles code: sessions the engine does not build keep
+    * Spark's 100, and [[configure]] cannot change it.
+    */
+  val CodegenCacheEntries = 1000
+
   def session(cores: Int = 32, appName: String = "graft"): SparkSession = {
     val spark = SparkSession
       .builder()
@@ -42,6 +63,7 @@ object Graft {
       .config("spark.sql.warehouse.dir",
         Scratch.memo("graft-warehouse")(Scratch.dir("graft-warehouse")))
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .getOrCreate()
     configure(spark)
   }

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.core.Time
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The xFilesFactor-gated cascading downsample — the reference's
@@ -26,40 +26,52 @@ object Rollup {
   /** One downsample hop. Input columns: (seriesCol, intervalCol: timestamp
     * aligned at finerStep, valueCol: double). Output: same shape at
     * coarserStep.
+    */
+  def downsample(finer: DataFrame, seriesCol: String, intervalCol: String,
+                 valueCol: String, finerStep: Long, coarserStep: Long,
+                 xff: Double, cf: String = "avg"): DataFrame =
+    finer
+      .withColumn("__fi", col(intervalCol)) // pre-group copy for "last"
+      .groupBy(col(seriesCol),
+        Time.align(col(intervalCol), coarserStep).as(intervalCol))
+      .agg(consolidate(cf, col(valueCol), col("__fi")).as(valueCol),
+        count(col(valueCol)).as("__known"))
+      .where(passesXff(col("__known"), finerStep, coarserStep, xff))
+      .drop("__known")
+
+  /** The value one coarse interval takes from its finer `value`s; `at`
+    * is each finer value's slot, which orders "last". `agg` places each
+    * aggregate: as is under a `groupBy`, `_.over(w)` over a window.
     *
     * `cf` picks the consolidation function (avg/min/max/sum/last) — the
     * reference hardcodes the mean and flags the gap itself
     * (`src/hoard.coffee:156`); "last" = value of the latest finer slot.
     */
-  def downsample(finer: DataFrame, seriesCol: String, intervalCol: String,
-                 valueCol: String, finerStep: Long, coarserStep: Long,
-                 xff: Double, cf: String = "avg"): DataFrame = {
+  def consolidate(cf: String, value: Column, at: Column,
+                  agg: Column => Column = identity): Column = cf match {
+    case "avg"  => agg(avg(value))
+    // decimal-exact mean: partial-aggregation order cannot perturb the
+    // result; the output is additionally quantized to 6 decimals so a
+    // further cascade hop over it stays order-independent too
+    case "avg_exact" =>
+      (agg(sum(value.cast("decimal(18,6)"))).cast("double") /
+        agg(count(value))).cast("decimal(18,6)").cast("double")
+    case "min"  => agg(min(value))
+    case "max"  => agg(max(value))
+    case "sum"  => agg(sum(value))
+    // decimal-exact sum (same determinism argument as avg_exact)
+    case "sum_exact" => agg(sum(value.cast("decimal(18,6)"))).cast("double")
+    case "last" => agg(max_by(value, at))
+    case other  => throw new IllegalArgumentException(s"unknown cf: $other")
+  }
+
+  /** The xff gate on a coarse interval holding `known` finer values:
+    * known / expectedPoints >= xff, `>=` keeping the boundary case as
+    * `knownPercent >= xff` does.
+    */
+  def passesXff(known: Column, finerStep: Long, coarserStep: Long,
+                xff: Double): Column = {
     require(coarserStep % finerStep == 0, s"$coarserStep not a multiple of $finerStep")
-    val expected = (coarserStep / finerStep).toDouble
-    val agged = cf match {
-      case "avg"  => avg(col(valueCol))
-      // decimal-exact mean: partial-aggregation order cannot perturb the
-      // result; the output is additionally quantized to 6 decimals so a
-      // further cascade hop over it stays order-independent too
-      case "avg_exact" =>
-        (sum(col(valueCol).cast("decimal(18,6)")).cast("double") /
-          count(col(valueCol))).cast("decimal(18,6)").cast("double")
-      case "min"  => min(col(valueCol))
-      case "max"  => max(col(valueCol))
-      case "sum"  => sum(col(valueCol))
-      // decimal-exact sum (same determinism argument as avg_exact)
-      case "sum_exact" =>
-        sum(col(valueCol).cast("decimal(18,6)")).cast("double")
-      case "last" => max_by(col(valueCol), col("__fi"))
-      case other  => throw new IllegalArgumentException(s"unknown cf: $other")
-    }
-    finer
-      .withColumn("__fi", col(intervalCol)) // pre-group copy for "last"
-      .groupBy(col(seriesCol),
-        Time.align(col(intervalCol), coarserStep).as(intervalCol))
-      .agg(agged.as(valueCol), count(col(valueCol)).as("__known"))
-      // xff gate: >= keeps the boundary case, matching `knownPercent >= xff`
-      .where(col("__known").cast("double") / lit(expected) >= lit(xff))
-      .drop("__known")
+    known.cast("double") / lit((coarserStep / finerStep).toDouble) >= lit(xff)
   }
 }

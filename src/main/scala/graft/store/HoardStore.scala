@@ -47,8 +47,10 @@ import scala.jdk.CollectionConverters._
   * disk: [[expireSnapshots]] is the only call that deletes data files,
   * and the store never calls it on its own. Propagation
   * recomputes only touched coarser intervals (§2.2.10) from the level
-  * above (§2.2.8), each hop one partial-aggregated groupBy, all levels
-  * in one plan: nothing is written and read back between levels.
+  * above (§2.2.8), each level's lww and each hop one window over the
+  * commit's series_id partitioning, all levels in one linear plan:
+  * nothing is written and read back between levels, and nothing runs
+  * twice.
   */
 final class HoardStore private (val spark: SparkSession, val root: String,
                                 val pinnedVersion: Option[Long] = None) {
@@ -61,7 +63,8 @@ final class HoardStore private (val spark: SparkSession, val root: String,
   // UTC-based month math in monthsCovering.
   graft.Graft.configure(spark)
 
-  def policy: ArchivePolicy = readPolicy(root)
+  /** Only [[HoardStore.create]] writes the policy, so a view reads it once. */
+  lazy val policy: ArchivePolicy = readPolicy(root)
 
   // ---- write path ----------------------------------------------------
 
@@ -141,7 +144,7 @@ final class HoardStore private (val spark: SparkSession, val root: String,
       .select(lit(Routed).as("kind"), col("l"), col("series_id"),
         timestamp_seconds(col("ts")).as("interval"), col("value"),
         struct(lit(base).as("b"), lit(1).as("k"),
-          col("ts").as("t"), tieBreak.cast("long").as("s")).as("seq"))
+          col("ts").cast("long").as("t"), tieBreak.cast("long").as("s")).as("seq"))
       .localCheckpoint(true)
     val seen = bounds.get
     if (seen("rows") == 0L) return
@@ -173,47 +176,76 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     }
     val catalog = levels.flatMap(ar =>
       scan(Known, ar.step, snap.filter(e => e.isCatalog && e.step == ar.step)))
-    // The commit's one shuffle: every step below groups by series_id
-    // (plus other keys), so none shuffles again. A checkpoint would
+    // The commit's one shuffle: every step below is a window partitioned
+    // by series_id (plus other keys), so none shuffles again. A checkpoint would
     // forget the hash partitioning, and so would a cache planned on before
     // it is built; AQE does not coalesce a cached shuffle, hence the width.
     val input = (routed +: (pinned ++ catalog))
       .reduce(_.unionByName(_, allowMissingColumns = true))
     val u = input.repartition(shuffleWidth(input), col("series_id")).persist()
-    def rows(kind: Int) = u.where(col("kind") === kind)
     try {
       u.foreachPartition((_: Iterator[Row]) => ())
-      val winners = levels.indices.foldLeft(Seq.empty[DataFrame]) { (done, i) =>
-        val ar = levels(i)
-        val direct = rows(Routed).where(col("l") === ar.step).select(col("series_id"),
-          Time.align(col("interval"), ar.step).as("interval"), col("value"), col("seq"))
-        val newRows =
-          if (i == 0) direct
-          else {
-            val finer = lww(rows(Pinned).where(col("l") === levels(i - 1).step)
-                .select("series_id", "interval", "value", "seq").unionByName(done.last))
-              .select(col("series_id"), col("interval"), col("value"), lit(false).as("mark"))
-            val marks = rows(Routed).where(col("l") < ar.step).select(col("series_id"),
-              col("interval"), lit(null).cast(DoubleType).as("value"), lit(true).as("mark"))
-            val touched = finer.unionByName(marks)
-              .withColumn("hit", max(col("mark")).over(Window.partitionBy(
-                col("series_id"), Time.align(col("interval"), ar.step))))
-              .where(col("hit") && !col("mark"))
-              .select("series_id", "interval", "value")
-            // propagation (xff gate + mean); propagated rows stamp below
-            // this batch's direct rows (the reference commits direct
-            // archive writes after earlier archives' propagation)
-            Rollup.downsample(touched, "series_id", "interval", "value",
-                levels(i - 1).step, ar.step, p.xff, p.cf)
-              .withColumn("seq", struct(lit(base).as("b"), lit(0).as("k"),
-                lit(0L).as("t"), lit(0L).as("s")))
-              .unionByName(direct)
-          }
-        done :+ lww(newRows)
+      // one linear chain over `u`, finest level first: each level's lww,
+      // then its propagation into the next level; every row a later step
+      // needs passes through, so each level's winners are computed once
+      val cascaded = levels.indices.foldLeft(u) { (rows, i) =>
+        val won = keepWinners(rows, levels(i).step)
+        if (i + 1 == levels.size) won
+        else propagate(won, levels(i).step, levels(i + 1).step, p)
       }
-      stage(levels.zip(winners).map { case (ar, w) => w.withColumn("l", lit(ar.step)) }
-        .reduce(_ unionByName _), rows(Known).select("l", "series_id"), txn)
+      stage(cascaded, txn)
     } finally u.unpersist()
+  }
+
+  /** A level's last write wins, as a window: of the rows `rows` holds at
+    * level `step` — this batch's routed and propagated rows and the
+    * pinned rows under them — one per (series_id, interval aligned to
+    * `step`) is kept, the one with the highest seq, and takes the aligned
+    * interval. A batch row's seq beats every pinned one, and a direct
+    * row's beats a propagated one. Every other row passes through.
+    */
+  private def keepWinners(rows: DataFrame, step: Long): DataFrame = {
+    val here = col("kind") =!= Known && col("l") === step
+    val slot = Time.align(col("interval"), step)
+    rows
+      .withColumn("rank", row_number().over(Window
+        .partitionBy(col("series_id"), when(here, slot)).orderBy(col("seq").desc)))
+      .where(!here || col("rank") === 1)
+      .withColumn("interval", when(here, slot).otherwise(col("interval")))
+      .drop("rank")
+  }
+
+  /** Propagation from level `fine` into level `coarse` (SURVEY §2.2.8/10):
+    * a coarse interval that holds a routed row of a level finer than
+    * `coarse` (a mark) is recomputed from the `fine` winners in it, through
+    * [[Rollup]]'s `cf` and xff gate, as one new propagated row at `coarse`.
+    * Its seq stamps below this batch's direct rows (the reference commits
+    * direct archive writes after earlier archives' propagation); its
+    * base is the batch's, read off the marks rather than a literal, since
+    * generated code that inlines a per-commit value compiles again on
+    * every commit. The pinned `fine` rows are spent here and dropped;
+    * every other row passes through.
+    */
+  private def propagate(rows: DataFrame, fine: Long, coarse: Long,
+                        p: ArchivePolicy): DataFrame = {
+    val finer = col("kind") =!= Known && col("l") === fine
+    val mark = col("kind") === Routed && col("l") < coarse
+    val slot = Time.align(col("interval"), coarse)
+    val w = Window.partitionBy(col("series_id"), when(finer || mark, slot))
+    val known = count(when(finer, col("value"))).over(w)
+    // one finer row per recomputed interval also emits the interval's row
+    val emit = finer && col("interval") === min(when(finer, col("interval"))).over(w) &&
+      max(mark).over(w) && Rollup.passesXff(known, fine, coarse, p.xff)
+    val self = struct(col("kind"), col("l"), col("interval"), col("value"), col("seq"))
+    val up = struct(lit(Propagated).as("kind"), lit(coarse).as("l"), slot.as("interval"),
+      Rollup.consolidate(p.cf, when(finer, col("value")), when(finer, col("interval")),
+        _.over(w)).as("value"),
+      struct(max(when(mark, col("seq.b"))).over(w).as("b"), lit(0).as("k"),
+        lit(0L).as("t"), lit(0L).as("s")).as("seq"))
+    rows.withColumn("row", when(emit, array(self, up)).otherwise(array(self)))
+      .select(col("series_id"), explode(col("row")).as("row"))
+      .select(col("series_id"), col("row.*"))
+      .where(!(col("kind") === Pinned && col("l") === fine))
   }
 
   /** Bulk-load pre-aggregated rows into ONE level AS-IS — no age
@@ -223,9 +255,7 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     * finer archives' retention and therefore must NOT be recomputed
     * from the fine level. Rows: `(series_id, ts` epoch-seconds`,
     * value)`; intervals are aligned to the level's step. Later normal
-    * writes stamp newer seqs and win lww as usual. The staging write
-    * reads `rows` twice (its rows, then its series for the catalog), so
-    * callers pass a materialized frame.
+    * writes stamp newer seqs and win lww as usual.
     */
   def importArchive(ar: Archive, rows: DataFrame): Unit = runOptimistic { txn =>
     require(policy.sorted.exists(_.step == ar.step),
@@ -237,37 +267,46 @@ final class HoardStore private (val spark: SparkSession, val root: String,
         col("value"),
         struct(lit(base).as("b"), lit(1).as("k"),
           col("ts").cast("long").as("t"), lit(0L).as("s")).as("seq")))
-    stage(winners.withColumn("l", lit(ar.step)),
-      catalogAt(txn.snapVer, ar).withColumn("l", lit(ar.step)), txn)
+      .withColumn("kind", lit(Routed))
+    val known = catalogAt(txn.snapVer, ar).withColumn("kind", lit(Known))
+    stage(winners.unionByName(known, allowMissingColumns = true)
+      .withColumn("l", lit(ar.step)), txn)
   }
 
   /** Stage one commit — a cascade or an archive import — in one write
     * to the commit's OWN directory (nobody else writes there, so its
-    * listing is race-free). `winners` holds every level's new rows
-    * `(l, series_id, interval, value, seq)`, one per key, `l` being the
-    * level's step; they go to `l=<step>/p_month=<yyyy-MM>`, so a level
-    * with no rows writes nothing. Existing data is neither read nor
-    * rewritten (write-amp ∝ batch); readers resolve lww across a month's
-    * files. The series of each level's winners that `known` (the
-    * snapshot catalog's `(l, series_id)`) does not list go to
-    * `l=<step>/p_month=catalog` (null data columns; catalog reads take
-    * `series_id` only): catalog entries of the same publish, outside the
-    * conflict footprint — two writers that both add a series both
-    * publish, and every catalog read applies distinct(). The catalog is
-    * what lets fetchMulti derive its series universe WITHOUT scanning the
-    * level's data; a series stays in it after vacuum expires its points,
-    * as the reference's series file exists until deleted.
+    * listing is race-free). `rows` holds every level's new rows `(l,
+    * series_id, interval, value, seq)`, one per key, `l` being the
+    * level's step, beside the snapshot catalog's [[Known]] `(l,
+    * series_id)` rows. The new rows go to `l=<step>/p_month=<yyyy-MM>`,
+    * so a level with no rows writes nothing. Existing data is neither
+    * read nor rewritten (write-amp ∝ batch); readers resolve lww across
+    * a month's files. Each `(l, series_id)` of the new rows that no
+    * known row lists also goes to `l=<step>/p_month=catalog` (null data
+    * columns; catalog reads take `series_id` only): catalog entries of
+    * the same publish, outside the conflict footprint — two writers that
+    * both add a series both publish, and every catalog read applies
+    * distinct(). The catalog is what lets fetchMulti derive its series
+    * universe WITHOUT scanning the level's data; a series stays in it
+    * after vacuum expires its points, as the reference's series file
+    * exists until deleted.
     */
-  private def stage(winners: DataFrame, known: DataFrame, t: Txn): Unit = {
+  private def stage(rows: DataFrame, t: Txn): Unit = {
     val sub = f"c${t.commitId}%012d"
     val dir = Paths.get(dataPath(root), sub)
-    val fresh = winners.select(col("l"), col("series_id"), lit(true).as("fresh"))
-      .unionByName(known.select(col("l"), col("series_id"), lit(false).as("fresh")))
-      .groupBy("l", "series_id").agg(bool_and(col("fresh")).as("fresh"))
-      .where(col("fresh"))
-      .select(col("l"), col("series_id"), lit(CatalogMonth).as("p_month"))
-    winners.withColumn("p_month", date_format(col("interval"), "yyyy-MM"))
-      .unionByName(fresh, allowMissingColumns = true)
+    val fresh = col("kind") =!= Known
+    val w = Window.partitionBy(col("series_id"), col("l"))
+    // one new row per unlisted (l, series_id) also emits its catalog row
+    val listing = fresh && col("interval") === min(when(fresh, col("interval"))).over(w) &&
+      !max(col("kind") === Known).over(w)
+    val data = struct(date_format(col("interval"), "yyyy-MM").as("p_month"),
+      col("interval"), col("value"), col("seq"))
+    val entry = struct(lit(CatalogMonth).as("p_month"), lit(null).cast(TimestampType)
+      .as("interval"), lit(null).cast(DoubleType).as("value"), lit(null).cast(seqType).as("seq"))
+    rows.withColumn("row", when(listing, array(data, entry)).otherwise(array(data)))
+      .where(fresh)
+      .select(col("l"), col("series_id"), explode(col("row")).as("row"))
+      .select(col("l"), col("series_id"), col("row.*"))
       .write.mode(SaveMode.Overwrite).partitionBy("l", "p_month").parquet(dir.toString)
     for (l <- listDir(dir) if l.startsWith("l=");
          m <- listDir(dir.resolve(l)) if m.startsWith("p_month=");
@@ -558,10 +597,12 @@ final class HoardStore private (val spark: SparkSession, val root: String,
 
   private def levelSchema = StructType(Seq(
     StructField("series_id", StringType), StructField("interval", TimestampType),
-    StructField("value", DoubleType),
-    StructField("seq", StructType(Seq(
-      StructField("b", LongType), StructField("k", IntegerType),
-      StructField("t", LongType), StructField("s", LongType))))))
+    StructField("value", DoubleType), StructField("seq", seqType)))
+
+  /** The lww stamp: commit base, kind (1 direct, 0 propagated), ts, seq. */
+  private def seqType = StructType(Seq(
+    StructField("b", LongType), StructField("k", IntegerType),
+    StructField("t", LongType), StructField("s", LongType)))
 
   /** Manifest-planned read: the file list comes from this view's
     * manifest version — NO directory listing, which at object-store
@@ -1161,9 +1202,11 @@ object HoardStore {
       .min(BigInt(conf.numShufflePartitions)).toInt
   }
 
-  // a cascade's input rows: this batch's routed points, a finer level's
-  // pinned rows that propagation reads, a level's snapshot catalog
+  // a commit's rows: this batch's routed points (an import's rows), a
+  // finer level's pinned rows that propagation reads, a level's snapshot
+  // catalog, and the rows propagation derives
   private val Routed = 0
   private val Pinned = 1
   private val Known = 2
+  private val Propagated = 3
 }

@@ -541,6 +541,75 @@ class HoardStoreSpec extends SparkTestBase {
     assert(jobs <= 6, s"one updateMany ran $jobs Spark jobs")
   }
 
+  /** A 3-level store after one commit, so the next commit also reads
+    * pinned finer rows and a catalog, and a 33-point batch for it.
+    */
+  private def threeLevelStore(name: String): (HoardStore, Int => Seq[RawPoint]) = {
+    val s = HoardStore.create(spark, tmpDir(name) + "/store", ArchivePolicy(
+      Seq(Archive(60, 1440), Archive(600, 4320), Archive(3600, 8760))))
+    val t0 = now - 3600
+    def batch(v: Int) =
+      (0 until 33).map(i => RawPoint(s"h${i % 8}.cpu", t0 + i / 8 * 60, (i + v).toDouble))
+    s.updateMany(batch(0), now)
+    (s, batch)
+  }
+
+  test("a second same-shape commit reuses the generated classes of the first") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val (s, batch) = threeLevelStore("hoard-codegen")
+    s.updateMany(batch(1), now)
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    s.updateMany(batch(2), now)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    info(s"the second commit compiled $compiled classes")
+    assert(compiled <= 5, s"the second same-shape commit compiled $compiled classes")
+  }
+
+  test("a commit's staging write plans each cascade level once") {
+    import org.apache.spark.sql.catalyst.expressions.aggregate.MaxBy
+    import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan,
+      WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // every executed node, into the command, the AQE plan and its stages
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case c: CommandResultExec => nodes(c.commandPhysicalPlan)
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.children.flatMap(nodes)
+    })
+    val (s, batch) = threeLevelStore("hoard-plan")
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[Seq[SparkPlan]]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = {
+        val all = nodes(qe.executedPlan)
+        if (all.exists(_.isInstanceOf[DataWritingCommandExec])) writes.add(all)
+      }
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      s.updateMany(batch(1), now)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (writes.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally spark.listenerManager.unregister(listener)
+    assert(writes.size == 1, s"expected one staging write, saw ${writes.size}")
+    val write = writes.peek()
+    val maxBy = write.count {
+      case a: BaseAggregateExec =>
+        a.aggregateExpressions.exists(_.aggregateFunction.isInstanceOf[MaxBy])
+      case _ => false
+    }
+    val stages = write.count(_.isInstanceOf[WholeStageCodegenExec])
+    info(s"$maxBy max_by aggregates, $stages codegen stages in ${write.size} nodes: " +
+      write.map(_.nodeName).groupBy(identity).map { case (k, v) => s"$k=${v.size}" }
+        .toSeq.sorted.mkString(", "))
+    assert(maxBy <= 10, s"the staging write has $maxBy max_by aggregates")
+    assert(stages <= 25, s"the staging write has $stages whole-stage codegen stages")
+  }
+
   test("propagation into a coarse interval that straddles a month edge reads both months") {
     import org.apache.spark.sql.functions.col
     // a weekly level: the epoch-aligned week [2011-07-28, 2011-08-04)
