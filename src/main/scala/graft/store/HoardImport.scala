@@ -33,11 +33,13 @@ object HoardImport {
 
   /** One-shot migration: create a store at `root` with the policy of
     * the first file (by sorted path, anywhere in the tree) under `path`
-    * and bulk-load every archive ring into its level. All files must
-    * share the policy (steps are validated against it; distinct-step
-    * check is O(#archives)). A missing `path` is refused by the
-    * source's listing (`PATH_NOT_FOUND`, naming it); an existing
-    * directory without ring files by the `require` below.
+    * and bulk-load every archive ring into its level in one
+    * [[HoardStore.importArchive]], which publishes one version. All
+    * files must share the policy: a ring at a step the policy lacks is
+    * refused by the import, naming both step sets, and nothing is
+    * published. A missing `path` is refused by the source's listing
+    * (`PATH_NOT_FOUND`, naming it); an existing directory without ring
+    * files by the `require` below.
     */
   def intoStore(spark: SparkSession, path: String, root: String,
                 cf: String = "avg"): HoardStore = {
@@ -46,23 +48,8 @@ object HoardImport {
     require(files.nonEmpty, s"no .whisper/.hoard files under $path")
     val policy = headerOf(new HPath(files.min).toUri.getPath).policy(cf)
     val st = HoardStore.create(spark, root, policy)
-
-    // one parse of every file, shared by all level loads
-    val rows = spark.read.format("whisper").load(path)
-      .withColumn("ts", col("ts").cast("long"))
-      .localCheckpoint(eager = true)
-    val fileSteps = rows.select("step").distinct().collect()
-      .map(_.getLong(0)).toSet // bounded by archive count
-    val policySteps = policy.sorted.map(_.step).toSet
-    require(fileSteps.subsetOf(policySteps),
-      s"file archives $fileSteps do not all match policy steps $policySteps" +
-        " — mixed-policy trees must be imported per policy group")
-
-    policy.sorted.foreach { ar =>
-      st.importArchive(ar,
-        rows.where(col("step") === ar.step).select("series_id", "ts", "value"))
-    }
-    rows.unpersist()
+    st.importArchive(spark.read.format("whisper").load(path)
+      .select(col("step"), col("series_id"), col("ts").cast("long").as("ts"), col("value")))
     st
   }
 }

@@ -34,18 +34,21 @@ import scala.jdk.CollectionConverters._
   * a (level, month)'s files. `now` is always an explicit parameter —
   * never wall clock (SURVEY §5.3).
   *
-  * One commit path: a batch stages its winner files for every level
-  * and its catalog files in one write against a pinned manifest
-  * version, then publishes one new version by an atomic claim. Writers
-  * take no lock — a publish that finds a concurrent commit in a (level,
-  * month) it read or wrote discards its staged files and re-runs the
-  * cascade (optimistic concurrency). Nothing is visible before the publish and nothing of
-  * the batch is written after it, so a crash at any point
-  * leaves readers the last published version; unpublished files are
-  * reclaimed by [[expireSnapshots]]. Write-amp is ∝ batch size;
-  * compaction, vacuum and deletes are manifest rewrites that free no
-  * disk: [[expireSnapshots]] is the only call that deletes data files,
-  * and the store never calls it on its own. Propagation
+  * One commit path: every mutation — a batch, an import, a fold,
+  * vacuum or delete — is one transaction that stages its files for
+  * every level and catalog in one write against a pinned manifest
+  * version, then publishes one new version, with the entries it
+  * replaces removed, by an atomic claim. Writers take no lock — a
+  * publish that finds an entry it removes already gone, or a
+  * concurrent commit in a (level, month) a batch read or wrote,
+  * discards its staged files and re-runs the transaction (optimistic
+  * concurrency). Nothing is visible before the publish and nothing of
+  * the call is written after it, so a crash at any point leaves
+  * readers the last published version; unpublished files are reclaimed
+  * by [[expireSnapshots]]. Write-amp is ∝ batch size; compaction,
+  * vacuum and deletes are manifest rewrites that free no disk:
+  * [[expireSnapshots]] is the only call that deletes data files, and
+  * the store never calls it on its own. Propagation
   * recomputes only touched coarser intervals (§2.2.10) from the level
   * above (§2.2.8), each level's lww and each hop one window over the
   * commit's series_id partitioning, all levels in one linear plan:
@@ -156,11 +159,6 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     // footprint — under this batch's own winners there. Only pinned rows
     // inside the bounds' span reach the shuffle.
     val snap = manifestEntries(root, txn.snapVer)
-    def scan(kind: Int, step: Long, es: Seq[ManifestEntry]) =
-      if (es.isEmpty) None
-      else Some(spark.read.schema(if (kind == Known) catalogSchema else levelSchema)
-        .parquet(es.map(e => s"$root/${e.rel}"): _*)
-        .select(lit(kind).as("kind"), lit(step).as("l"), col("*")))
     val pinned = levels.sliding(2).toSeq.flatMap {
       case Seq(fine, coarse) if seen(s"lo${coarse.step}") != null =>
         def edge(k: String) =
@@ -174,8 +172,7 @@ final class HoardStore private (val spark: SparkSession, val root: String,
             col("interval") < timestamp_seconds(lit(to))))
       case _ => None
     }
-    val catalog = levels.flatMap(ar =>
-      scan(Known, ar.step, snap.filter(e => e.isCatalog && e.step == ar.step)))
+    val catalog = known(snap)
     // The commit's one shuffle: every step below is a window partitioned
     // by series_id (plus other keys), so none shuffles again. A checkpoint would
     // forget the hash partitioning, and so would a cache planned on before
@@ -196,6 +193,19 @@ final class HoardStore private (val spark: SparkSession, val root: String,
       stage(cascaded, txn)
     } finally u.unpersist()
   }
+
+  /** The files `es` names as `kind` rows of level `step`; a [[Known]]
+    * scan reads `series_id` only.
+    */
+  private def scan(kind: Int, step: Long, es: Seq[ManifestEntry]): Option[DataFrame] =
+    if (es.isEmpty) None
+    else Some(read(es, if (kind == Known) catalogSchema else levelSchema)
+      .select(lit(kind).as("kind"), lit(step).as("l"), col("*")))
+
+  /** Every level's catalog in the manifest entries `snap`, as [[Known]] rows. */
+  private def known(snap: Seq[ManifestEntry]): Seq[DataFrame] =
+    policy.sorted.flatMap(ar =>
+      scan(Known, ar.step, snap.filter(e => e.isCatalog && e.step == ar.step)))
 
   /** A level's last write wins, as a window: of the rows `rows` holds at
     * level `step` — this batch's routed and propagated rows and the
@@ -248,40 +258,47 @@ final class HoardStore private (val spark: SparkSession, val root: String,
       .where(!(col("kind") === Pinned && col("l") === fine))
   }
 
-  /** Bulk-load pre-aggregated rows into ONE level AS-IS — no age
+  /** Bulk-load pre-aggregated rows into their levels AS-IS — no age
     * routing, no propagation cascade: the migration path for
     * whisper/hoard archive rings ([[HoardImport]]), whose coarser
     * archives hold independently-propagated history older than the
     * finer archives' retention and therefore must NOT be recomputed
-    * from the fine level. Rows: `(series_id, ts` epoch-seconds`,
-    * value)`; intervals are aligned to the level's step. Later normal
-    * writes stamp newer seqs and win lww as usual.
+    * from the fine level. Rows: `(step, series_id, ts` epoch-seconds`,
+    * value)`, `step` naming the row's level; intervals are aligned to
+    * it. Every level publishes in one version. Rows at a step the
+    * policy lacks are refused, naming the steps found and the policy's,
+    * and nothing is published. Later normal writes stamp newer seqs and
+    * win lww as usual.
     */
-  def importArchive(ar: Archive, rows: DataFrame): Unit = runOptimistic { txn =>
-    require(policy.sorted.exists(_.step == ar.step),
-      s"no level with step ${ar.step} in this store's policy")
+  def importArchive(rows: DataFrame): Unit = runOptimistic { txn =>
     val base = HoardStore.claimCommitBase(root)
     txn.commitId = base
-    val winners = lww(rows.select(col("series_id"),
-        Time.align(timestamp_seconds(col("ts")), ar.step).as("interval"),
+    val ts = col("ts").cast("long")
+    val winners = lww(rows.select(col("step").as("l"), col("series_id"),
+        timestamp_seconds(ts - pmod(ts, col("step"))).as("interval"),
         col("value"),
-        struct(lit(base).as("b"), lit(1).as("k"),
-          col("ts").cast("long").as("t"), lit(0L).as("s")).as("seq")))
+        struct(lit(base).as("b"), lit(1).as("k"), ts.as("t"), lit(0L).as("s")).as("seq")),
+        col("l"))
       .withColumn("kind", lit(Routed))
-    val known = catalogAt(txn.snapVer, ar).withColumn("kind", lit(Known))
-    stage(winners.unionByName(known, allowMissingColumns = true)
-      .withColumn("l", lit(ar.step)), txn)
+    stage((winners +: known(manifestEntries(root, txn.snapVer)))
+      .reduce(_.unionByName(_, allowMissingColumns = true)), txn)
+    val steps = txn.staged.map(_.step).toSet
+    val policySteps = policy.sorted.map(_.step).toSet
+    def show(s: Set[Long]) = s.toSeq.sorted.mkString("[", ", ", "]")
+    require(steps.subsetOf(policySteps), s"archive steps ${show(steps)} do not all " +
+      s"match policy steps ${show(policySteps)} — mixed-policy trees must be " +
+      "imported per policy group")
   }
 
-  /** Stage one commit — a cascade or an archive import — in one write
-    * to the commit's OWN directory (nobody else writes there, so its
-    * listing is race-free). `rows` holds every level's new rows `(l,
-    * series_id, interval, value, seq)`, one per key, `l` being the
-    * level's step, beside the snapshot catalog's [[Known]] `(l,
-    * series_id)` rows. The new rows go to `l=<step>/p_month=<yyyy-MM>`,
-    * so a level with no rows writes nothing. Existing data is neither
-    * read nor rewritten (write-amp ∝ batch); readers resolve lww across
-    * a month's files. Each `(l, series_id)` of the new rows that no
+  /** Stage one commit — a cascade or an archive import — through
+    * [[write]]. `rows` holds every level's new rows `(l, series_id,
+    * interval, value, seq)`, one per key, `l` being the level's step,
+    * beside the snapshot catalog's [[Known]] `(l, series_id)` rows. The
+    * new rows go to `l=<step>/p_month=<yyyy-MM>`, so a level with no
+    * rows writes nothing, and their (level, month)s join the conflict
+    * footprint. Existing data is neither read nor rewritten (write-amp ∝
+    * batch); readers resolve lww across a month's files. Each `(l,
+    * series_id)` of the new rows that no
     * known row lists also goes to `l=<step>/p_month=catalog` (null data
     * columns; catalog reads take `series_id` only): catalog entries of
     * the same publish, outside the conflict footprint — two writers that
@@ -292,8 +309,6 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     * exists until deleted.
     */
   private def stage(rows: DataFrame, t: Txn): Unit = {
-    val sub = f"c${t.commitId}%012d"
-    val dir = Paths.get(dataPath(root), sub)
     val fresh = col("kind") =!= Known
     val w = Window.partitionBy(col("series_id"), col("l"))
     // one new row per unlisted (l, series_id) also emits its catalog row
@@ -303,49 +318,61 @@ final class HoardStore private (val spark: SparkSession, val root: String,
       col("interval"), col("value"), col("seq"))
     val entry = struct(lit(CatalogMonth).as("p_month"), lit(null).cast(TimestampType)
       .as("interval"), lit(null).cast(DoubleType).as("value"), lit(null).cast(seqType).as("seq"))
-    rows.withColumn("row", when(listing, array(data, entry)).otherwise(array(data)))
+    write(rows.withColumn("row", when(listing, array(data, entry)).otherwise(array(data)))
       .where(fresh)
       .select(col("l"), col("series_id"), explode(col("row")).as("row"))
-      .select(col("l"), col("series_id"), col("row.*"))
-      .write.mode(SaveMode.Overwrite).partitionBy("l", "p_month").parquet(dir.toString)
+      .select(col("l"), col("series_id"), col("row.*")), t, "")
+    t.touched ++= t.staged.filterNot(_.isCatalog).map(e => (e.step, e.month))
+  }
+
+  /** The store's one staging writer: `rows` `(l, p_month, series_id,
+    * interval, value, seq)` go to `l=<step>/p_month=<month>/` under the
+    * transaction's OWN commit directory `c<id><suffix>` (nobody else
+    * writes there, so its listing is race-free), and every file written
+    * joins `t.staged`.
+    */
+  private def write(rows: DataFrame, t: Txn, suffix: String): Unit = {
+    val sub = f"c${t.commitId}%012d$suffix"
+    val dir = Paths.get(dataPath(root), sub)
+    t.dir = Some(sub)
+    rows.write.mode(SaveMode.Overwrite).partitionBy("l", "p_month").parquet(dir.toString)
     for (l <- listDir(dir) if l.startsWith("l=");
          m <- listDir(dir.resolve(l)) if m.startsWith("p_month=");
-         f <- listDir(dir.resolve(l).resolve(m)) if f.endsWith(".parquet")) {
-      val e = ManifestEntry(l.stripPrefix("l=").toLong, m.stripPrefix("p_month="),
+         f <- listDir(dir.resolve(l).resolve(m)) if f.endsWith(".parquet"))
+      t.staged += ManifestEntry(l.stripPrefix("l=").toLong, m.stripPrefix("p_month="),
         s"_data/$sub/$l/$m/$f")
-      t.staged += e
-      if (!e.isCatalog) t.touched += ((e.step, e.month))
-    }
   }
 
   // ---- optimistic manifest transactions ------------------------------
 
   /** Test seam: fires once immediately before the first commit-validate
-    * of the next optimistic transaction (lets a test inject a competing
-    * commit deterministically between stage and publish).
+    * of the next optimistic transaction — an append, import, fold,
+    * vacuum or delete (lets a test inject a competing commit, or a
+    * crash, deterministically between stage and publish).
     */
   @volatile private[graft] var beforeCommitHook: () => Unit = () => ()
 
-  /** Attempts the last optimistic transaction took (1 = no conflict). */
+  /** Attempts the last append or import transaction took (1 = no
+    * conflict); the inline fold after it does not count.
+    */
   @volatile var lastCommitAttempts: Int = 0
 
-  /** Lock-free optimistic commit: stage data files against a pinned
-    * snapshot, validate the conflict footprint at publish time, and on
-    * conflict DISCARD the staged files and re-run the whole body from a
-    * fresh snapshot — the re-run is what recomputes propagation against
-    * data a concurrent writer landed after our snapshot (the lost-update
-    * hazard a blind append would have). Plain appends whose (level,
-    * month) footprint is untouched by concurrent commits publish
-    * first-try; the version claim itself is atomic (hard-link publish),
-    * so losing the race to the version number alone just re-validates
-    * and re-claims without re-running the body. After the publish,
-    * (level, month)s fed by more than [[CompactThreshold]] commits are
-    * folded, so read-time lww fan-in stays bounded on long ingests. A
-    * fold writes a full copy of its month and keeps the inputs on disk
-    * until [[expireSnapshots]]. A body that stages nothing (an empty
-    * or all-too-old batch) publishes no version.
+  /** Lock-free optimistic transaction — the only way the store writes.
+    * The body stages data files against a pinned snapshot and names the
+    * manifest entries it removes; [[publish]] validates both at publish
+    * time, and on conflict the staged files are DISCARDED and the whole
+    * body re-runs from a fresh snapshot — for an append the re-run is
+    * what recomputes propagation against data a concurrent writer landed
+    * after our snapshot (the lost-update hazard a blind append would
+    * have); a rewrite re-picks its inputs. Transactions whose footprint
+    * no concurrent commit touched publish first-try; the version claim
+    * itself is atomic (hard-link publish), so losing the race to the
+    * version number alone just re-validates and re-claims without
+    * re-running the body. A body that stages and removes nothing (an
+    * empty or all-too-old batch, a healthy repair) publishes no version
+    * and leaves no commit directory. Returns the attempts taken.
     */
-  private def runOptimistic(body: Txn => Unit): Unit = synchronized {
+  private def transact(body: Txn => Unit): Int = synchronized {
     require(pinnedVersion.isEmpty, "snapshot views are read-only")
     val maxAttempts = 10
     var attempt = 0
@@ -353,21 +380,29 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     while (!done) {
       attempt += 1
       val txn = new Txn(latestManifestVersion(root))
-      body(txn)
-      if (txn.staged.isEmpty) done = true
-      else {
+      def discard(): Unit =
+        txn.dir.foreach(d => Scratch.deleteRecursively(Paths.get(dataPath(root), d)))
+      try body(txn) catch { case e: Throwable => discard(); throw e }
+      done = (txn.staged.isEmpty && txn.removed.isEmpty) || {
         val hook = beforeCommitHook; beforeCommitHook = () => (); hook()
-        if (commitTxn(txn)) done = true
-        else {
-          txn.staged.map(_.commitDir).distinct
-            .foreach(d => Scratch.deleteRecursively(Paths.get(dataPath(root), d)))
-          if (attempt > maxAttempts) throw new IllegalStateException(
-            s"optimistic commit on $root lost $maxAttempts validation " +
-              "rounds to concurrent writers")
-        }
+        publish(txn)
       }
+      if (!done || txn.staged.isEmpty) discard()
+      if (!done && attempt > maxAttempts) throw new IllegalStateException(
+        s"optimistic commit on $root lost $maxAttempts validation " +
+          "rounds to concurrent writers")
     }
-    lastCommitAttempts = attempt
+    attempt
+  }
+
+  /** An append or import transaction, then the inline fold: (level,
+    * month)s fed by more than [[CompactThreshold]] commits are folded
+    * in a transaction of their own, so read-time lww fan-in stays
+    * bounded on long ingests. A fold writes a full copy of its month
+    * and keeps the inputs on disk until [[expireSnapshots]].
+    */
+  private def runOptimistic(body: Txn => Unit): Unit = synchronized {
+    lastCommitAttempts = transact(body)
     // files from one commit never share a key, so only the number of
     // commits feeding a (level, month) adds read-time lww work
     foldMonths(_.map(_.commitDir).distinct.size > CompactThreshold)
@@ -375,42 +410,25 @@ final class HoardStore private (val spark: SparkSession, val root: String,
 
   private val CompactThreshold = 16
 
-  /** Publish an append transaction. Returns false on a SEMANTIC
-    * conflict (a commit since our snapshot added files to a (level,
-    * month) this txn read or wrote — its propagation inputs may be
-    * stale); internally re-claims on a plain version race.
+  /** Publish a transaction: `current − removed + staged` as the next
+    * version. Returns false on a conflict — an entry the transaction
+    * removes is no longer live (another rewrite took it), or a commit
+    * since the snapshot added files to a (level, month) an append read
+    * or wrote (its propagation inputs may be stale); internally
+    * re-claims on a plain version race. Entries other commits removed
+    * since the snapshot are rewrites whose contents are lww-identical
+    * (fold) or filtered (vacuum, delete): serializable as
+    * this-transaction-first.
     */
-  private def commitTxn(txn: Txn): Boolean = {
-    var v = latestManifestVersion(root)
-    while (true) {
-      if (v != txn.snapVer) {
-        val base = manifestEntries(root, txn.snapVer).toSet
-        val added = manifestEntries(root, v).filterNot(base)
-        if (added.exists(e => txn.touched((e.step, e.month)))) return false
-        // entries REMOVED since the snapshot are compaction/vacuum
-        // rewrites: contents are lww-identical (compaction) or a
-        // retention filter (vacuum) — serializable as this-txn-first
-      }
-      if (tryPublish(v + 1, manifestEntries(root, v) ++ txn.staged.toSeq))
-        return true
-      v = latestManifestVersion(root)
-    }
-    false // unreachable
-  }
-
-  /** Publish a rewrite (compaction/vacuum): `removed` must all still be
-    * live — if another rewrite already took any of them, abandon (the
-    * caller deletes its scratch output). Appends landed since the
-    * snapshot are unaffected: they stay in the manifest and the
-    * read-time lww folds them with the rewrite's output.
-    */
-  private def commitRewrite(removed: Set[ManifestEntry],
-                            added: Seq[ManifestEntry]): Boolean = {
+  private def publish(txn: Txn): Boolean = {
+    lazy val base = manifestEntries(root, txn.snapVer).toSet
     var v = latestManifestVersion(root)
     while (true) {
       val cur = manifestEntries(root, v)
-      if (!removed.subsetOf(cur.toSet)) return false
-      if (tryPublish(v + 1, cur.filterNot(removed) ++ added)) return true
+      if (!txn.removed.subsetOf(cur.toSet) || v != txn.snapVer &&
+          cur.exists(e => !base(e) && txn.touched((e.step, e.month))))
+        return false
+      if (tryPublish(v + 1, cur.filterNot(txn.removed) ++ txn.staged)) return true
       v = latestManifestVersion(root)
     }
     false // unreachable
@@ -480,52 +498,58 @@ final class HoardStore private (val spark: SparkSession, val root: String,
   private[graft] def latestEntries: Seq[ManifestEntry] =
     manifestEntries(root, latestManifestVersion(root))
 
-  /** Merged view of one (level, month)'s or one catalog's entries: the
-    * lww winner per key for level data, the distinct series for catalog
-    * entries.
+  /** Entries of `ver` by (level, month); a level's catalog entries form
+    * the group of month [[CatalogMonth]].
     */
-  private def readEntries(es: Seq[ManifestEntry]): DataFrame =
-    if (es.exists(_.isCatalog)) readCatalogEntries(es)
-    else lww(spark.read.schema(levelSchema).parquet(es.map(e => s"$root/${e.rel}"): _*))
+  private def groupsAt(ver: Long): Map[(Long, String), Seq[ManifestEntry]] =
+    manifestEntries(root, ver).groupBy(e => (e.step, e.month))
 
-  /** One manifest rewrite: remove `inputs` and add `rows` as one fresh
-    * file of (level `step`, `month`) — no file when `rows` is empty. A
-    * lost race (another rewrite already took an input) abandons the
-    * scratch output. Superseded files stay on disk for pinned snapshots
-    * until [[expireSnapshots]].
+  /** Every row of `groups`' files, tagged with its group as `(l,
+    * p_month)`: one scan per group, a catalog file's data columns null.
     */
-  private def rewrite(step: Long, month: String, tag: String,
-                      inputs: Set[ManifestEntry], rows: DataFrame): Unit = {
-    val kept = rows.localCheckpoint(true)
-    val sub = f"c${HoardStore.claimCommitBase(root)}%012d_${tag}_l${step}_$month"
-    val dir = Paths.get(dataPath(root), sub)
-    val added =
-      if (kept.head(1).isEmpty) Seq.empty
-      else {
-        kept.coalesce(1).write.mode(SaveMode.Overwrite).parquet(dir.toString)
-        listDir(dir).filter(_.endsWith(".parquet"))
-          .map(f => ManifestEntry(step, month, s"_data/$sub/$f"))
-      }
-    if (!commitRewrite(inputs, added)) Scratch.deleteRecursively(dir)
-  }
+  private def groupRows(groups: Map[(Long, String), Seq[ManifestEntry]]): DataFrame =
+    groups.map { case ((step, month), es) =>
+      read(es, levelSchema).select(lit(step).as("l"), lit(month).as("p_month"), col("*"))
+    }.reduce(_ unionByName _)
 
-  /** Fold every (level, month) and every level catalog whose entries
-    * `needsFold` into one file — contents unchanged by construction (the
-    * same merge the readers apply).
+  /** The groups holding a row `cond` matches: one scan of them all. */
+  private def groupsMatching(groups: Map[(Long, String), Seq[ManifestEntry]],
+                             cond: Column): Set[(Long, String)] =
+    if (groups.isEmpty) Set.empty
+    else groupRows(groups).where(cond).select("l", "p_month").distinct().collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSet
+
+  /** A rewrite in transaction `t`: remove `groups`' entries and stage
+    * their rows that `keep` passes, merged as readers merge them — one
+    * winner per key, a catalog's distinct series — as one file per
+    * (level, month), none for a group left empty. Its commit directory
+    * is `c<id>_<tag>_v<snapshot>`. Superseded files stay on disk for
+    * pinned snapshots until [[expireSnapshots]].
     */
-  private def foldMonths(needsFold: Seq[ManifestEntry] => Boolean): Unit =
-    synchronized {
-      require(pinnedVersion.isEmpty, "snapshot views are read-only")
-      latestEntries.groupBy(e => (e.step, e.month)).filter(g => needsFold(g._2))
-        .foreach { case ((step, month), inputs) =>
-          rewrite(step, month, "fold", inputs.toSet, readEntries(inputs))
-        }
+  private def replaceGroups(t: Txn, tag: String,
+                            groups: Map[(Long, String), Seq[ManifestEntry]],
+                            keep: Column): Unit =
+    if (groups.nonEmpty) {
+      t.commitId = HoardStore.claimCommitBase(root)
+      t.removed ++= groups.values.flatten
+      // one partition per (level, month), so each group stays one file;
+      // the merge runs inside it without another shuffle
+      write(lww(groupRows(groups).where(keep).repartition(col("l"), col("p_month")),
+        col("l"), col("p_month")), t, s"_${tag}_v${t.snapVer}")
     }
 
-  /** Last-write-wins winner per (series, interval) by composite seq. */
-  private def lww(rows: DataFrame): DataFrame = Dedup.lastWriteWins(
+  /** Fold every (level, month) and every level catalog whose entries
+    * `needsFold` into one file, in one transaction — contents unchanged
+    * by construction (the same merge the readers apply).
+    */
+  private def foldMonths(needsFold: Seq[ManifestEntry] => Boolean): Unit =
+    transact(t => replaceGroups(t, "fold", groupsAt(t.snapVer).filter(g => needsFold(g._2)),
+      lit(true)))
+
+  /** Last-write-wins winner per (`by`…, series, interval) by composite seq. */
+  private def lww(rows: DataFrame, by: Column*): DataFrame = Dedup.lastWriteWins(
       rows,
-      Seq(col("series_id"), col("interval")), col("seq"),
+      by ++ Seq(col("series_id"), col("interval")), col("seq"),
       Seq("value" -> col("value"), "seq_keep" -> col("seq")))
     .withColumnRenamed("seq_keep", "seq")
 
@@ -574,16 +598,12 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     * manifest version (pinned or latest): one small parquet read of the
     * files its catalog entries name — no directory listing.
     */
-  def readCatalog(ar: Archive): DataFrame = catalogAt(viewVersion, ar)
-
-  private def catalogAt(ver: Long, ar: Archive): DataFrame =
-    readCatalogEntries(manifestEntries(root, ver)
+  def readCatalog(ar: Archive): DataFrame =
+    readCatalogEntries(manifestEntries(root, viewVersion)
       .filter(e => e.isCatalog && e.step == ar.step))
 
   private def readCatalogEntries(es: Seq[ManifestEntry]): DataFrame =
-    if (es.isEmpty) emptyFrame(catalogSchema)
-    else spark.read.schema(catalogSchema)
-      .parquet(es.map(e => s"$root/${e.rel}"): _*).distinct()
+    if (es.isEmpty) emptyFrame(catalogSchema) else read(es, catalogSchema).distinct()
 
   /** The manifest version this view reads: its pinned one, else the
     * latest.
@@ -615,8 +635,12 @@ final class HoardStore private (val spark: SparkSession, val root: String,
                                months: Option[Seq[String]] = None): DataFrame = {
     val selected = manifestEntries(root, viewVersion).filter(e =>
       e.step == ar.step && !e.isCatalog && months.forall(_.contains(e.month)))
-    if (selected.isEmpty) emptyFrame(levelSchema) else readEntries(selected)
+    if (selected.isEmpty) emptyFrame(levelSchema) else lww(read(selected, levelSchema))
   }
+
+  /** The files `es` names, read with `schema` — no listing. */
+  private def read(es: Seq[ManifestEntry], schema: StructType): DataFrame =
+    spark.read.schema(schema).parquet(es.map(e => s"$root/${e.rel}"): _*)
 
   def readLevel(ar: Archive): DataFrame =
     readLevelWithSeq(ar).select("series_id", "interval", "value")
@@ -782,13 +806,15 @@ final class HoardStore private (val spark: SparkSession, val root: String,
         .map(_.retention)
       if (rets.isEmpty) 0L else math.min(cap, rets.max)
     }
+    // each level's rows, checkpointed because the next level's cascade
+    // reads them; every level is imported in one transaction at the end
+    val loaded = Seq.newBuilder[DataFrame]
     def load(ar: Archive, parts: Seq[DataFrame]): DataFrame = {
       val rows = parts.reduceOption(_ unionByName _)
         .getOrElse(readLevel(policy.finest).limit(0))
         .localCheckpoint(true)
-      dst.importArchive(ar,
-        rows.select(col("series_id"),
-          col("interval").cast("long").as("ts"), col("value")))
+      loaded += rows.select(lit(ar.step).as("step"), col("series_id"),
+        col("interval").cast("long").as("ts"), col("value"))
       rows
     }
 
@@ -809,6 +835,7 @@ final class HoardStore private (val spark: SparkSession, val root: String,
       prevStep = aN.step
       prevCover = math.max(prevCover, coverage(aN.step, aN.retention))
     }
+    dst.importArchive(loaded.result().reduce(_ unionByName _))
     dst
   }
 
@@ -821,8 +848,9 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     * is never recomputed from filled finer data). Layouts must match
     * level-for-level, as the tool requires.
     *
-    * Shape: per level one anti-join on (series, interval), then the
-    * standard level merge; new keys only, so the lww merge cannot
+    * Shape: per level one anti-join on (series, interval), then one
+    * [[importArchive]] of every level's missing rows — one version, none
+    * when nothing is missing; new keys only, so the lww merge cannot
     * disturb existing rows regardless of seq stamps. Passing `now`
     * month-prunes BOTH scans to each level's live window
     * (now - retention, now + step) via readLevelRange — without it the
@@ -833,20 +861,17 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     require(policy.sorted.map(a => (a.step, a.retention)) ==
       src.policy.sorted.map(a => (a.step, a.retention)),
       "fill requires matching archive layouts (whisper-fill contract)")
-    policy.sorted.foreach { ar =>
-      val srcAr = src.policy.sorted.find(_.step == ar.step).get
-      def level(st: HoardStore, a: Archive) = now match {
-        case Some(n) => st.readLevelRange(a, n - a.retention + 1, n + a.step)
-        case None    => st.readLevel(a)
-      }
-      val have = level(this, ar).select("series_id", "interval")
-      val missing = level(src, srcAr)
-        .join(have, Seq("series_id", "interval"), "left_anti")
-        .localCheckpoint(true)
-      if (missing.head(1).nonEmpty)
-        importArchive(ar, missing.select(col("series_id"),
-          col("interval").cast("long").as("ts"), col("value")))
+    def level(st: HoardStore, a: Archive) = now match {
+      case Some(n) => st.readLevelRange(a, n - a.retention + 1, n + a.step)
+      case None    => st.readLevel(a)
     }
+    importArchive(policy.sorted.map { ar =>
+      level(src, ar)
+        .join(level(this, ar).select("series_id", "interval"),
+          Seq("series_id", "interval"), "left_anti")
+        .select(lit(ar.step).as("step"), col("series_id"),
+          col("interval").cast("long").as("ts"), col("value"))
+    }.reduce(_ unionByName _))
   }
 
   /** Integrity check (the fsck whisper never had): recompute each
@@ -880,19 +905,18 @@ final class HoardStore private (val spark: SparkSession, val root: String,
 
   /** Repair every mismatch fsck would report: re-derive the coarser
     * slots from the finer level and merge them back with a fresh seq
-    * base (lww makes the recompute win). Healthy slots merge to their
-    * identical value — the operation is idempotent.
+    * base (lww makes the recompute win), one [[importArchive]] per
+    * level pair, finest first, since a coarser pair reads the finer
+    * pair's repair. A healthy store publishes nothing — the operation is
+    * idempotent.
     */
   def fsckRepair(): Unit =
     policy.sorted.sliding(2).foreach {
       case Seq(fine, coarse) =>
-        val bad = rederived(fine, coarse)
+        importArchive(rederived(fine, coarse)
           .where(!(col("value") === col("expected")))
-          .select(col("series_id"),
-            col("interval").cast("long").as("ts"),
-            col("expected").as("value"))
-          .localCheckpoint(true)
-        if (bad.head(1).nonEmpty) importArchive(coarse, bad)
+          .select(lit(coarse.step).as("step"), col("series_id"),
+            col("interval").cast("long").as("ts"), col("expected").as("value")))
       case _ => ()
     }
 
@@ -915,53 +939,47 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     * (it composes with [[seriesGlob]]). Later writes may recreate the
     * series.
     *
-    * Cost shape: one read per (level, month) and per level catalog to
+    * Cost shape: one scan of every (level, month) and level catalog to
     * find the ones that hold matching rows (a delete by arbitrary
-    * predicate cannot do better without a per-series index), then a
-    * manifest rewrite of ONLY those — snapshot readers pinned before
-    * the delete still see the series, catalog included, until
+    * predicate cannot do better without a per-series index), then one
+    * transaction that rewrites ONLY those — snapshot readers pinned
+    * before the delete still see the series, catalog included, until
     * [[expireSnapshots]] physically reclaims it (call it to actually
     * forget the bytes).
     */
-  def deleteSeries(pred: org.apache.spark.sql.Column): Unit = synchronized {
-    require(pinnedVersion.isEmpty, "snapshot views are read-only")
-    latestEntries.groupBy(e => (e.step, e.month)).foreach {
-      case ((step, month), inputs) =>
-        val part = readEntries(inputs)
-        if (part.where(pred).head(1).nonEmpty)
-          rewrite(step, month, "del", inputs.toSet, part.where(!pred))
-    }
+  def deleteSeries(pred: org.apache.spark.sql.Column): Unit = transact { t =>
+    val groups = groupsAt(t.snapVer)
+    val hit = groupsMatching(groups, pred)
+    replaceGroups(t, "del", groups.filter(g => hit(g._1)), !pred)
   }
 
   /** Retention vacuum: drop rows beyond each level's retention —
     * the Parquet analogue of ring-buffer wraparound reclaiming slots.
     *
-    * Scale shape: a manifest edit, not a physical delete. Months
-    * STRICTLY before the cutoff month are fully expired, so their
-    * entries are dropped without reading a byte; only the single
-    * boundary month (the one mixing kept and expired rows) is read,
-    * filtered and rewritten — and only when it actually contains
-    * expired rows. Work is O(1 month), not O(level), and repeated
-    * vacuums are no-op idempotent (an emptied level is never re-read).
+    * Scale shape: a manifest edit, not a physical delete, in one
+    * transaction. Months STRICTLY before a level's cutoff month are
+    * fully expired, so their entries are dropped without reading a
+    * byte; only each level's boundary month (the one mixing kept and
+    * expired rows) is read — one scan over all levels — and filtered
+    * and rewritten only when it actually contains expired rows. Work is
+    * O(1 month) per level, not O(level), and repeated vacuums are no-op
+    * idempotent (an emptied level is never re-read).
     * Frees no disk by itself: the superseded files stay (pinned
     * snapshots may read them) until [[expireSnapshots]]. Catalog
     * entries are left alone, so a vacuumed-out series stays listed.
     */
-  def vacuum(now: Long): Unit = synchronized {
-    require(pinnedVersion.isEmpty, "snapshot views are read-only")
-    policy.sorted.foreach { ar =>
-      val cutoff = now - ar.retention
-      val cutoffMonth = monthsCovering(cutoff, cutoff + 1).head
-      val ents = latestEntries.filter(e => e.step == ar.step && !e.isCatalog)
-      val expired = ents.filter(_.month < cutoffMonth).toSet
-      val boundary = ents.filter(_.month == cutoffMonth)
-      val pred = col("interval") >= timestamp_seconds(lit(cutoff))
-      val part = if (boundary.isEmpty) None else Some(readEntries(boundary))
-      if (part.exists(_.where(!pred).head(1).nonEmpty))
-        rewrite(ar.step, cutoffMonth, "vac", expired ++ boundary,
-          part.get.where(pred))
-      else if (expired.nonEmpty) commitRewrite(expired, Seq.empty)
-    }
+  def vacuum(now: Long): Unit = transact { t =>
+    val cutoff = policy.sorted.map(ar => ar.step -> (now - ar.retention)).toMap
+    def cutoffMonth(step: Long) = monthsCovering(cutoff(step), cutoff(step) + 1).head
+    val (expired, boundary) = groupsAt(t.snapVer).filter { case ((step, month), _) =>
+      month != CatalogMonth && month <= cutoffMonth(step)
+    }.partition { case ((step, month), _) => month < cutoffMonth(step) }
+    t.removed ++= expired.values.flatten
+    val keep = cutoff.map { case (step, c) =>
+      col("l") =!= step || col("interval") >= timestamp_seconds(lit(c))
+    }.reduce(_ && _)
+    val hit = groupsMatching(boundary, !keep)
+    replaceGroups(t, "vac", boundary.filter(g => hit(g._1)), keep)
   }
 
   private def emptyDense: DataFrame = emptyFrame(
@@ -1011,7 +1029,9 @@ object HoardStore {
     */
   private[graft] final case class ManifestEntry(step: Long, month: String,
                                                 rel: String) {
-    /** The directory one commit (write, fold, vacuum or delete) wrote. */
+    /** The directory one transaction (write, import, fold, vacuum or
+    * delete) wrote.
+    */
     def commitDir: String = rel.split('/')(1)
 
     /** A series-catalog file, not level data: level reads, vacuum and
@@ -1023,12 +1043,16 @@ object HoardStore {
   /** The reserved month of catalog entries; it is never a `yyyy-MM`. */
   private[graft] val CatalogMonth = "catalog"
 
-  /** In-flight optimistic transaction: the snapshot it reads, the files
-    * it staged and its (level, month) conflict footprint.
+  /** In-flight optimistic transaction: the snapshot it reads, the
+    * commit directory it wrote, the files it staged there, the entries
+    * it removes and, for an append, its (level, month) conflict
+    * footprint.
     */
   private[store] final class Txn(val snapVer: Long) {
     var commitId: Long = 0L
+    var dir: Option[String] = None
     val staged = scala.collection.mutable.Buffer.empty[ManifestEntry]
+    val removed = scala.collection.mutable.Set.empty[ManifestEntry]
     val touched = scala.collection.mutable.Set.empty[(Long, String)]
   }
 
@@ -1110,10 +1134,10 @@ object HoardStore {
 
   /** Time travel: a read-only view of the store at a historical
     * manifest version (what [[HoardStore.snapshot]] pins implicitly,
-    * addressed explicitly). Every write publishes one version, so a
-    * version between writes shows each batch whole; a vacuum or delete
-    * may publish several versions (one per level or month it rewrites).
-    * Valid while the version survives `expireSnapshots`.
+    * addressed explicitly). Every write, import, fold, vacuum and
+    * delete publishes at most one version, so a version between calls
+    * shows each call whole. Valid while the version survives
+    * `expireSnapshots`.
     */
   def openVersion(spark: SparkSession, root: String,
                   version: Long): HoardStore = {

@@ -487,8 +487,8 @@ class HoardStoreSpec extends SparkTestBase {
     // wins lww — exactly what a buggy writer would do)
     val daily = s.policy.sorted.last
     import spark.implicits._
-    s.importArchive(daily,
-      Seq(("cpu", dayStart, 999.0)).toDF("series_id", "ts", "value"))
+    s.importArchive(
+      Seq((daily.step, "cpu", dayStart, 999.0)).toDF("step", "series_id", "ts", "value"))
     val sick = s.fsck().collect().map(r => (r.getLong(1), r.getLong(2)))
     assert(sick.toSeq == Seq((1L, 1L)), "fsck must flag the poisoned slot")
     // repair re-derives from the hourly level and must win lww
@@ -644,5 +644,133 @@ class HoardStoreSpec extends SparkTestBase {
     // the July rows it does not touch still count
     write((0 until 5).map(h => edge + h * 3600L) ++ (45 until 55).map(h => edge + h * 3600L), 1000)
     assert(stored == expected, s"second batch: stored $stored, mirror $expected")
+  }
+
+  // ---- one transaction per store mutation --------------------------
+
+  /** A 2-level store holding 4 series over 3 months after 3 commits,
+    * each commit a full day per series and month, so both levels hold
+    * 3 files in each month.
+    */
+  private def threeMonthStore(name: String): HoardStore = {
+    val s = HoardStore.create(spark, tmpDir(name) + "/store", policy)
+    (0 until 3).foreach { b =>
+      s.updateMany(for (i <- 0 until 4; d <- 0 until 3; h <- 0 until 24) yield
+        RawPoint(s"s$i", (now / 86400 - d * 30 - b - 1) * 86400 + h * 3600, b * 10.0 + i + h), now)
+    }
+    s
+  }
+
+  private def version(s: HoardStore): Long = HoardStore.latestManifestVersion(s.root)
+
+  /** Versions `call` published on `s`. */
+  private def published(s: HoardStore)(call: => Unit): Long = {
+    val v = version(s)
+    call
+    version(s) - v
+  }
+
+  private def dataEntries(s: HoardStore): Set[String] = {
+    val st = java.nio.file.Files.list(java.nio.file.Paths.get(s.root, "_data"))
+    try { import scala.jdk.CollectionConverters._
+      st.iterator().asScala.map(_.getFileName.toString).toSet
+    } finally st.close()
+  }
+
+  /** One whisper file per `(name, steps)` under `dir`: an archive of 10
+    * points per step, each with its last 5 slots written.
+    */
+  private def whisperTree(dir: String, files: (String, Seq[Long])*): String = {
+    files.foreach { case (name, steps) =>
+      WhisperFixtures.write(dir, name, graft.store.WhisperFormat.write(now, 0.5f,
+        steps.map(st => Archive(st, 10) ->
+          (1 to 5).map(k => (now / st * st - k * st, k.toDouble))))) }
+    dir
+  }
+
+  test("compact, deleteSeries, a two-level vacuum, fill and intoStore each publish one version") {
+    import org.apache.spark.sql.functions.col
+    val s = threeMonthStore("one-version")
+    assert(s.latestEntries.groupBy(e => (e.step, e.month)).count(_._2.size > 1) == 6)
+    assert(published(s)(s.compact(1)) == 1)
+    assert(published(s)(s.deleteSeries(col("series_id") === "s1")) == 1)
+    assert(s.seriesCatalog().collect().map(_.getString(0)).toSet == Set("s0", "s2", "s3"))
+
+    // each level's boundary month holds an expired and a kept row
+    val v = freshStore()
+    val later = now + 10 * 86400L
+    val (hourCut, dayCut) = (later - 365 * 86400L, later - 1095 * 86400L)
+    v.updateMany(Seq(RawPoint("cpu", hourCut - 7200, 1.0), RawPoint("cpu", hourCut + 7200, 2.0),
+      RawPoint("cpu", dayCut - 2 * 86400, 3.0), RawPoint("cpu", dayCut + 2 * 86400, 4.0)), now)
+    assert(published(v)(v.vacuum(later)) == 1)
+    assert(v.latestEntries.filter(_.commitDir.contains("_vac_")).map(_.step).toSet ==
+      Set(3600L, 86400L), "vacuum did not rewrite both levels' boundary months")
+    assert(policy.sorted.map(dump(v, _).map(_.getDouble(2))) == Seq(Seq(2.0), Seq(4.0)))
+
+    val dst = freshStore()
+    assert(published(dst)(dst.fill(s)) == 1)
+    assert(policy.sorted.map(dump(dst, _)) == policy.sorted.map(dump(s, _)))
+
+    val tree = whisperTree(tmpDir("one-version-tree"), "a.whisper" -> Seq(3600L, 86400L),
+      "b.whisper" -> Seq(3600L, 86400L))
+    val st = graft.store.HoardImport.intoStore(spark, tree, tmpDir("one-version-imp") + "/store")
+    assert(version(st) == 1)
+    assert(policy.sorted.map(st.readLevel(_).count()) == Seq(10L, 10L))
+  }
+
+  test("a no-op fill and a healthy fsckRepair publish nothing and leave no commit directory") {
+    val s = threeMonthStore("noop")
+    val dst = freshStore()
+    dst.fill(s)
+    val (v, entries) = (version(dst), dataEntries(dst))
+    dst.fill(s) // nothing is missing
+    dst.fsckRepair() // every coarse slot re-derives to its stored value
+    assert(version(dst) == v && dataEntries(dst) == entries,
+      s"added ${dataEntries(dst) -- entries}")
+  }
+
+  test("a crash before a rewrite's publish leaves the last version; a retry succeeds") {
+    import org.apache.spark.sql.functions.col
+    val s = threeMonthStore("rewrite-crash")
+    def state() = (policy.sorted.map(dump(s, _)),
+      s.fetchValues("s1", now - 70 * 86400L, now, now)._2)
+    val calls = Seq[(String, () => Unit)](
+      "compact" -> (() => s.compact(1)),
+      "vacuum" -> (() => s.vacuum(now + 305 * 86400L)), // expires June's hourly rows
+      "deleteSeries" -> (() => s.deleteSeries(col("series_id") === "s1")))
+    calls.foreach { case (name, call) =>
+      val (v, before) = (version(s), state())
+      s.beforeCommitHook = () => throw new IllegalStateException("crash before publish")
+      intercept[IllegalStateException](call())
+      assert(version(s) == v && state() == before, s"$name's crash changed the store")
+      call()
+      assert(version(s) == v + 1, s"$name's retry did not publish")
+    }
+  }
+
+  test("an append that lands between a fold's stage and publish survives the fold") {
+    val a = threeMonthStore("fold-race")
+    val ref = threeMonthStore("fold-race-ref")
+    // a new series, and an overwrite of a slot in a month the fold rewrites
+    val extra = Seq(RawPoint("s9", now - 86400, 42.0), RawPoint("s0", (now / 86400 - 31) * 86400, 7.0))
+    val b = HoardStore.open(spark, a.root)
+    a.beforeCommitHook = () => b.updateMany(extra, now)
+    a.compact(1)
+    ref.updateMany(extra, now)
+    assert(a.latestEntries.exists(_.commitDir.contains("_fold_")), "the fold did not publish")
+    val same = policy.sorted.map(dump(a, _)) == policy.sorted.map(dump(ref, _))
+    assert(same, "the fold lost or changed rows of the append that landed before its publish")
+    assert(a.seriesCatalog().collect().map(_.getString(0)).toSet == Set("s0", "s1", "s2", "s3", "s9"))
+  }
+
+  test("intoStore refuses a tree whose steps are not all policy steps, publishing nothing") {
+    val tree = whisperTree(tmpDir("mixed-tree"), "a.whisper" -> Seq(3600L, 86400L),
+      "b.whisper" -> Seq(60L, 86400L))
+    val root = tmpDir("mixed-store") + "/store"
+    val e = intercept[IllegalArgumentException](graft.store.HoardImport.intoStore(spark, tree, root))
+    assert(e.getMessage.contains("[60, 3600, 86400]") && e.getMessage.contains("[3600, 86400]"),
+      e.getMessage)
+    assert(HoardStore.latestManifestVersion(root) == 0)
+    assert(dataEntries(HoardStore.open(spark, root)).isEmpty)
   }
 }
