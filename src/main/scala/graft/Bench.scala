@@ -171,6 +171,29 @@ object Bench {
     def compiled(): Long =
       org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
+    // Spark jobs a query runs: the listener counts every job start, and
+    // a marker job, whose start the listener bus delivers after those of
+    // every earlier job, settles the count on each side of the query
+    val jobStarts = new java.util.concurrent.atomic.AtomicLong()
+    val markersSeen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobStarts.incrementAndGet()
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(markersSeen.add)
+      }
+    })
+    val markers = new java.util.concurrent.atomic.AtomicLong()
+    def settledJobs(): Long = {
+      val sc = spark.sparkContext
+      val marker = s"bench-marker-${markers.incrementAndGet()}"
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!markersSeen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(2)
+      jobStarts.get()
+    }
+
     def run(name: String): Double = {
       if (minFreeGb > 0.0) {
         val free = scratchFreeGb()
@@ -182,6 +205,7 @@ object Bench {
           return -1.0
         }
       }
+      val jobs0 = settledJobs()
       val t0 = System.nanoTime()
       val compiled0 = compiled()
       try SparkEntry.queries(name)(spark, dirFor(name))
@@ -195,7 +219,10 @@ object Bench {
         System.err.println(s"[bench] $name failed: ${e.getMessage}"); return -1.0
       }
       val dt = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[bench] done $name $dt%.3f ${compiled() - compiled0} classes")
+      val classes = compiled() - compiled0
+      // the marker that settles the count is one of the jobs counted
+      val jobs = settledJobs() - jobs0 - 1
+      System.err.println(f"[bench] done $name $dt%.3f $classes classes $jobs jobs")
       done.put(name, dt)
       // a query's localCheckpoint blocks live until its DataFrame is
       // GC'd; across 100+ queries in one JVM they pile up in the block

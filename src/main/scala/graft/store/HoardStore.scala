@@ -2,7 +2,7 @@ package graft.store
 
 import graft.Scratch
 import graft.core.{Archive, ArchivePolicy, Time}
-import graft.operators.{Dedup, GapFill, GraphiteTarget, Rollup}
+import graft.operators.{Dedup, GraphiteTarget, Rollup}
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.internal.SQLConf
@@ -54,6 +54,12 @@ import scala.jdk.CollectionConverters._
   * commit's series_id partitioning, all levels in one linear plan:
   * nothing is written and read back between levels, and nothing runs
   * twice.
+  *
+  * One job per read: [[fetch]] and [[fetchMulti]] merge a window's
+  * files and gap-fill it in one aggregate over one partition — the
+  * level rows beside a null-stamped spine row per series and slot — so
+  * a request, and a single-target render over it, is one Spark job
+  * with no exchange ([[window]]).
   */
 final class HoardStore private (val spark: SparkSession, val root: String,
                                 val pinnedVersion: Option[Long] = None) {
@@ -179,7 +185,7 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     // it is built; AQE does not coalesce a cached shuffle, hence the width.
     val input = (routed +: (pinned ++ catalog))
       .reduce(_.unionByName(_, allowMissingColumns = true))
-    val u = input.repartition(shuffleWidth(input), col("series_id")).persist()
+    val u = input.repartition(shuffleWidth(spark, sizeOf(input)), col("series_id")).persist()
     try {
       u.foreachPartition((_: Iterator[Row]) => ())
       // one linear chain over `u`, finest level first: each level's lww,
@@ -302,9 +308,10 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     * known row lists also goes to `l=<step>/p_month=catalog` (null data
     * columns; catalog reads take `series_id` only): catalog entries of
     * the same publish, outside the conflict footprint — two writers that
-    * both add a series both publish, and every catalog read applies
-    * distinct(). The catalog is what lets fetchMulti derive its series
-    * universe WITHOUT scanning the level's data; a series stays in it
+    * both add a series both publish, so a catalog read either applies
+    * distinct() or merges duplicates away ([[window]]'s aggregate). The
+    * catalog is what lets fetchMulti derive its series universe
+    * WITHOUT scanning the level's data; a series stays in it
     * after vacuum expires its points, as the reference's series file
     * exists until deleted.
     */
@@ -686,7 +693,9 @@ final class HoardStore private (val spark: SparkSession, val root: String,
   }
 
   /** Range fetch (`src/hoard.coffee:426-513`): [[planWindow]] then a
-    * dense gap-filled frame over [fromInterval, toInterval).
+    * dense gap-filled frame `(series_id, interval, value)` over
+    * [fromInterval, toInterval), one row per slot, null where the slot
+    * holds no point — planned by [[window]] as one Spark job.
     */
   def fetch(series: String, from0: Long, to0: Long, now: Long): (TimeInfo, DataFrame) = {
     val (ar, ti) = planWindow(from0, to0, now)
@@ -695,34 +704,66 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     // the bounds — yields an empty frame, like the reference's zero-pass
     // fetch loop (`src/hoard.coffee:493-509`)
     if (ti.fromInterval >= ti.toInterval) return (ti, emptyDense)
-    val data = readLevelRange(ar, ti.fromInterval, ti.toInterval)
-      .where(col("series_id") === series)
-    val universe = spark.createDataFrame(
-      java.util.List.of(Row(series)), catalogSchema)
-    val dense = GapFill.densify(data, universe, "series_id", "interval",
-      Seq("value"), ti.fromInterval, ti.toInterval, ar.step)
-    (ti, dense)
+    val universe = spark.createDataFrame(java.util.List.of(Row(series)), catalogSchema)
+    (ti, window(ar, ti, manifestEntries(root, viewVersion), col("series_id") === series,
+      universe))
   }
 
   /** Multi-series fetch — capability beyond the reference (which holds
     * one series per file): same planner, one dense gap-filled frame
-    * covering every series matching `seriesPred` that has data at the
-    * routed level (series with no points inside the window come back
-    * all-null, like an empty single-series fetch).
+    * covering every series of the routed level's catalog that matches
+    * `seriesPred`, a `series_id` predicate (series with no points inside
+    * the window come back all-null, like an empty single-series fetch).
+    * The universe comes from the catalog files, not from scanning the
+    * level's data, and the whole request is one Spark job ([[window]]).
     */
   def fetchMulti(seriesPred: org.apache.spark.sql.Column, from0: Long,
                  to0: Long, now: Long): (TimeInfo, DataFrame) = {
     val (ar, ti) = planWindow(from0, to0, now)
     if (ti.fromInterval >= ti.toInterval) return (ti, emptyDense)
-    val data = readLevelRange(ar, ti.fromInterval, ti.toInterval)
-      .where(seriesPred)
-    // the universe comes from the series CATALOG (maintained on write),
-    // not from scanning the level's data — the whole-level distinct
-    // this replaces would be a full scan per multi-series fetch
-    val universe = readCatalog(ar).where(seriesPred)
-    val dense = GapFill.densify(data, universe, "series_id", "interval",
-      Seq("value"), ti.fromInterval, ti.toInterval, ar.step)
-    (ti, dense)
+    val es = manifestEntries(root, viewVersion)
+    val catalog = es.filter(e => e.isCatalog && e.step == ar.step)
+    if (catalog.isEmpty) (ti, emptyDense)
+    else (ti, window(ar, ti, es, seriesPred, read(catalog, catalogSchema).where(seriesPred)))
+  }
+
+  /** The dense window of level `ar` over `ti` for the series `universe`
+    * lists (duplicates allowed), as one exchange-free stage: the rows
+    * `pred` selects from the window's month files, flagged `u = false`,
+    * are unioned with one spine row per universe series and slot
+    * `(value = null, seq = null, u = true)`, put on one partition, and
+    * reduced by one `groupBy(series_id, interval)` with `max_by(value,
+    * seq)` and `max(u)`. `max_by` skips a row whose ordering is null,
+    * so a slot with data gets the same last-write-wins winner a level
+    * read gives it and a slot without comes out null; a group with no
+    * spine row (a series outside the universe) has `u` false and drops
+    * out. One partition satisfies the aggregate's distribution, so
+    * Catalyst plans no exchange. A request too big for one task
+    * (sized from the data read plus the spine, whose `explode` the
+    * estimate does not scale) is hash-partitioned by series instead.
+    */
+  private def window(ar: Archive, ti: TimeInfo, es: Seq[ManifestEntry], pred: Column,
+                     universe: DataFrame): DataFrame = {
+    val months = monthsCovering(ti.fromInterval, ti.toInterval)
+    val files = es.filter(e => e.step == ar.step && !e.isCatalog && months.contains(e.month))
+    val data = Option.when(files.nonEmpty)(read(files, levelSchema))
+      .map(_.where(pred && col("interval") >= timestamp_seconds(lit(ti.fromInterval)) &&
+        col("interval") < timestamp_seconds(lit(ti.toInterval))).withColumn("u", lit(false)))
+    val spine = universe.select(col("series_id"),
+      explode(sequence(timestamp_seconds(lit(ti.fromInterval)),
+        timestamp_seconds(lit(ti.toInterval - ti.step)),
+        expr(s"INTERVAL ${ti.step} SECOND"))).as("interval"),
+      lit(null).cast(DoubleType).as("value"), lit(null).cast(seqType).as("seq"),
+      lit(true).as("u"))
+    val slots = (ti.toInterval - ti.fromInterval) / ti.step
+    val width = shuffleWidth(spark,
+      data.map(sizeOf).getOrElse(BigInt(0)) + sizeOf(universe) * slots)
+    val rows = data.fold(spine)(_.unionByName(spine))
+    (if (width == 1) rows.coalesce(1) else rows.repartition(width, col("series_id")))
+      .groupBy("series_id", "interval")
+      .agg(max_by(col("value"), col("seq")).as("value"), max(col("u")).as("u"))
+      .where(col("u"))
+      .select("series_id", "interval", "value")
   }
 
   /** Test/driver convenience: materialized dense values in interval
@@ -906,16 +947,17 @@ final class HoardStore private (val spark: SparkSession, val root: String,
   /** Repair every mismatch fsck would report: re-derive the coarser
     * slots from the finer level and merge them back with a fresh seq
     * base (lww makes the recompute win), one [[importArchive]] per
-    * level pair, finest first, since a coarser pair reads the finer
-    * pair's repair. A healthy store publishes nothing — the operation is
-    * idempotent.
+    * level pair that has a mismatch, finest first, since a coarser pair
+    * reads the finer pair's repair. A pair without one stages nothing,
+    * so a healthy store costs one probe per pair and publishes nothing —
+    * the operation is idempotent.
     */
   def fsckRepair(): Unit =
     policy.sorted.sliding(2).foreach {
       case Seq(fine, coarse) =>
-        importArchive(rederived(fine, coarse)
-          .where(!(col("value") === col("expected")))
-          .select(lit(coarse.step).as("step"), col("series_id"),
+        val bad = rederived(fine, coarse).where(!(col("value") === col("expected")))
+        if (!bad.isEmpty)
+          importArchive(bad.select(lit(coarse.step).as("step"), col("series_id"),
             col("interval").cast("long").as("ts"), col("expected").as("value")))
       case _ => ()
     }
@@ -1216,15 +1258,17 @@ object HoardStore {
       (acc, ar) => acc.when(age <= ar.retention, lit(ar.step))
     }
 
-  /** Shuffle width for `df`: one task per advisory partition size of
-    * its estimated bytes — the width AQE's coalescing would pick.
+  /** Shuffle width for `bytes` estimated bytes: one task per advisory
+    * partition size — the width AQE's coalescing would pick.
     */
-  private def shuffleWidth(df: DataFrame): Int = {
-    val conf = df.sparkSession.sessionState.conf
-    (df.queryExecution.optimizedPlan.stats.sizeInBytes /
-      conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) + 1)
+  private def shuffleWidth(spark: SparkSession, bytes: BigInt): Int = {
+    val conf = spark.sessionState.conf
+    (bytes / conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES) + 1)
       .min(BigInt(conf.numShufflePartitions)).toInt
   }
+
+  /** The optimizer's size estimate of `df`. */
+  private def sizeOf(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
 
   // a commit's rows: this batch's routed points (an import's rows), a
   // finer level's pinned rows that propagation reads, a level's snapshot

@@ -510,14 +510,9 @@ class HoardStoreSpec extends SparkTestBase {
     intercept[IllegalArgumentException] { dst.fill(other) }
   }
 
-  test("one batch commit on a 3-level store runs at most 6 Spark jobs") {
+  /** Spark jobs `body` runs, counted by a listener on a job group. */
+  private def jobsOf(body: => Unit): Int = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val s = HoardStore.create(spark, tmpDir("hoard-jobs") + "/store", ArchivePolicy(
-      Seq(Archive(60, 1440), Archive(600, 4320), Archive(3600, 8760))))
-    val t0 = now - 3600
-    val batch = (0 until 33).map(i => RawPoint(s"h${i % 8}.cpu", t0 + i / 8 * 60, i.toDouble))
-    // the measured commit also reads pinned finer rows and a catalog
-    s.updateMany(batch, now)
     val sc = spark.sparkContext
     val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new SparkListener {
@@ -526,19 +521,55 @@ class HoardStoreSpec extends SparkTestBase {
     }
     sc.addSparkListener(listener)
     try {
-      sc.setJobGroup("commit", "one updateMany")
-      try s.updateMany(batch.map(p => p.copy(value = p.value + 1)), now)
-      finally sc.clearJobGroup()
+      sc.setJobGroup("counted", "counted")
+      try body finally sc.clearJobGroup()
       // the listener bus delivers in order: once the marker job is seen,
-      // so is every job of the commit
+      // so is every counted job
       sc.setJobGroup("marker", "marker")
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
       while (!groups.contains("marker") && System.nanoTime() < deadline) Thread.sleep(20)
       assert(groups.contains("marker"), "the listener never saw the marker job")
     } finally sc.removeSparkListener(listener)
-    val jobs = groups.toArray.count(_ == "commit")
+    groups.toArray.count(_ == "counted")
+  }
+
+  test("one batch commit on a 3-level store runs at most 6 Spark jobs") {
+    val s = HoardStore.create(spark, tmpDir("hoard-jobs") + "/store", ArchivePolicy(
+      Seq(Archive(60, 1440), Archive(600, 4320), Archive(3600, 8760))))
+    val t0 = now - 3600
+    val batch = (0 until 33).map(i => RawPoint(s"h${i % 8}.cpu", t0 + i / 8 * 60, i.toDouble))
+    // the measured commit also reads pinned finer rows and a catalog
+    s.updateMany(batch, now)
+    val jobs = jobsOf(s.updateMany(batch.map(p => p.copy(value = p.value + 1)), now))
     assert(jobs <= 6, s"one updateMany ran $jobs Spark jobs")
+  }
+
+  test("fetch, fetchMulti, fetchValues and a single-target render each run one Spark job") {
+    import graft.operators.GraphiteTarget
+    import org.apache.spark.sql.functions.col
+    val (s, batch) = threeLevelStore("hoard-read-jobs")
+    s.updateMany(batch(1), now)
+    s.updateMany(batch(2), now)
+    val (from, until) = (now - 3700, now)
+    def render(): Unit = {
+      val (ti, dense) = s.fetchMulti(s.seriesGlob("h*.cpu"), from, until, now)
+      val universe = dense.where(col("value").isNotNull)
+        .select(col("series_id").as("series"), col("interval").as("bucket"), col("value"))
+      val rows = GraphiteTarget.render(Seq("sumSeries(h*.cpu)"), universe, ti.step,
+        from, until, Some(10)).collect()
+      assert(rows.nonEmpty && rows.length <= 10, s"the render returned ${rows.length} buckets")
+    }
+    // 33 points: five minutes of h0, four of h1 … h7
+    def points(df: org.apache.spark.sql.DataFrame): Int = df.collect().count(!_.isNullAt(2))
+    val jobs = Seq(
+      "fetch" -> jobsOf(assert(points(s.fetch("h0.cpu", from, until, now)._2) == 5)),
+      "fetchMulti" -> jobsOf(assert(points(s.fetchMulti(s.seriesGlob("h*.cpu"), from, until,
+        now)._2) == 33)),
+      "fetchValues" -> jobsOf(assert(s.fetchValues("h0.cpu", from, until, now)._2.flatten.size == 5)),
+      "render" -> jobsOf(render()))
+    info(jobs.map { case (k, n) => s"$k $n" }.mkString(", "))
+    assert(jobs.forall(_._2 == 1), s"jobs per read: $jobs")
   }
 
   /** A 3-level store after one commit, so the next commit also reads
@@ -724,7 +755,11 @@ class HoardStoreSpec extends SparkTestBase {
     dst.fill(s)
     val (v, entries) = (version(dst), dataEntries(dst))
     dst.fill(s) // nothing is missing
-    dst.fsckRepair() // every coarse slot re-derives to its stored value
+    // every coarse slot re-derives to its stored value, so the repair
+    // probes and stages nothing
+    val jobs = jobsOf(dst.fsckRepair())
+    info(s"a healthy fsckRepair ran $jobs Spark jobs")
+    assert(jobs < 7, s"a healthy fsckRepair ran $jobs Spark jobs")
     assert(version(dst) == v && dataEntries(dst) == entries,
       s"added ${dataEntries(dst) -- entries}")
   }

@@ -157,6 +157,109 @@ class StorePropertySpec extends SparkTestBase {
       }.toMap
     }.toMap
 
+  // --- the one-stage read plan -----------------------------------------
+
+  /** Dense rows of a fetch frame, in (series, interval) order. */
+  private def denseRows(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, Option[Double])] =
+    df.collect().toSeq.map(r => (r.getString(0), r.getTimestamp(1).toInstant.getEpochSecond,
+      Option(r.getAs[java.lang.Double](2)).map(_.doubleValue))).sorted
+
+  /** Partitions the plan of `df` puts its rows on: the width of its first
+    * repartition, 0 when it has none.
+    */
+  private def width(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.catalyst.plans.logical.RepartitionOperation => r.numPartitions
+    }.getOrElse(0)
+
+  test("fetch and fetchMulti == lww level read + GapFill over the catalog (random windows)") {
+    import graft.operators.GapFill
+    import graft.store.FileManifestCatalog
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions.{col, lit}
+    import spark.implicits._
+    val rnd = new Random(20261019)
+    def batch(n: Int, old: Seq[RawPoint]): Seq[RawPoint] = (0 until n).map { _ =>
+      if (old.nonEmpty && rnd.nextBoolean()) // an overwrite of an earlier slot
+        old(rnd.nextInt(old.size)).copy(value = rnd.nextInt(1000).toDouble)
+      else RawPoint(Seq("a", "b", "c")(rnd.nextInt(3)),
+        now - rnd.between(0L, 30L * 86400), rnd.nextInt(1000).toDouble)
+    }
+    val st = HoardStore.create(spark, tmpDir("plan-eq") + "/store", policy)
+    var written = Seq.empty[RawPoint]
+    var snap: HoardStore = null
+    (1 to 6).foreach { b =>
+      val pts = batch(80, written)
+      st.updateMany(pts, now)
+      written ++= pts
+      if (b == 3) st.compact(1)
+      if (b == 4) snap = st.snapshot()
+    }
+    assert(snap.latestEntries.exists(_.commitDir.contains("_fold_")), "no month was folded")
+    // a catalog series with no rows in the last 20 days
+    st.updateMany(Seq(RawPoint("quiet", now - 25L * 86400, 1.0)), now)
+    // a series whose data the catalog does not list: the last commit's
+    // catalog entries dropped from a hand-published version
+    st.updateMany(Seq(RawPoint("orphan", now - 600, 5.0), RawPoint("orphan", now - 7200, 6.0)),
+      now)
+    val cat = new FileManifestCatalog(st.root)
+    val entries = cat.entries(cat.latestVersion)
+    val last = entries.map(_.commitDir).max
+    assert(entries.exists(e => e.isCatalog && e.commitDir == last))
+    assert(cat.tryPublish(cat.latestVersion + 1,
+      entries.filterNot(e => e.isCatalog && e.commitDir == last)))
+    // a store whose coarse levels are empty: sparse minutes never pass xff 1.0
+    val sparse = HoardStore.create(spark, tmpDir("plan-eq-sparse") + "/store",
+      ArchivePolicy(policy.archives, xff = 1.0))
+    sparse.updateMany((1 to 20).map(i => RawPoint(s"s${i % 2}", now - i * 120, i.toDouble)), now)
+    assert(sparse.latestEntries.forall(_.step == 60))
+
+    val series = Seq("a", "b", "c", "quiet", "orphan", "never")
+    val preds = Seq(lit(true), col("series_id") === "a",
+      col("series_id").isin("b", "quiet", "orphan", "s1"), col("series_id").rlike("^[ac]$"))
+    def windows(): Seq[(Long, Long)] =
+      Seq((now - 3000, now), (now - 20 * 3600, now), (now - 10L * 86400, now),
+        (now - 29L * 86400, now - 86400)) ++ (1 to 4).map { _ =>
+        val from = now - rnd.between(120L, 30L * 86400)
+        (from, from + rnd.between(1L, now - from + 3600))
+      }
+    def compare(): Seq[Int] =
+      Seq(st, snap, sparse).flatMap { s =>
+        windows().flatMap { case (from, to) =>
+          def check(got: (HoardStore.TimeInfo, org.apache.spark.sql.DataFrame), pred: Column,
+                    universe: Archive => org.apache.spark.sql.DataFrame, what: String): Int = {
+            val (ti, df) = got
+            val ar = s.policy.sorted.find(_.step == ti.step).get
+            val want =
+              if (ti.fromInterval >= ti.toInterval) Seq.empty
+              else denseRows(GapFill.densify(
+                s.readLevelRange(ar, ti.fromInterval, ti.toInterval).where(pred), universe(ar),
+                "series_id", "interval", Seq("value"), ti.fromInterval, ti.toInterval, ti.step))
+            assert(denseRows(df) == want, s"$what over [$from, $to) at ${s.pinnedVersion}")
+            width(df)
+          }
+          val sid = series(rnd.nextInt(series.size))
+          val pred = preds(rnd.nextInt(preds.size))
+          Seq(check(s.fetch(sid, from, to, now), col("series_id") === sid,
+              _ => Seq(sid).toDF("series_id"), s"fetch($sid)"),
+            check(s.fetchMulti(pred, from, to, now), pred,
+              s.readCatalog(_).where(pred), s"fetchMulti($pred)"))
+        }
+      }
+    assert(compare().forall(_ <= 1), "a small request was repartitioned")
+    // the wide branch: a tiny advisory partition size spreads every
+    // request over several tasks
+    val advisory = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val saved = spark.conf.getOption(advisory)
+    spark.conf.set(advisory, "64")
+    val wide = try compare() finally saved match {
+      case Some(v) => spark.conf.set(advisory, v)
+      case None => spark.conf.unset(advisory)
+    }
+    info(s"${wide.count(_ > 1)} of ${wide.size} requests ran repartitioned")
+    assert(wide.count(_ > 1) > wide.size / 2, s"widths under a 64-byte advisory size: $wide")
+  }
+
   // --- series deletion ------------------------------------------------
 
   test("deleteSeries removes exactly the matching series") {
