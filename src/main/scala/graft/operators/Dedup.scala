@@ -23,8 +23,7 @@ object Dedup {
     */
   def lastWriteWins(df: DataFrame, groupCols: Seq[Column], seq: Column,
                     keep: Seq[(String, Column)]): DataFrame = {
-    val aggs = keep.map { case (name, c) => max_by(c, seq).as(name) } :+
-      max(seq).as("__seq")
-    df.groupBy(groupCols: _*).agg(aggs.head, aggs.tail: _*).drop("__seq")
+    val aggs = keep.map { case (name, c) => max_by(c, seq).as(name) }
+    df.groupBy(groupCols: _*).agg(aggs.head, aggs.tail: _*)
   }
 }

@@ -2,7 +2,7 @@ package graft.store
 
 import graft.Scratch
 import graft.core.{Archive, ArchivePolicy, Time}
-import graft.operators.{Dedup, GraphiteTarget, Rollup}
+import graft.operators.{GraphiteTarget, Rollup}
 import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.internal.SQLConf
@@ -27,12 +27,13 @@ import scala.jdk.CollectionConverters._
   * defects fixed by intent (§2.3): xff honored (B1), single update
   * propagates (B2), batch coalescing moot under Parquet (B3).
   *
-  * Determinism: every write carries a monotone `seq` stamp, whose batch
-  * base is claimed by atomically creating a `_commits/` marker; merges
-  * are last-write-wins by seq (the distributed replacement for the
-  * reference's single-fd write ordering), resolved at read time across
-  * a (level, month)'s files. `now` is always an explicit parameter —
-  * never wall clock (SURVEY §5.3).
+  * Determinism: every stored row carries its commit id as its `seq`
+  * stamp (one LONG), claimed by atomically creating a `_commits/`
+  * marker; merges are last-write-wins by seq (the distributed
+  * replacement for the reference's single-fd write ordering), resolved
+  * at read time across a (level, month)'s files. A commit writes at
+  * most one row per key, so the commit id alone orders them. `now` is
+  * always an explicit parameter — never wall clock (SURVEY §5.3).
   *
   * One commit path: every mutation — a batch, an import, a fold,
   * vacuum or delete — is one transaction that stages its files for
@@ -111,8 +112,8 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     * Writes are made deterministic WITHOUT any global sort (a
     * row_number over an unpartitioned window would serialize the batch
     * through one task at cluster scale): the last-write-wins key is the
-    * composite struct (batch, kind, ts, seq) — later batches beat
-    * earlier ones (the reference: later writes to a slot overwrite),
+    * commit id on disk, (kind, ts, seq) within a commit — later batches
+    * beat earlier ones (the reference: later writes to a slot overwrite),
     * within a batch chronological order wins (the reference sorts
     * oldest-first per archive and commits in order), the caller's `seq`
     * column breaks same-second ties, and direct writes (kind=1) beat
@@ -129,7 +130,7 @@ final class HoardStore private (val spark: SparkSession, val root: String,
   private def cascade(batch0: DataFrame, now: Long, txn: Txn): Unit = {
     val p = policy
     val levels = p.sorted
-    val base = HoardStore.claimCommitBase(root) // this batch's seq base
+    val base = HoardStore.claimCommitBase(root) // every row's seq
     txn.commitId = base
 
     // without a caller seq, synthesize a monotone per-row ingest id so
@@ -151,9 +152,8 @@ final class HoardStore private (val spark: SparkSession, val root: String,
         min(when(col("l") < ar.step, col("ts"))).as(s"lo${ar.step}"),
         max(when(col("l") < ar.step, col("ts"))).as(s"hi${ar.step}"))): _*)
       .select(lit(Routed).as("kind"), col("l"), col("series_id"),
-        timestamp_seconds(col("ts")).as("interval"), col("value"),
-        struct(lit(base).as("b"), lit(1).as("k"),
-          col("ts").cast("long").as("t"), tieBreak.cast("long").as("s")).as("seq"))
+        timestamp_seconds(col("ts")).as("interval"), col("value"), lit(base).as("seq"),
+        col("ts").cast("long").as("ts"), tieBreak.cast("long").as("tie"))
       .localCheckpoint(true)
     val seen = bounds.get
     if (seen("rows") == 0L) return
@@ -180,24 +180,20 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     }
     val catalog = known(snap)
     // The commit's one shuffle: every step below is a window partitioned
-    // by series_id (plus other keys), so none shuffles again. A checkpoint would
-    // forget the hash partitioning, and so would a cache planned on before
-    // it is built; AQE does not coalesce a cached shuffle, hence the width.
+    // by series_id (plus other keys), so none shuffles again. A checkpoint
+    // would forget the hash partitioning.
     val input = (routed +: (pinned ++ catalog))
       .reduce(_.unionByName(_, allowMissingColumns = true))
-    val u = input.repartition(shuffleWidth(spark, sizeOf(input)), col("series_id")).persist()
-    try {
-      u.foreachPartition((_: Iterator[Row]) => ())
-      // one linear chain over `u`, finest level first: each level's lww,
-      // then its propagation into the next level; every row a later step
-      // needs passes through, so each level's winners are computed once
-      val cascaded = levels.indices.foldLeft(u) { (rows, i) =>
-        val won = keepWinners(rows, levels(i).step)
-        if (i + 1 == levels.size) won
-        else propagate(won, levels(i).step, levels(i + 1).step, p)
-      }
-      stage(cascaded, txn)
-    } finally u.unpersist()
+    val u = input.repartition(shuffleWidth(spark, sizeOf(input)), col("series_id"))
+    // one linear chain over `u`, finest level first: each level's lww,
+    // then its propagation into the next level; every row a later step
+    // needs passes through, so each level's winners are computed once
+    val cascaded = levels.indices.foldLeft(u) { (rows, i) =>
+      val won = keepWinners(rows, levels(i).step)
+      if (i + 1 == levels.size) won
+      else propagate(won, levels(i).step, levels(i + 1).step, p)
+    }
+    stage(cascaded, txn)
   }
 
   /** The files `es` names as `kind` rows of level `step`; a [[Known]]
@@ -217,15 +213,17 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     * level `step` — this batch's routed and propagated rows and the
     * pinned rows under them — one per (series_id, interval aligned to
     * `step`) is kept, the one with the highest seq, and takes the aligned
-    * interval. A batch row's seq beats every pinned one, and a direct
-    * row's beats a propagated one. Every other row passes through.
+    * interval. A batch row's seq, the commit id, beats every pinned one;
+    * between batch rows a direct row beats a propagated one, then the
+    * later `ts`, then the higher `tie`. Every other row passes through.
     */
   private def keepWinners(rows: DataFrame, step: Long): DataFrame = {
     val here = col("kind") =!= Known && col("l") === step
     val slot = Time.align(col("interval"), step)
     rows
       .withColumn("rank", row_number().over(Window
-        .partitionBy(col("series_id"), when(here, slot)).orderBy(col("seq").desc)))
+        .partitionBy(col("series_id"), when(here, slot)).orderBy(col("seq").desc,
+          (col("kind") === Routed).desc, col("ts").desc, col("tie").desc)))
       .where(!here || col("rank") === 1)
       .withColumn("interval", when(here, slot).otherwise(col("interval")))
       .drop("rank")
@@ -235,9 +233,9 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     * a coarse interval that holds a routed row of a level finer than
     * `coarse` (a mark) is recomputed from the `fine` winners in it, through
     * [[Rollup]]'s `cf` and xff gate, as one new propagated row at `coarse`.
-    * Its seq stamps below this batch's direct rows (the reference commits
+    * It ranks below this batch's direct rows (the reference commits
     * direct archive writes after earlier archives' propagation); its
-    * base is the batch's, read off the marks rather than a literal, since
+    * seq is the batch's, read off the marks rather than a literal, since
     * generated code that inlines a per-commit value compiles again on
     * every commit. The pinned `fine` rows are spent here and dropped;
     * every other row passes through.
@@ -252,12 +250,13 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     // one finer row per recomputed interval also emits the interval's row
     val emit = finer && col("interval") === min(when(finer, col("interval"))).over(w) &&
       max(mark).over(w) && Rollup.passesXff(known, fine, coarse, p.xff)
-    val self = struct(col("kind"), col("l"), col("interval"), col("value"), col("seq"))
+    val self = struct(col("kind"), col("l"), col("interval"), col("value"), col("seq"),
+      col("ts"), col("tie"))
+    val none = lit(null).cast(LongType)
     val up = struct(lit(Propagated).as("kind"), lit(coarse).as("l"), slot.as("interval"),
       Rollup.consolidate(p.cf, when(finer, col("value")), when(finer, col("interval")),
         _.over(w)).as("value"),
-      struct(max(when(mark, col("seq.b"))).over(w).as("b"), lit(0).as("k"),
-        lit(0L).as("t"), lit(0L).as("s")).as("seq"))
+      max(when(mark, col("seq"))).over(w).as("seq"), none.as("ts"), none.as("tie"))
     rows.withColumn("row", when(emit, array(self, up)).otherwise(array(self)))
       .select(col("series_id"), explode(col("row")).as("row"))
       .select(col("series_id"), col("row.*"))
@@ -273,8 +272,9 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     * value)`, `step` naming the row's level; intervals are aligned to
     * it. Every level publishes in one version. Rows at a step the
     * policy lacks are refused, naming the steps found and the policy's,
-    * and nothing is published. Later normal writes stamp newer seqs and
-    * win lww as usual.
+    * and nothing is published. Of the rows for one slot the latest `ts`
+    * wins; every row is stamped with the import's commit id, so later
+    * normal writes stamp newer seqs and win lww as usual.
     */
   def importArchive(rows: DataFrame): Unit = runOptimistic { txn =>
     val base = HoardStore.claimCommitBase(root)
@@ -282,9 +282,9 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     val ts = col("ts").cast("long")
     val winners = lww(rows.select(col("step").as("l"), col("series_id"),
         timestamp_seconds(ts - pmod(ts, col("step"))).as("interval"),
-        col("value"),
-        struct(lit(base).as("b"), lit(1).as("k"), ts.as("t"), lit(0L).as("s")).as("seq")),
+        col("value"), ts.as("seq")),
         col("l"))
+      .withColumn("seq", lit(base))
       .withColumn("kind", lit(Routed))
     stage((winners +: known(manifestEntries(root, txn.snapVer)))
       .reduce(_.unionByName(_, allowMissingColumns = true)), txn)
@@ -324,7 +324,7 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     val data = struct(date_format(col("interval"), "yyyy-MM").as("p_month"),
       col("interval"), col("value"), col("seq"))
     val entry = struct(lit(CatalogMonth).as("p_month"), lit(null).cast(TimestampType)
-      .as("interval"), lit(null).cast(DoubleType).as("value"), lit(null).cast(seqType).as("seq"))
+      .as("interval"), lit(null).cast(DoubleType).as("value"), lit(null).cast(LongType).as("seq"))
     write(rows.withColumn("row", when(listing, array(data, entry)).otherwise(array(data)))
       .where(fresh)
       .select(col("l"), col("series_id"), explode(col("row")).as("row"))
@@ -553,12 +553,10 @@ final class HoardStore private (val spark: SparkSession, val root: String,
     transact(t => replaceGroups(t, "fold", groupsAt(t.snapVer).filter(g => needsFold(g._2)),
       lit(true)))
 
-  /** Last-write-wins winner per (`by`…, series, interval) by composite seq. */
-  private def lww(rows: DataFrame, by: Column*): DataFrame = Dedup.lastWriteWins(
-      rows,
-      by ++ Seq(col("series_id"), col("interval")), col("seq"),
-      Seq("value" -> col("value"), "seq_keep" -> col("seq")))
-    .withColumnRenamed("seq_keep", "seq")
+  /** Last-write-wins winner per (`by`…, series, interval) by seq. */
+  private def lww(rows: DataFrame, by: Column*): DataFrame =
+    rows.groupBy(by ++ Seq(col("series_id"), col("interval")): _*)
+      .agg(max_by(col("value"), col("seq")).as("value"), max(col("seq")).as("seq"))
 
   /** Fold every (level, month) — and every level catalog — holding
     * more than `maxFilesPerMonth` files back to one file (one winner
@@ -624,12 +622,7 @@ final class HoardStore private (val spark: SparkSession, val root: String,
 
   private def levelSchema = StructType(Seq(
     StructField("series_id", StringType), StructField("interval", TimestampType),
-    StructField("value", DoubleType), StructField("seq", seqType)))
-
-  /** The lww stamp: commit base, kind (1 direct, 0 propagated), ts, seq. */
-  private def seqType = StructType(Seq(
-    StructField("b", LongType), StructField("k", IntegerType),
-    StructField("t", LongType), StructField("s", LongType)))
+    StructField("value", DoubleType), StructField("seq", LongType)))
 
   /** Manifest-planned read: the file list comes from this view's
     * manifest version — NO directory listing, which at object-store
@@ -753,7 +746,7 @@ final class HoardStore private (val spark: SparkSession, val root: String,
       explode(sequence(timestamp_seconds(lit(ti.fromInterval)),
         timestamp_seconds(lit(ti.toInterval - ti.step)),
         expr(s"INTERVAL ${ti.step} SECOND"))).as("interval"),
-      lit(null).cast(DoubleType).as("value"), lit(null).cast(seqType).as("seq"),
+      lit(null).cast(DoubleType).as("value"), lit(null).cast(LongType).as("seq"),
       lit(true).as("u"))
     val slots = (ti.toInterval - ti.fromInterval) / ti.step
     val width = shuffleWidth(spark,
@@ -1060,7 +1053,7 @@ object HoardStore {
     * validate-and-publish with conflict re-try; readers can pin a
     * version ([[HoardStore.snapshot]]) and stay isolated from every
     * concurrent rewrite until [[HoardStore.expireSnapshots]]. Persisted
-    * as `manifest_append` in the store's `_merge` marker.
+    * as [[ManifestMarker]] in the store's `_merge` marker.
     */
   case object ManifestAppend extends MergeStrategy
 
@@ -1128,7 +1121,8 @@ object HoardStore {
 
   private def strategyFile(root: String): JPath = Paths.get(root, "_merge")
 
-  private val ManifestMarker = "manifest_append"
+  // rows stamped with their commit id; `manifest_append` stamped a struct
+  private[graft] val ManifestMarker = "manifest_commit_seq"
 
   /** DDL (`src/hoard.coffee:30-69`): rejects an existing store, persists
     * the policy catalog and the `_merge` marker. No preallocation — data
@@ -1149,9 +1143,10 @@ object HoardStore {
   /** Opens a store. Stores written by the removed month-rewrite,
     * record-merge or delta-append strategies (or older ones with no
     * `_merge` marker) are refused: their data lives outside any
-    * manifest, and there is no migration path. So are stores that still
-    * carry the old `_series/` catalog directory, whose catalog no
-    * manifest names.
+    * manifest, and there is no migration path. So are stores whose rows
+    * carry the old struct stamp (marker `manifest_append`) and stores
+    * that still carry the old `_series/` catalog directory, whose
+    * catalog no manifest names.
     */
   def open(spark: SparkSession, root: String): HoardStore = {
     requireManifestStore(root)

@@ -514,4 +514,26 @@ class PlanShapeSpec extends SparkTestBase {
     assert(bad.isEmpty,
       s"inventory probes planning partitionless windows: $bad")
   }
+
+  test("store fetch and fetchMulti merge with a hash aggregate, never a sort aggregate") {
+    import graft.core.{Archive, ArchivePolicy}
+    import graft.store.HoardStore
+    import graft.store.HoardStore.RawPoint
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, SortAggregateExec}
+    val now = 1700000000L
+    val s = HoardStore.create(spark, tmpDir("plan-fetch") + "/store",
+      ArchivePolicy(Seq(Archive(60, 1440), Archive(3600, 720))))
+    s.updateMany((0 until 20).map(i => RawPoint(s"h${i % 4}.cpu", now - 3000 + i * 60, i)), now)
+    s.updateMany(Seq(RawPoint("h0.cpu", now - 3000, 99.0)), now)
+    Seq("fetch" -> s.fetch("h0.cpu", now - 3600, now, now)._2,
+      "fetchMulti" -> s.fetchMulti(s.seriesGlob("h*.cpu"), now - 3600, now, now)._2)
+      .foreach { case (name, df) =>
+        df.collect()
+        val nodes = flatten(df.queryExecution.executedPlan)
+        assert(nodes.exists(_.isInstanceOf[HashAggregateExec]),
+          s"$name planned no hash aggregate")
+        assert(!nodes.exists(_.isInstanceOf[SortAggregateExec]),
+          s"$name planned a sort aggregate")
+      }
+  }
 }
