@@ -224,9 +224,11 @@ object Bench {
       val jobs = settledJobs() - jobs0 - 1
       System.err.println(f"[bench] done $name $dt%.3f $classes classes $jobs jobs")
       done.put(name, dt)
-      // a query's localCheckpoint blocks live until its DataFrame is
-      // GC'd; across 100+ queries in one JVM they pile up in the block
-      // manager and the late-alphabet queries pay the memory pressure.
+      // a query's localCheckpoint blocks (its streaming folds' and
+      // iterative loops' lineage cuts, frames several of its actions
+      // read) live until its DataFrame is GC'd; across 100+ queries in
+      // one JVM they pile up in the block manager and the late-alphabet
+      // queries pay the memory pressure.
       // Dropping them is outside the timer and safe between queries —
       // nothing persisted is shared across SparkEntry invocations.
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))

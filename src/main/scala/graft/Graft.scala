@@ -12,8 +12,9 @@ import org.apache.spark.sql.SparkSession
 object Graft {
 
   /** Row gate for broadcasting a `localCheckpoint`'d frame (r13 verdict
-    * item 4). A checkpoint truncates Catalyst stats, so the planner
-    * can't size-check a join against it — but an UNCONDITIONAL
+    * item 4); one site uses it, `LanguageModel.perplexityScore`'s bigram
+    * count table (p24). A checkpoint truncates Catalyst stats, so the
+    * planner can't size-check a join against it — but an UNCONDITIONAL
     * broadcast() hint on a per-user/per-entity frame removes the
     * planner's escape hatch and OOMs at corpus scale where the
     * estimator would have degraded to a shuffle join. The honest gate

@@ -57,6 +57,8 @@ object Bm25 {
       sum(when(col("token") === t, lit(1L)).otherwise(lit(0L))).as(s"__tf$i") }
     val perDoc = toks.groupBy(col(idCol))
       .agg(count(lit(1)).as("dl"), tfCols: _*)
+      // (c) kept, pays: without it p27's warm runs compiled 4-8 classes
+      // in 5 of 6 sf0.1 pairs against 0, for 0.79 -> 0.87 s
       .localCheckpoint(true)
     // O(1) corpus stats: exact integer totals, then one IEEE division
     val stats = perDoc.agg(count(lit(1)).as("n_docs"),

@@ -62,12 +62,13 @@ object Components {
         greatest(col("a"), col("b")).as("a"),
         least(col("a"), col("b")).as("b"))
       .where(col("a") =!= col("b")).distinct()
-      .localCheckpoint()
+      .localCheckpoint() // (a) lineage cut: the checksum and round 1 read it
     var sig = checksum(e)
     var rounds = 0
     var converged = false
     while (!converged && rounds < maxRounds) {
-      val next = star(star(e, large = true), large = false).localCheckpoint()
+      val next = star(star(e, large = true), large = false)
+        .localCheckpoint() // (a) lineage cut: one per round keeps plan depth O(1)
       val nextSig = checksum(next)
       converged = nextSig == sig
       e = next; sig = nextSig; rounds += 1

@@ -145,7 +145,8 @@ object Embeddings {
       pairs.orderBy(col("sim").desc, col("id_a"), col("id_b")).limit(k)
 
     val v = withUnitVector(vectors, "embedding", "uv")
-      .select(col("vec_id"), col("uv")).localCheckpoint(true)
+      .select(col("vec_id"), col("uv"))
+      .localCheckpoint(true) // (b) cross-action: both phases' collects + the plan
 
     // phase 1: verified SRP-LSH candidates -> τ (one driver scalar)
     val vb = v.join(lshBuckets(vectors, planes = 8), "vec_id")
@@ -172,7 +173,7 @@ object Embeddings {
         first(col("uv")).as("uv"))
       .select(col("vec_id"), col("uv"), col("pick.c_id").as("cell"),
         col("pick.csim").as("csim"))
-      .localCheckpoint(true)
+      .localCheckpoint(true) // (b) cross-action: the stats collect + the plan
     val stats = assigned.groupBy(col("cell"))
       .agg(count(lit(1)).as("n"),
         max(acos(greatest(lit(-1.0), least(lit(1.0), col("csim")))))
@@ -239,10 +240,11 @@ object Embeddings {
     */
   def kmeansCentroids(vectors: DataFrame, k: Int, iters: Int): DataFrame = {
     val v = withUnitVector(vectors, "embedding", "uv")
-      .select(col("vec_id"), col("uv")).localCheckpoint(true)
+      .select(col("vec_id"), col("uv"))
+      .localCheckpoint(true) // (a) lineage cut: every iteration re-reads v
     var cents = v.orderBy("vec_id").limit(k)
       .select(col("vec_id").as("c_id"), col("uv").as("cv"))
-      .localCheckpoint(true)
+      .localCheckpoint(true) // (a) lineage cut: the centroids iterate
     (0 until iters).foreach { _ =>
       val assign = v.join(broadcast(cents), lit(true))
         .select(col("vec_id"), col("uv"), col("c_id"),
@@ -270,7 +272,7 @@ object Embeddings {
       // cells with no surviving members keep their previous centroid
       cents = updated
         .unionByName(cents.join(updated.select("c_id"), Seq("c_id"), "left_anti"))
-        .localCheckpoint(true)
+        .localCheckpoint(true) // (a) lineage cut: one per iteration
     }
     cents
   }

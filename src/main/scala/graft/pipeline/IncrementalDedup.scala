@@ -97,7 +97,8 @@ object IncrementalDedup {
     /** Eagerly materialized copy — what every steady-state caller
       * (micro-batch loops, stress harnesses) wants: the index is
       * built once and each re-use reads cached blocks, never
-      * re-running the rank window.
+      * re-running the rank window. Class (b), cross-action state:
+      * every later batch's probe reads it.
       */
     def checkpointed: Index = Index(window.localCheckpoint(true),
       ids.localCheckpoint(true), sizes.localCheckpoint(true),
@@ -154,7 +155,7 @@ object IncrementalDedup {
       .where(col("__ri") <= ellI)
       .select(col(idCol).as("id_in"), col("vid"),
         col("__ri").as("ri"), col("ni"))
-      .localCheckpoint(true)
+      .localCheckpoint(true) // (b) cross-action: the estimate's head() + the plan
 
     // Closed-form generator costs, ONE bounded aggregation: per vid
     // the ex side contributes (wdf = m-window rows, pdfEx = ℓ-prefix

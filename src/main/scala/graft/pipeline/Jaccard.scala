@@ -43,7 +43,8 @@ object Jaccard {
     * jaccard rounded to 6 decimals, ordered (jaccard DESC, id_a, id_b).
     */
   def exactTopK(sets: DataFrame, idCol: String, k: Int): DataFrame = {
-    val bg = sets.select(col(idCol), col("vid")).localCheckpoint(true)
+    val bg = sets.select(col(idCol), col("vid"))
+      .localCheckpoint(true) // (b) cross-action: phase 1's collect + the plan
     val sizes = bg.groupBy(idCol).agg(count(lit(1)).as("n"))
 
     // phase 1: verified LSH candidates -> τ (driver pulls ONE scalar)
@@ -143,7 +144,7 @@ object Jaccard {
       .join(sizes, idCol)
       .where(col("r") <= mWin)
       .select(col(idCol), col("vid"), col("r"), col("n"))
-      .localCheckpoint(true)
+      .localCheckpoint(true) // (b) cross-action: the estimate's head() + the plan
     // Closed-form generator costs, ONE bounded aggregation (the p14
     // dual-generator pattern: measure the estimates, then choose):
     //  - prefix generator emits Σ_vid C(pdf, 2) candidate rows into a

@@ -71,7 +71,9 @@ object LanguageModel {
     // broadcast projections + totals) re-ran the reference tokenize+agg
     // — p24's plan carried 10 reference/corpus scans, 3 of them from
     // uni alone (r13 optimization; scans now: uni + bi = 2 over the
-    // reference slice).
+    // reference slice). (c) kept, both pay: without them (and the
+    // gate below) p24's warm runs compiled 4-8 classes against 0 at
+    // sf0.1 (5 pairs).
     val uni = st.groupBy(col("vid")).agg(count(lit(1)).as("c1"))
       .localCheckpoint(true)
     val bi = st.where(col("pvid").isNotNull)
@@ -137,6 +139,8 @@ object LanguageModel {
     // count, the smallest frame in the pipeline — while its lineage is
     // the full scoring pipeline (corpus tokenize + 3 LM joins), so
     // materialize once instead of running that pipeline twice (r13).
+    // (c) kept, pays: without it p24's final plan scans documents twice
+    // and sf0.1 went 3.99 -> 4.13 s, slower in 4 of 5 pairs.
     val once = scores.localCheckpoint(true)
     val cuts = once.agg(
       expr("percentile(avg_llp, cast(1 as double)/3)").as("c_lo"),

@@ -1113,7 +1113,7 @@ object HoardQueries {
             .groupBy(col("event_type"))
             .agg(slice(array_sort(collect_set(col("h"))), 1, k).as("hs"))
             .select(col("event_type"), explode(col("hs")).as("h"))
-            .localCheckpoint(true)
+            .localCheckpoint(true) // (a) lineage cut: per-batch survivor fold
           ()
         })
       surv.withColumn("rn", row_number().over(w))
@@ -1328,7 +1328,7 @@ object HoardQueries {
           state = merged.join(buys, Seq("user_id"), "left")
             .select(col("user_id"), col("fc"),
               coalesce(col("fp"), col("bp")).as("fp"))
-            .localCheckpoint(true)
+            .localCheckpoint(true) // (a) lineage cut: per-batch state fold
           ()
         })
       state.where(col("fc").isNotNull)
@@ -1422,7 +1422,7 @@ object HoardQueries {
             }
             .toDF("series", "bkt", "pred", "dev", "upper", "lower",
               "aberrant", "l", "b", "t", "s", "d")
-            .localCheckpoint(true)
+            .localCheckpoint(true) // (a) lineage cut: state and output read the fold
           state = folded.where(col("bkt") === Long.MinValue)
             .select(col("series"), col("l"), col("b"), col("t"),
               col("s"), col("d"))
@@ -1430,7 +1430,8 @@ object HoardQueries {
             folded.where(col("bkt") =!= Long.MinValue)
               .select(col("series").as("event_type"), col("bkt"),
                 col("pred"), col("dev"), col("upper"), col("lower"),
-                col("aberrant"))).localCheckpoint(true)
+                col("aberrant")))
+            .localCheckpoint(true) // (a) lineage cut: per-batch output union
           ()
         })
       def r6(c: org.apache.spark.sql.Column) = round(c * lit(1e6)) / lit(1e6)
@@ -1448,13 +1449,10 @@ object HoardQueries {
       // join on the bucket keeps slots either series missed (graphite
       // emits None there — ratio/diff stay null, and a 0 divisor also
       // nulls the ratio rather than inf). The two series are filters
-      // over the SAME hourly lww aggregate, MATERIALIZED once (r13:
-      // the two join sides are separate subtree copies to Catalyst, so
-      // without the checkpoint each re-ran the raw-events scan+agg —
-      // the checkpoint is the bounded series×bucket frame); diff rides
-      // a decimal subtract (2-decimal inputs, exact), ratio is one
-      // IEEE division tie-safe rounded.
-      val h = hourlyByType(s, dir).localCheckpoint(true)
+      // over the same hourly lww aggregate (each side's filter reaches
+      // its scan); diff rides a decimal subtract (2-decimal inputs,
+      // exact), ratio is one IEEE division tie-safe rounded.
+      val h = hourlyByType(s, dir)
       val e = h.where(col("event_type") === "error")
         .select(col("bucket"), col("value").as("err_v"))
       val c = h.where(col("event_type") === "click")

@@ -68,10 +68,10 @@ object PipelineQueries {
   private[graft] def nearDupPairs(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(Scratch.memo(("neardup-pairs", System.identityHashCode(s), dir)) {
       pairsComputeCount.incrementAndGet()
-      // checkpointed like exactTopK's input: thresholdPairs' volume-
-      // estimate job runs BEFORE the main plan, and without this it
-      // would re-run the shingling + distinct from scratch (+11 s on
-      // a 20 s sf1 build; the 2-column frame is cheap to materialize)
+      // (b) cross-action: thresholdPairs' volume-estimate job runs
+      // BEFORE the main plan, and without this it would re-run the
+      // shingling + distinct from scratch (+11 s on a 20 s sf1 build;
+      // the 2-column frame is cheap to materialize)
       val ids = TextOps.shinglesOfText(docs(s, dir), "doc_id", "text", 3)
         .select(col("doc_id"), xxhash64(col("shingle")).as("vid"))
         .distinct().localCheckpoint(true)
@@ -102,15 +102,10 @@ object PipelineQueries {
   /** p54's JSD computation from a (source, token, c) count table —
     * shared by the batch query and s16's maintained-state stream so
     * the two paths cannot drift. See p54 for the exact-arithmetic
-    * derivation.
+    * derivation. It reads `cnt` three times, so both callers pass a
+    * checkpointed table.
     */
-  private def jsdOverCounts(cnt0: DataFrame): DataFrame = {
-    // the (source, token) count table is vocab-bounded (sublinear by
-    // Heaps' law) but its lineage is the corpus tokenize+agg, and this
-    // function consumes it THREE times (totals + both pair sides) —
-    // materialize once so the corpus is touched once (r13; the p53/p24
-    // stat-frame pattern)
-    val cnt = cnt0.localCheckpoint(true)
+  private def jsdOverCounts(cnt: DataFrame): DataFrame = {
     val tot = cnt.groupBy(col("source")).agg(sum(col("c")).as("n"))
     val a = cnt.select(col("source").as("sa"), col("token"),
       col("c").as("ca"))
@@ -1597,7 +1592,8 @@ object PipelineQueries {
       val known = TextAnalysis.linesOf(
           s.read.parquet(path).where(pmod(col("doc_id"), lit(2)) === 0),
           "doc_id", "text", 8)
-        .select(col("lid")).distinct().localCheckpoint(true)
+        .select(col("lid")).distinct()
+        .localCheckpoint(true) // (b) cross-action: every micro-batch probes it
       val out = Scratch.dir("graft-s9-out")
       val incoming = graft.Tables.loadStream(s, dir, "documents")
         .where(pmod(col("doc_id"), lit(2)) === 1)
@@ -1764,7 +1760,9 @@ object PipelineQueries {
       val cnt = docs(s, dir)
         .select(col("source"), explode(split(col("text"), " ")).as("token"))
         .groupBy(col("source"), col("token")).agg(count(lit(1)).as("c"))
-      jsdOverCounts(cnt)
+      // (c) kept, pays: totals and both pair sides read the count
+      // table; without it sf0.1 went 1.11 -> 1.26 s (6 pairs)
+      jsdOverCounts(cnt.localCheckpoint(true))
     }),
 
     "s16_streamjsd" -> ((s, dir) => {
@@ -1795,7 +1793,7 @@ object PipelineQueries {
             .select(col("source"), col("token"),
               (coalesce(col("c"), lit(0L)) + coalesce(col("bc"), lit(0L)))
                 .as("c"))
-            .localCheckpoint(true)
+            .localCheckpoint(true) // (a) lineage cut: per-batch count fold
           ()
         })
       jsdOverCounts(state)
@@ -2140,11 +2138,10 @@ object PipelineQueries {
       val d = docs(s, dir).select(col("source"),
         size(split(col("text"), " ")).cast("long").as("len"))
       // (source, len) counts are the metadata-sized stat frame every
-      // later step derives from, but FOUR consumers (both grid axes,
-      // the fill join, the totals) made Catalyst re-run the corpus
-      // scan+agg per consumer — 8 document scans in the r13-baseline
-      // plan. Materialize it once; same for the grid-sized cumulative
-      // frame (2 consumers). One corpus scan total (r13 optimization).
+      // later step derives from (both grid axes, the fill join, the
+      // totals), and the grid-sized cumulative frame has 2 consumers.
+      // (c) kept, both pay: without them sf0.1 went 1.30 -> 1.90 s
+      // and warm runs compiled 15-28 classes against 4-6 (6 pairs)
       val cnt = d.groupBy(col("source"), col("len"))
         .agg(count(lit(1)).as("c"))
         .localCheckpoint(true)

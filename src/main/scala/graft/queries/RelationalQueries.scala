@@ -21,6 +21,21 @@ import org.apache.spark.sql.functions._
   */
 object RelationalQueries {
 
+  /** The funnel step of q37/q42: `prev` (one row per user, its stage
+    * time in `prevTs`) left-joined with the `eventType` events strictly
+    * after that time, keeping the first as `out`. A user without one
+    * keeps a null `out`, and so does a null user_id, as in the oracles'
+    * inner-join-then-left-join form. Each stage frame has one consumer,
+    * so the chain scans events once per stage with no subtree to reuse.
+    */
+  private def firstAfter(prev: DataFrame, prevTs: String, events: DataFrame,
+                         eventType: String, out: String): DataFrame = {
+    val next = events.where(col("event_type") === eventType)
+      .select(col("user_id").as("__u"), col("ts").as("__ts"))
+    prev.join(next, col("__u") === col("user_id") && col("__ts") > col(prevTs), "left")
+      .groupBy(prev.columns.map(col): _*).agg(min(col("__ts")).as(out))
+  }
+
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
@@ -268,7 +283,7 @@ object RelationalQueries {
                 coalesce(col("bmax"), col("max_cents"))).as("max_cents"),
               (coalesce(col("sum_cents"), lit(0L)) +
                 coalesce(col("bsum"), lit(0L))).as("sum_cents"))
-            .localCheckpoint(true)
+            .localCheckpoint(true) // (a) lineage cut: per-batch state fold
           ()
         })
       state
@@ -356,44 +371,14 @@ object RelationalQueries {
       // Three-stage funnel (view → click → purchase, each STRICTLY
       // later than the previous resolved stage): q37's two-aggregate
       // shape chained once more. Every stage is one filtered partial
-      // min-aggregate + one equi-join on user_id; a user's stage is
-      // how deep the chain resolves (0-indexed by furthest reached);
-      // no window ever touches the raw stream. Timestamps emit as
-      // epoch micros — integers on both engines.
+      // min-aggregate + one equi-join on user_id (firstAfter); a user's
+      // stage is how deep the chain resolves (0-indexed by furthest
+      // reached); no window ever touches the raw stream. Timestamps
+      // emit as epoch micros — integers on both engines.
       val e = t(s, dir, "events")
-      // each stage frame is user-count-bounded but feeds TWO consumers
-      // (the next stage's join and the final report), so without
-      // materialization Catalyst re-ran every upstream stage per
-      // consumer — 6 events scans in the r13-baseline plan, 3 after
-      // (one filtered scan per stage, the theoretical floor for a
-      // 3-stage strictly-after funnel)
       val fv = e.where(col("event_type") === "view")
         .groupBy(col("user_id")).agg(min(col("ts")).as("fv"))
-        .localCheckpoint(true)
-      // size-gated broadcasts (r14, verdict item 4): checkpointed stage
-      // frames carry no Catalyst stats, so the planner can't pick the
-      // broadcast the pre-checkpoint estimator chose — but stage-frame
-      // cardinality is DISTINCT USERS, which grows with the corpus, so
-      // an unconditional hint would OOM at scale. Gate on the
-      // materialized |fv| once: |fc| <= |fv| and |fp| <= |fc| by
-      // construction (each stage semi-filters the previous stage's
-      // users), so one count covers every stage frame. Above the gate
-      // the hints are withheld and the planner shuffles — the honest
-      // degradation the estimator would have chosen.
-      val bcast: DataFrame => DataFrame =
-        if (fv.count() <= graft.Graft.BroadcastRowGate) broadcast _
-        else identity _
-      val fc = e.where(col("event_type") === "click")
-        .select(col("user_id"), col("ts"))
-        .join(bcast(fv), "user_id").where(col("ts") > col("fv"))
-        .groupBy(col("user_id")).agg(min(col("ts")).as("fc"))
-        .localCheckpoint(true)
-      val fp = e.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"))
-        .join(bcast(fc), "user_id").where(col("ts") > col("fc"))
-        .groupBy(col("user_id")).agg(min(col("ts")).as("fp"))
-      fv.join(bcast(fc.drop("fv")), Seq("user_id"), "left")
-        .join(bcast(fp.drop("fc")), Seq("user_id"), "left")
+      firstAfter(firstAfter(fv, "fv", e, "click", "fc"), "fc", e, "purchase", "fp")
         .select(col("user_id"),
           unix_micros(col("fv")).as("first_view_us"),
           unix_micros(col("fc")).as("first_click_us"),
@@ -412,24 +397,9 @@ object RelationalQueries {
       // shuffle key); no window touches the raw event stream, so the
       // plan is two map-side-combinable aggs at any event volume.
       val e = t(s, dir, "events")
-      // first-click frame: user-count-bounded, two consumers (the
-      // purchase join and the final report) — materialized once so the
-      // click scan+agg runs once, not per consumer (r13, q42's pattern)
       val fc = e.where(col("event_type") === "click")
         .groupBy(col("user_id")).agg(min(col("ts")).as("first_click"))
-        .localCheckpoint(true)
-      // size-gated broadcast (r14, verdict item 4 — q42's pattern): one
-      // materialized count gates both stage-frame hints (|fp| <= |fc|
-      // since fp's users semi-filter through fc); above the gate the
-      // planner shuffles instead of OOMing on an unbounded broadcast
-      val bcast: DataFrame => DataFrame =
-        if (fc.count() <= graft.Graft.BroadcastRowGate) broadcast _
-        else identity _
-      val fp = e.where(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts"))
-        .join(bcast(fc), "user_id").where(col("ts") > col("first_click"))
-        .groupBy(col("user_id")).agg(min(col("ts")).as("first_purchase"))
-      fc.join(bcast(fp.drop("first_click")), Seq("user_id"), "left")
+      firstAfter(fc, "first_click", e, "purchase", "first_purchase")
         .select(col("user_id"),
           unix_micros(col("first_click")).as("first_click_us"),
           unix_micros(col("first_purchase")).as("first_purchase_us"),
@@ -883,7 +853,7 @@ object RelationalQueries {
           |         ORDER BY o_orderdate, o_orderkey) AS BIGINT) AS rn
           |FROM orders""".stripMargin)
         .where(col("rn") <= 12)
-        .localCheckpoint(true)
+        .localCheckpoint(true) // (a) lineage cut: each recursion level reads it
         .createOrReplaceTempView("oc")
       s.sql(
         """WITH RECURSIVE r AS (

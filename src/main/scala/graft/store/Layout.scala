@@ -1,6 +1,6 @@
 package graft.store
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Physical-layout helpers for repeated-join workloads: bucketing
   * co-locates both sides of an equi-join by the join key at WRITE time,
@@ -10,18 +10,10 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   */
 object Layout {
 
-  /** Persist `df` as a bucketed, per-bucket-sorted managed table. */
-  def writeBucketed(df: DataFrame, table: String, bucketCols: Seq[String],
-                    buckets: Int): Unit =
-    df.write.mode(SaveMode.Overwrite)
-      .bucketBy(buckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .format("parquet")
-      .saveAsTable(table)
-
-  /** Persist `df` as an EXTERNAL bucketed table at `path` — for sessions
-    * whose static warehouse conf we don't own (e.g. the driver's), where a
-    * managed table would land in an unwanted default warehouse dir.
+  /** Persist `df` as an EXTERNAL bucketed, per-bucket-sorted table at
+    * `path` — for sessions whose static warehouse conf we don't own (e.g.
+    * the driver's), where a managed table would land in an unwanted
+    * default warehouse dir.
     */
   def writeBucketedAt(df: DataFrame, table: String, path: String,
                       bucketCols: Seq[String], buckets: Int): Unit =
@@ -31,6 +23,4 @@ object Layout {
       .sortBy(bucketCols.head, bucketCols.tail: _*)
       .format("parquet")
       .saveAsTable(table)
-
-  def table(spark: SparkSession, name: String): DataFrame = spark.table(name)
 }

@@ -63,8 +63,8 @@ object StressAll {
         "distributed, catalog browse aggregates — output row counts " +
         "exactly at their designed bounds"),
       "ManifestStress" -> ("4 concurrent optimistic writers x 3 " +
-        "batches: every commit lands exactly once, reads at every " +
-        "version consistent, no lost batch"),
+        "batches: every batch lands, and every level's values " +
+        "equal a sequential replay in commit order"),
       "PpjoinCappedHeap" -> ("thresholdPairs over a 100k-doc heaps " +
         "corpus completes in a -Xmx8g local[4] CHILD JVM (the 8 GB " +
         "executor shape): the generator must spill, never OOM"),

@@ -3,6 +3,7 @@ package graft
 import graft.core.{Archive, ArchivePolicy}
 import graft.store.{HoardStore, InMemoryManifestCatalog}
 import graft.store.HoardStore.RawPoint
+import graft.tools.ManifestStress
 import java.nio.file.{Files, Paths}
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration._
@@ -24,20 +25,6 @@ class ExternalCatalogSpec extends SparkTestBase {
     Archive(60, 60), Archive(3600, 24), Archive(86400, 30)))
   private val now = 1700000000L
 
-  private def levelKeys(st: HoardStore): Map[Long, Set[(String, Long)]] =
-    policy.sorted.map { ar =>
-      ar.step -> st.readLevel(ar).collect()
-        .map(r => (r.getString(0), r.getTimestamp(1).toInstant.getEpochSecond))
-        .toSet
-    }.toMap
-
-  private def levelContents(st: HoardStore): Map[Long, Map[(String, Long), Double]] =
-    policy.sorted.map { ar =>
-      ar.step -> st.readLevel(ar).collect()
-        .map(r => (r.getString(0), r.getTimestamp(1).toInstant.getEpochSecond)
-          -> r.getDouble(2)).toMap
-    }.toMap
-
   test("racing writers through an injected CAS catalog converge; no _manifests on disk") {
     val root = tmpDir("extcat") + "/store"
     val cat = new InMemoryManifestCatalog
@@ -49,10 +36,11 @@ class ExternalCatalogSpec extends SparkTestBase {
       // conflicts, the ManifestStress worst case
       val rnd = new Random(42)
       val writers = 3
-      val work: Seq[(Int, Seq[RawPoint])] = (0 until writers).flatMap { w =>
-        (0 until 2).map { _ =>
-          (w, (0 until 40).map(_ => RawPoint(s"s${rnd.nextInt(3)}",
-            now - rnd.between(0L, 20L * 86400), rnd.nextInt(1000).toDouble)))
+      val work: Seq[((Int, Int), Seq[RawPoint])] = (0 until writers).flatMap { w =>
+        (0 until 2).map { b =>
+          (w, b) -> ((0 until 40).map(_ => RawPoint(s"s${rnd.nextInt(3)}",
+            now - rnd.between(0L, 20L * 86400), rnd.nextInt(1000).toDouble))
+            :+ ManifestStress.marker(w, b, now))
         }
       }
 
@@ -60,7 +48,7 @@ class ExternalCatalogSpec extends SparkTestBase {
       val attempts = (0 until writers).map { w =>
         Future {
           val st = HoardStore.open(spark, root)
-          work.filter(_._1 == w).foreach { case (_, b) => st.updateMany(b, now) }
+          work.filter(_._1._1 == w).foreach { case (_, b) => st.updateMany(b, now) }
           st.lastCommitAttempts
         }
       }.map(Await.result(_, 300.seconds))
@@ -72,16 +60,14 @@ class ExternalCatalogSpec extends SparkTestBase {
       assert(cat.publishAttempts.get() >= vers.size.toLong)
       assert(attempts.forall(_ >= 1))
 
-      // linearizability gate (ManifestStress's): key sets equal a
-      // sequential replay of the same batches on a FILE-catalog store
-      val ref = HoardStore.create(spark, tmpDir("extcat-ref") + "/store", policy)
-      work.foreach { case (_, b) => ref.updateMany(b, now) }
-      val got = levelKeys(HoardStore.open(spark, root))
-      val want = levelKeys(ref)
-      policy.sorted.foreach { ar =>
-        assert(got(ar.step) == want(ar.step),
-          s"step ${ar.step}: only-got=${(got(ar.step) -- want(ar.step)).take(5)} " +
-            s"only-ref=${(want(ar.step) -- got(ar.step)).take(5)}")
+      // linearizability gate (ManifestStress's): every level's values
+      // equal a replay of the same batches, in the order their commits
+      // landed, on a FILE-catalog store
+      val diff = ManifestStress.replayDiff(HoardStore.open(spark, root),
+        tmpDir("extcat-ref") + "/store", work, now)
+      assert(diff.size == policy.sorted.size)
+      diff.foreach { case (step, keys) =>
+        assert(keys.isEmpty, s"step $step: ${keys.size} values differ, e.g. ${keys.take(5)}")
       }
 
       // nothing bypassed the seam
@@ -103,14 +89,14 @@ class ExternalCatalogSpec extends SparkTestBase {
       st.updateMany(batch(), now)
       val pinVer = cat.latestVersion
       val pinned = HoardStore.openVersion(spark, root, pinVer)
-      val before = levelContents(pinned)
+      val before = ManifestStress.levelValues(pinned)
 
       st.updateMany(batch(), now)
       st.compact(maxFilesPerMonth = 1)
       assert(cat.latestVersion > pinVer)
 
       // the pinned view is immune to later commits and compaction
-      assert(levelContents(HoardStore.openVersion(spark, root, pinVer)) == before)
+      assert(ManifestStress.levelValues(HoardStore.openVersion(spark, root, pinVer)) == before)
 
       // expiry deletes old versions FROM THE CATALOG; the latest stays
       st.expireSnapshots(keepLast = 1)
@@ -120,7 +106,7 @@ class ExternalCatalogSpec extends SparkTestBase {
       intercept[IllegalArgumentException](
         HoardStore.openVersion(spark, root, pinVer))
       // and the survivor still reads
-      assert(levelContents(HoardStore.open(spark, root)).values
+      assert(ManifestStress.levelValues(HoardStore.open(spark, root)).values
         .exists(_.nonEmpty))
       assert(Files.notExists(Paths.get(root, "_manifests")))
     } finally HoardStore.removeCatalog(root)

@@ -45,18 +45,17 @@ class LayoutSpec extends SparkTestBase {
 
   test("bucketed tables join with zero exchanges (co-located layout)") {
     val dir = "/root/testdata/sf0.001"
-    Layout.writeBucketed(Tables.load(spark, dir, "orders"),
-      "b_orders", Seq("o_custkey"), 8)
-    Layout.writeBucketed(
-      Tables.load(spark, dir, "customer")
-        .withColumn("c_custkey", col("c_custkey")),
-      "b_customer", Seq("c_custkey"), 8)
+    val at = tmpDir("graft-layout")
+    Layout.writeBucketedAt(Tables.load(spark, dir, "orders"),
+      "b_orders", s"$at/b_orders", Seq("o_custkey"), 8)
+    Layout.writeBucketedAt(Tables.load(spark, dir, "customer"),
+      "b_customer", s"$at/b_customer", Seq("c_custkey"), 8)
 
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-      val joined = Layout.table(spark, "b_orders")
-        .join(Layout.table(spark, "b_customer"),
+      val joined = spark.table("b_orders")
+        .join(spark.table("b_customer"),
           col("o_custkey") === col("c_custkey"))
         .groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n"))
       joined.collect() // materialize so the adaptive plan is final

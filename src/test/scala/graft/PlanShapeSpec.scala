@@ -249,6 +249,34 @@ class PlanShapeSpec extends SparkTestBase {
       "nested-loop join in q37")
   }
 
+  /** File scans of `table` in the final adaptive plan of `name`. A
+    * reused exchange is a leaf of the flattened tree, so the subtree it
+    * reuses (and the scans in it) counts once.
+    */
+  private def scans(name: String, table: String): Int =
+    executed(name).count {
+      case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+        f.relation.location.rootPaths.exists(_.getName == s"$table.parquet")
+      case _ => false
+    }
+
+  // each funnel stage left-joins the previous stage's per-user frame
+  // with its own filtered events scan (RelationalQueries.firstAfter)
+  test("q42: one events scan per funnel stage (reused exchanges count once)") {
+    val n = scans("q42_funnel3", "events")
+    assert(n <= 3, s"q42 plans $n events scans, want <= 3")
+  }
+
+  test("q37: one events scan per funnel stage (reused exchanges count once)") {
+    val n = scans("q37_funnel", "events")
+    assert(n <= 2, s"q37 plans $n events scans, want <= 2")
+  }
+
+  test("h36: each series side scans events once, filtered below the lww agg") {
+    val n = scans("h36_seriesdiv", "events")
+    assert(n <= 2, s"h36 plans $n events scans, want <= 2")
+  }
+
   /** every nested-loop join in `nodes` must be a bounded fan-out: its
     * broadcast side produced at most `cap` rows (the O(K)/O(|S|)
     * centroid/totals pattern) — a corpus-sized nested loop would blow

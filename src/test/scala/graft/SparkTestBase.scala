@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * Teardown hygiene (r13 verdict item 1 — the driver's `sbt test` died
   * mid-run with a RejectedExecutionException from an async subquery job
   * racing a terminated executor pool): suites never stop the shared
-  * session, but the eager `localCheckpoint(true)` frames the r13
-  * optimizations introduced persist executor-storage blocks at
+  * session, but the eager `localCheckpoint(true)` frames that remain
+  * (lineage cuts in streaming folds, recursion and iterative loops, and
+  * frames several actions read) persist executor-storage blocks at
   * DataFrame-CONSTRUCTION time, and across 350+ tests in one JVM those
   * blocks pile up in the block manager until storage pressure can kill
   * the context (a dead context then rejects every later async
