@@ -226,7 +226,8 @@ object Bench {
       done.put(name, dt)
       // a query's localCheckpoint blocks (its streaming folds' and
       // iterative loops' lineage cuts, frames several of its actions
-      // read) live until its DataFrame is GC'd; across 100+ queries in
+      // read, p53's and the render shares' frames one plan reads
+      // twice) live until its DataFrame is GC'd; across 100+ queries in
       // one JVM they pile up in the block manager and the late-alphabet
       // queries pay the memory pressure.
       // Dropping them is outside the timer and safe between queries —
@@ -575,16 +576,6 @@ object Bench {
           val n = rounds.max + 1
           val out = s"STRESS_r$n.json"
           if (!new java.io.File(out).exists) {
-            val addOpens = Seq(
-              "java.base/java.lang", "java.base/java.lang.invoke",
-              "java.base/java.lang.reflect", "java.base/java.io",
-              "java.base/java.net", "java.base/java.nio",
-              "java.base/java.util", "java.base/java.util.concurrent",
-              "java.base/java.util.concurrent.atomic",
-              "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-              "java.base/sun.security.action",
-              "java.base/sun.util.calendar"
-            ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
             val setsid =
               if (new java.io.File("/usr/bin/setsid").exists)
                 Seq("/usr/bin/setsid") else Seq.empty
@@ -603,7 +594,7 @@ object Bench {
               if (classes.isDirectory && sparkJars.isDirectory)
                 classes.getPath + ":" + sparkJars.getPath + "/*"
               else System.getProperty("java.class.path")
-            val cmd = setsid ++ Seq("java", "-Xmx8g") ++ addOpens ++ Seq(
+            val cmd = setsid ++ Seq("java", "-Xmx8g") ++ tools.ChildJvm.AddOpens ++ Seq(
               "-Dspark.ui.enabled=false",
               "-Dspark.sql.session.timeZone=UTC",
               // inherit the bench's scratch placement (build.sbt picks

@@ -11,24 +11,6 @@ import org.apache.spark.sql.SparkSession
   */
 object Graft {
 
-  /** Row gate for broadcasting a `localCheckpoint`'d frame (r13 verdict
-    * item 4); one site uses it, `LanguageModel.perplexityScore`'s bigram
-    * count table (p24). A checkpoint truncates Catalyst stats, so the
-    * planner can't size-check a join against it — but an UNCONDITIONAL
-    * broadcast() hint on a per-user/per-entity frame removes the
-    * planner's escape hatch and OOMs at corpus scale where the
-    * estimator would have degraded to a shuffle join. The honest gate
-    * is the frame's materialized row count (one cheap job over the
-    * checkpointed blocks): at or below this many rows the executed
-    * plan keeps the broadcast the pre-checkpoint estimator chose; above
-    * it the hint is withheld and the planner shuffles. 2M rows of a
-    * narrow (key, value) frame build a ~100-200 MB hash relation —
-    * comfortably inside executor memory and far under the 8 GB /
-    * 512M-row broadcast hard cap, while any growing-with-the-corpus
-    * frame at 100 TB blows straight past it and degrades safely.
-    */
-  val BroadcastRowGate: Long = 2L * 1024 * 1024
-
   /** Entries of the JVM-wide cache of classes compiled from generated
     * code (`spark.sql.codegen.cache.maxEntries`; Spark's default is 100).
     * Spark compiles one class per distinct generated source, and a class
@@ -36,7 +18,8 @@ object Graft {
     * a warm 8-query perfbench `batch` pass recompiles 167 to 171 classes
     * on every pass. Measured with an unbounded cache (4 cores, sf0.01): one
     * perfbench `batch` run's first pass compiles 225 distinct classes
-    * (warm passes compile only s8's 18 streaming classes), one
+    * (warm passes compile only s8's streaming classes: 18 per pass then,
+    * 15 since [[configure]] drops stage ids from class names), one
     * `dashboard` run 261 over the whole run, and a 3-level store commit
     * about 100 (55 on the first commit, then 2 to 8). 1,000 leaves about
     * four times the largest of these. An entry keeps its generated source
@@ -78,6 +61,16 @@ object Graft {
     // back to a microsecond TimestampType column.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
+    // Spark names each whole-stage class after its codegen stage id and
+    // keys the codegen cache on the generated source, so a stage that AQE
+    // numbers differently on the next run was compiled again. Without the
+    // id it reuses its class. Classes compiled over three passes in one
+    // JVM (4 cores, id -> no id): the perfbench `batch` queries at sf0.01
+    // 195/22/18 -> 178/15/15 (warm: s8 alone); p14, p53, g16, g38, s8,
+    // p24, p27 and p54 at sf0.1 370/48/24 -> 319/15/19 (warm: s8, and p14
+    // once). Store commits and reads still compile 2-4 classes each:
+    // per-call literals, not stage ids.
+    spark.conf.set("spark.sql.codegen.useIdInClassName", "false")
     spark
   }
 }

@@ -978,7 +978,8 @@ object GraphiteTarget {
         nodes.map(universeFetches(_, ctxMode = false)).sum > 1)
       universeNamePred(nodes, ctxMode = false)
         .map(universe.where).getOrElse(universe)
-        .localCheckpoint(true) // (c) kept, pays: see shareRenderUniverse
+        // (c) kept, time pays: without it sf0.1 g36 went 1.45 -> 1.92 s (6 pairs)
+        .localCheckpoint(true)
     else universe
 
   /** The ctx'd-render sharing (r13 verdict item 5): each leaf clamps to
@@ -1007,9 +1008,7 @@ object GraphiteTarget {
       }.getOrElse(universe)
       universeNamePred(nodes, ctxMode = true)
         .map(clamped.where).getOrElse(clamped)
-        // (c) kept, pays: without both shares sf0.1 g38 went 1.27 ->
-        // 1.82 s and g16 1.10 -> 1.23 s, and their warm runs compiled
-        // 4-10 classes against 0-4 (6 pairs)
+        // (c) kept, time pays: without it sf0.1 g38 went 1.13 -> 1.54 s (6 pairs)
         .localCheckpoint(true)
     }
 

@@ -35,11 +35,7 @@ object Bm25 {
     // r13 advice: the one-pass rewrite would double-count a duplicated
     // query term (the old isin+groupBy deduped) and explode(array())
     // fails analysis on an empty list — dedup here and fail loudly so
-    // the latent degenerate inputs stay impossible. The checkpointed
-    // per-doc frame below is a LOCAL checkpoint: single-JVM blocks, not
-    // fault-tolerant — executor loss mid-query fails the query instead
-    // of recomputing (acceptable for this bounded frame; a cluster
-    // deployment that needs replay swaps persist/reliable checkpoint).
+    // the latent degenerate inputs stay impossible.
     val terms = terms0.distinct
     require(terms.nonEmpty, "BM25 needs at least one query term")
     // ONE corpus pass (r13 optimization): the old shape aggregated the
@@ -48,18 +44,14 @@ object Bm25 {
     // df) — four tokenize+scan passes for one query. Since |terms| is
     // O(10) by contract, per-term tf rides the SAME map-side-combined
     // aggregate as dl (one conditional counter per term), and the
-    // materialized per-doc frame (doc-count-sized, the smallest frame
-    // in the pipeline) feeds stats, df and scoring without touching
-    // the corpus again. The tf>0 unpivot reproduces the old inner-tf
-    // row set exactly, and dl now travels ON the tf row, deleting the
-    // old tf⋈dl exchange as well.
+    // per-doc frame (doc-count-sized, the smallest frame in the
+    // pipeline) feeds stats, df and scoring. The tf>0 unpivot
+    // reproduces the old inner-tf row set exactly, and dl now travels
+    // ON the tf row, deleting the old tf⋈dl exchange as well.
     val tfCols = terms.zipWithIndex.map { case (t, i) =>
       sum(when(col("token") === t, lit(1L)).otherwise(lit(0L))).as(s"__tf$i") }
     val perDoc = toks.groupBy(col(idCol))
       .agg(count(lit(1)).as("dl"), tfCols: _*)
-      // (c) kept, pays: without it p27's warm runs compiled 4-8 classes
-      // in 5 of 6 sf0.1 pairs against 0, for 0.79 -> 0.87 s
-      .localCheckpoint(true)
     // O(1) corpus stats: exact integer totals, then one IEEE division
     val stats = perDoc.agg(count(lit(1)).as("n_docs"),
       (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))

@@ -60,25 +60,11 @@ object LanguageModel {
     */
   def train(ref: DataFrame, idCol: String, textCol: String): Lm = {
     val st = bigramStream(ref, idCol, textCol)
-    // The count tables are the MODEL a production pipeline persists;
-    // materialize them once (vocab- / bigram-vocab-bounded — never
-    // corpus-sized). NOTE (r13 advice): localCheckpoint blocks live
-    // only in executor storage — lineage is truncated and executor
-    // loss mid-query fails the job instead of recomputing. That is the
-    // deliberate single-JVM/local-mode trade for these bounded model
-    // tables; a cluster deployment that needs replay persists the
-    // tables (they ARE the model) or uses reliable checkpointing. Without this, every consumer of `uni` (the two
-    // broadcast projections + totals) re-ran the reference tokenize+agg
-    // — p24's plan carried 10 reference/corpus scans, 3 of them from
-    // uni alone (r13 optimization; scans now: uni + bi = 2 over the
-    // reference slice). (c) kept, both pay: without them (and the
-    // gate below) p24's warm runs compiled 4-8 classes against 0 at
-    // sf0.1 (5 pairs).
+    // the count tables are the model: vocab- and bigram-vocab-bounded,
+    // never corpus-sized
     val uni = st.groupBy(col("vid")).agg(count(lit(1)).as("c1"))
-      .localCheckpoint(true)
     val bi = st.where(col("pvid").isNotNull)
       .groupBy(col("pvid"), col("vid")).agg(count(lit(1)).as("c2"))
-      .localCheckpoint(true)
     val totals = uni.agg(sum(col("c1")).as("t"), (count(lit(1)) + 1).as("v"))
     Lm(uni, bi, totals)
   }
@@ -96,20 +82,11 @@ object LanguageModel {
     val st = bigramStream(docs, idCol, textCol)
     val up = lm.uni.select(col("vid").as("pvid"), col("c1").as("c1p"))
     val uw = lm.uni.select(col("vid"), col("c1").as("c1w"))
-    // bi's broadcast is SIZE-GATED (r14, verdict item 4): the
-    // checkpointed model table carries no Catalyst stats (r9 lesson),
-    // and without a hint the planner falls back to shuffling the full
-    // token stream by (pvid, vid). The declared contract is "LM count
-    // tables are vocab-bounded broadcasts", but the bigram table is
-    // vocab^2-bounded in the worst case, so the hint is applied only
-    // while the materialized count stays broadcast-sized; past the gate
-    // the (pvid, vid) shuffle is the honest fallback (its pair-key
-    // frequency is far flatter than per-word keys — class doc).
-    val bi = if (lm.bi.count() <= graft.Graft.BroadcastRowGate)
-      broadcast(lm.bi) else lm.bi
+    // bi is vocab^2-bounded in the worst case, so it carries no hint:
+    // the planner sizes the join from the table's statistics
     val scored = st
       .join(broadcast(up), Seq("pvid"), "left")
-      .join(bi, Seq("pvid", "vid"), "left")
+      .join(lm.bi, Seq("pvid", "vid"), "left")
       .join(broadcast(uw), Seq("vid"), "left")
       .crossJoin(broadcast(lm.totals))
     val p = when(col("c1p").isNotNull,
@@ -134,18 +111,10 @@ object LanguageModel {
     * same cutpoint contract), broadcast back as 1-row cutpoints.
     */
   def buckets(scores: DataFrame): DataFrame = {
-    // `scores` is consumed twice (the cutpoint aggregate and the
-    // bucketing pass). It is the per-DOC score frame — bounded by doc
-    // count, the smallest frame in the pipeline — while its lineage is
-    // the full scoring pipeline (corpus tokenize + 3 LM joins), so
-    // materialize once instead of running that pipeline twice (r13).
-    // (c) kept, pays: without it p24's final plan scans documents twice
-    // and sf0.1 went 3.99 -> 4.13 s, slower in 4 of 5 pairs.
-    val once = scores.localCheckpoint(true)
-    val cuts = once.agg(
+    val cuts = scores.agg(
       expr("percentile(avg_llp, cast(1 as double)/3)").as("c_lo"),
       expr("percentile(avg_llp, cast(2 as double)/3)").as("c_hi"))
-    once.crossJoin(broadcast(cuts))
+    scores.crossJoin(broadcast(cuts))
       .withColumn("bucket",
         when(col("avg_llp") >= col("c_hi"), "head")
           .when(col("avg_llp") >= col("c_lo"), "middle")

@@ -112,9 +112,6 @@ object SparseCosine {
             .over(w.rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
           .where((col("n2") - col("cum")).cast("double") >=
             lit(tau * tau - 1e-9) * col("n2"))
-          // (c) kept, pays: without it p14's warm runs compiled 16-22
-          // classes against 12-16 at sf0.1 (5 pairs, 7.67 -> 7.71 s)
-          .localCheckpoint(true)
 
         // phase 2b: projections + band width B = √V·√(2−2τ), V =
         // vocabulary size (+ float back-off so a borderline pair is

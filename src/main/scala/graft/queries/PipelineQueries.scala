@@ -102,8 +102,7 @@ object PipelineQueries {
   /** p54's JSD computation from a (source, token, c) count table —
     * shared by the batch query and s16's maintained-state stream so
     * the two paths cannot drift. See p54 for the exact-arithmetic
-    * derivation. It reads `cnt` three times, so both callers pass a
-    * checkpointed table.
+    * derivation. It reads `cnt` three times.
     */
   private def jsdOverCounts(cnt: DataFrame): DataFrame = {
     val tot = cnt.groupBy(col("source")).agg(sum(col("c")).as("n"))
@@ -1760,9 +1759,7 @@ object PipelineQueries {
       val cnt = docs(s, dir)
         .select(col("source"), explode(split(col("text"), " ")).as("token"))
         .groupBy(col("source"), col("token")).agg(count(lit(1)).as("c"))
-      // (c) kept, pays: totals and both pair sides read the count
-      // table; without it sf0.1 went 1.11 -> 1.26 s (6 pairs)
-      jsdOverCounts(cnt.localCheckpoint(true))
+      jsdOverCounts(cnt)
     }),
 
     "s16_streamjsd" -> ((s, dir) => {
@@ -2140,8 +2137,7 @@ object PipelineQueries {
       // (source, len) counts are the metadata-sized stat frame every
       // later step derives from (both grid axes, the fill join, the
       // totals), and the grid-sized cumulative frame has 2 consumers.
-      // (c) kept, both pay: without them sf0.1 went 1.30 -> 1.90 s
-      // and warm runs compiled 15-28 classes against 4-6 (6 pairs)
+      // (c) kept, time pays: without both sf0.1 went 0.69 -> 0.90 s (6 pairs)
       val cnt = d.groupBy(col("source"), col("len"))
         .agg(count(lit(1)).as("c"))
         .localCheckpoint(true)

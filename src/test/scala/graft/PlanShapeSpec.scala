@@ -564,4 +564,23 @@ class PlanShapeSpec extends SparkTestBase {
           s"$name planned a sort aggregate")
       }
   }
+
+  test("a whole-stage stage under a new stage number reuses its compiled classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.functions.{count, lit, sum}
+    // shapes no other test plans, so their classes are compiled here first
+    val sums = spark.range(0, 4000, 1, 4)
+      .groupBy((col("id") % 13).as("k")).agg(sum(col("id") * 7919).as("v"))
+    val counts = spark.range(0, 3000, 1, 3)
+      .groupBy((col("id") % 11).as("k")).agg(count(lit(1)).as("v"))
+    sums.collect()
+    counts.collect()
+    // as a union branch after `counts`, each `sums` stage gets a new id
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val rows = counts.union(sums).collect()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(rows.length == 24)
+    info(s"the union compiled $compiled classes")
+    assert(compiled == 0, s"the renumbered stages compiled $compiled classes")
+  }
 }

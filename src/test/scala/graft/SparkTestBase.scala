@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * mid-run with a RejectedExecutionException from an async subquery job
   * racing a terminated executor pool): suites never stop the shared
   * session, but the eager `localCheckpoint(true)` frames that remain
-  * (lineage cuts in streaming folds, recursion and iterative loops, and
-  * frames several actions read) persist executor-storage blocks at
+  * (lineage cuts in streaming folds, recursion and iterative loops,
+  * frames several actions read, and p53's and the render shares' frames
+  * one plan reads twice) persist executor-storage blocks at
   * DataFrame-CONSTRUCTION time, and across 350+ tests in one JVM those
   * blocks pile up in the block manager until storage pressure can kill
   * the context (a dead context then rejects every later async
