@@ -10,11 +10,23 @@ import org.apache.spark.sql.SparkSession
   * (including result production) runs without collect-to-driver
   * overhead; a warm-up query first absorbs JVM/codegen start-up cost
   * so per-query numbers measure the plan, not the JIT.
+  *
+  * Environment: SPARK_GRAFT_SF_DIR and SPARK_GRAFT_CPUS place the run;
+  * SPARK_GRAFT_BENCH_ONLY (a comma list of declared names; an unknown
+  * name is refused) runs only those queries and marks the run as a
+  * dev-loop re-measure: it prints no hardware fingerprint and launches
+  * no stress child. With at most 5 names every query lands in the
+  * 5-slowest re-run set and reports a median of 3.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // targeted re-measure: run ONLY these queries. The local baseline
+    // MERGE below folds the subset's numbers into the SF's full map,
+    // so partial runs never clobber it.
+    val onlySet = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
+      .map(SparkEntry.queryNames).getOrElse(Set.empty[String])
     val spark: SparkSession = Graft.session(cores = cpus, appName = "graft-bench")
     spark.sparkContext.setLogLevel("WARN")
 
@@ -29,8 +41,10 @@ object Bench {
     // before the JSON line so it rides the driver's 2000-char tail
     // (head-truncation can only clip the fingerprint, never the JSON
     // line, which stays <= 1900 chars + sbt's ~74-char trailer).
+    // A targeted re-measure skips it: its spin and write would only
+    // delay a dev-loop run that is compared same-box anyway.
     val hwfp: String =
-      if (sys.env.get("SPARK_GRAFT_BENCH_HWFP").contains("off")) ""
+      if (onlySet.nonEmpty) ""
       else scala.util.Try {
         val cores = Runtime.getRuntime.availableProcessors
         val memGb = scala.io.Source.fromFile("/proc/meminfo").getLines()
@@ -78,17 +92,6 @@ object Bench {
           .map { case (k, v) => f"$k=$v%.3f" }.mkString(","))
       }))
 
-    // low-disk preflight for scale sweeps: a full spark.local.dir kills
-    // the WHOLE JVM mid-shuffle (two sf10 runs died on spill, taking
-    // every unmeasured query's outcome with them). With
-    // SPARK_GRAFT_BENCH_MIN_FREE_GB set, a query only starts if that
-    // much scratch space is free; otherwise IT alone is recorded as
-    // failed (reason on stderr + the partial map) and the sweep moves
-    // on — shuffle files of finished queries are reclaimed between
-    // queries, so later entries usually run fine.
-    val minFreeGb = sys.env.get("SPARK_GRAFT_BENCH_MIN_FREE_GB")
-      .map(_.toDouble).getOrElse(0.0)
-
     // Heaps-fixture redirect for the pairs family (r11 verdict item 5):
     // the driver's sf0.1 documents reuse a FIXED ~31-word vocabulary, a
     // corpus shape whose pair-probe volumes grow quadratically and
@@ -100,7 +103,7 @@ object Bench {
     // BENCH_r*.json rows for p2/p4/p45/… measure the realistic shape
     // and regressions on it are visible to the bench gate. Rotate mode
     // stays available as the adversarial stress (DupStress/BENCH_NOTES
-    // record it). Disable with SPARK_GRAFT_BENCH_HEAPS=off.
+    // record it).
     val pairsFamily = Set("p2_minhash", "p3_lshpairs", "p4_jaccard",
       "p5_simhash", "p6_embpairs", "p8_annlsh", "p10_lshdedup",
       "p23_increment", "p45_containment", "p60_lshrecall",
@@ -122,31 +125,29 @@ object Bench {
     val embPairs = Set("p6_embpairs", "p8_annlsh")
     def tableRows(dir: String, t: String): Long =
       spark.read.parquet(s"$dir/$t.parquet").count()
-    def parityDir(table: String): Option[String] =
-      if (sys.env.get("SPARK_GRAFT_BENCH_HEAPS").contains("off")) None
-      else {
-        val nm = new java.io.File(sfDir).getName + "h"
-        val sib = Option(new java.io.File(sfDir).getParentFile)
-          .map(p => new java.io.File(p, nm))
-        (sib.toSeq :+ new java.io.File("testdata", nm))
-          .find(_.isDirectory)
-          .flatMap { f =>
-            scala.util.Try {
-              if (tableRows(f.getPath, table) == tableRows(sfDir, table))
-                Some(f.getPath)
-              else {
-                System.err.println(s"[bench] heaps fixture ${f.getPath} " +
-                  s"$table row count differs from $sfDir" +
-                  " - redirect skipped for its readers")
-                None
-              }
-            }.recover { case e =>
-              System.err.println("[bench] heaps fixture parity check " +
-                s"failed on $table (${e.getMessage}) - redirect skipped")
+    def parityDir(table: String): Option[String] = {
+      val nm = new java.io.File(sfDir).getName + "h"
+      val sib = Option(new java.io.File(sfDir).getParentFile)
+        .map(p => new java.io.File(p, nm))
+      (sib.toSeq :+ new java.io.File("testdata", nm))
+        .find(_.isDirectory)
+        .flatMap { f =>
+          scala.util.Try {
+            if (tableRows(f.getPath, table) == tableRows(sfDir, table))
+              Some(f.getPath)
+            else {
+              System.err.println(s"[bench] heaps fixture ${f.getPath} " +
+                s"$table row count differs from $sfDir" +
+                " - redirect skipped for its readers")
               None
-            }.get
-          }
-      }
+            }
+          }.recover { case e =>
+            System.err.println("[bench] heaps fixture parity check " +
+              s"failed on $table (${e.getMessage}) - redirect skipped")
+            None
+          }.get
+        }
+    }
     val heapsDir: Option[String] = parityDir("documents")
     val heapsEmbDir: Option[String] = parityDir("embeddings")
     heapsDir.foreach(d => System.err.println(
@@ -159,12 +160,6 @@ object Bench {
       if (embPairs(name)) heapsEmbDir.getOrElse(sfDir)
       else if (pairsFamily(name)) heapsDir.getOrElse(sfDir)
       else sfDir
-    def scratchFreeGb(): Double = {
-      val dir = spark.conf.getOption("spark.local.dir")
-        .orElse(sys.props.get("spark.local.dir"))
-        .getOrElse(System.getProperty("java.io.tmpdir"))
-      new java.io.File(dir).getUsableSpace / 1e9
-    }
 
     // classes the JVM's codegen compiled so far: what a query adds shows
     // whether its generated code came from the cache
@@ -195,16 +190,6 @@ object Bench {
     }
 
     def run(name: String): Double = {
-      if (minFreeGb > 0.0) {
-        val free = scratchFreeGb()
-        if (free < minFreeGb) {
-          done.put(name, -1.0)
-          System.err.println(
-            f"[bench] $name SKIPPED: low disk ($free%.1f GB free < " +
-              f"$minFreeGb%.1f GB preflight floor)")
-          return -1.0
-        }
-      }
       val jobs0 = settledJobs()
       val t0 = System.nanoTime()
       val compiled0 = compiled()
@@ -239,10 +224,10 @@ object Bench {
     // warm-up: a join+agg exercises scan, shuffle, codegen paths
     run("q3_join")
 
-    // round-over-round baseline: the newest BENCH_r*.json in cwd (or
-    // SPARK_GRAFT_BENCH_BASELINE) — queries regressing >1.3x vs it are
-    // re-run alongside the 5 slowest, so every reported delta is either
-    // reproduced (median of 3) or flattened as single-run noise.
+    // round-over-round baseline: the newest BENCH_r*.json in cwd —
+    // queries regressing >1.3x vs it are re-run alongside the 5
+    // slowest, so every reported delta is either reproduced (median of
+    // 3) or flattened as single-run noise.
     // The snapshot embeds our JSON line INSIDE an escaped "tail" string
     // ("...\"h2_rollup\":0.829..."), so unescape \" before matching —
     // the raw regex alone never fires against the snapshot format.
@@ -252,10 +237,8 @@ object Bench {
     // count pushes it against the 2000-char tail budget.
     val localBaseline = s"target/bench-baseline-${new java.io.File(sfDir).getName}.json"
     val baseline: Map[String, Double] = {
-      val path = sys.env.get("SPARK_GRAFT_BENCH_BASELINE")
-        .orElse(Option(localBaseline).filter(new java.io.File(_).isFile))
-        .orElse(
-        Option(new java.io.File(".").listFiles()).flatMap(
+      val path = Option(localBaseline).filter(new java.io.File(_).isFile)
+        .orElse(Option(new java.io.File(".").listFiles()).flatMap(
           _.map(_.getName).filter(_.matches("BENCH_r\\d+\\.json"))
             .sorted.lastOption))
       val parsed = path.flatMap { p =>
@@ -286,28 +269,9 @@ object Bench {
       parsed
     }
 
-    // scale-step exclusions (comma list): a declared family whose cost
-    // is quadratic BY PROBLEM STATEMENT on a given fixture (e.g. the
-    // exact-complete tau-Jaccard cache on a vocabulary-saturated
-    // corpus) can be excluded from a sweep and documented, mirroring
-    // the oracle-side exclusions of the sf1 step
-    val excluded = sys.env.get("SPARK_GRAFT_BENCH_EXCLUDE")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    if (excluded.nonEmpty)
-      System.err.println("[bench] excluded: " +
-        excluded.toSeq.sorted.mkString(","))
-    // targeted re-measure (comma list): run ONLY these queries — the
-    // scale-step complement of EXCLUDE (a 9-query sf10 re-measure was
-    // previously spelled as a 222-entry exclude list). The local
-    // baseline MERGE below folds the subset's numbers into the SF's
-    // full map, so partial runs never clobber it.
-    val onlySet = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
     if (onlySet.nonEmpty)
       System.err.println("[bench] only: " + onlySet.toSeq.sorted.mkString(","))
-    val names = SparkEntry.queries.keys.toSeq.sorted.filterNot(excluded)
+    val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => onlySet.isEmpty || onlySet(n))
     // store-gated queries construct their temp store through the full
     // write path ON FIRST RUN (per-JVM computeIfAbsent) — that's setup,
@@ -351,21 +315,11 @@ object Bench {
         baseline.get(n).collect {
           case b if t >= 0 && b > 0 && t > 1.3 * b => n -> t / b } }
       .sortBy(-_._2).take(10).map(_._1).toSet
-    // scale-step mode: at sf≥10 a single pass is hours and the 5-slowest
-    // median-of-3 would triple ~30-min queries; ratios vs a smaller-SF
-    // baseline are meaningless anyway, so the sweep runs once per query
-    val rerun =
-      if (sys.env.get("SPARK_GRAFT_BENCH_RERUN").contains("off")) Set.empty[String]
-      else slow ++ regressed
+    val rerun = slow ++ regressed
     val results = first.map { case (n, t0) =>
       if (!rerun(n) || t0 < 0) n -> t0
       else n -> Seq(t0, run(n), run(n)).sorted.apply(1)
     }
-    // the driver captures only the LAST 2000 chars of stdout (plus
-    // sbt's "[success] …" trailer), so the JSON line must stay well
-    // under that or it arrives truncated and unparseable (BENCH_r03:
-    // "parsed": null). 3-decimal times keep 64 queries ≈ 1.6 KB.
-    val total = results.map(_._2).filter(_ >= 0).sum
     // the median-of-3 re-run set rides stderr: per-query times need the
     // whole 2000-char stdout tail now that the surface is 93 queries
     System.err.println("[bench] p50of3: " + rerun.toSeq.sorted.mkString(","))
@@ -387,6 +341,61 @@ object Bench {
       .flatMap(n => graft.streaming.StreamStats.get(n).map(st =>
         s""""${n.takeWhile(_ != '_')}":${"%.0f".format(st.rowsPerSec)}"""))
       .mkString("{", ",", "}")
+    // the pair generators' decisions with their closed-form volumes
+    // ("prefix|counting:volPrefix:volWindow"), recorded by the
+    // operators while the pairs queries ran, so they cost no job here
+    val gens = Seq("gen" -> graft.pipeline.Jaccard.lastGenerator.get(),
+      "inc_gen" -> graft.pipeline.IncrementalDedup.lastGenerator.get())
+      .filter(_._2.nonEmpty)
+    if (gens.nonEmpty) System.err.println("[bench] pair generators: " +
+      gens.map { case (k, v) => s"$k=$v" }.mkString(" "))
+    val line = jsonLine(results, streaming, setupSec)
+    System.err.println(s"[bench] json line length: ${line.length} chars")
+    // full-precision copy for the next run's regression baseline.
+    // MERGE into the existing map rather than replacing it: a partial
+    // run (a targeted re-measure) would otherwise clobber the SF's
+    // full baseline with its handful of queries — which is exactly
+    // what the sf10 tail re-measure did to the 222-entry map
+    // (reconstructed from run logs, see BENCH_NOTES).
+    scala.util.Try {
+      val prior: Map[String, Double] = scala.util.Try {
+        val txt = java.nio.file.Files.readString(
+          java.nio.file.Paths.get(localBaseline))
+        "\"([^\"]+)\":(-?[0-9.]+)".r.findAllMatchIn(txt)
+          .map(m => m.group(1) -> m.group(2).toDouble).toMap
+      }.getOrElse(Map.empty)
+      val merged = prior ++ results // this run's numbers win
+      val full = merged.toSeq.sortBy(_._1).map { case (k, v) =>
+        "\"" + k + "\":" + "%.3f".format(v) }.mkString("{", ",", "}")
+      java.nio.file.Files.createDirectories(
+        java.nio.file.Paths.get("target"))
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(localBaseline), full)
+    }
+    // the JSON line must be the LAST thing in the merged output: stop
+    // Spark FIRST (its shutdown logging otherwise lands after us), mark
+    // the run complete so the partial-dump hook stays silent, then emit
+    // the line on stderr AND stdout — whichever stream the driver's
+    // tail capture reads, the line is at its end.
+    completedNormally = true
+    spark.stop()
+    if (onlySet.isEmpty) launchStress()
+    if (hwfp.nonEmpty) System.err.println(hwfp)
+    System.err.println(line)
+    println(line)
+  }
+
+  /** The one JSON line Bench prints last, built from each query's
+    * seconds (negative = failed), the streaming rows/s object and the
+    * store-setup seconds; it always fits the 1,900-char tail budget.
+    */
+  private[graft] def jsonLine(results: Seq[(String, Double)],
+                              streaming: String, setupSec: Double): String = {
+    // the driver captures only the LAST 2000 chars of stdout (plus
+    // sbt's "[success] …" trailer), so the JSON line must stay well
+    // under that or it arrives truncated and unparseable (BENCH_r03:
+    // "parsed": null). 3-decimal times keep 64 queries ≈ 1.6 KB.
+    val total = results.map(_._2).filter(_ >= 0).sum
     // significant figures, not fixed decimals: "12.3"/"1.23"/"0.283"
     // is ≤0.2% error at any magnitude (plenty against the 1.3x
     // regression threshold) and 1-2 chars shorter per entry than
@@ -402,7 +411,7 @@ object Bench {
     // saved per entry are what keeps 110+ queries inside the driver's
     // 2000-char tail at FULL precision (r05's line with long names
     // overflowed and arrived head-truncated). Full names stay in the
-    // local baseline file and BENCH_NOTES; the baseline parser above
+    // local baseline file and BENCH_NOTES; main's baseline parser
     // accepts both forms. A clash (none today) falls back to the full
     // name rather than merging two queries' numbers.
     val shortKey: Map[String, String] = {
@@ -410,39 +419,6 @@ object Bench {
       val dup = ids.groupBy(_._1).filter(_._2.size > 1).keySet
       ids.map { case (id, n) => n -> (if (dup(id)) n else id) }.toMap
     }
-    // closed-form probe-volume sidecar (r9 verdict #6): the numbers
-    // that explain the pair-generator wall times at this SF, recorded
-    // automatically so the saturated-fixture attribution of p4/p45
-    // stays falsifiable as data grows. Counts only — never a pair
-    // join — so it's bounded at any SF. Printed to stderr, with a
-    // machine-readable copy in target/.
-    if (!sys.env.get("SPARK_GRAFT_BENCH_PROBEVOL").contains("off"))
-      scala.util.Try {
-        // measure the volumes of the fixture the pairs family actually
-        // ran against (the heaps redirect above, when active)
-        val pairsDir = heapsDir.getOrElse(sfDir)
-        val vols = graft.tools.PairsStats.closedFormVolumes(spark, pairsDir)
-        val gen = graft.pipeline.Jaccard.lastGenerator.get()
-        // the incremental cross-side probe's decision + closed-form
-        // volumes ("gen:volPrefix:volCounting"), set while the sweep
-        // ran p23/s4 — the measured attribution the r12 verdict asked
-        // for on the only superlinear wall without one
-        val incGen = graft.pipeline.IncrementalDedup.lastGenerator.get()
-        val sfName = new java.io.File(pairsDir).getName
-        val volStr = vols.toSeq.sortBy(_._1)
-          .map { case (k, v) => s"$k=$v" }.mkString(" ")
-        System.err.println(
-          s"[bench] probe volumes $sfName: $volStr gen=$gen inc_gen=$incGen")
-        val json = vols.toSeq.sortBy(_._1)
-          .map { case (k, v) => s""""$k":$v""" }
-          .mkString("{", ",", s""","gen":"$gen","inc_gen":"$incGen"}""")
-        java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get("target"))
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"target/bench-probevol-$sfName.json"), json)
-      }.failed.foreach(e =>
-        System.err.println(s"[bench] probe-volume sidecar failed: $e"))
-
     // failures must be LOUD at the top level of EVERY line format: r09
     // shipped three non-analyzing queries behind rc=0 with the -1.0
     // markers buried in "queries" — a judge/driver reading rc alone saw
@@ -469,7 +445,7 @@ object Bench {
     // ~26-char cushion. sig-1 still resolves the 1.3x regression
     // threshold (±5% worst case) — the last-resort format, never the
     // preferred one.
-    val line = Seq((3, 3), (3, 2), (2, 2), (2, 1), (1, 1))
+    Seq((3, 3), (3, 2), (2, 2), (2, 1), (1, 1))
       .map { case (b, sm) => build(b, sm) }.find(_.length <= 1900)
       .getOrElse {
         // last levers before truncation. First: the streaming rows/s
@@ -516,39 +492,6 @@ object Bench {
               all.length - 10, all.drop(10).map(_._2).sum))
         }
       }
-    System.err.println(s"[bench] json line length: ${line.length} chars")
-    // full-precision copy for the next run's regression baseline.
-    // MERGE into the existing map rather than replacing it: a partial
-    // run (scale-step EXCLUDE, or a targeted re-measure) would
-    // otherwise clobber the SF's full baseline with its handful of
-    // queries — which is exactly what the sf10 tail re-measure did to
-    // the 222-entry map (reconstructed from run logs, see BENCH_NOTES).
-    scala.util.Try {
-      val prior: Map[String, Double] = scala.util.Try {
-        val txt = java.nio.file.Files.readString(
-          java.nio.file.Paths.get(localBaseline))
-        "\"([^\"]+)\":(-?[0-9.]+)".r.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      }.getOrElse(Map.empty)
-      val merged = prior ++ results // this run's numbers win
-      val full = merged.toSeq.sortBy(_._1).map { case (k, v) =>
-        "\"" + k + "\":" + "%.3f".format(v) }.mkString("{", ",", "}")
-      java.nio.file.Files.createDirectories(
-        java.nio.file.Paths.get("target"))
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(localBaseline), full)
-    }
-    // the JSON line must be the LAST thing in the merged output: stop
-    // Spark FIRST (its shutdown logging otherwise lands after us), mark
-    // the run complete so the partial-dump hook stays silent, then emit
-    // the line on stderr AND stdout — whichever stream the driver's
-    // tail capture reads, the line is at its end.
-    completedNormally = true
-    spark.stop()
-    launchStress()
-    if (hwfp.nonEmpty) System.err.println(hwfp)
-    System.err.println(line)
-    println(line)
   }
 
   /** r12 verdict #6: the per-round stress artifact runs itself. After
@@ -561,72 +504,71 @@ object Bench {
     * is best-effort: a missing java binary or a non-repo CWD (no
     * BENCH_r files) silently skips. setsid detaches the child from
     * this process group so a driver-side cleanup can't reap it
-    * mid-suite. Disable with SPARK_GRAFT_BENCH_STRESS=off. StressAll
-    * itself appends the round-over-round suite-wall comparison to
-    * BENCH_NOTES.md.
+    * mid-suite. A targeted re-measure (SPARK_GRAFT_BENCH_ONLY) launches
+    * none. StressAll itself appends the round-over-round suite-wall
+    * comparison to BENCH_NOTES.md.
     */
   private def launchStress(): Unit =
-    if (!sys.env.get("SPARK_GRAFT_BENCH_STRESS").contains("off"))
-      scala.util.Try {
-        val rounds = Option(new java.io.File(".").listFiles())
-          .getOrElse(Array.empty[java.io.File]).toSeq
-          .flatMap(f => "^BENCH_r(\\d+)\\.json$".r
-            .findFirstMatchIn(f.getName).map(_.group(1).toInt))
-        if (rounds.nonEmpty) {
-          val n = rounds.max + 1
-          val out = s"STRESS_r$n.json"
-          if (!new java.io.File(out).exists) {
-            val setsid =
-              if (new java.io.File("/usr/bin/setsid").exists)
-                Seq("/usr/bin/setsid") else Seq.empty
-            // r13 verdict item 3: java.class.path under sbt points into
-            // target/bg-jobs/sbt_* — a directory sbt DELETES on exit, so
-            // the detached child died in SparkContext.<init> on a
-            // vanished hadoop jar both r13 runs (target/stressall-r13/
-            // r14.log) and STRESS_r13.json was never written. Build a
-            // STABLE classpath instead: the compiled classes dir + the
-            // image's pinned spark-jars dir (build.sbt unmanagedBase);
-            // fall back to the live classpath only when those are
-            // missing (non-repo CWD), where the old behavior applies.
-            val classes = new java.io.File("target/scala-2.13/classes")
-            val sparkJars = new java.io.File("/opt/spark/jars")
-            val cp =
-              if (classes.isDirectory && sparkJars.isDirectory)
-                classes.getPath + ":" + sparkJars.getPath + "/*"
-              else System.getProperty("java.class.path")
-            val cmd = setsid ++ Seq("java", "-Xmx8g") ++ tools.ChildJvm.AddOpens ++ Seq(
-              "-Dspark.ui.enabled=false",
-              "-Dspark.sql.session.timeZone=UTC",
-              // inherit the bench's scratch placement (build.sbt picks
-              // tmpfs over the throttled sandbox disk when available)
-              s"-Djava.io.tmpdir=${System.getProperty("java.io.tmpdir")}",
-              "-cp", cp,
-              "graft.tools.StressAll")
-            java.nio.file.Files.createDirectories(
-              java.nio.file.Paths.get("target"))
-            val pb = new ProcessBuilder(cmd: _*)
-            pb.environment().put("SPARK_GRAFT_STRESS_JSON", out)
-            pb.redirectErrorStream(true)
-            val log = new java.io.File(s"target/stressall-r$n.log")
-            pb.redirectOutput(log)
-            val child = pb.start()
-            // fail LOUDLY when the child dies on arrival (the r13 mode):
-            // an instant crash surfaces here instead of darkening the
-            // stress gate for a whole round. 5s is spawn+classload; a
-            // healthy child runs minutes and is NOT waited for.
-            if (child.waitFor(5, java.util.concurrent.TimeUnit.SECONDS) &&
-                child.exitValue() != 0) {
-              val tail = scala.util.Try(
-                java.nio.file.Files.readString(log.toPath).takeRight(400))
-                .getOrElse("<no log>")
-              System.err.println(s"[bench] STRESS CHILD DIED within 5s " +
-                s"(exit ${child.exitValue()}) — $out will NOT be " +
-                s"written. Log tail: $tail")
-            } else
-              System.err.println(s"[bench] stress artifact child " +
-                s"launched -> $out (log: target/stressall-r$n.log)")
-          }
+    scala.util.Try {
+      val rounds = Option(new java.io.File(".").listFiles())
+        .getOrElse(Array.empty[java.io.File]).toSeq
+        .flatMap(f => "^BENCH_r(\\d+)\\.json$".r
+          .findFirstMatchIn(f.getName).map(_.group(1).toInt))
+      if (rounds.nonEmpty) {
+        val n = rounds.max + 1
+        val out = s"STRESS_r$n.json"
+        if (!new java.io.File(out).exists) {
+          val setsid =
+            if (new java.io.File("/usr/bin/setsid").exists)
+              Seq("/usr/bin/setsid") else Seq.empty
+          // r13 verdict item 3: java.class.path under sbt points into
+          // target/bg-jobs/sbt_* — a directory sbt DELETES on exit, so
+          // the detached child died in SparkContext.<init> on a
+          // vanished hadoop jar both r13 runs (target/stressall-r13/
+          // r14.log) and STRESS_r13.json was never written. Build a
+          // STABLE classpath instead: the compiled classes dir + the
+          // image's pinned spark-jars dir (build.sbt unmanagedBase);
+          // fall back to the live classpath only when those are
+          // missing (non-repo CWD), where the old behavior applies.
+          val classes = new java.io.File("target/scala-2.13/classes")
+          val sparkJars = new java.io.File("/opt/spark/jars")
+          val cp =
+            if (classes.isDirectory && sparkJars.isDirectory)
+              classes.getPath + ":" + sparkJars.getPath + "/*"
+            else System.getProperty("java.class.path")
+          val cmd = setsid ++ Seq("java", "-Xmx8g") ++ tools.ChildJvm.AddOpens ++ Seq(
+            "-Dspark.ui.enabled=false",
+            "-Dspark.sql.session.timeZone=UTC",
+            // inherit the bench's scratch placement (build.sbt picks
+            // tmpfs over the throttled sandbox disk when available)
+            s"-Djava.io.tmpdir=${System.getProperty("java.io.tmpdir")}",
+            "-cp", cp,
+            "graft.tools.StressAll")
+          java.nio.file.Files.createDirectories(
+            java.nio.file.Paths.get("target"))
+          val pb = new ProcessBuilder(cmd: _*)
+          pb.environment().put("SPARK_GRAFT_STRESS_JSON", out)
+          pb.redirectErrorStream(true)
+          val log = new java.io.File(s"target/stressall-r$n.log")
+          pb.redirectOutput(log)
+          val child = pb.start()
+          // fail LOUDLY when the child dies on arrival (the r13 mode):
+          // an instant crash surfaces here instead of darkening the
+          // stress gate for a whole round. 5s is spawn+classload; a
+          // healthy child runs minutes and is NOT waited for.
+          if (child.waitFor(5, java.util.concurrent.TimeUnit.SECONDS) &&
+              child.exitValue() != 0) {
+            val tail = scala.util.Try(
+              java.nio.file.Files.readString(log.toPath).takeRight(400))
+              .getOrElse("<no log>")
+            System.err.println(s"[bench] STRESS CHILD DIED within 5s " +
+              s"(exit ${child.exitValue()}) — $out will NOT be " +
+              s"written. Log tail: $tail")
+          } else
+            System.err.println(s"[bench] stress artifact child " +
+              s"launched -> $out (log: target/stressall-r$n.log)")
         }
-      }.failed.foreach(e =>
-        System.err.println(s"[bench] stress child launch failed: $e"))
+      }
+    }.failed.foreach(e =>
+      System.err.println(s"[bench] stress child launch failed: $e"))
 }

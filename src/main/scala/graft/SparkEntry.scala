@@ -24,6 +24,19 @@ object SparkEntry {
     HoardQueries.oracles ++ RelationalQueries.oracles ++ PipelineQueries.oracles ++
       StoreQueries.oracles ++ GraphiteQueries.oracles
 
+  /** A comma list of declared query names (Bench's
+    * SPARK_GRAFT_BENCH_ONLY, Verify's third argument), trimmed. A name
+    * that is not declared is refused: a typo would otherwise select
+    * nothing and report success.
+    */
+  def queryNames(list: String): Set[String] = {
+    val names = list.split(',').map(_.trim).filter(_.nonEmpty).toSet
+    val unknown = names -- queries.keySet
+    if (unknown.nonEmpty) throw new IllegalArgumentException(
+      "unknown query name(s): " + unknown.toSeq.sorted.mkString(","))
+    names
+  }
+
   /** Queries whose EMPTY result can be legitimate at some SF. Every other
     * query is contractually non-empty, and Verify fails it loudly on zero
     * rows — an empty result there means an upstream source read nothing

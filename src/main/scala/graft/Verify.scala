@@ -8,7 +8,10 @@ object Verify {
     // the driver always calls with exactly two args = full dump)
     val (sfDir, outDir, only) = args match {
       case Array(s, o)    => (s, o, None)
-      case Array(s, o, f) => (s, o, Some(f.split(',').toSet))
+      case Array(s, o, f) => (s, o, Some(SparkEntry.queryNames(f)))
+      case _ =>
+        System.err.println("usage: graft.Verify <sfDir> <outDir> [name,...]")
+        sys.exit(2)
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = Graft.session(cores = cpus, appName = "graft-verify")

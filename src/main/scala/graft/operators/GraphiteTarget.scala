@@ -966,6 +966,19 @@ object GraphiteTarget {
     * the targets' name predicates when every fetch site is
     * name-bounded, so the selective-glob pushdown the r13 sharing
     * forfeited survives the materialization (r13 advice item 4).
+    *
+    * Under a render context (r13 verdict item 5) each leaf clamps to
+    * its own (possibly shifted) request window, so a naive pre-clamp
+    * materialization would forfeit window pushdown — instead clamp to
+    * the UNION of every fetch site's window ([from+minOff,
+    * until+maxOff) from the statically-bounded shift offsets) and
+    * materialize THAT. Every leaf's exact ctxClamp still applies on
+    * top of the shared frame, so rows outside its own window never
+    * matter. When the offsets can't be bounded statically the clamp is
+    * skipped and the universe is shared unclamped (still one scan
+    * instead of one per fetch site). A bare eval has no context and
+    * shares the caller's universe unclamped.
+    *
     * Streaming universes can't checkpoint. The checkpoint is LOCAL
     * (single-JVM executor blocks, not fault-tolerant): executor loss
     * mid-query fails the evaluation instead of recomputing — the
@@ -973,49 +986,33 @@ object GraphiteTarget {
     * cluster deployment needing replay swaps persist/reliable
     * checkpointing here.
     */
-  private def shareUniverse(nodes: Seq[Node], universe: DataFrame): DataFrame =
-    if (!universe.isStreaming &&
-        nodes.map(universeFetches(_, ctxMode = false)).sum > 1)
-      universeNamePred(nodes, ctxMode = false)
-        .map(universe.where).getOrElse(universe)
-        // (c) kept, time pays: without it sf0.1 g36 went 1.45 -> 1.92 s (6 pairs)
-        .localCheckpoint(true)
-    else universe
-
-  /** The ctx'd-render sharing (r13 verdict item 5): each leaf clamps to
-    * its own (possibly shifted) request window, so a naive pre-clamp
-    * materialization would forfeit window pushdown — instead clamp to
-    * the UNION of every fetch site's window ([from+minOff,
-    * until+maxOff) from the statically-bounded shift offsets), filter
-    * to the targets' name predicates when available, and materialize
-    * THAT. Every leaf's exact ctxClamp still applies on top of the
-    * shared frame, so rows outside its own window never matter. When
-    * the offsets can't be bounded statically the clamp is skipped and
-    * the universe is shared unclamped (still one scan instead of one
-    * per fetch site).
-    */
-  private def shareRenderUniverse(nodes: Seq[Node], universe: DataFrame,
-                                  fromSec: Long, untilSec: Long): DataFrame =
+  private def shareUniverse(nodes: Seq[Node], universe: DataFrame,
+                            ctx: Option[RenderContext]): DataFrame = {
+    val ctxMode = ctx.isDefined
     if (universe.isStreaming ||
-        nodes.map(universeFetches(_, ctxMode = true)).sum <= 1) universe
+        nodes.map(universeFetches(_, ctxMode)).sum <= 1) universe
     else {
-      val clamped = scala.util.Try {
-        val rs = nodes.map(shiftRange)
-        val lo = fromSec + rs.map(_._1).min
-        val hi = untilSec + rs.map(_._2).max
-        universe.where(col("bucket") >= timestamp_seconds(lit(lo)) &&
-          col("bucket") < timestamp_seconds(lit(hi)))
-      }.getOrElse(universe)
-      universeNamePred(nodes, ctxMode = true)
+      val clamped = ctx.fold(universe) { c =>
+        scala.util.Try {
+          val rs = nodes.map(shiftRange)
+          val lo = c.fromSec + rs.map(_._1).min
+          val hi = c.untilSec + rs.map(_._2).max
+          universe.where(col("bucket") >= timestamp_seconds(lit(lo)) &&
+            col("bucket") < timestamp_seconds(lit(hi)))
+        }.getOrElse(universe)
+      }
+      universeNamePred(nodes, ctxMode)
         .map(clamped.where).getOrElse(clamped)
-        // (c) kept, time pays: without it sf0.1 g38 went 1.13 -> 1.54 s (6 pairs)
+        // (c) kept, time pays: without it sf0.1 g36 (eval) went
+        // 1.45 -> 1.92 s and g38 (render) 1.13 -> 1.54 s (6 pairs each)
         .localCheckpoint(true)
     }
+  }
 
   /** Evaluate `target` over `universe` (see class doc for its shape). */
   def eval(target: String, universe: DataFrame, step: Long): DataFrame = {
     val node = parse(target)
-    evalNode(node, shareUniverse(Seq(node), universe), step).df
+    evalNode(node, shareUniverse(Seq(node), universe, None), step).df
   }
 
   /** The render request context threaded through [[evalNode]] for the
@@ -1101,7 +1098,7 @@ object GraphiteTarget {
     val ctx = Some(RenderContext(fromSec, untilSec, nowSec))
     val nodes = targets.map(parse)
     // multi-fetch renders share ONE union-window materialization of the
-    // universe ([[shareRenderUniverse]]); each leaf still fetches its
+    // universe ([[shareUniverse]]); each leaf still fetches its
     // own ctx window on top ([[ctxClamp]]; timeShift/timeStack hand
     // their subtree a SHIFTED ctx, so shifted leaves reach back exactly
     // as far as graphite's per-target widened fetch did, and shifted
@@ -1109,7 +1106,7 @@ object GraphiteTarget {
     // blanket output clamp: graphite keeps re-bucketed labels that
     // fall before `from` (summarize's epoch grid, smartSummarize's
     // truncated origins).
-    val shared = shareRenderUniverse(nodes, universe, fromSec, untilSec)
+    val shared = shareUniverse(nodes, universe, ctx)
     nodes.map { node =>
       val set = evalNode(node, shared, step, ctx)
       maxDataPoints.map(consolidate(set, fromSec, untilSec, _))

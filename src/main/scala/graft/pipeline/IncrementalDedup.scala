@@ -50,7 +50,7 @@ import org.apache.spark.sql.functions._
   * taken only when its volume advantage exceeds the measured
   * worst-case per-row cost gap (8×, GenCompare). The decision and
   * both volumes land in [[lastGenerator]], which Bench's
-  * probe-volume sidecar records so the p23/s4 walls carry a measured
+  * pair-generators line prints so the p23/s4 walls carry a measured
   * attribution at every scale step (r12 verdict #2: the 15×/decade
   * exponent was unattributed). Plan-pinned both ways in
   * StreamingSpec.
@@ -238,8 +238,8 @@ object IncrementalDedup {
 
   /** Which generator the last [[crossMatches]] call chose, with both
     * closed-form volumes — "counting:volPrefix:volCounting" — the
-    * test seam for the plan-pinning specs and the number Bench's
-    * probe-volume sidecar records per scale step.
+    * test seam for the plan-pinning specs and the figure Bench's
+    * pair-generators stderr line prints.
     */
   private[graft] val lastGenerator =
     new java.util.concurrent.atomic.AtomicReference[String]("")
